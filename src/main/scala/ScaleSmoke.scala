@@ -429,8 +429,7 @@ object ScaleSmoke {
       val obj = TrackingObject("orders", "db0", "t", "sp")
       val cfg = EnvironmentConfig("prod", "postgres", Seq(obj),
         Seq(SinkEndpoint("ep1", "http", "http://x/{object}/{batch}")))
-      val relay = new graft.streaming.ChangeRelay(spark, store, cfg, None,
-        horizonOf = _ => Long.MaxValue)
+      val relay = new graft.streaming.ChangeRelay(spark, store, cfg)
       store.setWatermark("prod", "orders", 0L)
       t(s"relay full-sync cycle ($relayRows rows)") {
         val (exported, _) = relay.runCycle(obj, outbox, "20240115000000")
@@ -459,8 +458,7 @@ object ScaleSmoke {
         val root = java.nio.file.Files.createTempDirectory("graft-relay-32")
         val store = new graft.state.ParquetStateStore(spark, root.resolve("state").toString)
         store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
-        (store, new graft.streaming.ChangeRelay(spark, store, cfg, None,
-          horizonOf = _ => Long.MaxValue))
+        (store, new graft.streaming.ChangeRelay(spark, store, cfg))
       }
       t("relay 32-obj per-object commits") {
         val (store, relay) = fresh()

@@ -1,6 +1,5 @@
 package graft.runtime
 
-import graft.streaming.ChangeRelay
 import java.util.concurrent.locks.ReentrantLock
 
 /** T6 — query lifecycle management: one relay task per environment, started

@@ -36,9 +36,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale shape: `planInputPartitions` splits the version range into
   * `numPartitions` contiguous slices and each executor-side reader runs the
-  * SAME pushdown subquery `JdbcChangeSource.pushdownQuery` renders — the
-  * database evaluates the range predicate per slice, nothing round-trips,
-  * and a 1000-executor cluster drains a large delta in parallel. Only
+  * slice's own pushdown query ([[ChangeV2.sliceSql]]) — the database
+  * evaluates the range predicate per slice, nothing round-trips, and a
+  * 1000-executor cluster drains a large delta in parallel. Only
   * driver-side work per micro-batch: two 1-row scalar queries (horizon +
   * gated watermark).
   *
@@ -323,7 +323,7 @@ object ChangeV2 {
       horizonSql = Option(o.get("horizonSql")).filter(_.nonEmpty),
       sessionInit = Option(o.get("sessionInitStatement")).filter(_.nonEmpty)
         .orElse(Option(o.get("provider"))
-          .flatMap(JdbcChangeSource.sessionInit)))
+          .flatMap(p => graft.runtime.Config.dialect(p).flatMap(_.sessionInit))))
   }
 
   def connect(conf: Conf): Connection = {
@@ -339,10 +339,10 @@ object ChangeV2 {
   }
 
   /** Identifiers come from trusted job config (same trust level as the
-    * reference's table-name config) and pass through VERBATIM — the
-    * JdbcChangeSource convention: quoting is dialect-specific (Derby folds
-    * unquoted DDL to upper case, postgres to lower), so a caller with a
-    * case-sensitive column quotes it in the option itself. */
+    * reference's table-name config) and pass through VERBATIM: quoting is
+    * dialect-specific (Derby folds unquoted DDL to upper case, postgres to
+    * lower), so a caller with a case-sensitive column quotes it in the
+    * option itself. */
   def qident(name: String): String = name
 
   private def scalar(conf: Conf, sql: String): Long = {
@@ -356,7 +356,7 @@ object ChangeV2 {
 
   /** The transaction horizon (P2's gate value): `min(active xact)` where the
     * deployment can see it (override via `horizonSql`), else the committed
-    * frontier `MAX(xact)+1` — the same default OutboxSource uses.
+    * frontier `MAX(xact)+1`.
     *
     * DEPLOYMENT INVARIANT for the default: rows must become VISIBLE in
     * version order (e.g. versions assigned at commit, or a serial writer).

@@ -17,13 +17,25 @@ import graft.state.ParquetStateStore
   * At-least-once semantics (T2): the watermark advances after the export
   * attempt even when a sink fails — failed payloads are re-driven from the
   * DLQ, never by re-polling (stored-procedure.md:92).
+  *
+  * Source contract (U1): a change frame carries `id` (the version),
+  * `xact_id`, `operation`, `value`, `props` and `changed`. It reaches the
+  * relay as a plain DataFrame ([[runCycles]]), a file-stream outbox
+  * ([[ChangeRelay.streamFromOutboxDir]]) or the `graft-change` DSv2 source
+  * ([[ChangeRelay.streamFromChangeSource]]). `horizonOf` is P2's
+  * transaction horizon for a frame: only rows with `xact_id` below it are
+  * read, and the watermark advances through the same gate. The default
+  * admits every row that has an `xact_id`, at no Spark job: the frame
+  * holds only committed rows unless the caller knows of in-flight
+  * transactions (the DSv2 source gates on the database's horizon before
+  * the rows reach the relay; specs inject in-flight horizons here).
   */
 final class ChangeRelay(
     spark: SparkSession,
     store: ParquetStateStore,
     config: EnvironmentConfig,
     fileSinkTemplate: Option[String] = None,
-    horizonOf: DataFrame => Long = ChangeRelay.defaultHorizon,
+    horizonOf: DataFrame => Long = _ => Long.MaxValue,
     // opt-in REAL HTTP delivery for "http" endpoints (Sinks.httpPost);
     // default keeps the zero-egress prepare-only guard behavior
     performHttp: Boolean = false,
@@ -38,14 +50,10 @@ final class ChangeRelay(
     * invariant a spec can assert against the envelope count. */
   @volatile var lastCycleExecutorEnvelopes: Long = 0L
 
-  /** One micro-batch cycle for one object over the current change table.
-    * Returns (rows exported, new watermark). */
+  /** One micro-batch cycle for one object: [[runCycles]] over that object
+    * alone. Returns (rows exported, new watermark). */
   def runCycle(obj: TrackingObject, changes: DataFrame, nowUtc: String): (Long, Long) =
-    cycleCore(obj, changes, nowUtc,
-      lookup = o => store.getWatermark(config.name, o),
-      commitWm = (o, v) => store.setWatermark(config.name, o, v),
-      isPaused = (envScope, objScope) =>
-        store.pauses.filter(col("scope").isin(envScope, objScope)).limit(1).count() > 0)
+    runCycles(Seq(obj -> changes), nowUtc)(obj.name)
 
   /** EVERY tracked object of the environment in one polling cycle — the
     * reference's per-cycle object loop (ChangeTrackingBackgroundService.cs
@@ -54,32 +62,27 @@ final class ChangeRelay(
     * watermark and pause tables are each read ONCE up front, and every
     * object's watermark advance lands in a single batched
     * [[ParquetStateStore.setWatermarks]] snapshot commit at the end
-    * (per-object [[runCycle]] commits per call — O(objects) rewrites of an
-    * O(objects) table per cycle). At-least-once (T2) is unchanged: the
-    * batched commit still happens only AFTER every object's export attempt;
-    * a crash mid-cycle loses only un-committed advances, which re-poll —
-    * re-export, never loss. Returns per-object (rows exported, watermark). */
+    * (committing per object would rewrite the O(objects) table once per
+    * object). At-least-once (T2): the batched commit happens only AFTER
+    * every object's export attempt; a crash mid-cycle loses only
+    * un-committed advances, which re-poll — re-export, never loss. Returns
+    * per-object (rows exported, watermark). */
   def runCycles(objects: Seq[(TrackingObject, DataFrame)],
       nowUtc: String): Map[String, (Long, Long)] = {
-    val wm = store.watermarks
-      .select("environment_name", "object_name", "last_version").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val committed = store.watermarks
+      .filter(col("environment_name") === config.name)
+      .select("object_name", "last_version").as[(String, Long)].collect().toMap
     val pausedScopes = store.pauses.select("scope").as[String].collect().toSet
-    // Deferred advances, visible to later lookups in the same cycle.
+    // Deferred advances, visible to later objects of the same cycle.
     val pending = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     // Flush in a finally: an exception on one object's export must not
     // discard EARLIER objects' successful advances — without this, one
     // failing object forces every object of the cycle to re-export next
     // time (at-least-once still held, but duplicate amplification grew
-    // with object count; per-object runCycle confines re-export to the
-    // failing object, and so does this).
+    // with object count). Re-export stays confined to the failing object.
     try {
       objects.map { case (obj, changes) =>
-        obj.name -> cycleCore(obj, changes, nowUtc,
-          lookup = o => pending.get(o).orElse(wm.get((config.name, o))),
-          commitWm = (o, v) => pending(o) = v,
-          isPaused = (envScope, objScope) =>
-            pausedScopes.contains(envScope) || pausedScopes.contains(objScope))
+        obj.name -> cycleCore(obj, changes, nowUtc, committed, pausedScopes, pending)
       }.toMap
     } finally {
       if (pending.nonEmpty)
@@ -87,22 +90,22 @@ final class ChangeRelay(
     }
   }
 
-  /** The cycle body with the control-state accesses injected, so the
-    * per-object and batched-cycle drivers share one implementation. */
+  /** The cycle body for one object. `committed` and `pausedScopes` are the
+    * control state read at the start of the cycle; the object's advance is
+    * recorded in `pending` for the caller's single commit. */
   private def cycleCore(obj: TrackingObject, changes: DataFrame, nowUtc: String,
-      lookup: String => Option[Long],
-      commitWm: (String, Long) => Unit,
-      isPaused: (String, String) => Boolean): (Long, Long) = {
+      committed: Map[String, Long],
+      pausedScopes: Set[String],
+      pending: scala.collection.mutable.Map[String, Long]): (Long, Long) = {
+    val stored = pending.get(obj.name).orElse(committed.get(obj.name))
     // P7 — pause scopes short-circuit before any work.
     val envScope = s"env:${config.name.toLowerCase}"
     val objScope = s"obj:${config.name.toLowerCase}/${obj.name.toLowerCase}"
-    if (isPaused(envScope, objScope)) {
-      val fv = lookup(obj.name).getOrElse(0L)
-      return (0L, fv)
-    }
+    if (pausedScopes.contains(envScope) || pausedScopes.contains(objScope))
+      return (0L, stored.getOrElse(0L))
 
     // T8/S7/S8 — missing watermark re-initializes per InitialSyncMode.
-    val fromVersion = lookup(obj.name) match {
+    val fromVersion = stored match {
       case Some(v) => v
       case None if obj.initialSyncMode.equalsIgnoreCase("Full") => 0L
       case None =>
@@ -110,7 +113,7 @@ final class ChangeRelay(
         // un-gated seed could skip rows of in-flight transactions forever.
         val seeded = Incremental.seed(changes, horizon = horizonOf(changes))
           .select("version").as[Long].head()
-        commitWm(obj.name, seeded)
+        pending(obj.name) = seeded
         return (0L, seeded)
     }
 
@@ -191,7 +194,7 @@ final class ChangeRelay(
 
     // T2 — advance AFTER the export attempt, regardless of sink failures.
     if (newVersion > fromVersion)
-      commitWm(obj.name, newVersion)
+      pending(obj.name) = newVersion
     (exported, newVersion)
   }
 
@@ -311,15 +314,6 @@ object ChangeRelay {
       }
       fileFailures ++ endpointFailures
     }
-
-  /** Default horizon: one past the max committed xact — everything visible
-    * commits; the gate only matters when the caller passes the true
-    * in-flight horizon (tests do). */
-  def defaultHorizon(changes: DataFrame): Long = {
-    import org.apache.spark.sql.functions._
-    changes.agg(coalesce(max("xact_id") + 1, lit(Long.MaxValue)))
-      .collect()(0).getLong(0)
-  }
 
   /** T1/T6 — the Structured-Streaming wrapper: watch an outbox directory as
     * a file stream and run the relay per micro-batch at the configured

@@ -70,6 +70,13 @@ class IncrementalSpec extends SparkSpec {
     val got = Incremental.seed(outbox)
     assert(got.count() == 1)
     assert(got.select("version").as[Long].head() == 5L)
+    // The seed is horizon-gated like the sync read: id=3 sits in in-flight
+    // xact 99, so seeding must stop at 2 — an un-gated 3 would skip that
+    // row forever once xact 99 commits.
+    val inFlight = Seq((1L, 1L, "I"), (2L, 2L, "U"), (3L, 99L, "U"))
+      .toDF("id", "xact_id", "operation")
+    val gated = Incremental.seed(inFlight, horizon = 50L)
+    assert(gated.count() == 1 && gated.select("version").as[Long].head() == 2L)
   }
 
   test("S2: chunk reassembly restores original order regardless of row order") {

@@ -1,7 +1,9 @@
 package graft.runtime
 
 import graft.SparkSpec
-import graft.sources.{OutboxSource, ProcedureCall, SyncMode}
+import graft.model.{EnvironmentConfig, TrackingObject}
+import graft.state.ParquetStateStore
+import graft.streaming.ChangeRelay
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -9,25 +11,46 @@ class LifecycleSpec extends SparkSpec {
   import spark.implicits._
 
   test("U1/S1: OutboxSource honors the sync/seed contract") {
-    val outbox = () => Seq(
-      (1L, 1L, "I"), (2L, 2L, "U"), (3L, 99L, "U")
-    ).toDF("id", "xact_id", "operation")
-    val src = new OutboxSource(outbox, horizonOf = _ => 50L)
-    val sync = src.fetch(spark, 1L, SyncMode.Sync).select("id").as[Long].collect().sorted
-    assert(sync.toSeq == Seq(2L)) // > fromVersion, under horizon
+    // The outbox reaches the relay as a plain DataFrame; the relay applies
+    // the contract: Seed records the gated frontier and emits nothing, Sync
+    // emits rows after the watermark and under the horizon.
+    val outbox = Seq((1L, 1L, "I"), (2L, 2L, "U"), (3L, 99L, "U"))
+      .toDF("id", "xact_id", "operation")
+      .select($"id", $"xact_id", $"operation", lit(1.0).as("value"),
+        lit("{}").as("props"), lit(null).cast("array<string>").as("changed"))
+    val obj = TrackingObject("orders", "db0", "t", "sp")
+    val cfg = EnvironmentConfig("prod", "postgres", Seq(obj), Nil)
+    val store = new ParquetStateStore(spark,
+      Files.createTempDirectory("graft-lifecycle").resolve("state").toString)
+    val relay = new ChangeRelay(spark, store, cfg, None, horizonOf = _ => 50L)
+
+    store.setWatermark("prod", "orders", 1L)
+    assert(relay.runCycle(obj, outbox, "20240115000000") == (1L, 2L)) // > fromVersion, under horizon
+
     // Seed is horizon-gated like Sync: id=3 sits in in-flight xact 99, so
     // seeding must stop at 2 — an un-gated 3 would skip that row forever.
-    val seed = src.fetch(spark, 0L, SyncMode.Seed)
-    assert(seed.count() == 1 && seed.select("version").as[Long].head() == 2L)
-    assert(src.currentVersion(spark) == 2L) // gated frontier agrees
+    val seeded = new ParquetStateStore(spark,
+      Files.createTempDirectory("graft-lifecycle").resolve("state").toString)
+    val seeder = new ChangeRelay(spark, seeded, cfg, None, horizonOf = _ => 50L)
+    assert(seeder.runCycle(obj, outbox, "20240115000000") == (0L, 2L))
+    assert(seeded.getWatermark("prod", "orders").contains(2L)) // gated frontier agrees
+
+    // xact 99 commits: the next Sync picks up exactly the deferred row.
+    val synced = new ChangeRelay(spark, seeded, cfg, None, horizonOf = _ => 100L)
+    assert(synced.runCycle(obj, outbox, "20240115000100") == (1L, 3L))
   }
 
   test("S1 JDBC flavor: dialect call templates and the single JSON parameter") {
-    assert(ProcedureCall.parameter(42L, SyncMode.Sync) == """{"fromVersion":42,"mode":"sync"}""")
-    assert(ProcedureCall.parameter(0L, SyncMode.Seed) == """{"fromVersion":0,"mode":"seed"}""")
-    assert(ProcedureCall.callSql("SqlServer", "dbo.sp_x").contains("EXEC dbo.sp_x @Parameter = ?"))
-    assert(ProcedureCall.callSql("pgsql", "get_changes").contains("SELECT * FROM get_changes(?::jsonb)"))
-    assert(ProcedureCall.callSql("oracle", "x").isEmpty)
+    // the reference's two call shapes (SqlDialect.cs:52,70), resolved by alias
+    assert(Config.dialect("SqlServer").map(_.callSql("dbo.sp_x"))
+      .contains("EXEC dbo.sp_x @Parameter = ?"))
+    assert(Config.dialect("pgsql").map(_.callSql("get_changes"))
+      .contains("SELECT * FROM get_changes(?::jsonb)"))
+    assert(Config.dialect("oracle").isEmpty)
+    // each call binds exactly one placeholder: the shared JSON parameter
+    Seq("SqlServer", "pgsql").foreach { p =>
+      assert(Config.dialect(p).get.callSql("proc").count(_ == '?') == 1)
+    }
   }
 
   test("S6: loadDir parses reference-shaped JSON ordered by filename; diff detects changes") {

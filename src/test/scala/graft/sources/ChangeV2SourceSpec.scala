@@ -171,8 +171,7 @@ class ChangeV2SourceSpec extends SparkSpec {
     val obj = TrackingObject("orders", "db0", "t", "sp")
     val cfg = EnvironmentConfig("prod", "postgres", Seq(obj), Nil)
     val tpl = root.resolve("exports").toString + "/{object}-{timestamp}-{batch}.json"
-    val relay = new ChangeRelay(spark, store, cfg, Some(tpl),
-      horizonOf = ChangeRelay.defaultHorizon)
+    val relay = new ChangeRelay(spark, store, cfg, Some(tpl))
     store.setWatermark("prod", "orders", 0L)
     put((1L, 1L, "I", 1.0, "{}"), (2L, 2L, "U", 2.0, "{}"))
     val opts = Map("url" -> url, "table" -> "outbox", "startMode" -> "earliest")
@@ -461,6 +460,13 @@ class ChangeV2SourceSpec extends SparkSpec {
     }
     val base = Map("url" -> "jdbc:none", "table" -> "outbox")
     confOf(base) // sanity: the table shape is accepted
+    // a sqlserver table-shaped feed still gets the dialect's TEXTSIZE init;
+    // an explicit sessionInitStatement wins over the dialect's
+    assert(confOf(base + ("provider" -> "sqlserver")).sessionInit
+      .contains("SET TEXTSIZE 2147483647; SET ANSI_WARNINGS OFF"))
+    assert(confOf(base ++ Map("provider" -> "sqlserver",
+      "sessionInitStatement" -> "SET NOCOUNT ON")).sessionInit.contains("SET NOCOUNT ON"))
+    assert(confOf(base + ("provider" -> "postgres")).sessionInit.isEmpty)
     val e1 = intercept[IllegalArgumentException] {
       confOf(base + ("procedure" -> "dbo.GetChanges"))
     }

@@ -1,48 +1,32 @@
 package graft.sources
 
-import graft.SparkSpec
-import JdbcChangeSource._
+import graft.runtime.Config
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.scalatest.funsuite.AnyFunSuite
 
-class JdbcChangeSpec extends SparkSpec {
+/** The JDBC wire contract the `graft-change` source reads under: dialect
+  * session init and connection defaults from the registry, and a slice plan
+  * whose bounds stay legal when a cycle has no new rows. */
+class JdbcChangeSpec extends AnyFunSuite {
 
-  private val cfg = JdbcSourceConfig(
-    url = "jdbc:postgresql://db:5432/app",
-    driver = "org.postgresql.Driver",
-    user = "u", password = "p", table = "outbox")
-
-  test("pushdown subquery carries both the version and horizon predicates db-side") {
-    val q = pushdownQuery(cfg, fromVersion = 100L, horizon = 250L)
-    assert(q == "(SELECT * FROM outbox WHERE id > 100 AND xact_id < 250) AS delta")
-  }
-
-  test("options: range-partitioned parallel read between watermark and frontier") {
-    val o = options(cfg, "postgresql", fromVersion = 100L, horizon = 250L,
-      upperBound = 240L)
-    assert(o("partitionColumn") == "id")
-    assert(o("lowerBound") == "100" && o("upperBound") == "240")
-    assert(o("numPartitions") == "8" && o("fetchsize") == "10000")
-    assert(o("dbtable").startsWith("(SELECT"))
-    assert(o("queryTimeout") == "300")
-    assert(!o.contains("sessionInitStatement"), "postgres needs no TEXTSIZE init")
-    assert(o("ApplicationName") == "graft", "pg identifies itself to the server")
-    assert(o("connectTimeout") == "30", "pgJDBC timeout default flows into the wire props")
+  private def conf(opts: (String, String)*): ChangeV2.Conf = {
+    val m = new java.util.HashMap[String, String]()
+    (Seq("url" -> "jdbc:sqlserver://db:1433", "table" -> "outbox") ++ opts)
+      .foreach { case (k, v) => m.put(k, v) }
+    ChangeV2.conf(new CaseInsensitiveStringMap(m))
   }
 
   test("mssql gets the reference's wire defaults; empty delta keeps bounds legal") {
-    val o = options(cfg, "sqlserver", fromVersion = 500L, horizon = 500L,
-      upperBound = 500L)
-    assert(o("sessionInitStatement") == "SET TEXTSIZE 2147483647; SET ANSI_WARNINGS OFF")
-    assert(o("Packet Size") == "32768", "SqlDialect.cs packet size default")
-    assert(o("Connect Timeout") == "30", "config timeout flows into the wire props")
-    assert(o("Application Name") == "graft")
-    assert(o("lowerBound").toLong < o("upperBound").toLong,
-      "JDBC requires lowerBound < upperBound even when no new rows exist")
-  }
-
-  test("a tuned connect timeout overrides the dialect default, per dialect key") {
-    val o = options(cfg.copy(connectTimeoutSeconds = 5), "mssql", 0L, 10L, 10L)
-    assert(o("Connect Timeout") == "5" && o("Packet Size") == "32768")
-    val p = options(cfg.copy(connectTimeoutSeconds = 5), "postgres", 0L, 10L, 10L)
-    assert(p("connectTimeout") == "5")
+    assert(conf("provider" -> "sqlserver").sessionInit
+      .contains("SET TEXTSIZE 2147483647; SET ANSI_WARNINGS OFF"))
+    val wire = Config.dialect("sqlserver").get.connectionDefaults
+    assert(wire("Packet Size") == "32768", "SqlDialect.cs packet size default")
+    assert(wire("Connect Timeout") == "30")
+    assert(wire("Application Name") == "graft")
+    // an empty delta plans no slice at all rather than a lo >= hi range;
+    // a one-version delta plans exactly one slice with lo < hi
+    assert(ChangeV2.slices(500L, 500L, 500L, 8).isEmpty)
+    val one = ChangeV2.slices(500L, 501L, 502L, 8).map(_.asInstanceOf[ChangeSlice])
+    assert(one.toSeq == Seq(ChangeSlice(500L, 501L, 502L)))
   }
 }

@@ -221,6 +221,22 @@ class RelaySpec extends SparkSpec {
     assert(store.getWatermark("prod", "orders").contains(10L)) // not regressed to 6
   }
 
+  test("default horizon: a committed frame with out-of-order xacts seeds at max(id), then exports every new row") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val relay = new ChangeRelay(spark, store, cfg(), None)
+    val history = Seq((1L, 30L, "I", 1.0, "{}"), (2L, 10L, "I", 2.0, "{}"),
+      (3L, 20L, "U", 3.0, "{}"))
+    val (n1, v1) = relay.runCycle(obj, outboxDf(history), "20240115000000")
+    assert(n1 == 0 && v1 == 3L, "no stored watermark: the first cycle seeds at max(id)")
+    assert(store.getWatermark("prod", "orders").contains(3L))
+    val delta = Seq((4L, 5L, "U", 4.0, "{}"), (5L, 50L, "I", 5.0, "{}"),
+      (6L, 40L, "D", 0.0, null))
+    val (n2, v2) = relay.runCycle(obj, outboxDf(history ++ delta), "20240115000100")
+    assert(n2 == 3L && v2 == 6L, "every new row exports; the watermark lands on max(id)")
+    assert(store.getWatermark("prod", "orders").contains(6L))
+  }
+
   test("multiple sinks failing on one payload produce exactly one dead letter") {
     val dir = tmp()
     val store = new ParquetStateStore(spark, dir.resolve("state").toString)
