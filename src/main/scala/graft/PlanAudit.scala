@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for representative queries so scan
-  * pushdown, join strategies and shuffle counts can be audited per round. */
+  * pushdown, join strategies and shuffle counts can be audited per round.
+  * The session is [[Harness.session]]'s, so the plans split scans the way
+  * the plans Bench times do. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
@@ -11,12 +11,7 @@ object PlanAudit {
       else Set("p2_horizon_gate", "j1_change_outer_join", "q3_top_revenue_orders",
         "q5_regional_revenue", "dedup_lsh_pairs", "ann_lsh_topk", "w1_pagination",
         "ann_ivf_topk", "dedup_embedding_mb", "t9_sliding_counts", "dedup_jaccard")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Harness.session("8")
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.allQueries.filter(q => names(q.name)).foreach { q =>
       println(s"\n=================== ${q.name} ===================")

@@ -4951,7 +4951,7 @@ object QueriesLlm {
     val coOpCte =
       """op AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem)""".stripMargin
-    // mega-basket guard mirrors GraphOps.supportedPairs maxBasket=1000:
+    // mega-basket guard mirrors GraphOps.pairsFromBaskets maxBasket=1000:
     // oversized baskets never pair (no-op on this data — TPC-H orders
     // hold <= 7 parts — but the SEMANTICS must match the engine's)
     val coEdgesWCte =

@@ -298,7 +298,7 @@ object DedupOps {
       .filter(size(col("ids")) <= maxBucket)
       // native pair build (one JVM loop per bucket) — the nested-transform
       // HOF chain runs interpreted per element (round-9 rule a; same A/B
-      // as GraphOps.supportedPairs)
+      // as GraphOps.pairsFromBaskets)
       .select(explode(expr("pair_structs(ids)")).as("p"))
       .select(col("p.pa").as("id_a"), col("p.pb").as("id_b"))
   }

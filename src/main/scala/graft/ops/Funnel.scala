@@ -606,8 +606,9 @@ object Funnel {
     * list holds one small string per CONVERSION in that session — bounded
     * by conversions-per-session, which is data-dependent (a bot user
     * converting for weeks under the gap funnels its credits through one
-    * buffer where the old join streamed them). Confirmed on the skewed
-    * decade (20% hot user, r19e fixture): see OPTIMIZATION_r21.md. A
+    * buffer where the old join streamed them). The confirmation on the
+    * skewed decade (20% hot user, r19e fixture) has no committed
+    * artifact. A
     * corpus where single sessions hold millions of conversions should
     * pre-cap with the topPaths `_rn` trick before this rollup. */
   def attribution(events: DataFrame, tsCol: String, userCol: String,

@@ -49,8 +49,8 @@ object GraphOps {
       .agg(sort_array(collect_set(col("item").cast("long"))).as("_items"))
 
   /** Support-counted canonical `pa < pb` pairs from a basket table — ONE
-    * definition shared by [[supportedPairs]] and the associationRules
-    * basket branch (r15 review). The pair build is the native
+    * definition shared by [[coOccurrenceEdges]], [[edgesFromBaskets]] and
+    * [[associationRules]] (r15 review). The pair build is the native
     * `pair_structs` expression — the equivalent nested
     * `transform(slice(...))` HOF chain runs INTERPRETED per element and
     * measured ~2.5× slower for the explode stage (GraphProf sf0.1, both
@@ -73,18 +73,12 @@ object GraphOps {
       .agg(count(lit(1)).as("w"))
       .filter(col("w") >= minSupport)
 
-  private def supportedPairs(rows: DataFrame, minSupport: Int,
-                             maxBasket: Int): DataFrame =
-    pairsFromBaskets(basketsOf(rows), minSupport, maxBasket)
-
   /** Distinct item pairs co-occurring in a transaction, with the number of
     * transactions supporting each pair; `pa < pb` canonical. `minSupport`
     * prunes to the co-occurrence backbone (see object scaladoc). */
   def coOccurrenceEdges(fact: DataFrame, txnCol: String, itemCol: String,
                         minSupport: Int, maxBasket: Int = 1000): DataFrame =
-    supportedPairs(
-      fact.select(col(txnCol).as("_txn"), col(itemCol).as("item")), minSupport,
-      maxBasket)
+    pairsFromBaskets(basketTable(fact, txnCol, itemCol), minSupport, maxBasket)
 
   /** Basket table (txn → sorted distinct item array) — exposed so a
     * registry can persist ONE basket table across the whole co-purchase
@@ -101,13 +95,22 @@ object GraphOps {
     pairsFromBaskets(baskets, minSupport, maxBasket)
 
   /** [[associationRules]] over pre-built (typically session-persisted)
-    * basket + backbone tables — the same math as the default basket
-    * branch, minus the per-query derivation. */
+    * basket + backbone tables, minus the per-query derivation. The per-item
+    * basket count equals countDistinct(txn) because `collect_set` deduped
+    * within each basket; mega baskets still count here and in n_tx (the
+    * maxBasket guard is pairing-only). */
   def associationRulesOnBaskets(baskets: DataFrame, edges: DataFrame): DataFrame = {
-    val n = baskets.select(explode(col("_items")).as("item"))
+    val itemN = baskets.select(explode(col("_items")).as("item"))
       .groupBy(col("item")).agg(count(lit(1)).as("n_item"))
       .localCheckpoint() // joined on both rule sides
-    rulesTail(edges, n, baskets.agg(count(lit(1)).as("n_tx")))
+    edges.select(col("pa").as("ante"), col("pb").as("cons"), col("w"))
+      .unionAll(edges.select(col("pb").as("ante"), col("pa").as("cons"), col("w")))
+      .join(itemN.select(col("item").as("ante"), col("n_item").as("n_ante")), Seq("ante"))
+      .join(itemN.select(col("item").as("cons"), col("n_item").as("n_cons")), Seq("cons"))
+      .crossJoin(broadcast(baskets.agg(count(lit(1)).as("n_tx"))))
+      .select(col("ante"), col("cons"), col("w"), col("n_ante"), col("n_cons"),
+        expr("w * 10000 div n_ante").as("conf_bp"),
+        expr("(w * 1000000 div n_ante) * n_tx div n_cons").as("lift_ppm"))
   }
 
   /** Pairwise association rules over the support-pruned co-occurrence
@@ -126,69 +129,29 @@ object GraphOps {
     * rule d). The FACT projection is deliberately NOT deduped-and-
     * checkpointed (r12 A/B, both orders: a wash at sf0.1 warm — 1.8-2.4 s
     * either way): `collect_set` already dedups within-basket, so the
-    * pairs branch needs no distinct at all, and the item/total branches
-    * use `countDistinct` — each of the three branches then column-prunes
-    * its OWN scan (the n_tx branch reads one column and elides the
-    * distinct entirely), where the old shape materialized the full
-    * (txn, item) projection as deserialized rows. `checkpointFacts =
-    * true` reproduces the old shape for the GraphProf A/B. */
+    * pairs branch needs no distinct at all. */
   def associationRules(fact: DataFrame, txnCol: String, itemCol: String,
-                       minSupport: Int, maxBasket: Int = 1000,
-                       checkpointFacts: Boolean = false,
-                       basketCheckpoint: Boolean = true): DataFrame = {
-    val base = fact.select(col(txnCol).as("_txn"), col(itemCol).as("item"))
-    val op = if (checkpointFacts) base.distinct().localCheckpoint() else base
-    // Default shape (round 15): ONE corpus-scale shuffle. The per-txn
-    // distinct item sets the pair explode needs anyway ARE the dedup the
-    // item counts need (`collect_set` makes per-item basket counts equal
-    // countDistinct(txn)) and the row set n_tx counts — so materialize the
-    // txn-scale basket table once and derive all three branches from it,
-    // where the previous shape re-scanned and re-aggregated the corpus
-    // per branch (pair agg + item countDistinct + global countDistinct =
-    // 3 corpus passes). Baskets are txn-scale, each array domain-capped —
-    // orders of magnitude below occurrence scale, so this is NOT the
-    // round-12 rule (d) wash case (that measured checkpointing the
-    // occurrence-scale (txn, item) projection; here the checkpoint sits
-    // ABOVE the shuffle and consumers skip the corpus entirely).
-    // Same-JVM A/B both orders (GraphProf, sf0.1 warm): baskets
-    // 1.53-2.00 s vs rescan 2.27-2.59 s vs occurrence-ckpt 2.34-3.35 s;
-    // identical 7146-row output. `basketCheckpoint = false` keeps the
-    // rescan shape one measurement away.
-    val (edgesCk, itemN, total) = if (checkpointFacts || !basketCheckpoint) {
-      (supportedPairs(op, minSupport, maxBasket)
-        .localCheckpoint(), // both directions of the union read it
-        (if (checkpointFacts)
-          op.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
-        else
-          base.groupBy(col("item")).agg(countDistinct(col("_txn")).as("n_item")))
-          .localCheckpoint(), // joined on both rule sides
-        op.agg(countDistinct(col("_txn")).as("n_tx")))
-    } else {
-      val baskets = basketsOf(base)
-        .localCheckpoint() // feeds pairs, item counts, and n_tx
-      val e = pairsFromBaskets(baskets, minSupport, maxBasket)
-        .localCheckpoint() // both directions of the union read it
-      // per-item basket count == countDistinct(txn): collect_set deduped.
-      // Item-alphabet-bounded aggregate over the checkpointed leaf; mega
-      // baskets still count here and in n_tx (the guard is pairing-only).
-      val n = baskets.select(explode(col("_items")).as("item"))
-        .groupBy(col("item")).agg(count(lit(1)).as("n_item"))
-        .localCheckpoint() // joined on both rule sides
-      (e, n, baskets.agg(count(lit(1)).as("n_tx")))
-    }
-    rulesTail(edgesCk, itemN, total)
+                       minSupport: Int, maxBasket: Int = 1000): DataFrame = {
+    // ONE corpus-scale shuffle (round 15). The per-txn distinct item sets
+    // the pair explode needs anyway ARE the dedup the item counts need
+    // (`collect_set` makes per-item basket counts equal countDistinct(txn))
+    // and the row set n_tx counts — so materialize the txn-scale basket
+    // table once and derive all three branches from it, where the previous
+    // shape re-scanned and re-aggregated the corpus per branch (pair agg +
+    // item countDistinct + global countDistinct = 3 corpus passes). Baskets
+    // are txn-scale, each array domain-capped — orders of magnitude below
+    // occurrence scale, so this is NOT the round-12 rule (d) wash case
+    // (that measured checkpointing the occurrence-scale (txn, item)
+    // projection; here the checkpoint sits ABOVE the shuffle and consumers
+    // skip the corpus entirely). Same-JVM A/B both orders (GraphProf, sf0.1
+    // warm): baskets 1.53-2.00 s vs rescan 2.27-2.59 s vs occurrence-ckpt
+    // 2.34-3.35 s; identical 7146-row output.
+    val baskets = basketTable(fact, txnCol, itemCol)
+      .localCheckpoint() // feeds pairs, item counts, and n_tx
+    val edges = pairsFromBaskets(baskets, minSupport, maxBasket)
+      .localCheckpoint() // both directions of the union read it
+    associationRulesOnBaskets(baskets, edges)
   }
-
-  private def rulesTail(edgesCk: DataFrame, itemN: DataFrame,
-                        total: DataFrame): DataFrame =
-    edgesCk.select(col("pa").as("ante"), col("pb").as("cons"), col("w"))
-      .unionAll(edgesCk.select(col("pb").as("ante"), col("pa").as("cons"), col("w")))
-      .join(itemN.select(col("item").as("ante"), col("n_item").as("n_ante")), Seq("ante"))
-      .join(itemN.select(col("item").as("cons"), col("n_item").as("n_cons")), Seq("cons"))
-      .crossJoin(broadcast(total))
-      .select(col("ante"), col("cons"), col("w"), col("n_ante"), col("n_cons"),
-        expr("w * 10000 div n_ante").as("conf_bp"),
-        expr("(w * 1000000 div n_ante) * n_tx div n_cons").as("lift_ppm"))
 
   /** Degree-ordered triangle count over an undirected edge list
     * (`pa`/`pb`, canonical `pa < pb`): one summary row with node, edge,

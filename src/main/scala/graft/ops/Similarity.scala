@@ -497,11 +497,11 @@ object Similarity {
     * apart (each extra band only adds |corpus| rows to the bucket join,
     * never all-pairs work).
     *
-    * MEGA-CLUSTER ADJUDICATION (r20, measured — [[graft.MbSkewProf]] on
-    * the skewed decade, 20k vectors with a ~2.3k hot clique): a
-    * recall-preserving hot-bucket sub-split does NOT exist. Re-keying
-    * buckets > 1000 with +2/+4 extra hyperplanes cut candidate slots only
-    * 17.59M → 16.77M/16.58M (−4.7%/−5.7%) while LOSING 67k/85k of the
+    * MEGA-CLUSTER ADJUDICATION (r20, measured on the skewed decade, 20k
+    * vectors with a ~2.3k hot clique; numbers in CLAUDE.md's round-20
+    * rule (c)): a recall-preserving hot-bucket sub-split does NOT exist.
+    * Re-keying buckets > 1000 with +2/+4 extra hyperplanes cut candidate
+    * slots only 17.59M → 16.77M/16.58M (−4.7%/−5.7%) while LOSING 67k/85k of the
     * 2.93M true output pairs (2.3%/2.9% recall) and running SLOWER (the
     * sub-key join costs more than the slots it saves). The physics: a
     * tight cosine cluster is sign-invariant under random hyperplanes —

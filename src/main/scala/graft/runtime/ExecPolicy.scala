@@ -62,8 +62,6 @@ object ExecPolicy {
     * at tens-to-hundreds of nodes. */
   private val maxExprNodes = 1500L
 
-  private val strictHof = sys.env.get("SPARK_GRAFT_POLICY_HOF").contains("strict")
-
   def isSmall(df: DataFrame): Boolean = smallInputBytes > 0 && {
     // The outer plan AND every plan nested in a subquery expression: a
     // Generate or a large scan inside a scalar/IN-subquery is invisible to
@@ -74,11 +72,6 @@ object ExecPolicy {
     val disqualified = plans.exists(_.exists {
       case _: Generate | _: Expand | _: LogicalRDD => true
       case _: MapPartitions | _: DeserializeToObject | _: CoGroup => true
-      // A/B toggle (SPARK_GRAFT_POLICY_HOF=strict restores the round-7a
-      // disqualifier that kept any HOF-bearing plan off the policy).
-      case n if strictHof =>
-        n.expressions.exists(_.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.HigherOrderFunction]))
       case _ => false
     })
     // Higher-order functions do NOT disqualify: HOF lambdas are
@@ -96,15 +89,23 @@ object ExecPolicy {
         .map(_.stats.sizeInBytes).sum < smallInputBytes
   }
 
-  /** Run `action` on `df` under the small-query confs when it qualifies,
-    * restoring the session confs afterwards. The confs are read at physical
-    * planning, which for a fresh DataFrame happens inside `action` — callers
-    * must not force `executedPlan` before calling. Sequential use only (the
-    * confs are session-scoped while set); Bench and Verify run queries
-    * one at a time. */
-  /** Tier-1 (r13 floor attack): AQE-off ONLY — codegen and shuffle
-    * partitioning untouched — for plans with small known inputs that fail
-    * just the SHAPE guards (Generate/Expand/HOF/node count). Rationale,
+  /** Tier-1 confs: AQE off, the reduce-task count left inheriting the
+    * session's partitions — MEASURED A WASH: the hypothesis was that AQE-off
+    * reverts sub-8MB reduces to 32 near-empty tasks that AQE would have
+    * coalesced, so fewer fixed partitions should save task-launch overhead.
+    * Same-JVM FloorProfile BOTH orders (dedup_winnow, sk_topk_agg,
+    * llm_freq_spectrum, dedup_minhash_sig, sf0.1): the 8→32→8 order read
+    * 40-80 ms/query for 8, but the reversed 32-first order erased it
+    * completely (winnow 253-270 ms at 8 vs 245-316 at 32; minhash_sig
+    * 256-309 vs 234-250) — the "win" was JVM warmth, the round-12 rule (j)
+    * trap. Empty reduce tasks cost ~1 ms each on local; at cluster scale
+    * tier-1 never fires on data that would care. */
+  private val tier1Confs = Seq("spark.sql.adaptive.enabled" -> "false")
+
+  /** Tier-1 (r13 floor attack): small known input, no iterative/typed
+    * node — shape guards NOT consulted (Generate/Expand/HOF allowed: with
+    * codegen on they cost the same either way). Such plans run AQE-off
+    * ONLY — codegen and shuffle partitioning untouched. Rationale,
     * measured with the three-leg FloorProfile discipline (AQE on → off →
     * on again, so JVM warmth cannot fake the effect): on shuffle-bearing
     * Generate-class queries over control-scale inputs, AQE costs
@@ -120,37 +121,9 @@ object ExecPolicy {
     * adaptive path: the r12 full-registry A/B showed AQE genuinely earning
     * its cost on the graph/iterative family, and checkpoint boundaries
     * hide the true plan size (round-10 s4 rule e needs AQE to skew-split
-    * hot keys below a checkpointed weight table). Disable for A/Bs via
-    * SPARK_GRAFT_NO_TIER1=1. */
-  /** Tier-1 reduce-task count — MEASURED A WASH, left inheriting the
-    * session's partitions: the hypothesis was that AQE-off reverts sub-8MB
-    * reduces to 32 near-empty tasks that AQE would have coalesced, so
-    * fewer fixed partitions should save task-launch overhead. Same-JVM
-    * FloorProfile BOTH orders (dedup_winnow, sk_topk_agg,
-    * llm_freq_spectrum, dedup_minhash_sig, sf0.1): the 8→32→8 order read
-    * 40-80 ms/query for 8, but the reversed 32-first order erased it
-    * completely (winnow 253-270 ms at 8 vs 245-316 at 32; minhash_sig
-    * 256-309 vs 234-250) — the "win" was JVM warmth, the round-12 rule (j)
-    * trap. Empty reduce tasks cost ~1 ms each on local; at cluster scale
-    * tier-1 never fires on data that would care. The session-conf knob
-    * (`spark.graft.tier1.parts`) stays for future same-JVM A/Bs; unset
-    * means no override. */
-  private val tier1PartsDefault: String =
-    sys.env.getOrElse("SPARK_GRAFT_TIER1_PARTS", "")
-
-  private def tier1Confs(df: DataFrame): Seq[(String, String)] = {
-    val parts = df.sparkSession.conf.get("spark.graft.tier1.parts", tier1PartsDefault)
-    Seq("spark.sql.adaptive.enabled" -> "false") ++
-      (if (parts.nonEmpty) Seq("spark.sql.shuffle.partitions" -> parts) else Nil)
-  }
-
-  private val tier1Disabled = sys.env.get("SPARK_GRAFT_NO_TIER1").contains("1")
-
-  /** Small known input, no iterative/typed node — shape guards NOT
-    * consulted (Generate/Expand/HOF allowed: with codegen on they cost the
-    * same either way). */
+    * hot keys below a checkpointed weight table). */
   def isSmallInputNonIterative(df: DataFrame): Boolean =
-    smallInputBytes > 0 && !tier1Disabled && {
+    smallInputBytes > 0 && {
       val plans = { val p = df.queryExecution.optimizedPlan; p +: p.subqueriesAll }
       !plans.exists(_.exists {
         case _: LogicalRDD => true
@@ -161,9 +134,16 @@ object ExecPolicy {
           .map(_.stats.sizeInBytes).sum < smallInputBytes
     }
 
+  /** Run `action` on `df` under the small-query confs when it qualifies,
+    * under the tier-1 confs when only its input is small, and unchanged
+    * otherwise, restoring the session confs afterwards. The confs are read
+    * at physical planning, which for a fresh DataFrame happens inside
+    * `action` — callers must not force `executedPlan` before calling.
+    * Sequential use only (the confs are session-scoped while set); Bench
+    * and Verify run queries one at a time. */
   def run[T](df: DataFrame)(action: DataFrame => T): T =
     if (isSmall(df)) runWith(smallConfs, df)(action)
-    else if (isSmallInputNonIterative(df)) runWith(tier1Confs(df), df)(action)
+    else if (isSmallInputNonIterative(df)) runWith(tier1Confs, df)(action)
     else action(df)
 
   /** Apply the small-query confs WITHOUT the plan guards — for callers

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Registry-wide contract checks, run over every entry in
   * [[SparkEntry.allQueries]] at sf0.001:
   *
@@ -69,6 +71,21 @@ class RegisteredQueriesSpec extends SparkSpec {
     val undocumented = SparkEntry.allQueries.map(_.name).filterNot(doc.contains)
     assert(undocumented.isEmpty,
       s"queries missing from COVERAGE.md: ${undocumented.mkString(", ")}")
+  }
+
+  test("the library jar ships only the five sanctioned mains") {
+    // one-off profiler mains belong in a scratch checkout, not in the
+    // library jar: FloorProfile is the one profiler
+    val sanctioned = Set("Bench", "Verify", "FloorProfile", "PlanAudit", "ScaleSmoke")
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val mains = try walk.iterator().asScala.filter { p =>
+      p.toString.endsWith(".scala") &&
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains("def main(")
+    }.map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    finally walk.close()
+    assert(mains.nonEmpty, "no mains found: wrong working directory?")
+    val extra = mains -- sanctioned
+    assert(extra.isEmpty, s"unsanctioned mains in src/main: ${extra.toSeq.sorted.mkString(", ")}")
   }
 
   test("every registered query runs at sf0.001 with a non-empty schema") {

@@ -40,14 +40,17 @@ class ExecPolicySpec extends SparkSpec {
     val exploded = tiny.select(explode(array(lit(1), lit(2))).as("e"), $"id")
       .groupBy($"e").agg(sum($"id").as("s"))
     val before = spark.conf.get("spark.sql.adaptive.enabled")
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
     val seen = ExecPolicy.run(exploded) { df =>
       val rows = df.collect()
       (spark.conf.get("spark.sql.adaptive.enabled"),
-        spark.conf.get("spark.sql.codegen.wholeStage"), rows.length)
+        spark.conf.get("spark.sql.codegen.wholeStage"), rows.length,
+        spark.conf.get("spark.sql.shuffle.partitions"))
     }
     assert(seen._1 == "false", "tier-1 must disable AQE during the action")
     assert(seen._2 != "false", "tier-1 must NOT touch codegen")
     assert(seen._3 == 2)
+    assert(seen._4 == parts, "tier-1 must inherit the session's shuffle partitions")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == before,
       "session confs must be restored")
   }
