@@ -19,10 +19,25 @@ import java.util.Comparator
   * Control tables are tiny (one row per tracked object / pause / failure),
   * so full-snapshot rewrites are the right trade-off — the data-scale state
   * (the change log itself) never lives here.
+  *
+  * Writers: every mutation (read the snapshot, derive the next one,
+  * commit) holds a JVM-wide lock keyed by the table root's absolute path,
+  * so concurrent writers in one process — a cycle's objects, streaming
+  * `foreachBatch` threads, per-environment relay tasks, store instances on
+  * the same root — never lose each other's rows. Reads take no lock. The
+  * store allows ONE writer process per root: the lock does not reach
+  * across JVMs.
   */
 final class ParquetStateStore(spark: SparkSession, rootDir: String) {
 
   private def tableRoot(name: String): Path = Paths.get(rootDir, name)
+
+  /** Run `body` holding the table's writer lock (reentrant). */
+  private def locked[T](name: String)(body: => T): T =
+    ParquetStateStore.tableLocks
+      .computeIfAbsent(tableRoot(name).toAbsolutePath.normalize.toString, _ => new Object)
+      .synchronized(body)
+
   private def pointer(name: String): Path = tableRoot(name).resolve("_CURRENT")
 
   private def currentDir(name: String): Option[Path] = {
@@ -56,8 +71,11 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
   def commitCount: Long = commitCounter.get()
 
   /** Commit a new snapshot: write v{n+1}, flip the pointer, GC old
-    * versions (keeping one previous for concurrent readers). */
-  def commit(name: String, df: DataFrame): Unit = {
+    * versions (keeping one previous for concurrent readers). Holds the
+    * table's writer lock, so another writer's GC never deletes this
+    * in-flight version; a read-modify-write must hold it across the read
+    * too (the mutations below do). */
+  def commit(name: String, df: DataFrame): Unit = locked(name) {
     commitCounter.incrementAndGet()
     Files.createDirectories(tableRoot(name))
     val next = System.nanoTime().toString
@@ -103,14 +121,14 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     * collects the cycle's advances and lands here). One `watermarkUpsert`
     * merge handles the whole batch — update wins per (env, object),
     * untouched rows survive. */
-  def setWatermarks(updates: Seq[(String, String, Long)]): Unit = {
-    if (updates.isEmpty) return
-    import spark.implicits._
-    val update = updates
-      .toDF("environment_name", "object_name", "last_version")
-      .withColumn("last_updated", current_timestamp())
-    commit("watermarks", StateOps.watermarkUpsert(watermarks, update))
-  }
+  def setWatermarks(updates: Seq[(String, String, Long)]): Unit =
+    if (updates.nonEmpty) locked("watermarks") {
+      import spark.implicits._
+      val update = updates
+        .toDF("environment_name", "object_name", "last_version")
+        .withColumn("last_updated", current_timestamp())
+      commit("watermarks", StateOps.watermarkUpsert(watermarks, update))
+    }
 
   def getWatermark(env: String, obj: String): Option[Long] =
     watermarks
@@ -120,15 +138,16 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
 
   /** T8 — state reset: deleting the row re-initializes the object per its
     * InitialSyncMode on the next cycle (Program.cs:401-432). */
-  def resetWatermark(env: String, obj: String): Unit =
+  def resetWatermark(env: String, obj: String): Unit = locked("watermarks") {
     commit("watermarks", watermarks.filter(
       !(col("environment_name") === env && col("object_name") === obj)))
+  }
 
   // ---- pauses -----------------------------------------------------------
 
   def pauses: DataFrame = read("pauses", Schemas.pauseSchema)
 
-  def pause(scope: String, reason: String, by: String): Unit = {
+  def pause(scope: String, reason: String, by: String): Unit = locked("pauses") {
     import spark.implicits._
     val row = Seq((scope.toLowerCase, reason, by))
       .toDF("scope", "reason", "paused_by")
@@ -138,8 +157,9 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
 
   /** T7 — resume = delete the row; holds survive restarts because they live
     * in the store, not in config (PauseService.cs:10-16). */
-  def resume(scope: String): Unit =
+  def resume(scope: String): Unit = locked("pauses") {
     commit("pauses", pauses.filter(col("scope") =!= scope.toLowerCase))
+  }
 
   // ---- dead letters -----------------------------------------------------
 
@@ -154,7 +174,7 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     * assigns dense offsets with one small per-partition count job. Same
     * deterministic ids as a global `row_number`, no all-rows-to-one-task
     * sort if a failure storm ever makes an append data-scale. */
-  def appendDeadLetters(rows: DataFrame): Unit = {
+  def appendDeadLetters(rows: DataFrame): Unit = locked("dead_letters") {
     val existing = deadLetters
     val maxId = existing.agg(coalesce(max("id"), lit(0L))).collect()(0).getLong(0)
     val batchW = org.apache.spark.sql.expressions.Window
@@ -177,11 +197,12 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     commit("dead_letters", existing.unionByName(fresh.select(existing.columns.map(col): _*)))
   }
 
-  def deleteDeadLetters(ids: Seq[Long]): Unit =
+  def deleteDeadLetters(ids: Seq[Long]): Unit = locked("dead_letters") {
     commit("dead_letters", deadLetters.filter(!col("id").isin(ids: _*)))
+  }
 
   /** T5 — merge back updated retry state for the given rows. */
-  def updateDeadLetters(updated: DataFrame): Unit = {
+  def updateDeadLetters(updated: DataFrame): Unit = locked("dead_letters") {
     val cols = deadLetters.columns
     val untouched = deadLetters.join(updated.select("id"), Seq("id"), "left_anti")
     commit("dead_letters", untouched.unionByName(updated.select(cols.map(col): _*)))
@@ -194,11 +215,18 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     * DeadLetterService.cs:148-159). Returns the purged count; the snapshot
     * is only rewritten when something was actually purged. */
   def purgeExpiredDeadLetters(now: java.sql.Timestamp,
-      retentionDays: Int = graft.model.Defaults.DlqRetentionDays): Long = {
-    val before = deadLetters
-    val kept = Dlq.purgeExpired(before, lit(now), retentionDays)
-    val purged = before.count() - kept.count()
-    if (purged > 0) commit("dead_letters", kept)
-    purged
-  }
+      retentionDays: Int = graft.model.Defaults.DlqRetentionDays): Long =
+    locked("dead_letters") {
+      val before = deadLetters
+      val kept = Dlq.purgeExpired(before, lit(now), retentionDays)
+      val purged = before.count() - kept.count()
+      if (purged > 0) commit("dead_letters", kept)
+      purged
+    }
+}
+
+object ParquetStateStore {
+  /** Writer locks, one per table root (absolute path), shared by every
+    * store instance in the JVM. */
+  private val tableLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 }

@@ -2,7 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.util.LongAccumulator
+import scala.util.{Failure, Success, Try}
 import graft.model.{EnvironmentConfig, TrackingObject}
 import graft.ops.{Dlq, Envelope, Incremental, StateOps, Windows}
 import graft.sinks.{Amqp, ExportFailure, ExportMeta, Sinks}
@@ -10,7 +13,11 @@ import graft.state.ParquetStateStore
 
 /** The change-relay pipeline: one polling cycle per tracked object —
   * watermark read → incremental read (P1+P2) → envelope encode → batch →
-  * fan-out to sinks → failures dead-lettered → watermark advance.
+  * fan-out to sinks → failures dead-lettered → watermark advance. A cycle
+  * over several objects ([[runCycles]]) runs them concurrently on a pool
+  * sized min(objects, 2 × defaultParallelism) and commits every advance in
+  * one snapshot; object names must be distinct, and a failing object keeps
+  * its watermark while the others advance.
   *
   * Mirrors ChangeTrackingBackgroundService.ProcessChangesForObjectAsync
   * (reference :427-606) with the relational core as DataFrame transforms.
@@ -28,7 +35,9 @@ import graft.state.ParquetStateStore
   * admits every row that has an `xact_id`, at no Spark job: the frame
   * holds only committed rows unless the caller knows of in-flight
   * transactions (the DSv2 source gates on the database's horizon before
-  * the rows reach the relay; specs inject in-flight horizons here).
+  * the rows reach the relay; specs inject in-flight horizons here). It is
+  * called from the cycle's pool threads, so objects may call it
+  * concurrently.
   */
 final class ChangeRelay(
     spark: SparkSession,
@@ -45,9 +54,10 @@ final class ChangeRelay(
 
   import spark.implicits._
 
-  /** Observability: envelopes of the last non-empty cycle that were fanned
-    * out INSIDE a Spark task (TaskContext present) — the distributed-export
-    * invariant a spec can assert against the envelope count. */
+  /** Observability: envelopes of the last [[runCycles]] call (summed over
+    * its objects) that were fanned out INSIDE a Spark task (TaskContext
+    * present) — the distributed-export invariant a spec can assert against
+    * the envelope count. */
   @volatile var lastCycleExecutorEnvelopes: Long = 0L
 
   /** One micro-batch cycle for one object: [[runCycles]] over that object
@@ -57,52 +67,87 @@ final class ChangeRelay(
 
   /** EVERY tracked object of the environment in one polling cycle — the
     * reference's per-cycle object loop (ChangeTrackingBackgroundService.cs
-    * ExecuteAsync iterates `environment.TrackingObjects` each interval) —
-    * with per-cycle CONTROL-STATE I/O made O(1) in the object count: the
+    * ExecuteAsync iterates `environment.TrackingObjects` each interval).
+    *
+    * Objects run CONCURRENTLY: each object's chain of small Spark jobs
+    * (stats, numbering, export) is submitted from its own thread of a pool
+    * created for this call, so one object's driver-side gaps overlap
+    * another object's jobs. The pool holds min(objects, 2 ×
+    * defaultParallelism) threads and is shut down before the call returns.
+    * Each object runs under `SQLExecution.withThreadLocalCaptured`, so the
+    * caller's local properties (job group, streaming batch properties) and
+    * active session reach every object's jobs. Object names must be
+    * distinct: objects share no mutable state, and each yields at most one
+    * watermark advance.
+    *
+    * Per-cycle CONTROL-STATE I/O is O(1) in the object count: the
     * watermark and pause tables are each read ONCE up front, and every
     * object's watermark advance lands in a single batched
     * [[ParquetStateStore.setWatermarks]] snapshot commit at the end
     * (committing per object would rewrite the O(objects) table once per
     * object). At-least-once (T2): the batched commit happens only AFTER
     * every object's export attempt; a crash mid-cycle loses only
-    * un-committed advances, which re-poll — re-export, never loss. Returns
-    * per-object (rows exported, watermark). */
+    * un-committed advances, which re-poll — re-export, never loss.
+    *
+    * Partial failure: the call waits for every object even after one
+    * fails, commits the advances of the objects that finished, then
+    * rethrows the first failure with any others attached as suppressed.
+    * Re-export stays confined to the failing objects, whose watermarks do
+    * not move. Returns per-object (rows exported, watermark). */
   def runCycles(objects: Seq[(TrackingObject, DataFrame)],
       nowUtc: String): Map[String, (Long, Long)] = {
+    val names = objects.map(_._1.name)
+    require(names.distinct.size == names.size,
+      s"runCycles needs distinct object names, got ${names.mkString(", ")}")
     val committed = store.watermarks
       .filter(col("environment_name") === config.name)
       .select("object_name", "last_version").as[(String, Long)].collect().toMap
     val pausedScopes = store.pauses.select("scope").as[String].collect().toSet
-    // Deferred advances, visible to later objects of the same cycle.
-    val pending = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    // Flush in a finally: an exception on one object's export must not
-    // discard EARLIER objects' successful advances — without this, one
-    // failing object forces every object of the cycle to re-export next
-    // time (at-least-once still held, but duplicate amplification grew
-    // with object count). Re-export stays confined to the failing object.
-    try {
+    val envelopes = spark.sparkContext.longAccumulator("graft.relay.envelopesExportedOnExecutors")
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val threads = new java.util.concurrent.atomic.AtomicInteger()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(objects.size, 2 * spark.sparkContext.defaultParallelism)),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-relay-${config.name}-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    val outcomes = try {
       objects.map { case (obj, changes) =>
-        obj.name -> cycleCore(obj, changes, nowUtc, committed, pausedScopes, pending)
-      }.toMap
-    } finally {
-      if (pending.nonEmpty)
-        store.setWatermarks(pending.toSeq.map { case (o, v) => (config.name, o, v) })
+        SQLExecution.withThreadLocalCaptured(session, pool) {
+          cycleCore(obj, changes, nowUtc, committed.get(obj.name), pausedScopes, envelopes)
+        }
+      }.map(f => Try(f.join()).recoverWith {
+        case e: java.util.concurrent.CompletionException if e.getCause != null =>
+          Failure(e.getCause)
+      })
+    } finally pool.shutdown()
+    lastCycleExecutorEnvelopes = envelopes.value
+
+    store.setWatermarks(names.zip(outcomes).collect {
+      case (name, Success(ChangeRelay.ObjectCycle(_, _, Some(v)))) => (config.name, name, v)
+    })
+    outcomes.collect { case Failure(e) => e } match {
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+      case _ => names.zip(outcomes.map(_.get)).map { case (name, c) =>
+        name -> (c.rows, c.watermark) }.toMap
     }
   }
 
-  /** The cycle body for one object. `committed` and `pausedScopes` are the
+  /** The cycle body for one object. `stored` and `pausedScopes` are the
     * control state read at the start of the cycle; the object's advance is
-    * recorded in `pending` for the caller's single commit. */
+    * returned for the caller's single commit. `exportedOnExecutors` counts
+    * the call's executor-side envelope exports. */
   private def cycleCore(obj: TrackingObject, changes: DataFrame, nowUtc: String,
-      committed: Map[String, Long],
+      stored: Option[Long],
       pausedScopes: Set[String],
-      pending: scala.collection.mutable.Map[String, Long]): (Long, Long) = {
-    val stored = pending.get(obj.name).orElse(committed.get(obj.name))
+      exportedOnExecutors: LongAccumulator): ChangeRelay.ObjectCycle = {
     // P7 — pause scopes short-circuit before any work.
     val envScope = s"env:${config.name.toLowerCase}"
     val objScope = s"obj:${config.name.toLowerCase}/${obj.name.toLowerCase}"
     if (pausedScopes.contains(envScope) || pausedScopes.contains(objScope))
-      return (0L, stored.getOrElse(0L))
+      return ChangeRelay.ObjectCycle(0L, stored.getOrElse(0L), None)
 
     // T8/S7/S8 — missing watermark re-initializes per InitialSyncMode.
     val fromVersion = stored match {
@@ -113,8 +158,7 @@ final class ChangeRelay(
         // un-gated seed could skip rows of in-flight transactions forever.
         val seeded = Incremental.seed(changes, horizon = horizonOf(changes))
           .select("version").as[Long].head()
-        pending(obj.name) = seeded
-        return (0L, seeded)
+        return ChangeRelay.ObjectCycle(0L, seeded, Some(seeded))
     }
 
     val horizon = horizonOf(changes)
@@ -167,18 +211,21 @@ final class ChangeRelay(
         val plan = ChangeRelay.ExportPlan(config.name, obj.name, obj.database,
           nowUtc, totalBatches, fileSinkTemplate, config.endpoints,
           config.maxPayloadSizeBytes, performHttp, performAmqp)
-        val acc = spark.sparkContext.longAccumulator("graft.relay.envelopesExportedOnExecutors")
+        // Counted inside the export job, so no second job probes for
+        // failures: a re-run stage can only over-count (an empty append),
+        // never under-count.
+        val failed = spark.sparkContext.longAccumulator("graft.relay.exportFailures")
         val failures = envelopes.select("g", "envelope_json").as[(String, String)]
-          .mapPartitions(it => ChangeRelay.exportPartition(plan, it, acc))
+          .mapPartitions(it => ChangeRelay.exportPartition(plan, it, exportedOnExecutors, failed))
           .toDF("error_message", "data")
         // Materialize exactly once: this job runs the sink fan-out on the
         // executors; only failure rows persist (executor-cached), so the
-        // isEmpty probe and the dead-letter append never re-run the export.
+        // dead-letter append never re-runs the export.
         val failDf = failures.localCheckpoint(true)
         // K9 — every failure dead-letters with D1 dedup. Each dead letter
         // carries ITS OWN envelope so replay re-sends exactly what failed
         // (DeadLetterService.cs stores the Data JSON per failure).
-        if (!failDf.isEmpty) {
+        if (failed.value > 0) {
           val fdf = failDf
             .withColumn("source_key", lit(s"${config.name}_${obj.name}_${obj.database}"))
             .withColumn("tracking_object_name", lit(obj.name))
@@ -188,14 +235,12 @@ final class ChangeRelay(
             .withColumn("timestamp", current_timestamp())
           store.appendDeadLetters(fdf)
         }
-        lastCycleExecutorEnvelopes = acc.value
         batchRows
       }
 
     // T2 — advance AFTER the export attempt, regardless of sink failures.
-    if (newVersion > fromVersion)
-      pending(obj.name) = newVersion
-    (exported, newVersion)
+    ChangeRelay.ObjectCycle(exported, newVersion,
+      if (newVersion > fromVersion) Some(newVersion) else None)
   }
 
   /** §3.2 — dead-letter replay cycle: retention purge, then due batch,
@@ -248,15 +293,21 @@ object ChangeRelay {
       performHttp: Boolean = false,
       performAmqp: Boolean = false)
 
+  /** One object's part of a cycle: rows exported, its watermark, and the
+    * advance to commit (None when the watermark did not move). */
+  private final case class ObjectCycle(rows: Long, watermark: Long, advance: Option[Long])
+
   /** Fan one partition of `(g, envelope_json)` rows out to every configured
-    * sink, executor-side. Emits only the failures as (error, payload) — the
-    * at-least-once contract (T2) means a retried task may re-invoke sinks,
-    * exactly like the reference's retry loop; dedup happens at the DLQ (D1)
-    * and at idempotent consumers, never by suppressing the send. */
+    * sink, executor-side. Emits only the failures as (error, payload), each
+    * counted in `failures` — the at-least-once contract (T2) means a retried
+    * task may re-invoke sinks, exactly like the reference's retry loop;
+    * dedup happens at the DLQ (D1) and at idempotent consumers, never by
+    * suppressing the send. */
   private[streaming] def exportPartition(
       plan: ExportPlan,
       it: Iterator[(String, String)],
-      executorEnvelopes: org.apache.spark.util.LongAccumulator): Iterator[(String, String)] =
+      executorEnvelopes: LongAccumulator,
+      failures: LongAccumulator): Iterator[(String, String)] =
     it.flatMap { case (g, json) =>
       if (org.apache.spark.TaskContext.get() != null) executorEnvelopes.add(1)
       val batchNo = g.substring(g.lastIndexOf('#') + 1).toInt
@@ -312,7 +363,9 @@ object ChangeRelay {
         }
         result.left.toSeq.map(f => (f.error, json))
       }
-      fileFailures ++ endpointFailures
+      val failed = fileFailures ++ endpointFailures
+      failures.add(failed.size.toLong)
+      failed
     }
 
   /** T1/T6 — the Structured-Streaming wrapper: watch an outbox directory as

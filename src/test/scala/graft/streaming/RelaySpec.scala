@@ -100,6 +100,103 @@ class RelaySpec extends SparkSpec {
     assert(store.getWatermark("prod", "o5fresh").contains(8L))
   }
 
+  test("partial failure: the other objects export and advance in ONE commit; failing objects hold; the error propagates") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val objs = (0 until 5).map(i => TrackingObject(s"p$i", "db0", "t", "sp"))
+    val exportTpl = dir.resolve("exports").toString + "/{object}/c-{batch}.json"
+    val relay = new ChangeRelay(spark, store,
+      EnvironmentConfig("prod", "postgres", objs, Nil), Some(exportTpl), horizonOf = _ => 1000L)
+    store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
+    // A parquet frame whose files are deleted after planning: its first
+    // job fails with the file gone.
+    val gone = dir.resolve("gone")
+    outboxDf(Seq((1L, 1L, "I", 1.0, "{}"))).write.parquet(gone.toString)
+    val broken = spark.read.parquet(gone.toString)
+    val walk = Files.walk(gone)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+    finally walk.close()
+
+    val failing = Set("p1", "p3")
+    val base = store.commitCount
+    val feeds = objs.map(o => o ->
+      (if (failing(o.name)) broken else outboxDf(Seq((5L, 1L, "I", 1.0, "{}")))))
+    val err = intercept[Exception](relay.runCycles(feeds, "20240115000000"))
+    assert(err.getSuppressed.length == 1, "the second failure rides along as suppressed")
+    assert(store.commitCount == base + 1, "the finished objects' advances land in one commit")
+    for (o <- Seq("p0", "p2", "p4")) {
+      assert(store.getWatermark("prod", o).contains(5L), s"$o advanced")
+      assert(Files.isDirectory(dir.resolve("exports").resolve(o)), s"$o exported")
+    }
+    for (o <- failing) {
+      assert(store.getWatermark("prod", o).contains(0L), s"$o keeps its watermark")
+      assert(!Files.exists(dir.resolve("exports").resolve(o)))
+    }
+  }
+
+  test("duplicate object names in one cycle are refused before any work") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val relay = new ChangeRelay(spark, store, cfg(), None)
+    val feed = outboxDf(Seq((1L, 1L, "I", 1.0, "{}")))
+    intercept[IllegalArgumentException](
+      relay.runCycles(Seq(obj -> feed, obj -> feed), "20240115000000"))
+    assert(store.commitCount == 0)
+  }
+
+  test("a local property set on the calling thread reaches the jobs of every object") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val objs = (0 until 4).map(i => TrackingObject(s"t$i", "db0", "t", "sp"))
+    val relay = new ChangeRelay(spark, store,
+      EnvironmentConfig("prod", "postgres", objs, Nil),
+      Some(dir.resolve("exports").toString + "/{object}/c-{batch}.json"), horizonOf = _ => 1000L)
+    store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
+    val feeds = objs.map(o => o -> outboxDf(Seq((1L, 1L, "I", 1.0, "{}"))))
+
+    val key = "graft.spec.cycleTag"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(Option(j.properties).map(_.getProperty(key)).orNull))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, "cycle-7")
+    try relay.runCycles(feeds, "20240115000000")
+    finally {
+      sc.setLocalProperty(key, null)
+      org.apache.spark.TestListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val tags = seen.toArray.toSeq
+    // Every exporting object runs at least its stats job and its export job.
+    assert(tags.size >= 2 * objs.size, s"saw only ${tags.size} jobs")
+    assert(tags.forall(_ == "cycle-7"), s"jobs without the caller's property: $tags")
+  }
+
+  test("two dead-lettering objects in one cycle keep every dead letter, with distinct ids") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val objs = Seq(TrackingObject("d0", "db0", "t", "sp"), TrackingObject("d1", "db0", "t", "sp"))
+    val failingHttp = SinkEndpoint("ep1", "http", "http://x/{object}", enableCompression = false)
+    // 5-byte payload cap → every envelope fails; 25 rows at 10 per batch.
+    val relay = new ChangeRelay(spark, store,
+      EnvironmentConfig("prod", "postgres", objs, Seq(failingHttp),
+        maxRecordsPerBatch = 10, maxPayloadSizeBytes = 5L),
+      None, horizonOf = _ => 1000L)
+    store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
+    val feeds = objs.map(o => o -> outboxDf((1L to 25L).map(i =>
+      (i, i, "I", i.toDouble, s"""{"k":$i}"""))))
+    val res = relay.runCycles(feeds, "20240115000000")
+    assert(res == Map("d0" -> (25L, 25L), "d1" -> (25L, 25L)))
+    val letters = store.deadLetters.select("id", "tracking_object_name").as[(Long, String)].collect()
+    assert(letters.groupBy(_._2).map { case (o, ls) => o -> ls.length } == Map("d0" -> 3, "d1" -> 3),
+      s"expected ceil(25/10) = 3 dead letters per object: ${letters.toSeq}")
+    assert(letters.map(_._1).distinct.length == letters.length, s"duplicate ids: ${letters.toSeq}")
+  }
+
   test("at-least-once: failed sink dead-letters but the watermark still advances") {
     val dir = tmp()
     val store = new ParquetStateStore(spark, dir.resolve("state").toString)
