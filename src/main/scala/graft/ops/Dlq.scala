@@ -31,6 +31,13 @@ object Dlq {
   /** F4/D1 — the dedup hash itself. Ref: DeadLetterService.cs:293-299. */
   def dataHash(data: Column): Column = sha2(data, 256)
 
+  /** [[dataHash]] on the driver: the same lowercase SHA-256 hex of the
+    * UTF-8 bytes, so letters hashed either way dedup against each other. */
+  def dataHash(data: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(data.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+
   /** P8 — rows due for replay: attempts not exhausted, backoff elapsed (or
     * never attempted), routable. Ref: DeadLetterService.cs:202-227. */
   def dueFilter(dlq: DataFrame, maxAttempts: Int, now: Column): DataFrame =

@@ -28,7 +28,7 @@ object Windows {
     * above degenerates to one partition holding the entire batch (a full
     * initial sync serialized through one task's sort). Range-partition +
     * in-partition sort + `zipWithIndex` produces the identical dense
-    * `orderCol` ordering distributed (the DLQ-id pattern); `totalRows`
+    * `orderCol` ordering distributed; `totalRows`
     * comes from the caller, which already counted the batch — no extra
     * count job beyond zipWithIndex's internal partition-size pass over the
     * (already shuffled) sorted data. */

@@ -1,11 +1,23 @@
 package graft.state
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import graft.model.Schemas
-import graft.ops.{Dlq, StateOps}
+import graft.ops.Dlq
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
+import scala.jdk.CollectionConverters._
 
 /** Parquet-backed control tables: watermarks, pauses, dead letters.
   *
@@ -20,6 +32,15 @@ import java.util.Comparator
   * so full-snapshot rewrites are the right trade-off — the data-scale state
   * (the change log itself) never lives here.
   *
+  * Driver-resident tables: `watermarks`, `pauses` and `dead_letters` run no
+  * Spark job. A snapshot is one parquet file read and written on the driver
+  * (parquet-hadoop over local files, timestamps as INT64 micros UTC), so
+  * `spark.read.parquet` still reads it; reads are local relations, and
+  * mutations are plain Scala over the row set. Dead-letter payloads
+  * therefore live on the driver, as in the reference's SQLite; the bound is
+  * what one cycle's failed envelopes add. Every other table (the streaming
+  * operators' state, [[ModelStore]]) is read and written through Spark.
+  *
   * Writers: every mutation (read the snapshot, derive the next one,
   * commit) holds a JVM-wide lock keyed by the table root's absolute path,
   * so concurrent writers in one process — a cycle's objects, streaming
@@ -29,6 +50,7 @@ import java.util.Comparator
   * across JVMs.
   */
 final class ParquetStateStore(spark: SparkSession, rootDir: String) {
+  import ParquetStateStore._
 
   private def tableRoot(name: String): Path = Paths.get(rootDir, name)
 
@@ -53,13 +75,21 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     } else None
   }
 
-  /** Read the current snapshot, or an empty frame with the given schema. */
-  def read(name: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    currentDir(name) match {
-      case Some(dir) => spark.read.schema(schema).parquet(dir.toString)
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** Read the current snapshot, or an empty frame with the given schema.
+    * A control table comes back as a local relation, with its own schema. */
+  def read(name: String, schema: StructType): DataFrame =
+    ControlTables.get(name) match {
+      case Some(s) => spark.createDataFrame(rows(name).asJava, s)
+      case None => currentDir(name) match {
+        case Some(dir) => spark.read.schema(schema).parquet(dir.toString)
+        case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      }
     }
+
+  /** A control table's current snapshot, read on the driver. */
+  private def rows(name: String): Vector[Row] =
+    currentDir(name).fold(Vector.empty[Row])(dir =>
+      readSnapshot(dir.resolve(SnapshotFile), ControlTables(name)))
 
   /** Snapshot commits performed by this store instance — an observability
     * counter specs assert per-cycle state-I/O invariants against (e.g. one
@@ -70,17 +100,29 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
   private val commitCounter = new java.util.concurrent.atomic.AtomicLong(0L)
   def commitCount: Long = commitCounter.get()
 
-  /** Commit a new snapshot: write v{n+1}, flip the pointer, GC old
-    * versions (keeping one previous for concurrent readers). Holds the
-    * table's writer lock, so another writer's GC never deletes this
-    * in-flight version; a read-modify-write must hold it across the read
-    * too (the mutations below do). */
-  def commit(name: String, df: DataFrame): Unit = locked(name) {
+  /** Commit a new snapshot. A control table collects `df` and takes the
+    * driver path; any other table is written by Spark. */
+  def commit(name: String, df: DataFrame): Unit = ControlTables.get(name) match {
+    case Some(s) => commitRows(name, df.select(s.fieldNames.toSeq.map(col): _*).collect().toSeq)
+    case None => flip(name)(dir => df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString))
+  }
+
+  private def commitRows(name: String, snapshot: Seq[Row]): Unit = flip(name) { dir =>
+    Files.createDirectories(dir)
+    writeSnapshot(dir.resolve(SnapshotFile), ControlTables(name), snapshot)
+  }
+
+  /** The commit protocol: write v{n+1}, flip the pointer, GC old versions
+    * (keeping one previous for concurrent readers). Holds the table's
+    * writer lock, so another writer's GC never deletes this in-flight
+    * version; a read-modify-write must hold it across the read too (the
+    * mutations below do). */
+  private def flip(name: String)(write: Path => Unit): Unit = locked(name) {
     commitCounter.incrementAndGet()
     Files.createDirectories(tableRoot(name))
     val next = System.nanoTime().toString
     val dir = tableRoot(name).resolve(s"v$next")
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString)
+    write(dir)
     val prev = currentDir(name)
     // The pointer flip IS the commit, so it must be atomic: writeString
     // truncates in place, and a crash mid-write would leave an empty or
@@ -92,12 +134,15 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     Files.move(tmp, pointer(name),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // GC everything except the new current and its immediate predecessor.
+    // GC every version except the new current and its immediate
+    // predecessor — an orphan a crashed commit left included — and any
+    // pointer temp file a crash before the move left behind.
     val keep = Set(Some(dir), prev).flatten.map(_.getFileName.toString)
     val listing = Files.list(tableRoot(name))
-    try listing.filter(p =>
-        Files.isDirectory(p) && !keep.contains(p.getFileName.toString))
-      .forEach { p =>
+    try listing.filter { p =>
+        val n = p.getFileName.toString
+        if (Files.isDirectory(p)) !keep.contains(n) else n.startsWith("_CURRENT.tmp")
+      }.forEach { p =>
         val walk = Files.walk(p)
         try walk.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
         finally walk.close()
@@ -118,47 +163,47 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     * object per cycle — O(objects²) row writes per cycle; batching makes
     * per-cycle watermark I/O one read + one write regardless of how many
     * tracked objects advanced ([[graft.streaming.ChangeRelay.runCycles]]
-    * collects the cycle's advances and lands here). One `watermarkUpsert`
-    * merge handles the whole batch — update wins per (env, object),
-    * untouched rows survive. */
+    * collects the cycle's advances and lands here). The update wins per
+    * (env, object) (the last one, if a key repeats); untouched rows
+    * survive. */
   def setWatermarks(updates: Seq[(String, String, Long)]): Unit =
     if (updates.nonEmpty) locked("watermarks") {
-      import spark.implicits._
-      val update = updates
-        .toDF("environment_name", "object_name", "last_version")
-        .withColumn("last_updated", current_timestamp())
-      commit("watermarks", StateOps.watermarkUpsert(watermarks, update))
+      val now = nowMicros()
+      val fresh = updates.map { case (e, o, v) => (e, o) -> v }.toMap
+      commitRows("watermarks",
+        rows("watermarks").filterNot(r => fresh.contains((r.getString(0), r.getString(1)))) ++
+          fresh.toSeq.sortBy(_._1).map { case ((e, o), v) => Row(e, o, v, now) })
     }
 
-  def getWatermark(env: String, obj: String): Option[Long] =
-    watermarks
-      .filter(col("environment_name") === env && col("object_name") === obj)
-      .select("last_version")
-      .collect().headOption.map(_.getLong(0))
+  def getWatermark(env: String, obj: String): Option[Long] = watermarksOf(env).get(obj)
+
+  /** Every stored watermark of one environment, by object name. */
+  def watermarksOf(env: String): Map[String, Long] =
+    rows("watermarks").collect { case r if r.getString(0) == env => r.getString(1) -> r.getLong(2) }.toMap
 
   /** T8 — state reset: deleting the row re-initializes the object per its
     * InitialSyncMode on the next cycle (Program.cs:401-432). */
   def resetWatermark(env: String, obj: String): Unit = locked("watermarks") {
-    commit("watermarks", watermarks.filter(
-      !(col("environment_name") === env && col("object_name") === obj)))
+    commitRows("watermarks",
+      rows("watermarks").filterNot(r => r.getString(0) == env && r.getString(1) == obj))
   }
 
   // ---- pauses -----------------------------------------------------------
 
   def pauses: DataFrame = read("pauses", Schemas.pauseSchema)
 
+  /** The paused scopes, as stored (lower case). */
+  def pausedScopes: Set[String] = rows("pauses").map(_.getString(0)).toSet
+
   def pause(scope: String, reason: String, by: String): Unit = locked("pauses") {
-    import spark.implicits._
-    val row = Seq((scope.toLowerCase, reason, by))
-      .toDF("scope", "reason", "paused_by")
-      .withColumn("paused_at", current_timestamp())
-    commit("pauses", pauses.filter(col("scope") =!= scope.toLowerCase).unionByName(row))
+    val s = scope.toLowerCase
+    commitRows("pauses", rows("pauses").filterNot(_.getString(0) == s) :+ Row(s, reason, by, nowMicros()))
   }
 
   /** T7 — resume = delete the row; holds survive restarts because they live
     * in the store, not in config (PauseService.cs:10-16). */
   def resume(scope: String): Unit = locked("pauses") {
-    commit("pauses", pauses.filter(col("scope") =!= scope.toLowerCase))
+    commitRows("pauses", rows("pauses").filterNot(_.getString(0) == scope.toLowerCase))
   }
 
   // ---- dead letters -----------------------------------------------------
@@ -166,50 +211,49 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
   def deadLetters: DataFrame = read("dead_letters", Schemas.deadLetterSchema)
 
   /** K9/D1 — append failures with exactly-once-per-payload semantics:
-    * a (source_key, data_hash) already present is skipped (T4).
-    *
-    * Id assignment is maxId + a dense offset in (source_key, data_hash)
-    * order — computed WITHOUT a single-partition window: range-partition +
-    * in-partition sort reproduces the total order, and `zipWithIndex`
-    * assigns dense offsets with one small per-partition count job. Same
-    * deterministic ids as a global `row_number`, no all-rows-to-one-task
-    * sort if a failure storm ever makes an append data-scale. */
-  def appendDeadLetters(rows: DataFrame): Unit = locked("dead_letters") {
-    val existing = deadLetters
-    val maxId = existing.agg(coalesce(max("id"), lit(0L))).collect()(0).getLong(0)
-    val batchW = org.apache.spark.sql.expressions.Window
-      .partitionBy("source_key", "data_hash").orderBy("error_message")
-    val deduped = rows
-      // D1 holds WITHIN the incoming batch too: several sinks failing on the
-      // same payload produce one dead letter (first by error_message).
-      .withColumn("_rn", row_number().over(batchW)).filter(col("_rn") === 1).drop("_rn")
-      .join(existing.select("source_key", "data_hash"), Seq("source_key", "data_hash"), "left_anti")
-    val ordered = deduped
-      .repartitionByRange(col("source_key"), col("data_hash"))
-      .sortWithinPartitions("source_key", "data_hash")
-    val withIdSchema = ordered.schema.add("id", org.apache.spark.sql.types.LongType, nullable = false)
-    val fresh = spark.createDataFrame(
-        ordered.rdd.zipWithIndex().map { case (r, i) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (maxId + i + 1)) },
-        withIdSchema)
-      .withColumn("attempts", lit(0))
-      .withColumn("next_attempt", lit(null).cast("timestamp"))
-    commit("dead_letters", existing.unionByName(fresh.select(existing.columns.map(col): _*)))
+    * a (source_key, data_hash) already present is skipped (T4). `letters`
+    * carries the [[LetterColumns]]; see the row flavour below. */
+  def appendDeadLetters(letters: DataFrame): Unit =
+    appendDeadLetters(letters.select(LetterColumns.map(col): _*).collect().toSeq)
+
+  /** [[appendDeadLetters]] for failures already on the driver, as rows in
+    * [[LetterColumns]] order. D1 holds within the batch too: several sinks
+    * failing on one payload leave one letter, the one with the least
+    * `error_message`. Ids are dense from maxId + 1 in (source_key,
+    * data_hash) order; a fresh letter has 0 attempts and no next attempt.
+    * Commits only when a letter is new. */
+  def appendDeadLetters(letters: Seq[Row]): Unit = locked("dead_letters") {
+    val existing = rows("dead_letters")
+    val seen = existing.map(r => (r.getString(1), r.getString(5))).toSet
+    val maxId = existing.map(_.getLong(0)).maxOption.getOrElse(0L)
+    val fresh = letters.groupBy(r => (r.getString(0), r.getString(4)))
+      .collect { case (key, same) if !seen(key) => key -> same.minBy(r => Option(r.getString(6))) }
+      .toSeq.sortBy(_._1).zipWithIndex
+      .map { case ((_, r), i) => Row.fromSeq((maxId + i + 1) +: r.toSeq :+ 0 :+ null) }
+    if (fresh.nonEmpty) commitRows("dead_letters", existing ++ fresh)
   }
 
   def deleteDeadLetters(ids: Seq[Long]): Unit = locked("dead_letters") {
-    commit("dead_letters", deadLetters.filter(!col("id").isin(ids: _*)))
+    val drop = ids.toSet
+    commitRows("dead_letters", rows("dead_letters").filterNot(r => drop(r.getLong(0))))
   }
 
   /** T5 — merge back updated retry state for the given rows. */
   def updateDeadLetters(updated: DataFrame): Unit = locked("dead_letters") {
-    val cols = deadLetters.columns
-    val untouched = deadLetters.join(updated.select("id"), Seq("id"), "left_anti")
-    commit("dead_letters", untouched.unionByName(updated.select(cols.map(col): _*)))
+    val fresh = updated.select(Schemas.deadLetterSchema.fieldNames.toSeq.map(col): _*).collect()
+    val ids = fresh.map(_.getLong(0)).toSet
+    commitRows("dead_letters", rows("dead_letters").filterNot(r => ids(r.getLong(0))) ++ fresh)
   }
 
-  def dueDeadLetters(maxAttempts: Int, batchSize: Int = 25): DataFrame =
-    Dlq.replayBatch(Dlq.dueFilter(deadLetters, maxAttempts, current_timestamp()), batchSize)
+  /** P8 + O1 — the replay batch: due letters ([[Dlq.dueFilter]]), oldest
+    * first by (timestamp, id), at most `batchSize` — the order and cap of
+    * [[Dlq.replayBatch]], taken on the driver. */
+  def dueDeadLetters(maxAttempts: Int, batchSize: Int = 25): DataFrame = {
+    val due = Dlq.dueFilter(deadLetters, maxAttempts, current_timestamp()).collect()
+      .sortBy(r => (DateTimeUtils.fromJavaTimestamp(r.getTimestamp(8)), r.getLong(0)))
+      .take(batchSize)
+    spark.createDataFrame(due.toSeq.asJava, Schemas.deadLetterSchema)
+  }
 
   /** Purge dead letters older than the retention window (reference
     * DeadLetterService.cs:148-159). Returns the purged count; the snapshot
@@ -217,16 +261,90 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
   def purgeExpiredDeadLetters(now: java.sql.Timestamp,
       retentionDays: Int = graft.model.Defaults.DlqRetentionDays): Long =
     locked("dead_letters") {
-      val before = deadLetters
-      val kept = Dlq.purgeExpired(before, lit(now), retentionDays)
-      val purged = before.count() - kept.count()
-      if (purged > 0) commit("dead_letters", kept)
+      val before = rows("dead_letters")
+      val kept = Dlq.purgeExpired(
+        spark.createDataFrame(before.asJava, Schemas.deadLetterSchema), lit(now), retentionDays)
+        .collect().toSeq
+      val purged = (before.size - kept.size).toLong
+      if (purged > 0) commitRows("dead_letters", kept)
       purged
     }
+
+  // ---- driver-side snapshot files ----------------------------------------
+
+  /** One writer/reader configuration per store, not one per commit. */
+  private val parquetConf =
+    new HadoopParquetConfiguration(new org.apache.hadoop.conf.Configuration(false))
+
+  private def writeSnapshot(file: Path, schema: StructType, snapshot: Seq[Row]): Unit = {
+    val message = new MessageType("spark_schema", schema.fields.toSeq.map { f =>
+      val c = Codecs(f.dataType)
+      Types.primitive(c.physical,
+          if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED)
+        .as(c.logical).named(f.name): Type
+    }.asJava)
+    val groups = new SimpleGroupFactory(message)
+    val writer = ExampleParquetWriter.builder(new LocalOutputFile(file))
+      .withConf(parquetConf).withType(message)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try snapshot.foreach { r =>
+      val g = groups.newGroup()
+      schema.fields.indices.filterNot(r.isNullAt)
+        .foreach(i => Codecs(schema(i).dataType).write(g, i, r.get(i)))
+      writer.write(g)
+    } finally writer.close()
+  }
+
+  private def readSnapshot(file: Path, schema: StructType): Vector[Row] = {
+    val reader = new ParquetReader.Builder[Group](new LocalInputFile(file), parquetConf) {
+      override def getReadSupport = new GroupReadSupport
+    }.build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map(g =>
+      Row.fromSeq(schema.fields.indices.map(i =>
+        if (g.getFieldRepetitionCount(i) == 0) null else Codecs(schema(i).dataType).read(g, i))))
+      .toVector
+    finally reader.close()
+  }
 }
 
 object ParquetStateStore {
   /** Writer locks, one per table root (absolute path), shared by every
     * store instance in the JVM. */
   private val tableLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** The driver-resident tables and their schemas. */
+  private val ControlTables: Map[String, StructType] = Map(
+    "watermarks" -> Schemas.watermarkSchema,
+    "pauses" -> Schemas.pauseSchema,
+    "dead_letters" -> Schemas.deadLetterSchema)
+
+  /** The one data file of a driver-written snapshot directory. */
+  private val SnapshotFile = "part-00000.snappy.parquet"
+
+  /** What a caller supplies per dead letter; the store adds the id, the
+    * attempts and the next attempt. */
+  val LetterColumns: Seq[String] = Seq("source_key", "tracking_object_name",
+    "environment_name", "database_name", "data_hash", "data", "error_message", "timestamp")
+
+  /** "Now", at the microsecond precision a snapshot stores. */
+  private def nowMicros(): java.sql.Timestamp =
+    DateTimeUtils.toJavaTimestamp(DateTimeUtils.instantToMicros(java.time.Instant.now()))
+
+  /** How a control column is stored: strings as UTF-8 binary, timestamps
+    * as INT64 TIMESTAMP(MICROS, UTC) — the types Spark's own reader maps
+    * back to the control schemas. */
+  private final case class Codec(physical: PrimitiveTypeName, logical: LogicalTypeAnnotation,
+      write: (Group, Int, Any) => Unit, read: (Group, Int) => Any)
+
+  private val Codecs: Map[DataType, Codec] = Map(
+    StringType -> Codec(PrimitiveTypeName.BINARY, LogicalTypeAnnotation.stringType(),
+      (g, i, v) => g.add(i, v.asInstanceOf[String]), _.getString(_, 0)),
+    LongType -> Codec(PrimitiveTypeName.INT64, null,
+      (g, i, v) => g.add(i, v.asInstanceOf[Long]), _.getLong(_, 0)),
+    IntegerType -> Codec(PrimitiveTypeName.INT32, null,
+      (g, i, v) => g.add(i, v.asInstanceOf[Int]), _.getInteger(_, 0)),
+    TimestampType -> Codec(PrimitiveTypeName.INT64,
+      LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS),
+      (g, i, v) => g.add(i, DateTimeUtils.anyToMicros(v)),
+      (g, i) => DateTimeUtils.toJavaTimestamp(g.getLong(i, 0))))
 }

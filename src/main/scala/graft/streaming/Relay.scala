@@ -1,13 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.LongAccumulator
 import scala.util.{Failure, Success, Try}
 import graft.model.{EnvironmentConfig, TrackingObject}
-import graft.ops.{Dlq, Envelope, Incremental, StateOps, Windows}
+import graft.ops.{Dlq, Envelope, Incremental, Windows}
 import graft.sinks.{Amqp, ExportFailure, ExportMeta, Sinks}
 import graft.state.ParquetStateStore
 
@@ -24,6 +24,17 @@ import graft.state.ParquetStateStore
   * At-least-once semantics (T2): the watermark advances after the export
   * attempt even when a sink fails — failed payloads are re-driven from the
   * DLQ, never by re-polling (stored-procedure.md:92).
+  *
+  * Spark work per object and cycle is data work only: one stats action
+  * (row count and new watermark) and one export action. The export action
+  * runs the sink fan-out on the executors and returns just the failed
+  * envelopes as (error, data) rows, which the driver hashes and
+  * dead-letters; successful envelopes never reach the driver. A delta that
+  * fits one envelope (rows ≤ `maxRecordsPerBatch`) is batch 0 and skips the
+  * numbering jobs; a larger one is numbered by
+  * [[graft.ops.Windows.numberBatchesRange]]. Control state (watermarks,
+  * pauses, dead letters) lives on the driver ([[ParquetStateStore]]), so
+  * reading and committing it submits no Spark job.
   *
   * Source contract (U1): a change frame carries `id` (the version),
   * `xact_id`, `operation`, `value`, `props` and `changed`. It reaches the
@@ -70,9 +81,9 @@ final class ChangeRelay(
     * ExecuteAsync iterates `environment.TrackingObjects` each interval).
     *
     * Objects run CONCURRENTLY: each object's chain of small Spark jobs
-    * (stats, numbering, export) is submitted from its own thread of a pool
-    * created for this call, so one object's driver-side gaps overlap
-    * another object's jobs. The pool holds min(objects, 2 ×
+    * (stats, numbering when the delta spans several envelopes, export) is
+    * submitted from its own thread of a pool created for this call, so one
+    * object's driver-side gaps overlap another object's jobs. The pool holds min(objects, 2 ×
     * defaultParallelism) threads and is shut down before the call returns.
     * Each object runs under `SQLExecution.withThreadLocalCaptured`, so the
     * caller's local properties (job group, streaming batch properties) and
@@ -80,9 +91,9 @@ final class ChangeRelay(
     * distinct: objects share no mutable state, and each yields at most one
     * watermark advance.
     *
-    * Per-cycle CONTROL-STATE I/O is O(1) in the object count: the
-    * watermark and pause tables are each read ONCE up front, and every
-    * object's watermark advance lands in a single batched
+    * Per-cycle CONTROL-STATE I/O is O(1) in the object count and runs on
+    * the driver: the watermark and pause tables are each read ONCE up
+    * front, and every object's watermark advance lands in a single batched
     * [[ParquetStateStore.setWatermarks]] snapshot commit at the end
     * (committing per object would rewrite the O(objects) table once per
     * object). At-least-once (T2): the batched commit happens only AFTER
@@ -99,10 +110,8 @@ final class ChangeRelay(
     val names = objects.map(_._1.name)
     require(names.distinct.size == names.size,
       s"runCycles needs distinct object names, got ${names.mkString(", ")}")
-    val committed = store.watermarks
-      .filter(col("environment_name") === config.name)
-      .select("object_name", "last_version").as[(String, Long)].collect().toMap
-    val pausedScopes = store.pauses.select("scope").as[String].collect().toSet
+    val committed = store.watermarksOf(config.name)
+    val pausedScopes = store.pausedScopes
     val envelopes = spark.sparkContext.longAccumulator("graft.relay.envelopesExportedOnExecutors")
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val threads = new java.util.concurrent.atomic.AtomicInteger()
@@ -190,13 +199,16 @@ final class ChangeRelay(
     val exported =
       if (batchRows == 0) 0L
       else {
-        // numberBatchesRange, not the W2 window: a cycle numbers ONE
-        // object's rows, so the per-group window would put the whole batch
-        // (a full initial sync) in a single task's sort.
+        // One envelope when the delta fits the cap: the batch number is the
+        // literal 0 and no numbering job runs. Otherwise numberBatchesRange,
+        // not the W2 window: a cycle numbers ONE object's rows, so the
+        // per-group window would put the whole batch (a full initial sync)
+        // in a single task's sort.
+        val numbered =
+          if (batchRows <= config.maxRecordsPerBatch) rows.withColumn("batch", lit(0))
+          else Windows.numberBatchesRange(rows, "version", config.maxRecordsPerBatch, batchRows)
         val envelopes = Envelope.encode(
-          Windows.numberBatchesRange(rows, "version", config.maxRecordsPerBatch, batchRows)
-            .withColumn("g", concat(col("g"), lit("#"), col("batch"))),
-          "g")
+          numbered.withColumn("g", concat(col("g"), lit("#"), col("batch"))), "g")
         // One group (the object) per cycle, so total batches is exactly the
         // upstream numbering's ceil(rows / cap) — derivable from the count
         // already taken, no extra job.
@@ -211,29 +223,20 @@ final class ChangeRelay(
         val plan = ChangeRelay.ExportPlan(config.name, obj.name, obj.database,
           nowUtc, totalBatches, fileSinkTemplate, config.endpoints,
           config.maxPayloadSizeBytes, performHttp, performAmqp)
-        // Counted inside the export job, so no second job probes for
-        // failures: a re-run stage can only over-count (an empty append),
-        // never under-count.
-        val failed = spark.sparkContext.longAccumulator("graft.relay.exportFailures")
+        // The export action itself returns the failures: one job runs the
+        // fan-out, and only failed envelopes reach the driver.
         val failures = envelopes.select("g", "envelope_json").as[(String, String)]
-          .mapPartitions(it => ChangeRelay.exportPartition(plan, it, exportedOnExecutors, failed))
-          .toDF("error_message", "data")
-        // Materialize exactly once: this job runs the sink fan-out on the
-        // executors; only failure rows persist (executor-cached), so the
-        // dead-letter append never re-runs the export.
-        val failDf = failures.localCheckpoint(true)
+          .mapPartitions(it => ChangeRelay.exportPartition(plan, it, exportedOnExecutors))
+          .collect()
         // K9 — every failure dead-letters with D1 dedup. Each dead letter
         // carries ITS OWN envelope so replay re-sends exactly what failed
         // (DeadLetterService.cs stores the Data JSON per failure).
-        if (failed.value > 0) {
-          val fdf = failDf
-            .withColumn("source_key", lit(s"${config.name}_${obj.name}_${obj.database}"))
-            .withColumn("tracking_object_name", lit(obj.name))
-            .withColumn("environment_name", lit(config.name))
-            .withColumn("database_name", lit(obj.database))
-            .withColumn("data_hash", sha2(col("data"), 256))
-            .withColumn("timestamp", current_timestamp())
-          store.appendDeadLetters(fdf)
+        if (failures.nonEmpty) {
+          val sourceKey = s"${config.name}_${obj.name}_${obj.database}"
+          val now = new java.sql.Timestamp(System.currentTimeMillis())
+          store.appendDeadLetters(failures.toSeq.map { case (error, data) =>
+            Row(sourceKey, obj.name, config.name, obj.database, Dlq.dataHash(data), data, error, now)
+          })
         }
         batchRows
       }
@@ -298,16 +301,15 @@ object ChangeRelay {
   private final case class ObjectCycle(rows: Long, watermark: Long, advance: Option[Long])
 
   /** Fan one partition of `(g, envelope_json)` rows out to every configured
-    * sink, executor-side. Emits only the failures as (error, payload), each
-    * counted in `failures` — the at-least-once contract (T2) means a retried
-    * task may re-invoke sinks, exactly like the reference's retry loop;
+    * sink, executor-side. Emits only the failures as (error, payload) — the
+    * at-least-once contract (T2) means a retried task may re-invoke sinks,
+    * exactly like the reference's retry loop;
     * dedup happens at the DLQ (D1) and at idempotent consumers, never by
     * suppressing the send. */
   private[streaming] def exportPartition(
       plan: ExportPlan,
       it: Iterator[(String, String)],
-      executorEnvelopes: LongAccumulator,
-      failures: LongAccumulator): Iterator[(String, String)] =
+      executorEnvelopes: LongAccumulator): Iterator[(String, String)] =
     it.flatMap { case (g, json) =>
       if (org.apache.spark.TaskContext.get() != null) executorEnvelopes.add(1)
       val batchNo = g.substring(g.lastIndexOf('#') + 1).toInt
@@ -363,9 +365,7 @@ object ChangeRelay {
         }
         result.left.toSeq.map(f => (f.error, json))
       }
-      val failed = fileFailures ++ endpointFailures
-      failures.add(failed.size.toLong)
-      failed
+      fileFailures ++ endpointFailures
     }
 
   /** T1/T6 — the Structured-Streaming wrapper: watch an outbox directory as

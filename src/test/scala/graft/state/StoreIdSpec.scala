@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import scala.util.Random
 
-/** Invariants of the distributed dead-letter id assignment
-  * (range-partition + in-partition sort + zipWithIndex — no global
-  * single-partition window): ids must come out exactly as the old global
-  * `row_number` produced them, independent of input partitioning. */
+/** Invariants of the dead-letter id assignment (dense from maxId + 1 in
+  * (source_key, data_hash) order, assigned on the driver): ids must come
+  * out exactly as a global `row_number` would number them, independent of
+  * input partitioning. */
 class StoreIdSpec extends SparkSpec {
   import spark.implicits._
 

@@ -176,6 +176,72 @@ class RelaySpec extends SparkSpec {
     assert(tags.forall(_ == "cycle-7"), s"jobs without the caller's property: $tags")
   }
 
+  test("job contract: a one-envelope cycle runs two SQL executions per object; control state submits no job") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val objs = Seq("j0", "j1", "j2").map(n => TrackingObject(n, "db0", "t", "sp"))
+    // A 400-byte payload cap: the small envelopes pass, j2's large one
+    // fails and dead-letters.
+    val http = SinkEndpoint("ep1", "http", "http://x/{object}")
+    val relay = new ChangeRelay(spark, store,
+      EnvironmentConfig("prod", "postgres", objs, Seq(http), maxPayloadSizeBytes = 400L),
+      Some(dir.resolve("exports").toString + "/{object}/c-{batch}.json"), horizonOf = _ => 1000L)
+    store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
+    val feeds = objs.map(o => o -> outboxDf(Seq((1L, 1L, "I", 1.0,
+      if (o.name == "j2") s"""{"k":"${"x" * 1000}"}""" else "{}"))))
+
+    val sqlExecutions = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          sqlExecutions.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    def counted[T](body: => T): (T, Int, Int) = {
+      org.apache.spark.TestListenerBus.drain(sc)
+      sqlExecutions.set(0)
+      jobs.set(0)
+      val out = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (out, sqlExecutions.get(), jobs.get())
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (res, executions, _) = counted(relay.runCycles(feeds, "20240115000000"))
+      assert(res == objs.map(_.name -> (1L, 1L)).toMap)
+      assert(executions == 2 * objs.size,
+        s"expected one stats and one export execution per object, saw $executions")
+      assert(store.deadLetters.collect().map(_.getAs[String]("tracking_object_name")).toSeq == Seq("j2"))
+
+      val letter = Seq(("k1", "j0", "prod", "db0", "h1", "{}", "boom"))
+        .toDF("source_key", "tracking_object_name", "environment_name",
+          "database_name", "data_hash", "data", "error_message")
+        .withColumn("timestamp", current_timestamp())
+      val (_, _, controlJobs) = counted {
+        store.watermarks.collect()
+        store.pauses.collect()
+        store.deadLetters.collect()
+        store.getWatermark("prod", "j0")
+        store.setWatermarks(Seq(("prod", "j0", 2L), ("prod", "j9", 1L)))
+        store.pause("obj:prod/j1", "maintenance", "ops")
+        store.resume("obj:prod/j1")
+        store.appendDeadLetters(letter)
+        store.purgeExpiredDeadLetters(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
+        // A failed replay widens the backoff (from a 2024 clock, so both
+        // letters stay due), then a successful one deletes the batch.
+        assert(relay.replayCycle(_ => false, java.sql.Timestamp.valueOf("2024-01-15 00:00:00")) == ((0L, 2L)))
+        assert(relay.replayCycle(_ => true, java.sql.Timestamp.valueOf("2024-01-15 00:00:00")) == ((2L, 0L)))
+      }
+      assert(controlJobs == 0, s"control-state I/O submitted $controlJobs Spark jobs")
+      assert(store.deadLetters.collect().isEmpty)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("two dead-lettering objects in one cycle keep every dead letter, with distinct ids") {
     val dir = tmp()
     val store = new ParquetStateStore(spark, dir.resolve("state").toString)
