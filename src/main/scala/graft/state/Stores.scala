@@ -7,7 +7,8 @@ import org.apache.spark.sql.types._
 import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
@@ -40,6 +41,12 @@ import scala.jdk.CollectionConverters._
   * therefore live on the driver, as in the reference's SQLite; the bound is
   * what one cycle's failed envelopes add. Every other table (the streaming
   * operators' state, [[ModelStore]]) is read and written through Spark.
+  *
+  * Batch progress: a streaming operator's table commits through
+  * [[commitBatch]], which writes the micro-batch id as a `_BATCH` marker
+  * file into the new version directory. Spark's file index skips
+  * `_`-prefixed files, so [[read]] never sees it, and [[committedBatch]]
+  * is a driver file read.
   *
   * Writers: every mutation (read the snapshot, derive the next one,
   * commit) holds a JVM-wide lock keyed by the table root's absolute path,
@@ -91,12 +98,14 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     currentDir(name).fold(Vector.empty[Row])(dir =>
       readSnapshot(dir.resolve(SnapshotFile), ControlTables(name)))
 
-  /** Snapshot commits performed by this store instance — an observability
-    * counter specs assert per-cycle state-I/O invariants against (e.g. one
-    * watermark commit per multi-object cycle, not one per object).
-    * AtomicLong, not a @volatile var: commits arrive from Structured
-    * Streaming foreachBatch threads (StreamingDedup) and the driver thread
-    * concurrently, and += on a volatile is a lost-update race. */
+  /** Snapshot commits performed by this store instance, on the driver
+    * path and the Spark path alike (a [[commitBatch]] that lands counts one;
+    * a replay it skips counts none) — an observability counter specs assert
+    * per-cycle state-I/O invariants against (e.g. one watermark commit per
+    * multi-object cycle, not one per object). AtomicLong, not a @volatile
+    * var: commits arrive from Structured Streaming foreachBatch threads and
+    * the driver thread concurrently, and += on a volatile is a lost-update
+    * race. */
   private val commitCounter = new java.util.concurrent.atomic.AtomicLong(0L)
   def commitCount: Long = commitCounter.get()
 
@@ -104,7 +113,49 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     * driver path; any other table is written by Spark. */
   def commit(name: String, df: DataFrame): Unit = ControlTables.get(name) match {
     case Some(s) => commitRows(name, df.select(s.fieldNames.toSeq.map(col): _*).collect().toSeq)
-    case None => flip(name)(dir => df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString))
+    case None => flip(name)(writeSpark(df))
+  }
+
+  private def writeSpark(df: DataFrame)(dir: Path): Unit =
+    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString)
+
+  /** The last micro-batch id [[commitBatch]] landed on `name`, or -1 when
+    * none has: the current version's `_BATCH` marker, read on the driver. */
+  def committedBatch(name: String): Long =
+    currentDir(name).map(_.resolve(BatchMarker)).filter(Files.exists(_))
+      .fold(-1L)(f => Files.readString(f).trim.toLong)
+
+  /** Exactly-once state under at-least-once `foreachBatch` delivery, the
+    * one protocol every streaming operator commits through. Under the
+    * table's writer lock: a `batchId` at or below [[committedBatch]] has
+    * landed already, so nothing runs and the result is false. Otherwise
+    * `step` runs: it reads the state and writes the batch's own output with
+    * `overwrite`, and returns the next state. That state and `batchId` (the
+    * `_BATCH` marker) go into one version directory, so state and progress
+    * become visible in one pointer flip. A crash before the flip replays
+    * the batch against unchanged state, and the replay rewrites the same
+    * output; progress does not depend on the state having rows. */
+  def commitBatch(name: String, batchId: Long)(step: => DataFrame): Boolean = locked(name) {
+    batchId > committedBatch(name) && {
+      val next = step
+      flip(name) { dir =>
+        writeSpark(next)(dir)
+        Files.writeString(dir.resolve(BatchMarker), batchId.toString)
+      }
+      true
+    }
+  }
+
+  /** Rows in the current snapshot, summed from its parquet footers on the
+    * driver: no Spark job. */
+  def rowCount(name: String): Long = currentDir(name).fold(0L) { dir =>
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).map { f =>
+      val reader = ParquetFileReader.open(new LocalInputFile(f),
+        ParquetReadOptions.builder(parquetConf).build())
+      try reader.getRecordCount finally reader.close()
+    }.sum
+    finally listing.close()
   }
 
   private def commitRows(name: String, snapshot: Seq[Row]): Unit = flip(name) { dir =>
@@ -320,6 +371,9 @@ object ParquetStateStore {
 
   /** The one data file of a driver-written snapshot directory. */
   private val SnapshotFile = "part-00000.snappy.parquet"
+
+  /** A [[commitBatch]] version's batch id. */
+  private val BatchMarker = "_BATCH"
 
   /** What a caller supplies per dead letter; the store adds the id, the
     * attempts and the next attempt. */

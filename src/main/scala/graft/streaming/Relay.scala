@@ -368,6 +368,11 @@ object ChangeRelay {
       fileFailures ++ endpointFailures
     }
 
+  /** checkpointDir → queryName for live queries; guards against two
+    * different queries sharing one offset log. Entries for stopped queries
+    * are purged lazily on the next start. */
+  private val activeCheckpoints = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
   /** T1/T6 — the Structured-Streaming wrapper: watch an outbox directory as
     * a file stream and run the relay per micro-batch at the configured
     * cadence. One StreamingQuery per (environment, object), named for
@@ -375,11 +380,6 @@ object ChangeRelay {
     * reference's stress invariant). Callers MUST pass a distinct
     * `checkpointDir` per (environment, object) to match: two queries
     * sharing a checkpoint corrupt each other's offset log. */
-  /** checkpointDir → queryName for live queries; guards against two
-    * different queries sharing one offset log. Entries for stopped queries
-    * are purged lazily on the next start. */
-  private val activeCheckpoints = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def streamFromOutboxDir(
       spark: SparkSession,
       relay: ChangeRelay,

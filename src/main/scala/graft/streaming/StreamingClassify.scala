@@ -110,12 +110,8 @@ object StreamingClassify {
   def start(spark: SparkSession, stream: DataFrame, store: ParquetStateStore,
             modelName: String, outDir: String, checkpointDir: String,
             idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    stream.writeStream
-      .queryName(s"graft-classify-${outDir.hashCode.toHexString}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(store, modelName, batch, batchId, outDir, idCol, textCol)
-        ()
-      }
-      .start()
+    MicroBatch.start(stream, s"graft-classify-${outDir.hashCode.toHexString}",
+        checkpointDir) { (batch, batchId) =>
+      scoreBatch(store, modelName, batch, batchId, outDir, idCol, textCol)
+    }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import graft.ops.DedupOps
 import graft.state.ParquetStateStore
 
@@ -15,17 +14,9 @@ import graft.state.ParquetStateStore
   * batch operator over the same batches in arrival order
   * (`llm_incremental_neardedup` semantics, proven in StreamingDedupSpec).
   *
-  * Exactly-once across micro-batch REPLAYS (foreachBatch is at-least-once)
-  * without a driver-side log:
-  *   - survivors write `overwrite` into `survivorsDir/batch=<id>` — a
-  *     replayed batch rewrites its own directory idempotently;
-  *   - the state snapshot carries `committed_batch` IN the same table as
-  *     the buckets, so "which batch produced this state" and the state
-  *     itself commit in ONE atomic pointer flip ([[ParquetStateStore]]) —
-  *     two separate commits could crash apart and leave a batch half-applied
-  *     (admission against post-batch state recomputes DIFFERENT survivors);
-  *   - a batch id at-or-below `committed_batch` short-circuits: its
-  *     survivors directory and state contribution already landed.
+  * Exactly-once across micro-batch replays through
+  * [[ParquetStateStore.commitBatch]]; survivors land in
+  * `survivorsDir/batch=<id>`.
   *
   * Scale: state is one row per distinct (band, bucket) — signatures, not
   * corpus rows — and each micro-batch does hash semi/anti joins against it
@@ -35,34 +26,24 @@ object StreamingDedup {
   private val SeenTable = "seen_buckets"
   private val seenSchema = new StructType()
     .add("band", IntegerType).add("bucket", StringType)
-    .add("committed_batch", LongType)
 
   /** Admitted-state read, shaped for [[DedupOps.incrementalNearDedup]]. */
   def seenBuckets(store: ParquetStateStore): DataFrame =
-    store.read(SeenTable, seenSchema).select(col("band"), col("bucket"))
-
-  private def committedBatch(store: ParquetStateStore): Long = {
-    val r = store.read(SeenTable, seenSchema)
-      .agg(coalesce(max(col("committed_batch")), lit(-1L))).collect()(0)
-    r.getLong(0)
-  }
+    store.read(SeenTable, seenSchema)
 
   /** Run one micro-batch's admission; exposed for direct reuse and for the
     * spec's batch-oracle replay. Returns the survivor count. */
   def admitBatch(store: ParquetStateStore, batch: DataFrame, batchId: Long,
       survivorsDir: String, idCol: String, textCol: String,
       numPerms: Int, bands: Int): Long = {
-    if (batchId <= committedBatch(store)) return 0L // replay of a landed batch
-    val (survivors, updatedSeen) = DedupOps.incrementalNearDedup(
-      batch, seenBuckets(store), idCol, textCol, numPerms, bands)
-    // Idempotent per-batch output first, atomic state commit second: a
-    // crash between them replays the batch against UNCHANGED state and
-    // rewrites the identical directory.
-    survivors.write.mode(SaveMode.Overwrite)
-      .parquet(s"$survivorsDir/batch=$batchId")
-    store.commit(SeenTable,
-      updatedSeen.withColumn("committed_batch", lit(batchId)))
-    survivors.count()
+    val out = s"$survivorsDir/batch=$batchId"
+    val landed = store.commitBatch(SeenTable, batchId) {
+      val (survivors, updatedSeen) = DedupOps.incrementalNearDedup(
+        batch, seenBuckets(store), idCol, textCol, numPerms, bands)
+      survivors.write.mode(SaveMode.Overwrite).parquet(out)
+      updatedSeen
+    }
+    if (landed) batch.sparkSession.read.parquet(out).count() else 0L
   }
 
   /** Start the continuous query: `stream` must carry `idCol` and `textCol`.
@@ -71,13 +52,9 @@ object StreamingDedup {
       survivorsDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       numPerms: Int = 8, bands: Int = 4): StreamingQuery =
-    stream.writeStream
-      .queryName(s"graft-neardedup-${survivorsDir.hashCode.toHexString}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(store, batch, batchId, survivorsDir, idCol, textCol,
-          numPerms, bands)
-        ()
-      }
-      .start()
+    MicroBatch.start(stream,
+        s"graft-neardedup-${survivorsDir.hashCode.toHexString}", checkpointDir) {
+      (batch, batchId) =>
+        admitBatch(store, batch, batchId, survivorsDir, idCol, textCol, numPerms, bands)
+    }
 }

@@ -24,13 +24,9 @@ import graft.state.ParquetStateStore
   * …`, and the rest are dropped exactly as the batch cap drops them.
   * Per-batch work is O(batch + touched domains), never O(history).
   *
-  * Exactly-once across foreachBatch replays — the [[StreamingDedup]] /
-  * [[StreamingScd2]] discipline: scheduled rows write `overwrite` into
-  * `outDir/batch=<id>` (a replay rewrites the directory identically
-  * because the state it reads is unchanged until the commit), and
-  * `committed_batch` rides IN the state snapshot so progress and state
-  * flip in one atomic pointer commit; a batch at-or-below the committed id
-  * short-circuits.
+  * Exactly-once across foreachBatch replays through
+  * [[ParquetStateStore.commitBatch]]; scheduled rows land in
+  * `outDir/batch=<id>`.
   *
   * Batch-parity contract (spec-pinned with a randomized contiguous split):
   * when batches arrive id-ascending per domain (the discovery stream's
@@ -42,16 +38,10 @@ object StreamingFrontier {
   private val Table = "frontier_domains"
   private val schema = new StructType()
     .add("domain", StringType).add("n_sched", LongType)
-    .add("committed_batch", LongType)
 
   /** Per-domain slot consumption (domain, n_sched). */
   def domainState(store: ParquetStateStore): DataFrame =
-    store.read(Table, schema).select(col("domain"), col("n_sched"))
-
-  private def committedBatch(store: ParquetStateStore): Long =
     store.read(Table, schema)
-      .agg(coalesce(max(col("committed_batch")), lit(-1L)))
-      .collect()(0).getLong(0)
 
   /** Apply one micro-batch (columns `domain`, `doc_id`); returns rows
     * scheduled. Exposed for direct reuse and the spec's split-fold oracle. */
@@ -59,35 +49,35 @@ object StreamingFrontier {
                  outDir: String, maxPerDomain: Int = 8,
                  delaySec: Int = 5): Long = {
     require(maxPerDomain >= 1 && delaySec >= 0)
-    if (batchId <= committedBatch(store)) return 0L // replay of a landed batch
-    // The batch feeds the draw AND the state update — materialize once
-    // (round-4 rule d; micro-batch-sized rows).
-    val b = batch.select(col("domain").cast("string").as("domain"),
-        col("doc_id").cast("long").as("doc_id"))
-      .localCheckpoint()
-    val drawn = b.groupBy(col("domain"))
-      .agg(expr(s"topk_pairs(-doc_id, doc_id, $maxPerDomain)").as("_top"))
-    val st = domainState(store)
-    val staged = drawn.join(st, Seq("domain"), "left")
-      .withColumn("n0", coalesce(col("n_sched"), lit(0L)))
-      .localCheckpoint() // feeds the schedule AND the new state; one eval
-    val sched = staged
-      .select(col("domain"), col("n0"), posexplode(col("_top")))
-      .filter(col("pos") + col("n0") < maxPerDomain)
-      .select(col("domain"), col("col.id").as("doc_id"),
-        (col("pos") + col("n0")).as("slot"))
-      .withColumn("sched_s", col("slot") * lit(delaySec.toLong))
-      .localCheckpoint() // written AND counted; one evaluation
-    // Idempotent per-batch output first, atomic state commit second.
-    sched.write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-    val taken = sched.groupBy(col("domain")).agg(count(lit(1)).as("_t"))
-    val newState = staged.select(col("domain"), col("n0"))
-      .join(taken, Seq("domain"), "left")
-      .select(col("domain"),
-        (col("n0") + coalesce(col("_t"), lit(0L))).as("n_sched"))
-      .unionByName(st.join(drawn, Seq("domain"), "left_anti"))
-    store.commit(Table, newState.withColumn("committed_batch", lit(batchId)))
-    sched.count()
+    val out = s"$outDir/batch=$batchId"
+    val landed = store.commitBatch(Table, batchId) {
+      // The batch feeds the draw AND the state update — materialize once
+      // (round-4 rule d; micro-batch-sized rows).
+      val b = batch.select(col("domain").cast("string").as("domain"),
+          col("doc_id").cast("long").as("doc_id"))
+        .localCheckpoint()
+      val drawn = b.groupBy(col("domain"))
+        .agg(expr(s"topk_pairs(-doc_id, doc_id, $maxPerDomain)").as("_top"))
+      val st = domainState(store)
+      val staged = drawn.join(st, Seq("domain"), "left")
+        .withColumn("n0", coalesce(col("n_sched"), lit(0L)))
+        .localCheckpoint() // feeds the schedule AND the new state; one eval
+      val sched = staged
+        .select(col("domain"), col("n0"), posexplode(col("_top")))
+        .filter(col("pos") + col("n0") < maxPerDomain)
+        .select(col("domain"), col("col.id").as("doc_id"),
+          (col("pos") + col("n0")).as("slot"))
+        .withColumn("sched_s", col("slot") * lit(delaySec.toLong))
+        .localCheckpoint() // written AND feeds the new state; one evaluation
+      sched.write.mode(SaveMode.Overwrite).parquet(out)
+      val taken = sched.groupBy(col("domain")).agg(count(lit(1)).as("_t"))
+      staged.select(col("domain"), col("n0"))
+        .join(taken, Seq("domain"), "left")
+        .select(col("domain"),
+          (col("n0") + coalesce(col("_t"), lit(0L))).as("n_sched"))
+        .unionByName(st.join(drawn, Seq("domain"), "left_anti"))
+    }
+    if (landed) batch.sparkSession.read.parquet(out).count() else 0L
   }
 
   /** The full frontier so far: every scheduled fetch across batches. */
@@ -105,12 +95,8 @@ object StreamingFrontier {
   def start(spark: SparkSession, stream: DataFrame, store: ParquetStateStore,
             outDir: String, checkpointDir: String, maxPerDomain: Int = 8,
             delaySec: Int = 5): StreamingQuery =
-    stream.writeStream
-      .queryName(s"graft-frontier-${outDir.hashCode.toHexString}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(store, batch, batchId, outDir, maxPerDomain, delaySec)
-        ()
-      }
-      .start()
+    MicroBatch.start(stream, s"graft-frontier-${outDir.hashCode.toHexString}",
+        checkpointDir) { (batch, batchId) =>
+      applyBatch(store, batch, batchId, outDir, maxPerDomain, delaySec)
+    }
 }

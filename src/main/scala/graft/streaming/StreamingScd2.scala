@@ -27,13 +27,9 @@ import graft.state.ParquetStateStore
   * 100 TB the history lives in append-only parquet, not in a re-written
   * snapshot.
   *
-  * Exactly-once across foreachBatch replays — the [[StreamingDedup]]
-  * discipline: closed rows write `overwrite` into `closedDir/batch=<id>`
-  * (a replayed batch rewrites its own directory identically, because the
-  * state it reads is unchanged until the commit), and `committed_batch`
-  * rides IN the open-state snapshot so state and progress flip in ONE
-  * atomic pointer commit; a batch at-or-below `committed_batch`
-  * short-circuits.
+  * Exactly-once across foreachBatch replays through
+  * [[ParquetStateStore.commitBatch]]; closed rows land in
+  * `closedDir/batch=<id>`.
   *
   * Contract (spec-pinned): [[intervals]] — the closed dirs plus the open
   * state — equals the one-shot [[Incremental.scd2Intervals]] over the
@@ -44,51 +40,43 @@ object StreamingScd2 {
   private val OpenTable = "scd2_open"
   private val openSchema = new StructType()
     .add("k", StringType).add("valid_from", LongType).add("op", StringType)
-    .add("committed_batch", LongType)
 
   /** The live-version table: one open interval per non-deleted key, plus
     * current tombstones (op = D) so "deleted" ≠ "never existed". */
   def openIntervals(store: ParquetStateStore): DataFrame =
-    store.read(OpenTable, openSchema).select(col("k"), col("valid_from"), col("op"))
-
-  private def committedBatch(store: ParquetStateStore): Long =
     store.read(OpenTable, openSchema)
-      .agg(coalesce(max(col("committed_batch")), lit(-1L)))
-      .collect()(0).getLong(0)
 
   /** Apply one micro-batch (columns `k`, `id`, `op`); exposed for direct
     * reuse and the spec's batch-fold oracle. Returns rows closed. */
   def applyBatch(store: ParquetStateStore, batch: DataFrame, batchId: Long,
                  closedDir: String): Long = {
-    if (batchId <= committedBatch(store)) return 0L // replay of a landed batch
-    // The batch feeds the interval window AND the first-new-id rollup —
-    // materialize once (round-4 rule d; micro-batch-sized rows).
-    val b = batch.select(col("k").cast("string").as("k"),
-      col("id").cast("long").as("id"), col("op").cast("string").as("op"))
-      .localCheckpoint()
-    val iv = Incremental.scd2Intervals(b, "k", "id", "op")
-      .select(col("k"), col("valid_from"), col("valid_to"), col("op"),
-        col("is_current"))
-    val firstNew = b.groupBy(col("k")).agg(min(col("id")).as("_fn"))
-    val open = openIntervals(store)
-    // Committed open intervals of touched keys close at the key's first
-    // new id — exactly what the one-shot lead() would have produced.
-    val closedFromState = open.join(firstNew, Seq("k"))
-      .select(col("k"), col("valid_from"), col("_fn").as("valid_to"),
-        col("op"), lit(false).as("is_current"))
-    val stillOpen = open.join(firstNew, Seq("k"), "left_anti")
-    val newClosed = closedFromState
-      .unionByName(iv.filter(col("valid_to").isNotNull)
+    val out = s"$closedDir/batch=$batchId"
+    val landed = store.commitBatch(OpenTable, batchId) {
+      // The batch feeds the interval window AND the first-new-id rollup —
+      // materialize once (round-4 rule d; micro-batch-sized rows).
+      val b = batch.select(col("k").cast("string").as("k"),
+        col("id").cast("long").as("id"), col("op").cast("string").as("op"))
+        .localCheckpoint()
+      val iv = Incremental.scd2Intervals(b, "k", "id", "op")
         .select(col("k"), col("valid_from"), col("valid_to"), col("op"),
-          lit(false).as("is_current")))
-      .localCheckpoint() // written AND counted; one evaluation
-    // Idempotent per-batch output first, atomic state commit second.
-    newClosed.write.mode(SaveMode.Overwrite).parquet(s"$closedDir/batch=$batchId")
-    val newOpen = iv.filter(col("valid_to").isNull)
-      .select(col("k"), col("valid_from"), col("op"))
-    store.commit(OpenTable,
-      stillOpen.unionByName(newOpen).withColumn("committed_batch", lit(batchId)))
-    newClosed.count()
+          col("is_current"))
+      val firstNew = b.groupBy(col("k")).agg(min(col("id")).as("_fn"))
+      val open = openIntervals(store)
+      // Committed open intervals of touched keys close at the key's first
+      // new id — exactly what the one-shot lead() would have produced.
+      val closedFromState = open.join(firstNew, Seq("k"))
+        .select(col("k"), col("valid_from"), col("_fn").as("valid_to"),
+          col("op"), lit(false).as("is_current"))
+      val stillOpen = open.join(firstNew, Seq("k"), "left_anti")
+      closedFromState
+        .unionByName(iv.filter(col("valid_to").isNotNull)
+          .select(col("k"), col("valid_from"), col("valid_to"), col("op"),
+            lit(false).as("is_current")))
+        .write.mode(SaveMode.Overwrite).parquet(out)
+      stillOpen.unionByName(iv.filter(col("valid_to").isNull)
+        .select(col("k"), col("valid_from"), col("op")))
+    }
+    if (landed) batch.sparkSession.read.parquet(out).count() else 0L
   }
 
   /** The full maintained interval table — closed history (append-only
@@ -115,12 +103,6 @@ object StreamingScd2 {
     * One query per state store — application is ordered by micro-batch. */
   def start(spark: SparkSession, stream: DataFrame, store: ParquetStateStore,
             closedDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .queryName(s"graft-scd2-${closedDir.hashCode.toHexString}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(store, batch, batchId, closedDir)
-        ()
-      }
-      .start()
+    MicroBatch.start(stream, s"graft-scd2-${closedDir.hashCode.toHexString}",
+        checkpointDir) { (batch, batchId) => applyBatch(store, batch, batchId, closedDir) }
 }

@@ -21,11 +21,9 @@ import graft.state.ParquetStateStore
   * Distinct-content vs exact doc count gives the per-source duplication
   * factor, live.
   *
-  * Exactly-once across foreachBatch replays: state rows carry
-  * `committed_batch` in the SAME snapshot table (one atomic pointer flip —
-  * round-6 rule d/f), and a batch at-or-below it short-circuits. Counts are
-  * additive, so replay without the guard would double-count; the guard is
-  * load-bearing, not hygiene.
+  * Exactly-once across foreachBatch replays through
+  * [[ParquetStateStore.commitBatch]]: counts are additive, so a replay
+  * without its guard would double-count.
   *
   * Scale: per batch ONE (source)-keyed aggregation with k-bounded sketch
   * state and map-side partials; the state table is sources × (k+3) values,
@@ -39,14 +37,9 @@ object StreamingStats {
     .add("source", StringType)
     .add("docs", LongType).add("tokens", LongType)
     .add("mins", ArrayType(LongType, containsNull = false))
-    .add("committed_batch", LongType)
 
   def readState(store: ParquetStateStore): DataFrame =
     store.read(StatsTable, statsSchema)
-
-  private def committedBatch(store: ParquetStateStore): Long =
-    readState(store).agg(coalesce(max(col("committed_batch")), lit(-1L)))
-      .head().getLong(0)
 
   /** One (source)-keyed aggregation over a static batch. The normalized
     * text is materialized ONCE through a Generate barrier before the token
@@ -73,21 +66,20 @@ object StreamingStats {
   def mergeBatch(store: ParquetStateStore, batch: DataFrame, batchId: Long,
                  srcCol: String = "source", textCol: String = "text",
                  k: Int = 256): Long = {
-    if (batchId <= committedBatch(store)) return readState(store).count()
-    val fresh = batchStats(batch, srcCol, textCol, k)
-    val prev = readState(store).select(col("source"),
-      col("docs").as("_pd"), col("tokens").as("_pt"), col("mins").as("_pm"))
-    val merged = fresh.join(prev, Seq("source"), "full_outer")
-      .select(col("source"),
-        (coalesce(col("docs"), lit(0L)) + coalesce(col("_pd"), lit(0L))).as("docs"),
-        (coalesce(col("tokens"), lit(0L)) + coalesce(col("_pt"), lit(0L))).as("tokens"),
-        slice(array_sort(array_union(
-          coalesce(col("mins"), array().cast(ArrayType(LongType, containsNull = false))),
-          coalesce(col("_pm"), array().cast(ArrayType(LongType, containsNull = false))))),
-          1, k).as("mins"))
-      .withColumn("committed_batch", lit(batchId))
-    store.commit(StatsTable, merged)
-    readState(store).count()
+    store.commitBatch(StatsTable, batchId) {
+      val fresh = batchStats(batch, srcCol, textCol, k)
+      val prev = readState(store).select(col("source"),
+        col("docs").as("_pd"), col("tokens").as("_pt"), col("mins").as("_pm"))
+      fresh.join(prev, Seq("source"), "full_outer")
+        .select(col("source"),
+          (coalesce(col("docs"), lit(0L)) + coalesce(col("_pd"), lit(0L))).as("docs"),
+          (coalesce(col("tokens"), lit(0L)) + coalesce(col("_pt"), lit(0L))).as("tokens"),
+          slice(array_sort(array_union(
+            coalesce(col("mins"), array().cast(ArrayType(LongType, containsNull = false))),
+            coalesce(col("_pm"), array().cast(ArrayType(LongType, containsNull = false))))),
+            1, k).as("mins"))
+    }
+    store.rowCount(StatsTable)
   }
 
   /** Live dataset-card readout: exact docs/tokens plus the KMV
@@ -109,12 +101,8 @@ object StreamingStats {
   def start(spark: SparkSession, stream: DataFrame, store: ParquetStateStore,
             checkpointDir: String, srcCol: String = "source",
             textCol: String = "text", k: Int = 256): StreamingQuery =
-    stream.writeStream
-      .queryName(s"graft-stats-${checkpointDir.hashCode.toHexString}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(store, batch, batchId, srcCol, textCol, k)
-        ()
-      }
-      .start()
+    MicroBatch.start(stream, s"graft-stats-${checkpointDir.hashCode.toHexString}",
+        checkpointDir) { (batch, batchId) =>
+      mergeBatch(store, batch, batchId, srcCol, textCol, k)
+    }
 }

@@ -73,19 +73,42 @@ class RegisteredQueriesSpec extends SparkSpec {
       s"queries missing from COVERAGE.md: ${undocumented.mkString(", ")}")
   }
 
+  /** (file name, text) of every `src/main` Scala source, for the lints. */
+  private lazy val mainSources: Seq[(String, String)] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).map { p =>
+      p.getFileName.toString -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    }.toSeq
+    finally walk.close()
+  }
+
   test("the library jar ships only the five sanctioned mains") {
     // one-off profiler mains belong in a scratch checkout, not in the
     // library jar: FloorProfile is the one profiler
     val sanctioned = Set("Bench", "Verify", "FloorProfile", "PlanAudit", "ScaleSmoke")
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val mains = try walk.iterator().asScala.filter { p =>
-      p.toString.endsWith(".scala") &&
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains("def main(")
-    }.map(_.getFileName.toString.stripSuffix(".scala")).toSet
-    finally walk.close()
+    val mains = mainSources.collect {
+      case (f, text) if text.contains("def main(") => f.stripSuffix(".scala")
+    }.toSet
     assert(mains.nonEmpty, "no mains found: wrong working directory?")
     val extra = mains -- sanctioned
     assert(extra.isEmpty, s"unsanctioned mains in src/main: ${extra.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("one foreachBatch helper and one owner of batch progress") {
+    // a streaming operator starts through MicroBatch.start and commits
+    // through ParquetStateStore.commitBatch; a hand-rolled copy of either
+    // (its own foreachBatch, its own progress column) is what this catches
+    assert(mainSources.nonEmpty, "no sources found: wrong working directory?")
+    val foreachBatch = mainSources.collect {
+      case (f, text) if text.contains(".foreachBatch") &&
+        !Set("MicroBatch.scala", "Relay.scala")(f) => f
+    }
+    assert(foreachBatch.isEmpty, s".foreachBatch outside MicroBatch: ${foreachBatch.sorted.mkString(", ")}")
+    val progress = mainSources.collect {
+      case (f, text) if Seq("committed_batch", "def committedBatch", "\"_BATCH\"")
+        .exists(text.contains) && f != "Stores.scala" => f
+    }
+    assert(progress.isEmpty, s"batch progress kept outside the store: ${progress.sorted.mkString(", ")}")
   }
 
   test("every registered query runs at sf0.001 with a non-empty schema") {

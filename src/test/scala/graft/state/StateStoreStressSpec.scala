@@ -1,6 +1,7 @@
 package graft.state
 
 import graft.SparkSpec
+import graft.streaming.StreamingStats
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
@@ -54,6 +55,33 @@ class StateStoreStressSpec extends SparkSpec {
         s"seed $seed: every object ends at its last advance: ${marks.toSeq}")
       val ids = store.deadLetters.select("id").as[Long].collect()
       assert(ids.sorted.toSeq == (1L to threads.toLong), s"seed $seed: dead-letter ids ${ids.toSeq}")
+    }
+  }
+
+  test("2 threads merging the same batch id: exactly one commit lands, docs and tokens count once") {
+    for (seed <- 1 to 10) {
+      val rnd = new Random(seed)
+      val store = new ParquetStateStore(spark,
+        Files.createTempDirectory(s"graft-stress-batch-$seed").resolve("state").toString)
+      val docs = (1 to 1 + rnd.nextInt(20)).map(_ => ("src", Seq.fill(1 + rnd.nextInt(5))("w").mkString(" ")))
+      val batch = docs.toDF("source", "text")
+      val errors = new ConcurrentLinkedQueue[Throwable]()
+      val go = new CountDownLatch(1)
+      val workers = (0 until 2).map(_ => new Thread(() => {
+        go.await()
+        try StreamingStats.mergeBatch(store, batch, 0L)
+        catch { case e: Throwable => errors.add(e) }
+      }))
+      workers.foreach(_.start())
+      go.countDown()
+      workers.foreach(_.join())
+
+      assert(errors.isEmpty, s"seed $seed: ${errors.asScala.map(_.toString).mkString("; ")}")
+      assert(store.commitCount == 1L, s"seed $seed: ${store.commitCount} commits for one batch id")
+      val counts = StreamingStats.readState(store)
+        .select("docs", "tokens").as[(Long, Long)].collect().toSeq
+      assert(counts == Seq((docs.size.toLong, docs.map(_._2.split(" ").length.toLong).sum)),
+        s"seed $seed: $counts")
     }
   }
 }
