@@ -23,7 +23,8 @@ object Windows {
         ceil(count(lit(1)).over(Window.partitionBy(col(groupCol))) / lit(n.toDouble)).cast("int"))
   }
 
-  /** [[numberBatches]] for ONE group at DATA scale — the relay's case: a
+  /** [[numberBatches]] for ONE group at DATA scale — the relay's fallback
+    * when its id runs cannot number a delta (repeated or sparse ids): a
     * cycle numbers a single tracked object's rows, so the per-group window
     * above degenerates to one partition holding the entire batch (a full
     * initial sync serialized through one task's sort). Range-partition +

@@ -85,27 +85,45 @@ object Sinks {
     }
 
   /** Minimal stable pretty-printer for the envelope JSON (reference writes
-    * indented JSON; ExportService.cs:173). Deterministic, no library. */
+    * indented JSON; ExportService.cs:173). Deterministic, no library; one
+    * pass into one StringBuilder. */
   def prettyJson(json: String): String = {
-    val sb = new StringBuilder
+    val sb = new java.lang.StringBuilder(json.length * 2)
+    def newline(depth: Int): Unit = {
+      sb.append('\n')
+      var i = 0
+      while (i < depth) { sb.append("  "); i += 1 }
+    }
     var depth = 0
     var inStr = false
     var esc = false
-    json.foreach { c =>
+    var i = 0
+    while (i < json.length) {
+      val c = json.charAt(i)
       if (esc) { sb.append(c); esc = false }
-      else c match {
-        case '\\' if inStr => sb.append(c); esc = true
-        case '"' => sb.append(c); inStr = !inStr
-        case '{' | '[' if !inStr =>
-          depth += 1; sb.append(c).append('\n').append("  " * depth)
-        case '}' | ']' if !inStr =>
-          depth -= 1; sb.append('\n').append("  " * depth).append(c)
-        case ',' if !inStr => sb.append(c).append('\n').append("  " * depth)
-        case ':' if !inStr => sb.append(": ")
+      else if (inStr) {
+        sb.append(c)
+        if (c == '\\') esc = true
+        else if (c == '"') inStr = false
+      } else c match {
+        case '"' => sb.append(c); inStr = true
+        case '{' | '[' => depth += 1; sb.append(c); newline(depth)
+        case '}' | ']' => depth -= 1; newline(depth); sb.append(c)
+        case ',' => sb.append(c); newline(depth)
+        case ':' => sb.append(": ")
         case _ => sb.append(c)
       }
+      i += 1
     }
     sb.toString
+  }
+
+  /** One envelope's body as the guards send it: the UTF-8 bytes, and their
+    * gzip made on first use, so every endpoint of one fan-out shares a
+    * single compression. */
+  final class Payload(json: String) {
+    lazy val bytes: Array[Byte] = json.getBytes(StandardCharsets.UTF_8)
+    lazy val gzipped: Array[Byte] = Scalars.gzipBytes(bytes)
   }
 
   /** An HTTP request fully prepared by the guard layer; `body` may be
@@ -121,10 +139,14 @@ object Sinks {
       m: ExportMeta,
       headers: Map[String, String] = Map.empty,
       compress: Boolean = false,
-      maxPayloadBytes: Long = 5L * 1024 * 1024): Either[ExportFailure, HttpRequest] = {
+      maxPayloadBytes: Long = 5L * 1024 * 1024): Either[ExportFailure, HttpRequest] =
+    prepareHttp(new Payload(envelopeJson), urlTemplate, m, headers, compress, maxPayloadBytes)
+
+  def prepareHttp(payload: Payload, urlTemplate: String, m: ExportMeta,
+      headers: Map[String, String], compress: Boolean,
+      maxPayloadBytes: Long): Either[ExportFailure, HttpRequest] = {
     val url = renderTemplate(urlTemplate, m, java.util.UUID.randomUUID().toString, urlEscape = true)
-    val raw = envelopeJson.getBytes(StandardCharsets.UTF_8)
-    val body = if (compress) Scalars.gzipBytes(raw) else raw
+    val body = if (compress) payload.gzipped else payload.bytes
     if (body.length > maxPayloadBytes)
       Left(ExportFailure("http", s"payload ${body.length} B exceeds cap $maxPayloadBytes B after compression"))
     else Right(HttpRequest(url,
@@ -183,6 +205,12 @@ object Sinks {
   def prepareBrokerMessage(
       broker: String,
       payload: String,
+      requiredFields: Map[String, String]): Either[ExportFailure, Array[Byte]] =
+    prepareBrokerMessage(broker, new Payload(payload), requiredFields)
+
+  def prepareBrokerMessage(
+      broker: String,
+      payload: Payload,
       requiredFields: Map[String, String]): Either[ExportFailure, Array[Byte]] = {
     val missing = requiredFields.collect { case (k, v) if v == null || v.isEmpty => k }
     if (missing.nonEmpty)
@@ -190,7 +218,7 @@ object Sinks {
     else BrokerCaps.get(broker.toLowerCase) match {
       case None => Left(ExportFailure(broker, s"unknown broker type '$broker'"))
       case Some(cap) =>
-        val raw = payload.getBytes(StandardCharsets.UTF_8)
+        val raw = payload.bytes
         // Compression is PER-BROKER (MessageQueueService.cs:67-94,142-151):
         // ASB and SQS both carry STRING bodies, so both gzip then
         // base64-wrap — the cap must be checked against the base64-inflated
@@ -198,7 +226,7 @@ object Sinks {
         // rejects; RabbitMQ / Event Hubs / Kafka publish raw bytes.
         val body = broker.toLowerCase match {
           case "azureservicebus" | "awssqs" if raw.length > CompressionThreshold =>
-            java.util.Base64.getEncoder.encode(Scalars.gzipBytes(raw))
+            java.util.Base64.getEncoder.encode(payload.gzipped)
           case _ => raw
         }
         if (body.length > cap)

@@ -7,7 +7,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * and calling `f` with each micro-batch and its id. Delivery is
   * at-least-once — a batch id can come again after a failure — so a
   * stateful `f` commits through
-  * [[graft.state.ParquetStateStore.commitBatch]]. */
+  * [[graft.state.ParquetStateStore.commitBatch]], and its query starts
+  * through [[graft.state.ParquetStateStore.startBatchWriter]] as that
+  * table's one live writer. */
 object MicroBatch {
   def start(stream: DataFrame, queryName: String, checkpointDir: String)(
       f: (DataFrame, Long) => Unit): StreamingQuery =

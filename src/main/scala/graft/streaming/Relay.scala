@@ -25,16 +25,24 @@ import graft.state.ParquetStateStore
   * attempt even when a sink fails — failed payloads are re-driven from the
   * DLQ, never by re-polling (stored-procedure.md:92).
   *
-  * Spark work per object and cycle is data work only: one stats action
-  * (row count and new watermark) and one export action. The export action
+  * Spark work per object and cycle is data work only, two actions for any
+  * delta size: one pass over the gated delta's ids and one export. The id
+  * pass sorts each partition's ids (spillable, no shuffle) and returns its
+  * row count, its max id and its ids as runs of consecutive values; the
+  * driver derives the row count, the new watermark and the first id of
+  * every `maxRecordsPerBatch`-row envelope, so the export numbers each row
+  * by binary search over those bounds, a narrow map. Driver memory is
+  * O(envelopes + partitions): a partition whose ids repeat (one version
+  * can stamp a whole transaction) or need more than rows / cap + 1 runs
+  * sends none, and that cycle numbers through
+  * [[graft.ops.Windows.numberBatchesRange]] instead, which adds its own
+  * jobs. A delta that fits one envelope is batch 0 either way. The export
   * runs the sink fan-out on the executors and returns just the failed
   * envelopes as (error, data) rows, which the driver hashes and
-  * dead-letters; successful envelopes never reach the driver. A delta that
-  * fits one envelope (rows ≤ `maxRecordsPerBatch`) is batch 0 and skips the
-  * numbering jobs; a larger one is numbered by
-  * [[graft.ops.Windows.numberBatchesRange]]. Control state (watermarks,
-  * pauses, dead letters) lives on the driver ([[ParquetStateStore]]), so
-  * reading and committing it submits no Spark job.
+  * dead-letters; successful envelopes never reach the driver. Control
+  * state (watermarks, pauses, dead letters) lives on the driver
+  * ([[ParquetStateStore]]), so reading and committing it submits no Spark
+  * job.
   *
   * Source contract (U1): a change frame carries `id` (the version),
   * `xact_id`, `operation`, `value`, `props` and `changed`. It reaches the
@@ -81,9 +89,9 @@ final class ChangeRelay(
     * ExecuteAsync iterates `environment.TrackingObjects` each interval).
     *
     * Objects run CONCURRENTLY: each object's chain of small Spark jobs
-    * (stats, numbering when the delta spans several envelopes, export) is
-    * submitted from its own thread of a pool created for this call, so one
-    * object's driver-side gaps overlap another object's jobs. The pool holds min(objects, 2 ×
+    * (the id pass, then the export) is submitted from its own thread of a
+    * pool created for this call, so one object's driver-side gaps overlap
+    * another object's jobs. The pool holds min(objects, 2 ×
     * defaultParallelism) threads and is shut down before the call returns.
     * Each object runs under `SQLExecution.withThreadLocalCaptured`, so the
     * caller's local properties (job group, streaming batch properties) and
@@ -176,15 +184,16 @@ final class ChangeRelay(
     // late-replayed micro-batch (e.g. an old file re-surfacing in the file
     // stream) can carry only ids below the stored watermark.
     //
-    // ONE aggregate job carries BOTH the row count and the new watermark:
-    // a gated id ≤ fromVersion can never lift max(fromVersion, ·), so
-    // max(fromVersion, max(id) over batch) ≡ max(fromVersion,
-    // gatedWatermark(changes)) — and the count rides in the same map-side
-    // partial reduction. One fewer full pass over the change table per
-    // cycle (at a large initial sync, a third of the read I/O).
-    val stats = batch
-      .agg(count(lit(1)), coalesce(max(col("id")), lit(fromVersion))).head()
-    val newVersion = math.max(fromVersion, stats.getLong(1))
+    // ONE pass over the gated ids carries the row count, the new watermark
+    // and the envelope bounds: a gated id ≤ fromVersion can never lift
+    // max(fromVersion, ·), so max(fromVersion, max(id) over batch) ≡
+    // max(fromVersion, gatedWatermark(changes)).
+    val cap = config.maxRecordsPerBatch
+    val parts = batch.select(col("id").cast("long")).sortWithinPartitions("id").as[Long]
+      .mapPartitions(ids => ChangeRelay.idRuns(ids, cap))
+      .collect().toSeq
+    val batchRows = parts.map(_.rows).sum
+    val newVersion = (fromVersion +: parts.map(_.maxId)).max
 
     val rows = batch.select(
       lit(obj.name).as("g"),
@@ -195,25 +204,25 @@ final class ChangeRelay(
         lit("value"), col("value").cast("string"),
         lit("props"), col("props"))).as("payload"))
 
-    val batchRows = stats.getLong(0)
     val exported =
       if (batchRows == 0) 0L
       else {
-        // One envelope when the delta fits the cap: the batch number is the
-        // literal 0 and no numbering job runs. Otherwise numberBatchesRange,
-        // not the W2 window: a cycle numbers ONE object's rows, so the
-        // per-group window would put the whole batch (a full initial sync)
-        // in a single task's sort.
-        val numbered =
-          if (batchRows <= config.maxRecordsPerBatch) rows.withColumn("batch", lit(0))
-          else Windows.numberBatchesRange(rows, "version", config.maxRecordsPerBatch, batchRows)
+        // W2 numbering with no job of its own. One envelope when the delta
+        // fits the cap: the batch number is the literal 0. Otherwise a
+        // version's batch is its place among the envelope bounds, a narrow
+        // map; only ids the runs cannot number exactly (a repeated id, a
+        // sparse partition) go through numberBatchesRange.
+        val (numbered, totalBatches) =
+          if (batchRows <= cap) (rows.withColumn("batch", lit(0)), 1)
+          else ChangeRelay.batchBounds(parts, cap) match {
+            case Some(bounds) =>
+              (rows.withColumn("batch", ChangeRelay.batchOf(bounds)(col("version"))), bounds.length)
+            case None =>
+              (Windows.numberBatchesRange(rows, "version", cap, batchRows),
+                ((batchRows + cap - 1) / cap).toInt)
+          }
         val envelopes = Envelope.encode(
           numbered.withColumn("g", concat(col("g"), lit("#"), col("batch"))), "g")
-        // One group (the object) per cycle, so total batches is exactly the
-        // upstream numbering's ceil(rows / cap) — derivable from the count
-        // already taken, no extra job.
-        val totalBatches =
-          ((batchRows + config.maxRecordsPerBatch - 1) / config.maxRecordsPerBatch).toInt
         // EXECUTOR-side fan-out: envelopes never collect to the driver. Each
         // partition invokes the sink guards per envelope row and returns only
         // (error, payload) failures — a full initial sync (S7) of a large
@@ -300,6 +309,89 @@ object ChangeRelay {
     * advance to commit (None when the watermark did not move). */
   private final case class ObjectCycle(rows: Long, watermark: Long, advance: Option[Long])
 
+  /** One partition of a delta's ids, as the driver sees it: the row count,
+    * the max id and, when `exact`, every id as a run of consecutive values
+    * (`starts(i)` to `starts(i) + lengths(i) - 1`). */
+  private[streaming] final case class IdRuns(rows: Long, maxId: Long, exact: Boolean,
+      starts: Array[Long], lengths: Array[Long])
+
+  /** Past this many runs a partition whose runs already outnumber
+    * rows / cap + 1 stops collecting them, so a sparse partition never
+    * holds a run per row. */
+  private val RunsInFlight = 4096
+
+  /** Summarize one partition's ids, sorted ascending. The runs are dropped
+    * (`exact` false) when an id repeats or when they number more than
+    * rows / cap + 1, so all partitions together send the driver at most
+    * envelopes + partitions runs. */
+  private[streaming] def idRuns(ids: Iterator[Long], cap: Int): Iterator[IdRuns] =
+    if (!ids.hasNext) Iterator.empty
+    else {
+      val starts = new scala.collection.mutable.ArrayBuilder.ofLong
+      val lengths = new scala.collection.mutable.ArrayBuilder.ofLong
+      var last = ids.next()
+      var runStart = last
+      var rows, runs = 1L
+      var exact = true
+      while (ids.hasNext) {
+        val id = ids.next()
+        rows += 1
+        if (exact) {
+          if (id == last) exact = false
+          else if (id != last + 1) {
+            starts += runStart
+            lengths += last - runStart + 1
+            runStart = id
+            runs += 1
+            if (runs > RunsInFlight && runs > rows / cap + 1) exact = false
+          }
+        }
+        last = id
+      }
+      val keep = exact && runs <= rows / cap + 1
+      if (keep) {
+        starts += runStart
+        lengths += last - runStart + 1
+      }
+      Iterator.single(IdRuns(rows, last, keep,
+        if (keep) starts.result() else Array.emptyLongArray,
+        if (keep) lengths.result() else Array.emptyLongArray))
+    }
+
+  /** The first id of every `cap`-row envelope of a delta in id order (W2),
+    * from its partitions' runs merged by start; the driver holds one value
+    * per envelope and one run per envelope or partition. None when a
+    * partition dropped its runs or two runs overlap (an id repeats across
+    * partitions). */
+  private[streaming] def batchBounds(parts: Seq[IdRuns], cap: Int): Option[Array[Long]] =
+    if (!parts.forall(_.exact)) None
+    else {
+      val runs = parts.flatMap(p => p.starts.zip(p.lengths)).sortBy(_._1)
+      val overlap = runs.iterator.zip(runs.iterator.drop(1)).exists {
+        case ((start, n), (next, _)) => next <= start + n - 1
+      }
+      if (overlap) None
+      else {
+        val bounds = new scala.collection.mutable.ArrayBuilder.ofLong
+        var seen = 0L // rows in the runs before this one
+        for ((start, n) <- runs) {
+          var pos = (seen + cap - 1) / cap * cap // the next envelope's first row
+          while (pos < seen + n) {
+            bounds += start + (pos - seen)
+            pos += cap
+          }
+          seen += n
+        }
+        Some(bounds.result())
+      }
+    }
+
+  /** A version's batch number: the index of the last bound at or below it. */
+  private[streaming] def batchOf(bounds: Array[Long]) = udf { (version: Long) =>
+    val i = java.util.Arrays.binarySearch(bounds, version)
+    if (i >= 0) i else -i - 2
+  }
+
   /** Fan one partition of `(g, envelope_json)` rows out to every configured
     * sink, executor-side. Emits only the failures as (error, payload) — the
     * at-least-once contract (T2) means a retried task may re-invoke sinks,
@@ -315,6 +407,7 @@ object ChangeRelay {
       val batchNo = g.substring(g.lastIndexOf('#') + 1).toInt
       val meta = ExportMeta(plan.environment, plan.objectName, plan.database,
         plan.nowUtc, batchNo, plan.totalBatches)
+      val payload = new Sinks.Payload(json) // one gzip for every endpoint
       val fileFailures = plan.fileSinkTemplate.toSeq.flatMap { tpl =>
         Sinks.writeFile(json, tpl, meta).left.toSeq.map(f => (f.error, json))
       }
@@ -324,7 +417,7 @@ object ChangeRelay {
       val endpointFailures = plan.endpoints.flatMap { ep =>
         val result = ep.kind match {
           case "http" =>
-            Sinks.prepareHttp(json, ep.target, meta, ep.headers,
+            Sinks.prepareHttp(payload, ep.target, meta, ep.headers,
               ep.enableCompression, plan.maxPayloadSizeBytes)
               .flatMap(r =>
                 if (plan.performHttp) Sinks.httpPost(r).map(_ => ())
@@ -334,7 +427,7 @@ object ChangeRelay {
             // first (required fields, caps), then the AMQP 0-9-1 publish —
             // target "amqp://host:port/exchange", routing key = the object
             // name, correlation id = the batch group (replayable).
-            Sinks.prepareBrokerMessage("rabbitmq", json, ep.headers).flatMap { body =>
+            Sinks.prepareBrokerMessage("rabbitmq", payload, ep.headers).flatMap { body =>
               // parse defensively: a missing port or non-numeric port is a
               // CONFIG error and must dead-letter like the missing-slash
               // case below — a MatchError/NumberFormatException here would
@@ -361,7 +454,7 @@ object ChangeRelay {
               }
             }
           case broker =>
-            Sinks.prepareBrokerMessage(broker, json, ep.headers).map(_ => ())
+            Sinks.prepareBrokerMessage(broker, payload, ep.headers).map(_ => ())
         }
         result.left.toSeq.map(f => (f.error, json))
       }

@@ -52,9 +52,11 @@ object StreamingDedup {
       survivorsDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       numPerms: Int = 8, bands: Int = 4): StreamingQuery =
-    MicroBatch.start(stream,
-        s"graft-neardedup-${survivorsDir.hashCode.toHexString}", checkpointDir) {
-      (batch, batchId) =>
-        admitBatch(store, batch, batchId, survivorsDir, idCol, textCol, numPerms, bands)
+    store.startBatchWriter(SeenTable) {
+      MicroBatch.start(stream,
+          s"graft-neardedup-${survivorsDir.hashCode.toHexString}", checkpointDir) {
+        (batch, batchId) =>
+          admitBatch(store, batch, batchId, survivorsDir, idCol, textCol, numPerms, bands)
+      }
     }
 }

@@ -191,6 +191,53 @@ class ConfigSinksSpec extends SparkSpec {
     assert(p.linesIterator.size > 5)
   }
 
+  /** The pretty-printer as it was before it became one StringBuilder
+    * pass: the byte-for-byte reference for the file sink's output. */
+  private def prettyJsonReference(json: String): String = {
+    val sb = new StringBuilder
+    var depth = 0
+    var inStr = false
+    var esc = false
+    json.foreach { c =>
+      if (esc) { sb.append(c); esc = false }
+      else c match {
+        case '\\' if inStr => sb.append(c); esc = true
+        case '"' => sb.append(c); inStr = !inStr
+        case '{' | '[' if !inStr =>
+          depth += 1; sb.append(c).append('\n').append("  " * depth)
+        case '}' | ']' if !inStr =>
+          depth -= 1; sb.append('\n').append("  " * depth).append(c)
+        case ',' if !inStr => sb.append(c).append('\n').append("  " * depth)
+        case ':' if !inStr => sb.append(": ")
+        case _ => sb.append(c)
+      }
+    }
+    sb.toString
+  }
+
+  test("pretty printer output is unchanged, escapes and structural characters in strings included") {
+    val cases = Seq(
+      """{"a":[1,2],"b":{"c":"x,y"}}""",
+      """{"q":"say \"hi\" {}[],:","bs":"c:\\dir\\","tail\\":[{"k":"]["}]}""",
+      """{"Metadata":{"Sync":{"Version":3,"Type":"Diff","ReasonCode":0}},"Data":[""" +
+        """{"$operation":"I","$version":3,"$changed":null,"props":"{\"k\":[1,2]}"}]}""",
+      """[]""", """{}""", """"\\"""", """{"unterminated":"\""")
+    cases.foreach(j => assert(Sinks.prettyJson(j) == prettyJsonReference(j), j))
+  }
+
+  test("one payload serves every guard: bodies equal the per-string guards byte for byte") {
+    val json = """{"Data":[""" + (1 to 400).map(i => s"""{"k":$i}""").mkString(",") + "]}"
+    val payload = new Sinks.Payload(json)
+    val viaPayload = Sinks.prepareHttp(payload, "http://h/{object}", meta, Map.empty,
+      compress = true, maxPayloadBytes = 1L << 20).toOption.get
+    val viaString = Sinks.prepareHttp(json, "http://h/{object}", meta, compress = true).toOption.get
+    assert(viaPayload.body.sameElements(viaString.body))
+    assert(viaPayload.body eq payload.gzipped, "the http body is the shared gzip")
+    for (broker <- Seq("awssqs", "azureservicebus", "kafka"))
+      assert(Sinks.prepareBrokerMessage(broker, payload, Map("q" -> "v")).toOption.get
+        .sameElements(Sinks.prepareBrokerMessage(broker, json, Map("q" -> "v")).toOption.get), broker)
+  }
+
   test("K1 Hadoop-FS variant writes the identical payload through a file:// scheme") {
     val dir = java.nio.file.Files.createTempDirectory("graft-hfs")
     val m = graft.sinks.ExportMeta("prod", "orders", "db0", "20240101000000", 0, 1)

@@ -242,6 +242,49 @@ class RelaySpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("job contract: a three-envelope object runs the same SQL executions and jobs as a one-envelope object") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val objs = Seq("one", "three").map(n => TrackingObject(n, "db0", "t", "sp"))
+    val relay = new ChangeRelay(spark, store,
+      EnvironmentConfig("prod", "postgres", objs, Seq(SinkEndpoint("ep1", "http", "http://x/{object}")),
+        maxRecordsPerBatch = 10),
+      Some(dir.resolve("exports").toString + "/{object}/c-{batch}.json"), horizonOf = _ => 1000L)
+    store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
+    def feed(n: Long) = outboxDf((1L to n).map(i => (i, i, "I", i.toDouble, s"""{"k":$i}""")))
+
+    val sqlExecutions = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          sqlExecutions.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    def counted(obj: TrackingObject, rows: Long): (Int, Int) = {
+      org.apache.spark.TestListenerBus.drain(sc)
+      sqlExecutions.set(0)
+      jobs.set(0)
+      assert(relay.runCycles(Seq(obj -> feed(rows)), "20240115000000") == Map(obj.name -> (rows, rows)))
+      org.apache.spark.TestListenerBus.drain(sc)
+      (sqlExecutions.get(), jobs.get())
+    }
+    sc.addSparkListener(listener)
+    val (one, three) =
+      try (counted(objs(0), 1L), counted(objs(1), 25L))
+      finally sc.removeSparkListener(listener)
+    assert(one._1 == 2, s"expected one id pass and one export execution, saw ${one._1}")
+    assert(three == one, s"three envelopes ran (executions, jobs) $three, one envelope $one")
+    val batches = Files.list(dir.resolve("exports").resolve("three")).iterator()
+    var names = Set.empty[String]
+    while (batches.hasNext) names += batches.next().getFileName.toString
+    assert(names == Set("c-0.json", "c-1.json", "c-2.json"))
+  }
+
   test("two dead-lettering objects in one cycle keep every dead letter, with distinct ids") {
     val dir = tmp()
     val store = new ParquetStateStore(spark, dir.resolve("state").toString)

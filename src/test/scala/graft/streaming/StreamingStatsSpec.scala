@@ -80,4 +80,38 @@ class StreamingStatsSpec extends SparkSpec {
     assert(snap.head.getLong(3) == 3L) // exact: 3 distinct contents < k
     assert(snap.head.getLong(1) == 4L)
   }
+
+  test("a second live query on the same state table is refused; a restart after stop() is not") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sstats3")
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    implicit val sqlCtx = spark.sqlContext
+    val first = MemoryStream[(String, String)]
+    val second = MemoryStream[(String, String)]
+    val q1 = StreamingStats.start(spark, first.toDF().toDF("source", "text"),
+      store, dir.resolve("ckpt1").toString, k = K)
+    try {
+      first.addData(("a", "one text"))
+      q1.processAllAvailable()
+      // Another store instance on the same root names the same table.
+      val sameRoot = new ParquetStateStore(spark, dir.resolve("state").toString)
+      val refused = intercept[IllegalStateException] {
+        StreamingStats.start(spark, second.toDF().toDF("source", "text"),
+          sameRoot, dir.resolve("ckpt2").toString, k = K)
+      }
+      assert(refused.getMessage.contains("live streaming writer"))
+      assert(spark.streams.active.map(_.id).toSeq == Seq(q1.id))
+    } finally q1.stop()
+
+    // Once it has stopped, the query restarts on its checkpoint and its
+    // next batch lands.
+    val q2 = StreamingStats.start(spark, first.toDF().toDF("source", "text"),
+      store, dir.resolve("ckpt1").toString, k = K)
+    try {
+      first.addData(("b", "two text"))
+      q2.processAllAvailable()
+    } finally q2.stop()
+    val docs = StreamingStats.readState(store).select("source", "docs").as[(String, Long)]
+      .collect().toMap
+    assert(docs == Map("a" -> 1L, "b" -> 1L))
+  }
 }
