@@ -24,12 +24,12 @@ object Windows {
   }
 
   /** [[numberBatches]] for ONE group at DATA scale — the relay's fallback
-    * when its id runs cannot number a delta (repeated or sparse ids): a
-    * cycle numbers a single tracked object's rows, so the per-group window
-    * above degenerates to one partition holding the entire batch (a full
-    * initial sync serialized through one task's sort). Range-partition +
-    * in-partition sort + `zipWithIndex` produces the identical dense
-    * `orderCol` ordering distributed; `totalRows`
+    * when its id runs cannot number a delta (repeated, sparse or far
+    * out-of-order ids): a cycle numbers a single tracked object's rows, so
+    * the per-group window above degenerates to one partition holding the
+    * entire batch (a full initial sync serialized through one task's sort).
+    * Range-partition + in-partition sort + `zipWithIndex` produces the
+    * identical dense `orderCol` ordering distributed; `totalRows`
     * comes from the caller, which already counted the batch — no extra
     * count job beyond zipWithIndex's internal partition-size pass over the
     * (already shuffled) sorted data. */

@@ -3,7 +3,6 @@ package graft.state
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
@@ -48,7 +47,9 @@ import scala.jdk.CollectionConverters._
   * file into the new version directory. Spark's file index skips
   * `_`-prefixed files, so [[read]] never sees it, and [[committedBatch]]
   * is a driver file read. A table has one live streaming writer at a
-  * time, started through [[startBatchWriter]].
+  * time, started through [[graft.streaming.MicroBatch.startWriter]]; a
+  * restart must reuse that writer's checkpoint, since a fresh one numbers
+  * its batches from 0 again.
   *
   * Writers: every mutation (read the snapshot, derive the next one,
   * commit) holds a JVM-wide lock keyed by the table root's absolute path,
@@ -63,11 +64,13 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
 
   private def tableRoot(name: String): Path = Paths.get(rootDir, name)
 
-  private def tableKey(name: String): String = tableRoot(name).toAbsolutePath.normalize.toString
+  /** The table's root as a normalized absolute path: the key of its writer
+    * lock and of its streaming writer's claim. */
+  def tablePath(name: String): String = tableRoot(name).toAbsolutePath.normalize.toString
 
   /** Run `body` holding the table's writer lock (reentrant). */
   private def locked[T](name: String)(body: => T): T =
-    ParquetStateStore.tableLocks.computeIfAbsent(tableKey(name), _ => new Object).synchronized(body)
+    ParquetStateStore.tableLocks.computeIfAbsent(tablePath(name), _ => new Object).synchronized(body)
 
   private def pointer(name: String): Path = tableRoot(name).resolve("_CURRENT")
 
@@ -145,26 +148,6 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
         Files.writeString(dir.resolve(BatchMarker), batchId.toString)
       }
       true
-    }
-  }
-
-  /** Start `query` as the one live streaming writer of `name`. Progress
-    * is per table, so a second live query committing to it (its own
-    * checkpoint, batch ids from 0) would have its batches skipped as
-    * replays; it is refused here instead. The claim is JVM-wide, keyed like
-    * the writer lock, and lapses once its query stops, so a restart on the
-    * same table is allowed. */
-  def startBatchWriter(name: String)(query: => StreamingQuery): StreamingQuery = {
-    val key = tableKey(name)
-    batchWriters.synchronized {
-      batchWriters.values.removeIf(!_.isActive)
-      Option(batchWriters.get(key)).foreach { live =>
-        throw new IllegalStateException(s"state table '$name' under $rootDir already has " +
-          s"a live streaming writer '${live.name}' (${live.id}); stop it first")
-      }
-      val started = query
-      batchWriters.put(key, started)
-      started
     }
   }
 
@@ -384,9 +367,6 @@ object ParquetStateStore {
   /** Writer locks, one per table root (absolute path), shared by every
     * store instance in the JVM. */
   private val tableLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  /** The live streaming query committing to each table root, JVM-wide. */
-  private val batchWriters = new java.util.concurrent.ConcurrentHashMap[String, StreamingQuery]()
 
   /** The driver-resident tables and their schemas. */
   private val ControlTables: Map[String, StructType] = Map(

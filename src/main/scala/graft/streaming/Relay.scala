@@ -27,16 +27,21 @@ import graft.state.ParquetStateStore
   *
   * Spark work per object and cycle is data work only, two actions for any
   * delta size: one pass over the gated delta's ids and one export. The id
-  * pass sorts each partition's ids (spillable, no shuffle) and returns its
-  * row count, its max id and its ids as runs of consecutive values; the
-  * driver derives the row count, the new watermark and the first id of
-  * every `maxRecordsPerBatch`-row envelope, so the export numbers each row
-  * by binary search over those bounds, a narrow map. Driver memory is
-  * O(envelopes + partitions): a partition whose ids repeat (one version
-  * can stamp a whole transaction) or need more than rows / cap + 1 runs
-  * sends none, and that cycle numbers through
+  * pass reads each partition's ids in arrival order, with no sort and no
+  * shuffle, and returns its row count, its max id and its ids as runs of
+  * consecutive values; the driver derives the row count, the new watermark
+  * and the first id of every `maxRecordsPerBatch`-row envelope, so the
+  * export numbers each row by binary search over those bounds, a narrow
+  * map. The runs number a delta exactly when its versions are unique per
+  * object and each partition reads them as ascending stretches (a change
+  * table's files are written in version order). Driver memory is
+  * O(envelopes + partitions): a partition whose ids need more than
+  * rows / cap + 1 runs (sparse versions, rows far out of order) sends
+  * none, and a version on several rows (one transaction) shows as
+  * overlapping runs; either way that cycle numbers through
   * [[graft.ops.Windows.numberBatchesRange]] instead, which adds its own
-  * jobs. A delta that fits one envelope is batch 0 either way. The export
+  * jobs, and its id pass costs what a count-and-max aggregate does. A
+  * delta that fits one envelope is batch 0 either way. The export
   * runs the sink fan-out on the executors and returns just the failed
   * envelopes as (error, data) rows, which the driver hashes and
   * dead-letters; successful envelopes never reach the driver. Control
@@ -189,7 +194,7 @@ final class ChangeRelay(
     // max(fromVersion, ·), so max(fromVersion, max(id) over batch) ≡
     // max(fromVersion, gatedWatermark(changes)).
     val cap = config.maxRecordsPerBatch
-    val parts = batch.select(col("id").cast("long")).sortWithinPartitions("id").as[Long]
+    val parts = batch.select(col("id").cast("long")).as[Long]
       .mapPartitions(ids => ChangeRelay.idRuns(ids, cap))
       .collect().toSeq
     val batchRows = parts.map(_.rows).sum
@@ -211,7 +216,7 @@ final class ChangeRelay(
         // fits the cap: the batch number is the literal 0. Otherwise a
         // version's batch is its place among the envelope bounds, a narrow
         // map; only ids the runs cannot number exactly (a repeated id, a
-        // sparse partition) go through numberBatchesRange.
+        // sparse or out-of-order partition) go through numberBatchesRange.
         val (numbered, totalBatches) =
           if (batchRows <= cap) (rows.withColumn("batch", lit(0)), 1)
           else ChangeRelay.batchBounds(parts, cap) match {
@@ -311,62 +316,67 @@ object ChangeRelay {
 
   /** One partition of a delta's ids, as the driver sees it: the row count,
     * the max id and, when `exact`, every id as a run of consecutive values
-    * (`starts(i)` to `starts(i) + lengths(i) - 1`). */
+    * `(start, length)`. */
   private[streaming] final case class IdRuns(rows: Long, maxId: Long, exact: Boolean,
-      starts: Array[Long], lengths: Array[Long])
+      runs: Seq[(Long, Long)])
 
-  /** Past this many runs a partition whose runs already outnumber
-    * rows / cap + 1 stops collecting them, so a sparse partition never
-    * holds a run per row. */
+  /** Past this many arrival runs a partition whose runs already outnumber
+    * rows-so-far / cap + 1 stops collecting them, so a sparse or shuffled
+    * partition never holds a run per row. The cut-off reads the rows seen
+    * so far, not the partition's final count: a partition whose first
+    * ~4,096 ids are sparse and whose later ids are dense drops its runs
+    * even when its final runs would fit, and its cycle takes the fallback.
+    * That costs time only; the numbering stays exact. */
   private val RunsInFlight = 4096
 
-  /** Summarize one partition's ids, sorted ascending. The runs are dropped
-    * (`exact` false) when an id repeats or when they number more than
-    * rows / cap + 1, so all partitions together send the driver at most
-    * envelopes + partitions runs. */
+  /** Summarize one partition's ids in arrival order, with no sort: the row
+    * count, the max id and, when `exact`, the ids as runs of consecutive
+    * values, sorted by start with touching runs merged. Rows read as
+    * ascending stretches (one per file a partition reads) make one run per
+    * stretch. The runs are dropped (`exact` false) when more than
+    * rows / cap + 1 remain after the merge, so all partitions together send
+    * the driver at most envelopes + partitions runs. A repeated id is left
+    * to the driver: it falls in two runs, which overlap. */
   private[streaming] def idRuns(ids: Iterator[Long], cap: Int): Iterator[IdRuns] =
     if (!ids.hasNext) Iterator.empty
     else {
-      val starts = new scala.collection.mutable.ArrayBuilder.ofLong
-      val lengths = new scala.collection.mutable.ArrayBuilder.ofLong
+      val arrived = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
       var last = ids.next()
-      var runStart = last
-      var rows, runs = 1L
+      var runStart, maxId = last
+      var rows = 1L
       var exact = true
       while (ids.hasNext) {
         val id = ids.next()
         rows += 1
-        if (exact) {
-          if (id == last) exact = false
-          else if (id != last + 1) {
-            starts += runStart
-            lengths += last - runStart + 1
-            runStart = id
-            runs += 1
-            if (runs > RunsInFlight && runs > rows / cap + 1) exact = false
-          }
+        if (id > maxId) maxId = id
+        if (exact && id != last + 1) {
+          arrived += ((runStart, last - runStart + 1))
+          runStart = id
+          if (arrived.length >= RunsInFlight && arrived.length >= rows / cap + 1) exact = false
         }
         last = id
       }
-      val keep = exact && runs <= rows / cap + 1
-      if (keep) {
-        starts += runStart
-        lengths += last - runStart + 1
+      val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      if (exact) {
+        arrived += ((runStart, last - runStart + 1))
+        for ((start, n) <- arrived.sortBy(_._1))
+          if (runs.nonEmpty && runs.last._1 + runs.last._2 == start)
+            runs(runs.length - 1) = (runs.last._1, runs.last._2 + n)
+          else runs += ((start, n))
       }
-      Iterator.single(IdRuns(rows, last, keep,
-        if (keep) starts.result() else Array.emptyLongArray,
-        if (keep) lengths.result() else Array.emptyLongArray))
+      val keep = exact && runs.length <= rows / cap + 1
+      Iterator.single(IdRuns(rows, maxId, keep, if (keep) runs.toSeq else Nil))
     }
 
   /** The first id of every `cap`-row envelope of a delta in id order (W2),
     * from its partitions' runs merged by start; the driver holds one value
     * per envelope and one run per envelope or partition. None when a
     * partition dropped its runs or two runs overlap (an id repeats across
-    * partitions). */
+    * partitions or in one). */
   private[streaming] def batchBounds(parts: Seq[IdRuns], cap: Int): Option[Array[Long]] =
     if (!parts.forall(_.exact)) None
     else {
-      val runs = parts.flatMap(p => p.starts.zip(p.lengths)).sortBy(_._1)
+      val runs = parts.flatMap(_.runs).sortBy(_._1)
       val overlap = runs.iterator.zip(runs.iterator.drop(1)).exists {
         case ((start, n), (next, _)) => next <= start + n - 1
       }
@@ -461,11 +471,6 @@ object ChangeRelay {
       fileFailures ++ endpointFailures
     }
 
-  /** checkpointDir → queryName for live queries; guards against two
-    * different queries sharing one offset log. Entries for stopped queries
-    * are purged lazily on the next start. */
-  private val activeCheckpoints = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** T1/T6 — the Structured-Streaming wrapper: watch an outbox directory as
     * a file stream and run the relay per micro-batch at the configured
     * cadence. One StreamingQuery per (environment, object), named for
@@ -482,10 +487,9 @@ object ChangeRelay {
       checkpointDir: String,
       envName: String,
       intervalSeconds: Int = graft.model.Defaults.PollingIntervalSeconds): StreamingQuery =
-    claimAndStart(spark, checkpointDir, s"graft-relay-$envName-${obj.name}") {
-      queryName =>
-        startQuery(spark.readStream.schema(schema).parquet(outboxDir),
-          relay, obj, checkpointDir, queryName, intervalSeconds)
+    claimCheckpoint(checkpointDir) {
+      startQuery(spark.readStream.schema(schema).parquet(outboxDir),
+        relay, obj, checkpointDir, s"graft-relay-$envName-${obj.name}", intervalSeconds)
     }
 
   /** S1 (DSv2 flavor) wired into the relay: the same per-micro-batch cycle,
@@ -505,41 +509,23 @@ object ChangeRelay {
       envName: String,
       intervalSeconds: Int = graft.model.Defaults.PollingIntervalSeconds,
       adapt: DataFrame => DataFrame = identity): StreamingQuery =
-    claimAndStart(spark, checkpointDir, s"graft-relay-$envName-${obj.name}") {
-      queryName =>
-        // `adapt` bridges the wire table's shape to the relay contract —
-        // a JDBC change table stores the $changed mask as a delimited
-        // VARCHAR (Envelope.encode needs array<string>) and may name the
-        // version/xact columns differently; the adapter is part of the
-        // object's deployment config, applied per micro-batch.
-        startQuery(
-          adapt(spark.readStream.format("graft-change").options(sourceOptions).load()),
-          relay, obj, checkpointDir, queryName, intervalSeconds)
+    claimCheckpoint(checkpointDir) {
+      // `adapt` bridges the wire table's shape to the relay contract —
+      // a JDBC change table stores the $changed mask as a delimited
+      // VARCHAR (Envelope.encode needs array<string>) and may name the
+      // version/xact columns differently; the adapter is part of the
+      // object's deployment config, applied per micro-batch.
+      startQuery(
+        adapt(spark.readStream.format("graft-change").options(sourceOptions).load()),
+        relay, obj, checkpointDir, s"graft-relay-$envName-${obj.name}", intervalSeconds)
     }
 
-  /** Purge + claim + START under one lock: without it, a concurrent
-    * caller's purge can evict a claim whose query has not yet reached
-    * spark.streams.active, letting two queries share one offset log —
-    * exactly the corruption this guard exists to prevent. */
-  private def claimAndStart(spark: SparkSession, checkpointDir: String,
-      queryName: String)(start: String => StreamingQuery): StreamingQuery =
-    activeCheckpoints.synchronized {
-      val activeNames = spark.streams.active.map(_.name).toSet
-      activeCheckpoints.entrySet().removeIf(e => !activeNames.contains(e.getValue))
-      val prev = activeCheckpoints.putIfAbsent(checkpointDir, queryName)
-      require(prev == null || prev == queryName,
-        s"checkpointLocation '$checkpointDir' is already used by active query '$prev' — " +
-          "each (environment, object) stream needs its own checkpoint dir")
-      try start(queryName)
-      catch { case e: Throwable =>
-        // Roll back only a claim THIS call inserted (prev == null). When
-        // prev == queryName the claim belongs to a still-live query —
-        // startQuery then throws "name already active", and evicting the
-        // live claim here would let a later (env, object) with the same
-        // checkpointDir pass the guard and corrupt the running offset log.
-        if (prev == null) activeCheckpoints.remove(checkpointDir, queryName)
-        throw e }
-    }
+  /** One live query per checkpoint in this JVM: two queries sharing one
+    * offset log corrupt each other. */
+  private def claimCheckpoint(checkpointDir: String)(start: => StreamingQuery): StreamingQuery =
+    MicroBatch.claimAndStart(checkpointDir,
+      s"checkpointLocation '$checkpointDir' is already used by an active query — " +
+        "each (environment, object) stream needs its own checkpoint dir")(start)
 
   /** T5 streaming flavor — the dead-letter replay loop as a Structured
     * Streaming query: a rate source is the timer (the Spark-idiomatic

@@ -52,11 +52,9 @@ object StreamingDedup {
       survivorsDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       numPerms: Int = 8, bands: Int = 4): StreamingQuery =
-    store.startBatchWriter(SeenTable) {
-      MicroBatch.start(stream,
-          s"graft-neardedup-${survivorsDir.hashCode.toHexString}", checkpointDir) {
-        (batch, batchId) =>
-          admitBatch(store, batch, batchId, survivorsDir, idCol, textCol, numPerms, bands)
-      }
+    MicroBatch.startWriter(store, SeenTable, stream,
+        s"graft-neardedup-${survivorsDir.hashCode.toHexString}", checkpointDir) {
+      (batch, batchId) =>
+        admitBatch(store, batch, batchId, survivorsDir, idCol, textCol, numPerms, bands)
     }
 }

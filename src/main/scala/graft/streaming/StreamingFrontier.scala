@@ -95,10 +95,8 @@ object StreamingFrontier {
   def start(spark: SparkSession, stream: DataFrame, store: ParquetStateStore,
             outDir: String, checkpointDir: String, maxPerDomain: Int = 8,
             delaySec: Int = 5): StreamingQuery =
-    store.startBatchWriter(Table) {
-      MicroBatch.start(stream, s"graft-frontier-${outDir.hashCode.toHexString}",
-          checkpointDir) { (batch, batchId) =>
-        applyBatch(store, batch, batchId, outDir, maxPerDomain, delaySec)
-      }
+    MicroBatch.startWriter(store, Table, stream,
+        s"graft-frontier-${outDir.hashCode.toHexString}", checkpointDir) { (batch, batchId) =>
+      applyBatch(store, batch, batchId, outDir, maxPerDomain, delaySec)
     }
 }

@@ -103,8 +103,8 @@ object StreamingScd2 {
     * One query per state store — application is ordered by micro-batch. */
   def start(spark: SparkSession, stream: DataFrame, store: ParquetStateStore,
             closedDir: String, checkpointDir: String): StreamingQuery =
-    store.startBatchWriter(OpenTable) {
-      MicroBatch.start(stream, s"graft-scd2-${closedDir.hashCode.toHexString}",
-          checkpointDir) { (batch, batchId) => applyBatch(store, batch, batchId, closedDir) }
+    MicroBatch.startWriter(store, OpenTable, stream,
+        s"graft-scd2-${closedDir.hashCode.toHexString}", checkpointDir) {
+      (batch, batchId) => applyBatch(store, batch, batchId, closedDir)
     }
 }

@@ -101,10 +101,8 @@ object StreamingStats {
   def start(spark: SparkSession, stream: DataFrame, store: ParquetStateStore,
             checkpointDir: String, srcCol: String = "source",
             textCol: String = "text", k: Int = 256): StreamingQuery =
-    store.startBatchWriter(StatsTable) {
-      MicroBatch.start(stream, s"graft-stats-${checkpointDir.hashCode.toHexString}",
-          checkpointDir) { (batch, batchId) =>
-        mergeBatch(store, batch, batchId, srcCol, textCol, k)
-      }
+    MicroBatch.startWriter(store, StatsTable, stream,
+        s"graft-stats-${checkpointDir.hashCode.toHexString}", checkpointDir) { (batch, batchId) =>
+      mergeBatch(store, batch, batchId, srcCol, textCol, k)
     }
 }

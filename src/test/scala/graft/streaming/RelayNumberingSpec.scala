@@ -107,4 +107,30 @@ class RelayNumberingSpec extends SparkSpec {
     assert(ChangeRelay.batchBounds(parts(Seq((1L to 10L) ++ (20L to 29L) ++ (40L to 44L))), Cap)
       .map(_.toSeq).contains(Seq(1L, 20L, 40L)))
   }
+
+  test("a partition's ids are read in arrival order: ascending stretches merge, anything else falls back") {
+    def one(ids: Iterator[Long]) = ChangeRelay.idRuns(ids, Cap).toSeq match {
+      case Seq(p) => p
+      case other => fail(s"expected one summary, got $other")
+    }
+    // Two files' stretches, the later one read first: one run, 25 rows.
+    val files = one(((21L to 25L) ++ (1L to 20L)).iterator)
+    assert(files.exact && files.rows == 25 && files.maxId == 25L)
+    assert(files.runs == Seq((1L, 25L)))
+    // Dense ids in shuffled order arrive as a run per row or so: merged
+    // into one run while they number at most 4,096, dropped past that.
+    val shuffled = one(new scala.util.Random(3).shuffle((1L to 200L).toVector).iterator)
+    assert(shuffled.exact && shuffled.runs == Seq((1L, 200L)))
+    val manyShuffled = one(new scala.util.Random(3).shuffle((1L to 10000L).toVector).iterator)
+    assert(!manyShuffled.exact && manyShuffled.rows == 10000 && manyShuffled.maxId == 10000L)
+    // A repeat inside one ascending stretch leaves two overlapping runs,
+    // which the driver refuses.
+    val repeat = one(((1L to 15L) ++ (15L to 25L)).iterator)
+    assert(repeat.exact && ChangeRelay.batchBounds(Seq(repeat), Cap).isEmpty)
+    // A sparse head of 5,000 ids stops the run collection before the dense
+    // tail arrives, though the final runs (5,001 for 105,000 rows) would fit
+    // rows / cap + 1: the cycle falls back, and still numbers exactly.
+    val sparseHead = one(((1L to 10000L by 2) ++ (20001L to 120000L)).iterator)
+    assert(!sparseHead.exact && sparseHead.rows == 105000 && sparseHead.maxId == 120000L)
+  }
 }

@@ -117,8 +117,8 @@ class StreamingRelaySpec extends SparkSpec {
     val live = ChangeRelay.streamFromOutboxDir(
       spark, relay, obj, outboxDir, outboxSchema, ckpt, "claimenv", intervalSeconds = 1)
     try {
-      // Re-invoking the SAME (env, object) passes the claim check (prev ==
-      // queryName) but startQuery throws "name already active"...
+      // Re-invoking the SAME (env, object) is refused while the first
+      // query holds the checkpoint...
       intercept[Exception] {
         ChangeRelay.streamFromOutboxDir(
           spark, relay, obj, outboxDir, outboxSchema, ckpt, "claimenv", intervalSeconds = 1)

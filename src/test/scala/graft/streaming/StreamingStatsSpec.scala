@@ -94,7 +94,7 @@ class StreamingStatsSpec extends SparkSpec {
       q1.processAllAvailable()
       // Another store instance on the same root names the same table.
       val sameRoot = new ParquetStateStore(spark, dir.resolve("state").toString)
-      val refused = intercept[IllegalStateException] {
+      val refused = intercept[IllegalArgumentException] {
         StreamingStats.start(spark, second.toDF().toDF("source", "text"),
           sameRoot, dir.resolve("ckpt2").toString, k = K)
       }
@@ -113,5 +113,19 @@ class StreamingStatsSpec extends SparkSpec {
     val docs = StreamingStats.readState(store).select("source", "docs").as[(String, Long)]
       .collect().toMap
     assert(docs == Map("a" -> 1L, "b" -> 1L))
+  }
+
+  test("a claim is taken only by a start that returns, and refuses a second holder") {
+    val key = java.nio.file.Files.createTempDirectory("graft-claim").toString
+    intercept[RuntimeException](MicroBatch.claimAndStart(key, "held")(throw new RuntimeException("boom")))
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Int]
+    val q = MicroBatch.claimAndStart(key, "held")(
+      MicroBatch.start(input.toDF(), "graft-claim-spec", key + "/ckpt")((_, _) => ()))
+    try {
+      val refused = intercept[IllegalArgumentException](
+        MicroBatch.claimAndStart(key, "held")(fail("a second holder started")))
+      assert(refused.getMessage.startsWith("held (query 'graft-claim-spec'"))
+    } finally q.stop()
   }
 }
