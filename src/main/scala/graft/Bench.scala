@@ -101,7 +101,7 @@ object Bench {
     // second, SYNTHETIC query (spark.range — touches no bench table and no
     // registered plan) additionally class-loads the machinery the entry
     // query misses, which round-6's driver run showed spiking individual
-    // first-touch queries: the gzip UDF/Deflater path (f5 read 18.3 s cold),
+    // first-touch queries: the gzip/Deflater path (f5 read 18.3 s cold),
     // shuffle exchange + noop-write commit classes. Warming CLASSES, not
     // timed queries, per the round-6 verdict's explicit line.
     // A warm step failing must be VISIBLE (stderr) even though it never

@@ -753,10 +753,8 @@ object QueriesCore {
       Some("SELECT doc_id, true AS ok FROM documents")),
 
     Q("f5_gzip_native",
-      // The codegen GzipCompress/GzipDecompress twins of f5's ScalaUDFs,
-      // under the SAME oracle — the one native expression pair that had no
-      // gate of its own (r17 verdict, task 7). Routed through the SQL names
-      // so the extension registration is exercised too.
+      // f5's GzipCompress/GzipDecompress through their SQL names, under the
+      // SAME oracle, so the extension registration is exercised too.
       (s, d) => Tables.documents(s, d)
         .select(col("doc_id"),
           (expr("gzip_decompress(gzip_compress(cast(text as binary)))").cast("string")

@@ -1,14 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.ColumnGlue
 
 /** Scalar function library F1–F13: template substitution, UTC formatting,
   * hashing, gzip, JSON access, byte sizes, matching, parsing.
   *
   * Everything except gzip is a composition of codegen'd built-ins (no UDFs
-  * in hot paths); gzip has no Spark built-in and is the one genuine UDF the
-  * reference requires (Source/Helpers/Gzip.cs:9-18).
+  * in hot paths); gzip has no Spark built-in and is a native codegen'd
+  * expression pair (Source/Helpers/Gzip.cs:9-18).
   */
 object Scalars {
 
@@ -73,30 +74,24 @@ object Scalars {
       .filter(col("entry_id").isNotNull) // leading orphan continuations drop
   }
 
-  /** F5 — gzip. No Spark built-in; a deterministic JVM UDF (fixed header, no
-    * timestamp byte — level/OS fields zeroed by the JDK's GZIPOutputStream
-    * defaults). Ref: Source/Helpers/Gzip.cs:9-18; used with base64() when a
-    * broker embeds binary in a text body (MessageQueueService.cs:142-151). */
-  // Single codec implementation — graft.expressions.GzipCodec backs both
-  // the native Catalyst expressions and these UDF/driver-side entry points
-  // (two copies would drift on a fix to either).
+  /** F5 — gzip. No Spark built-in; the native codegen'd
+    * [[graft.expressions.GzipCompress]]/[[graft.expressions.GzipDecompress]]
+    * expressions (also `gzip_compress`/`gzip_decompress` in SQL), over the
+    * one codec [[graft.expressions.GzipCodec]]: deterministic, a fixed
+    * header with no timestamp. Ref: Source/Helpers/Gzip.cs:9-18; used with
+    * base64() when a broker embeds binary in a text body
+    * (MessageQueueService.cs:142-151). */
+  def gzip(c: Column): Column =
+    ColumnGlue.column(graft.expressions.GzipCompress(ColumnGlue.expression(c)))
+  def gunzip(c: Column): Column =
+    ColumnGlue.column(graft.expressions.GzipDecompress(ColumnGlue.expression(c)))
+
+  /** The same codec for bytes already on the driver or in a sink. */
   val gzipBytes: Array[Byte] => Array[Byte] = (input: Array[Byte]) =>
     if (input == null) null else graft.expressions.GzipCodec.compress(input)
 
   val gunzipBytes: Array[Byte] => Array[Byte] = (input: Array[Byte]) =>
     if (input == null) null else graft.expressions.GzipCodec.decompress(input)
-
-  /** Register gzip/gunzip as SQL functions on a session. */
-  def registerUdfs(spark: SparkSession): Unit = {
-    spark.udf.register("gzip", gzipBytes)
-    spark.udf.register("gunzip", gunzipBytes)
-  }
-
-  private lazy val gzipUdf = udf(gzipBytes)
-  private lazy val gunzipUdf = udf(gunzipBytes)
-
-  def gzip(c: Column): Column = gzipUdf(c)
-  def gunzip(c: Column): Column = gunzipUdf(c)
 
   /** Compress-then-cap decision used by the broker sinks: compress when the
     * payload exceeds the threshold, then enforce the post-compression cap.

@@ -96,6 +96,18 @@ object Amqp {
 
   // --- the publisher -----------------------------------------------------
 
+  private val Target = """(?:amqp://)?([^/:]+):([0-9]+)/(.*)""".r
+
+  /** An endpoint target `amqp://host:port/exchange` as (host, port,
+    * exchange); None when the host, the port or the `/exchange` part is
+    * missing or the port is not a number in 1–65535. The exchange may be
+    * empty (AMQP's default exchange). */
+  def parseTarget(target: String): Option[(String, Int, String)] = target match {
+    case Target(host, port, exchange) =>
+      port.toIntOption.filter(p => p > 0 && p <= 65535).map((host, _, exchange))
+    case _ => None
+  }
+
   /** Publish one message; returns the tuned frame-max actually used (so
     * callers/specs can assert the body-split arithmetic) or a failure. */
   def publish(host: String, port: Int,

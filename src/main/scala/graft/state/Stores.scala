@@ -2,6 +2,7 @@ package graft.state
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.parquet.conf.HadoopParquetConfiguration
@@ -43,13 +44,12 @@ import scala.jdk.CollectionConverters._
   * operators' state, [[ModelStore]]) is read and written through Spark.
   *
   * Batch progress: a streaming operator's table commits through
-  * [[commitBatch]], which writes the micro-batch id as a `_BATCH` marker
-  * file into the new version directory. Spark's file index skips
-  * `_`-prefixed files, so [[read]] never sees it, and [[committedBatch]]
-  * is a driver file read. A table has one live streaming writer at a
-  * time, started through [[graft.streaming.MicroBatch.startWriter]]; a
-  * restart must reuse that writer's checkpoint, since a fresh one numbers
-  * its batches from 0 again.
+  * [[commitBatch]], which keeps each writer's (streaming query id's) last
+  * micro-batch id in a `_BATCH` marker file that Spark's file index skips.
+  * A table has one live streaming writer at a time, started through
+  * [[graft.streaming.MicroBatch.startWriter]]; a restart on the same
+  * checkpoint resumes its query's progress, and a query on a fresh one is
+  * a new writer.
   *
   * Writers: every mutation (read the snapshot, derive the next one,
   * commit) holds a JVM-wide lock keyed by the table root's absolute path,
@@ -124,28 +124,38 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
   private def writeSpark(df: DataFrame)(dir: Path): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString)
 
-  /** The last micro-batch id [[commitBatch]] landed on `name`, or -1 when
-    * none has: the current version's `_BATCH` marker, read on the driver. */
-  def committedBatch(name: String): Long =
+  /** Each writer's last micro-batch id landed on `name`: the current
+    * version's `_BATCH` marker, a `<batch id> <writer>` line per writer. */
+  private def committedBatches(name: String): Map[String, Long] =
     currentDir(name).map(_.resolve(BatchMarker)).filter(Files.exists(_))
-      .fold(-1L)(f => Files.readString(f).trim.toLong)
+      .fold(Map.empty[String, Long])(f => Files.readAllLines(f).asScala.map { line =>
+        val Array(batch, writer) = line.split(" ", 2)
+        writer -> batch.toLong
+      }.toMap)
 
   /** Exactly-once state under at-least-once `foreachBatch` delivery, the
-    * one protocol every streaming operator commits through. Under the
-    * table's writer lock: a `batchId` at or below [[committedBatch]] has
-    * landed already, so nothing runs and the result is false. Otherwise
-    * `step` runs: it reads the state and writes the batch's own output with
-    * `overwrite`, and returns the next state. That state and `batchId` (the
-    * `_BATCH` marker) go into one version directory, so state and progress
-    * become visible in one pointer flip. A crash before the flip replays
-    * the batch against unchanged state, and the replay rewrites the same
-    * output; progress does not depend on the state having rows. */
+    * one protocol every streaming operator commits through. The writer is
+    * the id of the streaming query calling this (Spark's
+    * `sql.streaming.queryId` local property), which a restart on the same
+    * checkpoint keeps. Under the table's writer lock: a `batchId` at or
+    * below the writer's last landed one (outside any query: any writer's)
+    * has landed already, so nothing runs and the result is false.
+    * Otherwise `step` reads the state, writes the batch's own output with
+    * `overwrite` and returns the next state, which goes into one version
+    * directory with the writer's new progress, visible in one pointer
+    * flip. A crash before the flip replays the batch against unchanged
+    * state, and the replay rewrites the same output; progress does not
+    * depend on the state having rows. */
   def commitBatch(name: String, batchId: Long)(step: => DataFrame): Boolean = locked(name) {
-    batchId > committedBatch(name) && {
+    val writer = Option(spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)).getOrElse("")
+    val progress = committedBatches(name)
+    val landed = if (writer.isEmpty) progress.values.maxOption else progress.get(writer)
+    batchId > landed.getOrElse(-1L) && {
       val next = step
       flip(name) { dir =>
         writeSpark(next)(dir)
-        Files.writeString(dir.resolve(BatchMarker), batchId.toString)
+        Files.write(dir.resolve(BatchMarker),
+          (progress + (writer -> batchId)).map { case (w, b) => s"$b $w" }.asJava)
       }
       true
     }
@@ -377,7 +387,7 @@ object ParquetStateStore {
   /** The one data file of a driver-written snapshot directory. */
   private val SnapshotFile = "part-00000.snappy.parquet"
 
-  /** A [[commitBatch]] version's batch id. */
+  /** A [[commitBatch]] version's progress per writer. */
   private val BatchMarker = "_BATCH"
 
   /** What a caller supplies per dead letter; the store adds the id, the

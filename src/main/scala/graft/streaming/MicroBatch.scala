@@ -2,30 +2,33 @@ package graft.streaming
 
 import graft.state.ParquetStateStore
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** The streaming operators' one `foreachBatch` query: named, checkpointed,
-  * and calling `f` with each micro-batch and its id. Delivery is
-  * at-least-once — a batch id can come again after a failure — so a
-  * stateful `f` commits through
+/** The one `foreachBatch` query: named, checkpointed, fired by `trigger`,
+  * and calling `f` with each micro-batch and its id. The streaming
+  * operators keep the default trigger (the next batch as soon as the last
+  * one ends); the change relay polls at its environment's interval.
+  * Delivery is at-least-once — a batch id can come again after a failure —
+  * so a stateful `f` commits through
   * [[graft.state.ParquetStateStore.commitBatch]], and its query starts
   * through [[startWriter]] as that table's one live writer. */
 object MicroBatch {
-  def start(stream: DataFrame, queryName: String, checkpointDir: String)(
+  def start(stream: DataFrame, queryName: String, checkpointDir: String,
+      trigger: Trigger = Trigger.ProcessingTime(0L))(
       f: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
       .foreachBatch(f)
       .start()
 
   /** [[start]] as the one live streaming writer of `store`'s state table
-    * `table`. Batch progress is kept per table, so a second live query
-    * committing to it (its own checkpoint, batch ids from 0) would have its
-    * batches skipped as replays; it is refused instead. For the same
-    * reason a restart after `stop()` must reuse the stopped query's
-    * checkpoint: a query on a fresh checkpoint starts its batch ids below
-    * the table's progress. */
+    * `table`: a second live query would interleave its batches with the
+    * first's in one state fold, so it is refused. Batch progress is kept
+    * per query id, so a query that stopped may be followed by one on its
+    * own checkpoint (it resumes its progress) or on a fresh one (a new
+    * writer, its batch ids from 0). */
   def startWriter(store: ParquetStateStore, table: String, stream: DataFrame,
       queryName: String, checkpointDir: String)(f: (DataFrame, Long) => Unit): StreamingQuery =
     claimAndStart(store.tablePath(table),

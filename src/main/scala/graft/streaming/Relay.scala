@@ -51,9 +51,11 @@ import graft.state.ParquetStateStore
   *
   * Source contract (U1): a change frame carries `id` (the version),
   * `xact_id`, `operation`, `value`, `props` and `changed`. It reaches the
-  * relay as a plain DataFrame ([[runCycles]]), a file-stream outbox
-  * ([[ChangeRelay.streamFromOutboxDir]]) or the `graft-change` DSv2 source
-  * ([[ChangeRelay.streamFromChangeSource]]). `horizonOf` is P2's
+  * relay as a plain DataFrame per object ([[runCycles]]) or through the
+  * environment's one streaming poller, which reads every tracked object
+  * from a file-stream outbox ([[ChangeRelay.streamFromOutboxDir]]) or the
+  * `graft-change` DSv2 source ([[ChangeRelay.streamFromChangeSource]]) and
+  * runs [[runCycles]] over all of them per trigger. `horizonOf` is P2's
   * transaction horizon for a frame: only rows with `xact_id` below it are
   * read, and the watermark advances through the same gate. The default
   * admits every row that has an `xact_id`, at no Spark job: the frame
@@ -66,7 +68,7 @@ import graft.state.ParquetStateStore
 final class ChangeRelay(
     spark: SparkSession,
     store: ParquetStateStore,
-    config: EnvironmentConfig,
+    private val config: EnvironmentConfig,
     fileSinkTemplate: Option[String] = None,
     horizonOf: DataFrame => Long = _ => Long.MaxValue,
     // opt-in REAL HTTP delivery for "http" endpoints (Sinks.httpPost);
@@ -438,30 +440,16 @@ object ChangeRelay {
             // target "amqp://host:port/exchange", routing key = the object
             // name, correlation id = the batch group (replayable).
             Sinks.prepareBrokerMessage("rabbitmq", payload, ep.headers).flatMap { body =>
-              // parse defensively: a missing port or non-numeric port is a
-              // CONFIG error and must dead-letter like the missing-slash
-              // case below — a MatchError/NumberFormatException here would
-              // escape the Either channel and fail the whole task (r19
-              // advice)
-              ep.target.stripPrefix("amqp://").split("/", 2) match {
-                case Array(hostPort, exchange) =>
-                  hostPort.split(":", 2) match {
-                    case Array(h, p) if h.nonEmpty =>
-                      p.toIntOption.filter(n => n > 0 && n <= 65535) match {
-                        case Some(port) =>
-                          Amqp.publish(h, port, exchange,
-                            routingKey = s"${plan.database}.${plan.objectName}",
-                            body = body, correlationId = g,
-                            headers = ep.headers).map(_ => ())
-                        case None =>
-                          Left(ExportFailure(ep.key, s"bad amqp target '${ep.target}'"))
-                      }
-                    case _ =>
-                      Left(ExportFailure(ep.key, s"bad amqp target '${ep.target}'"))
-                  }
-                case _ =>
-                  Left(ExportFailure(ep.key, s"bad amqp target '${ep.target}'"))
-              }
+              // a bad target is a CONFIG error: it dead-letters like any
+              // sink failure instead of failing the whole task
+              Amqp.parseTarget(ep.target)
+                .toRight(ExportFailure(ep.key, s"bad amqp target '${ep.target}'"))
+                .flatMap { case (host, port, exchange) =>
+                  Amqp.publish(host, port, exchange,
+                    routingKey = s"${plan.database}.${plan.objectName}",
+                    body = body, correlationId = g,
+                    headers = ep.headers).map(_ => ())
+                }
             }
           case broker =>
             Sinks.prepareBrokerMessage(broker, payload, ep.headers).map(_ => ())
@@ -471,61 +459,70 @@ object ChangeRelay {
       fileFailures ++ endpointFailures
     }
 
-  /** T1/T6 — the Structured-Streaming wrapper: watch an outbox directory as
-    * a file stream and run the relay per micro-batch at the configured
-    * cadence. One StreamingQuery per (environment, object), named for
-    * uniqueness (never two pollers for the same tracked object — the
-    * reference's stress invariant). Callers MUST pass a distinct
-    * `checkpointDir` per (environment, object) to match: two queries
-    * sharing a checkpoint corrupt each other's offset log. */
+  /** The relay contract's change columns (U1), in order, and the literal
+    * column naming each row's object in a poller's union. */
+  private val ChangeColumns = Seq("id", "xact_id", "operation", "value", "props", "changed")
+  private val ObjectTag = "_graft_object"
+
+  /** T1 — [[poll]] over one outbox directory per object, watched as a
+    * parquet file stream of `schema`. */
   def streamFromOutboxDir(
       spark: SparkSession,
       relay: ChangeRelay,
-      obj: TrackingObject,
-      outboxDir: String,
+      outboxDirOf: TrackingObject => String,
       schema: org.apache.spark.sql.types.StructType,
-      checkpointDir: String,
-      envName: String,
-      intervalSeconds: Int = graft.model.Defaults.PollingIntervalSeconds): StreamingQuery =
-    claimCheckpoint(checkpointDir) {
-      startQuery(spark.readStream.schema(schema).parquet(outboxDir),
-        relay, obj, checkpointDir, s"graft-relay-$envName-${obj.name}", intervalSeconds)
-    }
+      checkpointDir: String): StreamingQuery =
+    poll(relay, checkpointDir)(o => spark.readStream.schema(schema).parquet(outboxDirOf(o)))
 
-  /** S1 (DSv2 flavor) wired into the relay: the same per-micro-batch cycle,
-    * but the change feed is the `graft-change` MicroBatchStream — the
-    * ENGINE owns (version, horizon) offsets in the query checkpoint and
-    * decides what each batch contains, and the relay's own store watermark
-    * advances in lock-step (a batch carries only fresh gated rows, so the
-    * relay's P1 re-filter passes them all and its A2 advance lands on the
-    * same frontier — the two trackers cannot diverge). Recovery is Spark's
-    * WAL: a restart on the same checkpoint replays no committed version. */
+  /** S1 — [[poll]] over one `graft-change` DSv2 source per object. The
+    * engine owns each source's (version, horizon) offsets in the checkpoint,
+    * and a batch carries only fresh gated rows, so the store watermark lands
+    * on the same frontier. `adapt` bridges an object's wire table to the
+    * relay contract (a JDBC table stores $changed as a delimited VARCHAR). */
   def streamFromChangeSource(
       spark: SparkSession,
       relay: ChangeRelay,
-      obj: TrackingObject,
-      sourceOptions: Map[String, String],
+      sourceOptionsOf: TrackingObject => Map[String, String],
       checkpointDir: String,
-      envName: String,
-      intervalSeconds: Int = graft.model.Defaults.PollingIntervalSeconds,
-      adapt: DataFrame => DataFrame = identity): StreamingQuery =
-    claimCheckpoint(checkpointDir) {
-      // `adapt` bridges the wire table's shape to the relay contract —
-      // a JDBC change table stores the $changed mask as a delimited
-      // VARCHAR (Envelope.encode needs array<string>) and may name the
-      // version/xact columns differently; the adapter is part of the
-      // object's deployment config, applied per micro-batch.
-      startQuery(
-        adapt(spark.readStream.format("graft-change").options(sourceOptions).load()),
-        relay, obj, checkpointDir, s"graft-relay-$envName-${obj.name}", intervalSeconds)
-    }
+      adapt: TrackingObject => DataFrame => DataFrame = _ => identity): StreamingQuery =
+    poll(relay, checkpointDir)(o =>
+      adapt(o)(spark.readStream.format("graft-change").options(sourceOptionsOf(o)).load()))
 
-  /** One live query per checkpoint in this JVM: two queries sharing one
-    * offset log corrupt each other. */
-  private def claimCheckpoint(checkpointDir: String)(start: => StreamingQuery): StreamingQuery =
+  /** T1/T6 — ONE StreamingQuery per environment (the reference loops over
+    * `environment.TrackingObjects` each interval): every object's `source`,
+    * tagged with its name, in one union, so all offsets share one checkpoint.
+    * Named `graft-relay-<environment>`, it fires every
+    * `pollingIntervalSeconds`, and each trigger is one [[runCycles]] over
+    * the objects' splits: one `watermarks` commit, and an unseeded object is
+    * seeded, rows or not. `foreachBatch` hands over one planned RDD, which a
+    * tag filter cannot prune, so the batch is cached for the trigger rather
+    * than re-read per object and action.
+    *
+    * A failing object stops the query once the others' advances commit; a
+    * restart on the checkpoint replays the batch, re-exporting nothing
+    * committed (T2). A source that cannot be read fails every split. Never
+    * two pollers per environment: a live checkpoint is claimed JVM-wide and
+    * a live name is refused by the session. */
+  private def poll(relay: ChangeRelay, checkpointDir: String)(
+      source: TrackingObject => DataFrame): StreamingQuery = {
+    val config = relay.config
+    require(config.trackingObjects.nonEmpty, s"environment '${config.name}' tracks no object")
+    val changes = config.trackingObjects.map(o =>
+      source(o).select(ChangeColumns.map(c => col(c).as(c)) :+ lit(o.name).as(ObjectTag): _*))
+      .reduce(_ unionByName _)
     MicroBatch.claimAndStart(checkpointDir,
-      s"checkpointLocation '$checkpointDir' is already used by an active query — " +
-        "each (environment, object) stream needs its own checkpoint dir")(start)
+      s"checkpointLocation '$checkpointDir' is already used by an active query")(
+      MicroBatch.start(changes, s"graft-relay-${config.name}", checkpointDir,
+        Trigger.ProcessingTime(s"${config.pollingIntervalSeconds} seconds")) { (batch, _) =>
+        batch.persist()
+        try relay.runCycles(config.trackingObjects.map(o =>
+            o -> batch.filter(col(ObjectTag) === o.name).drop(ObjectTag)),
+          java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmss")
+            .format(java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)))
+        finally batch.unpersist()
+        ()
+      })
+  }
 
   /** T5 streaming flavor — the dead-letter replay loop as a Structured
     * Streaming query: a rate source is the timer (the Spark-idiomatic
@@ -552,29 +549,4 @@ object ChangeRelay {
         ()
       }
       .start()
-
-  private def startQuery(
-      reader: DataFrame,
-      relay: ChangeRelay,
-      obj: TrackingObject,
-      checkpointDir: String,
-      queryName: String,
-      intervalSeconds: Int): StreamingQuery = {
-    reader
-      .writeStream
-      // Named per (environment, object): the uniqueness invariant is one
-      // poller per tracked object — env-only naming would make an
-      // environment's SECOND object fail to start ("query with that name
-      // is already active").
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(s"$intervalSeconds seconds"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        relay.runCycle(obj, batch,
-          java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmss")
-            .format(java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)))
-        ()
-      }
-      .start()
-  }
 }

@@ -169,7 +169,7 @@ class ChangeV2SourceSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("cv2relay")
     val store = new ParquetStateStore(spark, root.resolve("state").toString)
     val obj = TrackingObject("orders", "db0", "t", "sp")
-    val cfg = EnvironmentConfig("prod", "postgres", Seq(obj), Nil)
+    val cfg = EnvironmentConfig("prod", "postgres", Seq(obj), Nil, pollingIntervalSeconds = 1)
     val tpl = root.resolve("exports").toString + "/{object}-{timestamp}-{batch}.json"
     val relay = new ChangeRelay(spark, store, cfg, Some(tpl))
     store.setWatermark("prod", "orders", 0L)
@@ -187,8 +187,7 @@ class ChangeV2SourceSpec extends SparkSpec {
     val adapt = (df: org.apache.spark.sql.DataFrame) =>
       df.withColumn("changed",
         when(col("changed").isNotNull, split(col("changed"), ",")))
-    val q1 = ChangeRelay.streamFromChangeSource(spark, relay, obj, opts, ckpt,
-      "prod", intervalSeconds = 1, adapt = adapt)
+    val q1 = ChangeRelay.streamFromChangeSource(spark, relay, _ => opts, ckpt, adapt = _ => adapt)
     try {
       q1.processAllAvailable()
       assert(store.getWatermark("prod", "orders").contains(2L))
@@ -201,14 +200,60 @@ class ChangeV2SourceSpec extends SparkSpec {
     // recovery: a restart on the same checkpoint resumes from the
     // committed engine offset — only the new version exports, exactly once
     put((4L, 4L, "I", 4.0, "{}"))
-    val q2 = ChangeRelay.streamFromChangeSource(spark, relay, obj, opts, ckpt,
-      "prod", intervalSeconds = 1, adapt = adapt)
+    val q2 = ChangeRelay.streamFromChangeSource(spark, relay, _ => opts, ckpt, adapt = _ => adapt)
     try {
       q2.processAllAvailable()
       assert(store.getWatermark("prod", "orders").contains(4L))
       assert(exports() == 3, "committed versions must not re-export after restart")
     } finally q2.stop()
     try DriverManager.getConnection(s"jdbc:derby:memory:$name;drop=true")
+    catch { case _: java.sql.SQLException => () }
+  }
+
+  test("one poller over two graft-change sources: one commit per trigger, one checkpoint, restart resumes each") {
+    import graft.model.{EnvironmentConfig, TrackingObject}
+    import graft.state.ParquetStateStore
+    import graft.streaming.ChangeRelay
+    import org.apache.spark.sql.functions.{col, split, when}
+    val url = "jdbc:derby:memory:cv2env"
+    val tables = Seq("orders", "items")
+    val cn = DriverManager.getConnection(url + ";create=true")
+    try tables.foreach(t => cn.createStatement().execute(s"CREATE TABLE ${t}_ct (id BIGINT NOT NULL, " +
+      "xact_id BIGINT NOT NULL, operation VARCHAR(1), value DOUBLE, props VARCHAR(200), changed VARCHAR(50))"))
+    finally cn.close()
+    def put(table: String, id: Long): Unit = {
+      val c = DriverManager.getConnection(url)
+      try c.createStatement().executeUpdate(s"INSERT INTO ${table}_ct VALUES ($id, $id, 'I', 1.0, '{}', NULL)")
+      finally c.close()
+    }
+    val root = java.nio.file.Files.createTempDirectory("cv2env")
+    val store = new ParquetStateStore(spark, root.resolve("state").toString)
+    val objs = tables.map(TrackingObject(_, "db0", "t", "sp"))
+    val relay = new ChangeRelay(spark, store,
+      EnvironmentConfig("prod", "postgres", objs, Nil, pollingIntervalSeconds = 1),
+      Some(root.resolve("exports").toString + "/{object}/{timestamp}-{batch}.json"))
+    store.setWatermarks(tables.map(("prod", _, 0L)))
+    def exports(t: String): Long = {
+      val dir = root.resolve("exports").resolve(t)
+      if (!java.nio.file.Files.exists(dir)) 0L else java.nio.file.Files.list(dir).count()
+    }
+    def start() = ChangeRelay.streamFromChangeSource(spark, relay,
+      o => Map("url" -> url, "table" -> s"${o.name}_ct", "startMode" -> "earliest"),
+      root.resolve("ckpt").toString,
+      adapt = _ => _.withColumn("changed", when(col("changed").isNotNull, split(col("changed"), ","))))
+    put("orders", 1L); put("items", 7L)
+    val before = store.commitCount
+    val q1 = start()
+    try q1.processAllAvailable() finally q1.stop()
+    assert(store.commitCount == before + 1, "both sources' rows in one trigger, one commit")
+    assert(store.watermarksOf("prod") == Map("orders" -> 1L, "items" -> 7L))
+    assert(tables.map(exports) == Seq(1L, 1L))
+    put("items", 8L)
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(store.watermarksOf("prod") == Map("orders" -> 1L, "items" -> 8L))
+    assert(tables.map(exports) == Seq(1L, 2L), "each source resumes from its own committed offset")
+    try DriverManager.getConnection(url + ";drop=true")
     catch { case _: java.sql.SQLException => () }
   }
 

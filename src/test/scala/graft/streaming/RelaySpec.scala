@@ -354,6 +354,26 @@ class RelaySpec extends SparkSpec {
     assert(err.contains("missing required fields"))
   }
 
+  test("a bad amqp target dead-letters; the task and the other endpoints still succeed") {
+    for (target <- Seq("amqp://127.0.0.1:5672", "amqp://127.0.0.1/ex", "amqp://127.0.0.1:port/ex",
+        "amqp://127.0.0.1:0/ex", "amqp://127.0.0.1:65536/ex")) {
+      val dir = tmp()
+      val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+      val mq = SinkEndpoint("mq1", "rabbitmq", target, headers = Map("HostName" -> "127.0.0.1"))
+      val http = SinkEndpoint("ep1", "http", "http://x/{object}")
+      val relay = new ChangeRelay(spark, store, cfg(Seq(mq, http)),
+        Some(dir.resolve("exports").toString + "/{object}-{batch}.json"),
+        horizonOf = _ => 1000L, performAmqp = true)
+      store.setWatermark("prod", "orders", 0L)
+      val (n, v) = relay.runCycle(obj,
+        outboxDf(Seq((1L, 1L, "I", 1.0, """{"k":1}"""))), "20240115000000")
+      assert(n == 1 && v == 1L && store.getWatermark("prod", "orders").contains(1L), target)
+      assert(Files.list(dir.resolve("exports")).count() == 1, s"$target: the file sink delivered")
+      val errors = store.deadLetters.select("error_message").as[String].collect().toSeq
+      assert(errors == Seq(s"bad amqp target '$target'"), s"$target: only the amqp endpoint failed")
+    }
+  }
+
   test("replay failure widens backoff and bumps attempts") {
     val dir = tmp()
     val store = new ParquetStateStore(spark, dir.resolve("state").toString)

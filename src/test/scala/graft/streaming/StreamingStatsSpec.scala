@@ -128,4 +128,28 @@ class StreamingStatsSpec extends SparkSpec {
       assert(refused.getMessage.startsWith("held (query 'graft-claim-spec'"))
     } finally q.stop()
   }
+
+  test("a query on a fresh checkpoint after the last one stopped is a new writer: its batches land") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sstats4")
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    implicit val sqlCtx = spark.sqlContext
+    val first = MemoryStream[(String, String)]
+    val second = MemoryStream[(String, String)]
+    val q1 = StreamingStats.start(spark, first.toDF().toDF("source", "text"),
+      store, dir.resolve("ckpt1").toString, k = K)
+    try {
+      first.addData(("a", "one text"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    // Its batch ids start at 0 again, at or below the first query's.
+    val q2 = StreamingStats.start(spark, second.toDF().toDF("source", "text"),
+      store, dir.resolve("ckpt2").toString, k = K)
+    try {
+      second.addData(("b", "two text"))
+      q2.processAllAvailable()
+    } finally q2.stop()
+    val docs = StreamingStats.readState(store).select("source", "docs").as[(String, Long)]
+      .collect().toMap
+    assert(docs == Map("a" -> 1L, "b" -> 1L))
+  }
 }
