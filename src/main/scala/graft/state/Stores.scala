@@ -125,30 +125,45 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString)
 
   /** Each writer's last micro-batch id landed on `name`: the current
-    * version's `_BATCH` marker, a `<batch id> <writer>` line per writer. */
-  private def committedBatches(name: String): Map[String, Long] =
+    * version's `_BATCH` marker, a `<batch id> <writer>` line per writer. A
+    * bare `<batch id>` is a marker from before progress was kept per
+    * writer, when a table's one writer had to restart on its own
+    * checkpoint; it is read as `writer`'s, so the next commit adopts it. */
+  private def committedBatches(name: String, writer: String): Map[String, Long] =
     currentDir(name).map(_.resolve(BatchMarker)).filter(Files.exists(_))
       .fold(Map.empty[String, Long])(f => Files.readAllLines(f).asScala.map { line =>
-        val Array(batch, writer) = line.split(" ", 2)
-        writer -> batch.toLong
+        line.split(" ", 2) match {
+          case Array(batch, w) => w -> batch.toLong
+          case Array(batch) => writer -> batch.toLong
+        }
       }.toMap)
 
   /** Exactly-once state under at-least-once `foreachBatch` delivery, the
     * one protocol every streaming operator commits through. The writer is
     * the id of the streaming query calling this (Spark's
     * `sql.streaming.queryId` local property), which a restart on the same
-    * checkpoint keeps. Under the table's writer lock: a `batchId` at or
-    * below the writer's last landed one (outside any query: any writer's)
-    * has landed already, so nothing runs and the result is false.
+    * checkpoint keeps; outside any query the writer is `""`. Under the
+    * table's writer lock: a `batchId` at or below the writer's last landed
+    * one has landed already, so nothing runs and the result is false. A
+    * call outside any query cannot tell which query's batch it repeats, so
+    * for it the last landed id is the highest of any writer's: a driver
+    * re-applying a query's committed batch must be skipped too.
     * Otherwise `step` reads the state, writes the batch's own output with
     * `overwrite` and returns the next state, which goes into one version
     * directory with the writer's new progress, visible in one pointer
     * flip. A crash before the flip replays the batch against unchanged
     * state, and the replay rewrites the same output; progress does not
-    * depend on the state having rows. */
+    * depend on the state having rows.
+    *
+    * The marker keeps a line (a batch id and a query id, some 50 bytes)
+    * for every query that ever committed to the table, and each commit
+    * reads and rewrites all of them, so a table restarted on a fresh
+    * checkpoint N times carries N lines. None is dropped: a stopped query
+    * may resume on its own checkpoint and replay its last batch, which its
+    * line must still skip. */
   def commitBatch(name: String, batchId: Long)(step: => DataFrame): Boolean = locked(name) {
     val writer = Option(spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)).getOrElse("")
-    val progress = committedBatches(name)
+    val progress = committedBatches(name, writer)
     val landed = if (writer.isEmpty) progress.values.maxOption else progress.get(writer)
     batchId > landed.getOrElse(-1L) && {
       val next = step

@@ -496,13 +496,23 @@ object ChangeRelay {
     * the objects' splits: one `watermarks` commit, and an unseeded object is
     * seeded, rows or not. `foreachBatch` hands over one planned RDD, which a
     * tag filter cannot prune, so the batch is cached for the trigger rather
-    * than re-read per object and action.
+    * than re-read per object and action (a record-count probe's reason; no
+    * benchmark runs this poller, so its time cost is unmeasured).
     *
     * A failing object stops the query once the others' advances commit; a
     * restart on the checkpoint replays the batch, re-exporting nothing
     * committed (T2). A source that cannot be read fails every split. Never
     * two pollers per environment: a live checkpoint is claimed JVM-wide and
-    * a live name is refused by the session. */
+    * a live name is refused by the session.
+    *
+    * A checkpoint written by a one-object query cannot be resumed: its
+    * offset log holds one source, this query's holds one per object. A
+    * fresh checkpoint re-reads each outbox directory whole (the stored
+    * watermarks keep what was exported from exporting again), and a
+    * `graft-change` source starts at its `startMode`: at the default
+    * `seed`, the current frontier, so rows committed since the old query
+    * stopped are never relayed unless `startMode=version` with
+    * `startVersion` at the object's stored watermark is passed. */
   private def poll(relay: ChangeRelay, checkpointDir: String)(
       source: TrackingObject => DataFrame): StreamingQuery = {
     val config = relay.config

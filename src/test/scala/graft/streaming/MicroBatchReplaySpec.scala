@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.state.ParquetStateStore
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
@@ -102,5 +103,25 @@ class MicroBatchReplaySpec extends SparkSpec {
     assert(StreamingFrontier.applyBatch(store, empty, 0L, out) == 0L)
     assert(store.commitCount == 1L && StreamingFrontier.domainState(store).isEmpty)
     assert(assertInertReplay(store, dir)(StreamingFrontier.applyBatch(store, empty, 0L, out)) == 0L)
+  }
+
+  test("a marker from before per-writer progress (a bare batch id) is adopted by the next writer") {
+    val (dir, store, _) = fixture("graft-replay-legacy")
+    val b5 = Seq(("s1", "alpha beta")).toDF("source", "text")
+    val b6 = Seq(("s2", "gamma")).toDF("source", "text")
+    assert(StreamingStats.mergeBatch(store, b5, 5L) == 1L)
+    val table = dir.resolve("state").resolve("corpus_stats")
+    def marker = table.resolve(Files.readString(table.resolve("_CURRENT")).trim).resolve("_BATCH")
+    Files.writeString(marker, "5")
+    // the resumed query replays batch 5, then runs batch 6
+    val sc = spark.sparkContext
+    sc.setLocalProperty(StreamExecution.QUERY_ID_KEY, "resumed-query")
+    try {
+      assert(assertInertReplay(store, dir)(StreamingStats.mergeBatch(store, b5, 5L)) == 1L)
+      val commits = store.commitCount
+      assert(StreamingStats.mergeBatch(store, b6, 6L) == 2L)
+      assert(store.commitCount == commits + 1)
+    } finally sc.setLocalProperty(StreamExecution.QUERY_ID_KEY, null)
+    assert(Files.readAllLines(marker).asScala == Seq("6 resumed-query"))
   }
 }
