@@ -105,8 +105,8 @@ final case class TrackingObject(
   * matters for dataflow; auth/transport config is carried opaquely). */
 final case class SinkEndpoint(
     key: String,
-    kind: String,                       // file | http | kafka | rabbitmq | ...
-    target: String,                     // templated path / url / topic
+    kind: String,                       // file | http | kafka | rabbitmq | ...; each gets every envelope
+    target: String,                     // templated path (scheme picks the storage) / url / topic
     enableCompression: Boolean = false,
     headers: Map[String, String] = Map.empty
 )
@@ -140,5 +140,4 @@ object Defaults {
   val DlqBackoffCapSeconds = 6 * 3600  // cap 6h, DeadLetterReplayService.cs:137-141
   val DlqRetentionDays = 60
   val CompressionThresholdBytes = 1024 // MessageQueueService.cs:36
-  val ExportDirCapBytes: Long = 500L * 1024 * 1024 // FilePathSizeLimit * 1 MiB, ExportService.cs:48
 }

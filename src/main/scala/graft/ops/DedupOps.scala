@@ -480,10 +480,8 @@ object DedupOps {
     * one row per node APPEARING IN `pairs` — singletons are their own
     * cluster by definition and can be unioned back with label = id. */
   /** Edge count under which connected components runs as a driver
-    * union-find over one bounded collect (see [[ccDriverLabels]]).
-    * Override via SPARK_GRAFT_CC_SMALL_CAP; 0 disables the fast path. */
-  val ccSmallEdgeCap: Int =
-    sys.env.get("SPARK_GRAFT_CC_SMALL_CAP").map(_.toInt).getOrElse(65536)
+    * union-find over one bounded collect (see [[ccDriverLabels]]). */
+  val ccSmallEdgeCap: Int = 65536
 
   /** Small-graph fast path shared by both CC algorithms: `take(cap+1)`
     * short-circuits after cap+1 edge rows (incremental collect-limit — at

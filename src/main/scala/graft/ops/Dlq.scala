@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.model.Defaults
 
 /** Dead-letter-queue dataflow: hash dedup, due filter, exponential backoff,
   * retry-state transition, monitor statistics, search and pagination.
@@ -48,13 +49,13 @@ object Dlq {
 
   /** O1 — the replay batch: oldest first, capped (reference batch size 25).
     * Ref: DeadLetterService.cs:208-219; DeadLetterReplayService.cs:23. */
-  def replayBatch(due: DataFrame, batchSize: Int = 25): DataFrame =
+  def replayBatch(due: DataFrame, batchSize: Int = Defaults.DlqReplayBatchSize): DataFrame =
     due.orderBy(col("timestamp"), col("id")).limit(batchSize)
 
   /** F3 — exponential backoff in seconds: `base * 2^attempts`, capped 6 h.
     * Ref: DeadLetterReplayService.cs:137-141. */
-  def backoffSeconds(attempts: Column, baseSeconds: Int = 60,
-                     capSeconds: Int = 6 * 3600): Column =
+  def backoffSeconds(attempts: Column, baseSeconds: Int = Defaults.DlqBackoffBaseSeconds,
+                     capSeconds: Int = Defaults.DlqBackoffCapSeconds): Column =
     least(lit(capSeconds.toLong), (lit(baseSeconds.toLong) * pow(lit(2.0), attempts)).cast("long"))
 
   /** T5 — the failed-replay state transition: attempts+1, next attempt after
@@ -63,7 +64,8 @@ object Dlq {
     * `record.Attempts` as the row had it going in — "the first failure waits
     * one base delay", DeadLetterReplayService.cs:134-141).
     * Ref: DeadLetterReplayService.cs:75-141, park at :109-115. */
-  def retryState(dlq: DataFrame, now: Column, baseSeconds: Int = 60): DataFrame =
+  def retryState(dlq: DataFrame, now: Column,
+                 baseSeconds: Int = Defaults.DlqBackoffBaseSeconds): DataFrame =
     dlq
       .withColumn("backoff_seconds",
         when(col("environment_name").isNull, lit(365L * 24 * 3600))
@@ -136,7 +138,8 @@ object Dlq {
 
   /** Retention purge — drop rows older than the cutoff.
     * Ref: DeadLetterService.cs:146-161. */
-  def purgeExpired(dlq: DataFrame, now: Column, retentionDays: Int = 60): DataFrame =
+  def purgeExpired(dlq: DataFrame, now: Column,
+                   retentionDays: Int = Defaults.DlqRetentionDays): DataFrame =
     dlq.filter(col("timestamp") >= now - expr(s"INTERVAL $retentionDays DAY"))
 
   /** F13 — threshold pre-warn at 75%: the monitor's alarm math.

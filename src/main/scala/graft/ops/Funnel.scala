@@ -53,12 +53,8 @@ object Funnel {
   /** Funnel-relevant events the greedy-fold path may process before the
     * dispatcher switches to the chained-join path. Measured crossover
     * (ScaleSmoke, both orders): fold wins 2-2.5× at 1M events, join chain
-    * wins 1.2-1.6× at 10M — the default sits between them. Override via
-    * SPARK_GRAFT_FUNNEL_FOLD_CAP; 0 forces the join chain,
-    * Long.MaxValue forces the fold (specs pin both). */
-  val foldEventsCap: Long =
-    sys.env.get("SPARK_GRAFT_FUNNEL_FOLD_CAP").map(_.toLong)
-      .getOrElse(3000000L)
+    * wins 1.2-1.6× at 10M — the default sits between them. */
+  val foldEventsCap: Long = 3000000L
 
   /** Stats pre-filter for the fold probe: a relevant slice whose optimizer
     * size estimate exceeds this never probes — at 100 TB the chained-path

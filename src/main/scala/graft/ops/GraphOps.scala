@@ -193,10 +193,8 @@ object GraphOps {
 
   /** Distinct-edge count under which [[pageRank]] iterates on the driver
     * (one bounded collect of the edge AGGREGATE, never the edge table);
-    * above it the distributed power iteration runs. Override via
-    * SPARK_GRAFT_PR_SMALL_CAP; 0 disables the driver path. */
-  val prSmallEdgeCap: Int =
-    sys.env.get("SPARK_GRAFT_PR_SMALL_CAP").map(_.toInt).getOrElse(65536)
+    * above it the distributed power iteration runs. */
+  val prSmallEdgeCap: Int = 65536
 
   /** PageRank over an arbitrary (src, dst) edge table — e.g. the
     * registrable-domain link graph, the crawl-curation authority signal

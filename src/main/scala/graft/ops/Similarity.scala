@@ -60,7 +60,6 @@ object Similarity {
   // ---------------------------------------------------------------------
 
   /** Rows a corpus may have and still take the fused broadcast path.
-    * Override via SPARK_GRAFT_ANN_SMALL_CAP; 0 disables the fast path.
     *
     * 32768 (r17, was 8192): the cap bounds DRIVER state — 32k rows ×
     * 64 dims × 8 B = 16 MB collected, and every fused path's driver
@@ -71,8 +70,7 @@ object Similarity {
     * fused (same-window A/B, both orders; recall_at_k ~0.3 s better,
     * everything else a wash). The distributed twins remain spec-pinned
     * bit-identical and ScaleSmoke forces them via smallCap = 0. */
-  val smallCorpusCap: Long =
-    sys.env.get("SPARK_GRAFT_ANN_SMALL_CAP").map(_.toLong).getOrElse(32768L)
+  val smallCorpusCap: Long = 32768L
 
   /** Minimum centroid count for the two-level coarse quantizer to engage
     * (below it the √C super-level saves nothing over the flat argmax).
@@ -878,12 +876,9 @@ object Similarity {
   /** Default cell-size cap for [[semanticDedup]]'s skew guard: with the
     * √N cell rule a balanced cell is ~√N wide, so 4096 only ever engages
     * on genuinely degenerate clusters (it bounds the per-cell pair work
-    * at |cell|·4096). Override via SPARK_GRAFT_SEMDEDUP_MAX_CELL;
-    * Long.MaxValue disables the guard (spec-pinned identical on balanced
-    * data). */
-  val semDedupMaxCell: Long =
-    sys.env.get("SPARK_GRAFT_SEMDEDUP_MAX_CELL").map(_.toLong)
-      .getOrElse(4096L)
+    * at |cell|·4096). A `maxCellSize` of Long.MaxValue disables the guard
+    * (spec-pinned identical on balanced data). */
+  val semDedupMaxCell: Long = 4096L
 
   private val semDedupObsId = new java.util.concurrent.atomic.AtomicLong(0L)
 

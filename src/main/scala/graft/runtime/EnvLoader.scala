@@ -88,18 +88,17 @@ object EnvLoader {
     def long(n: com.fasterxml.jackson.databind.JsonNode, f: String, dflt: Long): Long =
       if (n != null && n.has(f) && n.get(f).isNumber) n.get(f).asLong() else dflt
 
-    val cfg = EnvironmentConfig(
-      name = name,
-      provider = provider,
-      trackingObjects = objs,
-      endpoints = eps,
-      pollingIntervalSeconds = int(ct, "PollingIntervalSeconds", 30),
-      retryCount = int(ct, "RetryCount", 3),
-      retryDelaySeconds = int(ct, "RetryDelaySeconds", 5),
-      maxRecordsPerBatch = int(ct, "MaxRecordsPerBatch", 1000),
-      maxPayloadSizeBytes = long(ct, "MaxPayloadSizeBytes", 5L * 1024 * 1024),
-      deadLetterMaxReplayAttempts = int(ct, "DeadLetterMaxReplayAttempts", 5),
-      deadLetterReplayBackoffSeconds = int(ct, "DeadLetterReplayBackoffSeconds", 60))
+    // an absent optional field keeps EnvironmentConfig's own default
+    val d = EnvironmentConfig(name, provider, objs, eps)
+    val cfg = d.copy(
+      pollingIntervalSeconds = int(ct, "PollingIntervalSeconds", d.pollingIntervalSeconds),
+      retryCount = int(ct, "RetryCount", d.retryCount),
+      retryDelaySeconds = int(ct, "RetryDelaySeconds", d.retryDelaySeconds),
+      maxRecordsPerBatch = int(ct, "MaxRecordsPerBatch", d.maxRecordsPerBatch),
+      maxPayloadSizeBytes = long(ct, "MaxPayloadSizeBytes", d.maxPayloadSizeBytes),
+      deadLetterMaxReplayAttempts = int(ct, "DeadLetterMaxReplayAttempts", d.deadLetterMaxReplayAttempts),
+      deadLetterReplayBackoffSeconds =
+        int(ct, "DeadLetterReplayBackoffSeconds", d.deadLetterReplayBackoffSeconds))
 
     Loaded(cfg, conns, sha256Hex(json))
   }

@@ -39,10 +39,8 @@ object ExecPolicy {
 
   /** 8 MB: comfortably above the control fixtures (events at sf0.1 is
     * 2.2 MB) and below the smallest data-path fact table the bench codegens
-    * (lineitem at sf0.1 is 10.8 MB). Override for A/Bs via
-    * SPARK_GRAFT_SMALL_INPUT_BYTES; 0 disables the policy. */
-  val smallInputBytes: Long =
-    sys.env.get("SPARK_GRAFT_SMALL_INPUT_BYTES").map(_.toLong).getOrElse(8L << 20)
+    * (lineitem at sf0.1 is 10.8 MB). */
+  val smallInputBytes: Long = 8L << 20
 
   private val smallConfs = Seq(
     "spark.sql.adaptive.enabled" -> "false",
@@ -62,7 +60,7 @@ object ExecPolicy {
     * at tens-to-hundreds of nodes. */
   private val maxExprNodes = 1500L
 
-  def isSmall(df: DataFrame): Boolean = smallInputBytes > 0 && {
+  def isSmall(df: DataFrame): Boolean = {
     // The outer plan AND every plan nested in a subquery expression: a
     // Generate or a large scan inside a scalar/IN-subquery is invisible to
     // exists/collectLeaves on the outer tree, and qualifying such a query
@@ -122,17 +120,16 @@ object ExecPolicy {
     * its cost on the graph/iterative family, and checkpoint boundaries
     * hide the true plan size (round-10 s4 rule e needs AQE to skew-split
     * hot keys below a checkpointed weight table). */
-  def isSmallInputNonIterative(df: DataFrame): Boolean =
-    smallInputBytes > 0 && {
-      val plans = { val p = df.queryExecution.optimizedPlan; p +: p.subqueriesAll }
-      !plans.exists(_.exists {
-        case _: LogicalRDD => true
-        case _: MapPartitions | _: DeserializeToObject | _: CoGroup => true
-        case _ => false
-      }) &&
-        plans.flatMap(_.collectLeaves()).distinctBy(_.canonicalized)
-          .map(_.stats.sizeInBytes).sum < smallInputBytes
-    }
+  def isSmallInputNonIterative(df: DataFrame): Boolean = {
+    val plans = { val p = df.queryExecution.optimizedPlan; p +: p.subqueriesAll }
+    !plans.exists(_.exists {
+      case _: LogicalRDD => true
+      case _: MapPartitions | _: DeserializeToObject | _: CoGroup => true
+      case _ => false
+    }) &&
+      plans.flatMap(_.collectLeaves()).distinctBy(_.canonicalized)
+        .map(_.stats.sizeInBytes).sum < smallInputBytes
+  }
 
   /** Run `action` on `df` under the small-query confs when it qualifies,
     * under the tier-1 confs when only its input is small, and unchanged

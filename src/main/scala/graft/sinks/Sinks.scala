@@ -3,11 +3,14 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.Scalars
+import graft.model.Defaults
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
 /** Sink layer: file export, HTTP/broker guards, Kafka shaping, circuit
-  * breaker, export failures.
+  * breaker, export failures. A file endpoint's template is a path whose
+  * scheme selects the storage: plain or `file:` paths are local, any
+  * other scheme goes through the Hadoop FileSystem ([[Sinks.writeFile]]).
   *
   * Zero-egress environment: network sinks implement the reference's full
   * guard/validation/batching surface (the part its own tests cover —
@@ -47,42 +50,38 @@ object Sinks {
     * write is bounded by construction (the same reason the reference can
     * hold the batch in memory — ExportService.cs:156-197).
     *
-    * NOTE: this variant writes through `java.nio` — LOCAL filesystem of
-    * whichever process runs it. The relay invokes sinks on EXECUTORS, so
-    * cluster deployments must point the template at storage every executor
-    * shares, or use [[writeFileHadoop]], which resolves the template
-    * through the Hadoop FileSystem API (`hdfs://`, `s3a://`, `file://`). */
+    * The rendered path's SCHEME selects the storage. A plain or `file:`
+    * path is written through `java.nio` on the local disk of whichever
+    * process runs it (the relay writes on executors); any other scheme
+    * (`hdfs://`, `s3a://`, …) through the Hadoop FileSystem API, so a
+    * cluster points the template at storage every executor shares. Local
+    * writes skip Hadoop's local FileSystem: it adds a `.crc` sidecar per
+    * file, and even its raw variant wrote 200-KB envelopes over 10× slower
+    * than `java.nio` (ROADMAP direction 6). A scheme no FileSystem
+    * resolves fails into the `Left`, which dead-letters. An existing file
+    * is overwritten (the template's {guid}/{timestamp} placeholders make
+    * collisions a configuration choice, as in the reference). */
   def writeFile(envelopeJson: String, pathTemplate: String, m: ExportMeta): Either[ExportFailure, String] =
     try {
       val path = renderTemplate(pathTemplate, m, java.util.UUID.randomUUID().toString, urlEscape = false)
-      val p = Paths.get(path)
-      if (p.getParent != null) Files.createDirectories(p.getParent)
-      Files.write(p, prettyJson(envelopeJson).getBytes(StandardCharsets.UTF_8))
+      val bytes = prettyJson(envelopeJson).getBytes(StandardCharsets.UTF_8)
+      val hPath = new org.apache.hadoop.fs.Path(path)
+      val uri = hPath.toUri
+      if (uri.getScheme == null || uri.getScheme == "file") {
+        val p = Paths.get(uri.getPath)
+        if (p.getParent != null) Files.createDirectories(p.getParent)
+        Files.write(p, bytes)
+      } else {
+        val out = hPath.getFileSystem(hadoopConf).create(hPath, true)
+        try out.write(bytes) finally out.close()
+      }
       Right(path)
     } catch {
       case e: Exception => Left(ExportFailure("file", e.getMessage))
     }
 
-  /** [[writeFile]] through the Hadoop FileSystem API — the cluster-correct
-    * K1: the templated path's SCHEME selects the storage (`hdfs://`,
-    * `s3a://`, `file://`...), so executor-side writes land on shared
-    * storage instead of executor-local disk. Overwrite semantics match the
-    * local variant (the template's {guid}/{timestamp} placeholders make
-    * collisions a configuration choice, as in the reference). */
-  def writeFileHadoop(envelopeJson: String, pathTemplate: String, m: ExportMeta,
-                      hadoopConf: org.apache.hadoop.conf.Configuration =
-                        new org.apache.hadoop.conf.Configuration()): Either[ExportFailure, String] =
-    try {
-      val path = renderTemplate(pathTemplate, m, java.util.UUID.randomUUID().toString, urlEscape = false)
-      val hPath = new org.apache.hadoop.fs.Path(path)
-      val fs = hPath.getFileSystem(hadoopConf)
-      val out = fs.create(hPath, true)
-      try out.write(prettyJson(envelopeJson).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      Right(path)
-    } catch {
-      case e: Exception => Left(ExportFailure("file", e.getMessage))
-    }
+  /** The executor JVM's one Hadoop configuration for [[writeFile]]. */
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
   /** Minimal stable pretty-printer for the envelope JSON (reference writes
     * indented JSON; ExportService.cs:173). Deterministic, no library; one
@@ -133,18 +132,9 @@ object Sinks {
   /** K2 — HTTP sink guards: templated URL, batch headers, optional gzip,
     * 5 MiB post-compression cap (fail → DLQ, no retry: "a retry cannot make
     * the body smaller"). Transport injected; default refuses (no egress). */
-  def prepareHttp(
-      envelopeJson: String,
-      urlTemplate: String,
-      m: ExportMeta,
-      headers: Map[String, String] = Map.empty,
-      compress: Boolean = false,
-      maxPayloadBytes: Long = 5L * 1024 * 1024): Either[ExportFailure, HttpRequest] =
-    prepareHttp(new Payload(envelopeJson), urlTemplate, m, headers, compress, maxPayloadBytes)
-
   def prepareHttp(payload: Payload, urlTemplate: String, m: ExportMeta,
-      headers: Map[String, String], compress: Boolean,
-      maxPayloadBytes: Long): Either[ExportFailure, HttpRequest] = {
+      headers: Map[String, String] = Map.empty, compress: Boolean = false,
+      maxPayloadBytes: Long = Defaults.MaxPayloadSizeBytes): Either[ExportFailure, HttpRequest] = {
     val url = renderTemplate(urlTemplate, m, java.util.UUID.randomUUID().toString, urlEscape = true)
     val body = if (compress) payload.gzipped else payload.bytes
     if (body.length > maxPayloadBytes)
@@ -198,16 +188,8 @@ object Sinks {
     "eventhubs" -> 1L * 1024 * 1024,
     "kafka" -> 1L * 1024 * 1024)
 
-  val CompressionThreshold = 1024L
-
   /** K3–K6 guard level: required fields, compress-then-cap. Returns the
     * publishable body or the failure that dead-letters. */
-  def prepareBrokerMessage(
-      broker: String,
-      payload: String,
-      requiredFields: Map[String, String]): Either[ExportFailure, Array[Byte]] =
-    prepareBrokerMessage(broker, new Payload(payload), requiredFields)
-
   def prepareBrokerMessage(
       broker: String,
       payload: Payload,
@@ -225,7 +207,7 @@ object Sinks {
         // wire size (~4/3×), or the guard admits messages the broker
         // rejects; RabbitMQ / Event Hubs / Kafka publish raw bytes.
         val body = broker.toLowerCase match {
-          case "azureservicebus" | "awssqs" if raw.length > CompressionThreshold =>
+          case "azureservicebus" | "awssqs" if raw.length > Defaults.CompressionThresholdBytes =>
             java.util.Base64.getEncoder.encode(payload.gzipped)
           case _ => raw
         }

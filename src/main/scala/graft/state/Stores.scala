@@ -15,7 +15,7 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import graft.model.Schemas
+import graft.model.{Defaults, Schemas}
 import graft.ops.Dlq
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
@@ -326,21 +326,20 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     commitRows("dead_letters", rows("dead_letters").filterNot(r => ids(r.getLong(0))) ++ fresh)
   }
 
-  /** P8 + O1 — the replay batch: due letters ([[Dlq.dueFilter]]), oldest
-    * first by (timestamp, id), at most `batchSize` — the order and cap of
-    * [[Dlq.replayBatch]], taken on the driver. */
-  def dueDeadLetters(maxAttempts: Int, batchSize: Int = 25): DataFrame = {
-    val due = Dlq.dueFilter(deadLetters, maxAttempts, current_timestamp()).collect()
+  /** P8 + O1 — the replay batch: letters due at `now` ([[Dlq.dueFilter]]),
+    * oldest first by (timestamp, id), at most `batchSize` — the order and
+    * cap of [[Dlq.replayBatch]], taken on the driver. */
+  def dueDeadLetters(maxAttempts: Int, now: java.sql.Timestamp,
+      batchSize: Int = Defaults.DlqReplayBatchSize): Seq[Row] =
+    Dlq.dueFilter(deadLetters, maxAttempts, lit(now)).collect().toSeq
       .sortBy(r => (DateTimeUtils.fromJavaTimestamp(r.getTimestamp(8)), r.getLong(0)))
       .take(batchSize)
-    spark.createDataFrame(due.toSeq.asJava, Schemas.deadLetterSchema)
-  }
 
   /** Purge dead letters older than the retention window (reference
     * DeadLetterService.cs:148-159). Returns the purged count; the snapshot
     * is only rewritten when something was actually purged. */
   def purgeExpiredDeadLetters(now: java.sql.Timestamp,
-      retentionDays: Int = graft.model.Defaults.DlqRetentionDays): Long =
+      retentionDays: Int = Defaults.DlqRetentionDays): Long =
     locked("dead_letters") {
       val before = rows("dead_letters")
       val kept = Dlq.purgeExpired(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.LongAccumulator
 import scala.util.{Failure, Success, Try}
-import graft.model.{EnvironmentConfig, TrackingObject}
+import graft.model.{EnvironmentConfig, SinkEndpoint, TrackingObject}
 import graft.ops.{Dlq, Envelope, Incremental, Windows}
 import graft.sinks.{Amqp, ExportFailure, ExportMeta, Sinks}
 import graft.state.ParquetStateStore
@@ -44,7 +44,10 @@ import graft.state.ParquetStateStore
   * delta that fits one envelope is batch 0 either way. The export
   * runs the sink fan-out on the executors and returns just the failed
   * envelopes as (error, data) rows, which the driver hashes and
-  * dead-letters; successful envelopes never reach the driver. Control
+  * dead-letters; successful envelopes never reach the driver. Every
+  * envelope goes to every endpoint of the environment through one match
+  * on its kind: `file` ([[graft.sinks.Sinks.writeFile]], whose template's
+  * scheme selects the storage), `http` and the brokers. Control
   * state (watermarks, pauses, dead letters) lives on the driver
   * ([[ParquetStateStore]]), so reading and committing it submits no Spark
   * job.
@@ -69,6 +72,8 @@ final class ChangeRelay(
     spark: SparkSession,
     store: ParquetStateStore,
     private val config: EnvironmentConfig,
+    // shorthand for one `file` endpoint (key "file") listed before
+    // config.endpoints
     fileSinkTemplate: Option[String] = None,
     horizonOf: DataFrame => Long = _ => Long.MaxValue,
     // opt-in REAL HTTP delivery for "http" endpoints (Sinks.httpPost);
@@ -79,6 +84,9 @@ final class ChangeRelay(
     performAmqp: Boolean = false) {
 
   import spark.implicits._
+
+  private val endpoints =
+    fileSinkTemplate.map(SinkEndpoint("file", "file", _)).toSeq ++ config.endpoints
 
   /** Observability: envelopes of the last [[runCycles]] call (summed over
     * its objects) that were fanned out INSIDE a Spark task (TaskContext
@@ -203,7 +211,6 @@ final class ChangeRelay(
     val newVersion = (fromVersion +: parts.map(_.maxId)).max
 
     val rows = batch.select(
-      lit(obj.name).as("g"),
       col("operation"),
       col("id").as("version"),
       col("changed"),
@@ -228,8 +235,7 @@ final class ChangeRelay(
               (Windows.numberBatchesRange(rows, "version", cap, batchRows),
                 ((batchRows + cap - 1) / cap).toInt)
           }
-        val envelopes = Envelope.encode(
-          numbered.withColumn("g", concat(col("g"), lit("#"), col("batch"))), "g")
+        val envelopes = Envelope.encode(numbered, "batch")
         // EXECUTOR-side fan-out: envelopes never collect to the driver. Each
         // partition invokes the sink guards per envelope row and returns only
         // (error, payload) failures — a full initial sync (S7) of a large
@@ -237,11 +243,10 @@ final class ChangeRelay(
         // JSON string in driver memory. The closure captures an ExportPlan
         // of plain values, never `this` (the relay holds the session/store).
         val plan = ChangeRelay.ExportPlan(config.name, obj.name, obj.database,
-          nowUtc, totalBatches, fileSinkTemplate, config.endpoints,
-          config.maxPayloadSizeBytes, performHttp, performAmqp)
+          nowUtc, totalBatches, endpoints, config.maxPayloadSizeBytes, performHttp, performAmqp)
         // The export action itself returns the failures: one job runs the
         // fan-out, and only failed envelopes reach the driver.
-        val failures = envelopes.select("g", "envelope_json").as[(String, String)]
+        val failures = envelopes.select("batch", "envelope_json").as[(Int, String)]
           .mapPartitions(it => ChangeRelay.exportPartition(plan, it, exportedOnExecutors))
           .collect()
         // K9 — every failure dead-letters with D1 dedup. Each dead letter
@@ -264,23 +269,18 @@ final class ChangeRelay(
 
   /** §3.2 — dead-letter replay cycle: retention purge, then due batch,
     * attempt, delete on success / widen backoff on failure (T5). `attempt`
-    * is injectable so tests can simulate endpoint recovery. Purge runs
-    * FIRST so a letter past retention is never re-attempted — the
-    * reference purges in the same service loop
-    * (DeadLetterService.cs:148-159). */
-  def replayCycle(attempt: String => Boolean, nowUtc: java.sql.Timestamp): (Long, Long) =
-    replayCycle((key, _: String) => attempt(key), nowUtc)
-
-  /** Data-aware flavor: `attempt(sourceKey, data)` receives the letter's
-    * stored envelope JSON, so a real replay re-sends EXACTLY what failed —
-    * the reference's DeadLetterReplayer.cs:49-72 contract (it posts the
-    * stored Data). The loopback HTTP e2e spec drives this with a real
-    * POST. */
+    * is injectable so tests can simulate endpoint recovery; it receives
+    * `(sourceKey, data)`, the letter's stored envelope JSON, so a real
+    * replay re-sends EXACTLY what failed — the reference's
+    * DeadLetterReplayer.cs:49-72 contract (it posts the stored Data).
+    * Purge runs FIRST so a letter past retention is never re-attempted —
+    * the reference purges in the same service loop
+    * (DeadLetterService.cs:148-159). `nowUtc` is the one clock of the
+    * cycle: it drives the purge, the due filter and the new backoff. */
   def replayCycle(attempt: (String, String) => Boolean,
                   nowUtc: java.sql.Timestamp): (Long, Long) = {
     store.purgeExpiredDeadLetters(nowUtc)
-    val due = store.dueDeadLetters(config.deadLetterMaxReplayAttempts,
-      graft.model.Defaults.DlqReplayBatchSize).collect()
+    val due = store.dueDeadLetters(config.deadLetterMaxReplayAttempts, nowUtc)
     val (ok, bad) = due.partition(r =>
       attempt(r.getAs[String]("source_key"), r.getAs[String]("data")))
     if (ok.nonEmpty) store.deleteDeadLetters(ok.map(_.getAs[Long]("id")).toSeq)
@@ -306,8 +306,7 @@ object ChangeRelay {
       database: String,
       nowUtc: String,
       totalBatches: Int,
-      fileSinkTemplate: Option[String],
-      endpoints: Seq[graft.model.SinkEndpoint],
+      endpoints: Seq[SinkEndpoint],
       maxPayloadSizeBytes: Long,
       performHttp: Boolean = false,
       performAmqp: Boolean = false)
@@ -404,30 +403,26 @@ object ChangeRelay {
     if (i >= 0) i else -i - 2
   }
 
-  /** Fan one partition of `(g, envelope_json)` rows out to every configured
-    * sink, executor-side. Emits only the failures as (error, payload) — the
-    * at-least-once contract (T2) means a retried task may re-invoke sinks,
-    * exactly like the reference's retry loop;
-    * dedup happens at the DLQ (D1) and at idempotent consumers, never by
-    * suppressing the send. */
+  /** Fan one partition of `(batch, envelope_json)` rows out to every
+    * endpoint, executor-side. Emits only the failures as (error, payload)
+    * — the at-least-once contract (T2) means a retried task may re-invoke
+    * sinks, exactly like the reference's retry loop; dedup happens at the
+    * DLQ (D1) and at idempotent consumers, never by suppressing the send. */
   private[streaming] def exportPartition(
       plan: ExportPlan,
-      it: Iterator[(String, String)],
+      it: Iterator[(Int, String)],
       executorEnvelopes: LongAccumulator): Iterator[(String, String)] =
-    it.flatMap { case (g, json) =>
+    it.flatMap { case (batchNo, json) =>
       if (org.apache.spark.TaskContext.get() != null) executorEnvelopes.add(1)
-      val batchNo = g.substring(g.lastIndexOf('#') + 1).toInt
       val meta = ExportMeta(plan.environment, plan.objectName, plan.database,
         plan.nowUtc, batchNo, plan.totalBatches)
       val payload = new Sinks.Payload(json) // one gzip for every endpoint
-      val fileFailures = plan.fileSinkTemplate.toSeq.flatMap { tpl =>
-        Sinks.writeFile(json, tpl, meta).left.toSeq.map(f => (f.error, json))
-      }
       // EVERY configured endpoint participates in the fan-out — a skipped
       // kind would lose its rows silently (the watermark still advances;
       // only dead-lettered failures are re-driven).
-      val endpointFailures = plan.endpoints.flatMap { ep =>
+      plan.endpoints.flatMap { ep =>
         val result = ep.kind match {
+          case "file" => Sinks.writeFile(json, ep.target, meta).map(_ => ())
           case "http" =>
             Sinks.prepareHttp(payload, ep.target, meta, ep.headers,
               ep.enableCompression, plan.maxPayloadSizeBytes)
@@ -438,7 +433,7 @@ object ChangeRelay {
             // REAL wire delivery (r19, the performHttp precedent): guards
             // first (required fields, caps), then the AMQP 0-9-1 publish —
             // target "amqp://host:port/exchange", routing key = the object
-            // name, correlation id = the batch group (replayable).
+            // name, correlation id = `<object>#<batch>` (replayable).
             Sinks.prepareBrokerMessage("rabbitmq", payload, ep.headers).flatMap { body =>
               // a bad target is a CONFIG error: it dead-letters like any
               // sink failure instead of failing the whole task
@@ -447,7 +442,7 @@ object ChangeRelay {
                 .flatMap { case (host, port, exchange) =>
                   Amqp.publish(host, port, exchange,
                     routingKey = s"${plan.database}.${plan.objectName}",
-                    body = body, correlationId = g,
+                    body = body, correlationId = s"${plan.objectName}#$batchNo",
                     headers = ep.headers).map(_ => ())
                 }
             }
@@ -456,7 +451,6 @@ object ChangeRelay {
         }
         result.left.toSeq.map(f => (f.error, json))
       }
-      fileFailures ++ endpointFailures
     }
 
   /** The relay contract's change columns (U1), in order, and the literal
@@ -546,7 +540,7 @@ object ChangeRelay {
   def streamReplay(
       spark: SparkSession,
       relay: ChangeRelay,
-      attempt: String => Boolean,
+      attempt: (String, String) => Boolean,
       intervalSeconds: Int,
       queryName: String): StreamingQuery =
     spark.readStream.format("rate").option("rowsPerSecond", 1).load()

@@ -82,16 +82,28 @@ class RegisteredQueriesSpec extends SparkSpec {
     finally walk.close()
   }
 
+  private val sanctionedMains = Set("Bench", "Verify", "FloorProfile", "PlanAudit", "ScaleSmoke")
+
   test("the library jar ships only the five sanctioned mains") {
     // one-off profiler mains belong in a scratch checkout, not in the
     // library jar: FloorProfile is the one profiler
-    val sanctioned = Set("Bench", "Verify", "FloorProfile", "PlanAudit", "ScaleSmoke")
     val mains = mainSources.collect {
       case (f, text) if text.contains("def main(") => f.stripSuffix(".scala")
     }.toSet
     assert(mains.nonEmpty, "no mains found: wrong working directory?")
-    val extra = mains -- sanctioned
+    val extra = mains -- sanctionedMains
     assert(extra.isEmpty, s"unsanctioned mains in src/main: ${extra.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("the engine library reads no environment variables") {
+    // a tuning knob read from the environment is a second value beside the
+    // constant in use; only the mains and the session harness read it
+    val readers = (sanctionedMains + "Harness").map(_ + ".scala")
+    assert(mainSources.nonEmpty, "no sources found: wrong working directory?")
+    val offenders = mainSources.collect {
+      case (f, text) if !readers(f) && (text.contains("sys.env") || text.contains("System.getenv")) => f
+    }
+    assert(offenders.isEmpty, s"environment reads in src/main: ${offenders.sorted.mkString(", ")}")
   }
 
   test("one foreachBatch helper and one owner of batch progress") {

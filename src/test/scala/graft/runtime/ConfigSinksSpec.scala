@@ -135,28 +135,30 @@ class ConfigSinksSpec extends SparkSpec {
   private val meta = ExportMeta("prod", "orders", "db0", "20240115000000", 0, 2)
 
   test("K2 guards: batch headers set; oversized post-compression body fails, never truncates") {
-    val small = Sinks.prepareHttp("""{"a":1}""", "http://h/{object}", meta)
+    val small = Sinks.prepareHttp(new Sinks.Payload("""{"a":1}"""), "http://h/{object}", meta)
     assert(small.isRight)
     val req = small.toOption.get
     assert(req.url == "http://h/orders")
     assert(req.headers("X-Batch-Number") == "1" && req.headers("X-Total-Batches") == "2")
-    val big = Sinks.prepareHttp("x" * 100, "http://h", meta, compress = true, maxPayloadBytes = 10)
+    val big = Sinks.prepareHttp(new Sinks.Payload("x" * 100), "http://h", meta, compress = true,
+      maxPayloadBytes = 10)
     assert(big.isLeft && big.swap.toOption.get.error.contains("exceeds cap"))
   }
 
   test("K3-K6 guards: required fields, per-broker caps, compression threshold") {
-    assert(Sinks.prepareBrokerMessage("rabbitmq", "x", Map("queue" -> ""))
+    def payload(s: String) = new Sinks.Payload(s)
+    assert(Sinks.prepareBrokerMessage("rabbitmq", payload("x"), Map("queue" -> ""))
       .swap.toOption.get.error.contains("missing required fields"))
-    assert(Sinks.prepareBrokerMessage("notabroker", "x", Map("q" -> "v")).isLeft)
+    assert(Sinks.prepareBrokerMessage("notabroker", payload("x"), Map("q" -> "v")).isLeft)
     // Compressible payload under the ASB cap passes even though raw > cap.
     val compressible = "y" * 300000
-    assert(Sinks.prepareBrokerMessage("azureservicebus", compressible, Map("queue" -> "q")).isRight)
+    assert(Sinks.prepareBrokerMessage("azureservicebus", payload(compressible), Map("queue" -> "q")).isRight)
     // Tiny payload is left uncompressed.
-    val tiny = Sinks.prepareBrokerMessage("kafka", "{}", Map("topic" -> "t"))
+    val tiny = Sinks.prepareBrokerMessage("kafka", payload("{}"), Map("topic" -> "t"))
     assert(tiny.toOption.get.sameElements("{}".getBytes("UTF-8")))
     // SQS carries a STRING body like ASB: gzip + base64, cap checked on the
     // base64-inflated wire size, and the payload round-trips.
-    val sqs = Sinks.prepareBrokerMessage("awssqs", compressible, Map("QueueUrl" -> "u"))
+    val sqs = Sinks.prepareBrokerMessage("awssqs", payload(compressible), Map("QueueUrl" -> "u"))
     val roundTrip = graft.functions.Scalars.gunzipBytes(
       java.util.Base64.getDecoder.decode(sqs.toOption.get))
     assert(new String(roundTrip, "UTF-8") == compressible)
@@ -225,29 +227,32 @@ class ConfigSinksSpec extends SparkSpec {
     cases.foreach(j => assert(Sinks.prettyJson(j) == prettyJsonReference(j), j))
   }
 
-  test("one payload serves every guard: bodies equal the per-string guards byte for byte") {
+  test("one payload serves every guard: bodies equal a fresh payload's byte for byte") {
     val json = """{"Data":[""" + (1 to 400).map(i => s"""{"k":$i}""").mkString(",") + "]}"
-    val payload = new Sinks.Payload(json)
-    val viaPayload = Sinks.prepareHttp(payload, "http://h/{object}", meta, Map.empty,
-      compress = true, maxPayloadBytes = 1L << 20).toOption.get
-    val viaString = Sinks.prepareHttp(json, "http://h/{object}", meta, compress = true).toOption.get
-    assert(viaPayload.body.sameElements(viaString.body))
-    assert(viaPayload.body eq payload.gzipped, "the http body is the shared gzip")
+    val shared = new Sinks.Payload(json)
+    val viaShared = Sinks.prepareHttp(shared, "http://h/{object}", meta, compress = true).toOption.get
+    val viaFresh = Sinks.prepareHttp(new Sinks.Payload(json), "http://h/{object}", meta,
+      compress = true).toOption.get
+    assert(viaShared.body.sameElements(viaFresh.body))
+    assert(viaShared.body eq shared.gzipped, "the http body is the shared gzip")
     for (broker <- Seq("awssqs", "azureservicebus", "kafka"))
-      assert(Sinks.prepareBrokerMessage(broker, payload, Map("q" -> "v")).toOption.get
-        .sameElements(Sinks.prepareBrokerMessage(broker, json, Map("q" -> "v")).toOption.get), broker)
+      assert(Sinks.prepareBrokerMessage(broker, shared, Map("q" -> "v")).toOption.get
+        .sameElements(Sinks.prepareBrokerMessage(broker, new Sinks.Payload(json), Map("q" -> "v"))
+          .toOption.get), broker)
   }
 
-  test("K1 Hadoop-FS variant writes the identical payload through a file:// scheme") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hfs")
+  test("K1: a file:// template lands at its absolute path and nothing else is written") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-file-scheme")
     val m = graft.sinks.ExportMeta("prod", "orders", "db0", "20240101000000", 0, 1)
-    val tpl = s"file://$dir/{object}-{batch}.json"
-    val got = Sinks.writeFileHadoop("""{"k":1}""", tpl, m)
-    assert(got.isRight, s"hadoop write failed: $got")
-    val written = java.nio.file.Files.readString(dir.resolve("orders-0.json"))
-    assert(written == Sinks.prettyJson("""{"k":1}"""),
-      "payload must match the local variant byte for byte")
+    val got = Sinks.writeFile("""{"k":1}""", s"file://$dir/{object}-{batch}.json", m)
+    assert(got.isRight, s"file:// write failed: $got")
+    val written = dir.toFile.list().toSeq
+    assert(written == Seq("orders-0.json"), s"expected one file and no .crc sidecar: $written")
+    assert(java.nio.file.Files.readString(dir.resolve("orders-0.json")) == Sinks.prettyJson("""{"k":1}"""))
+    // the scheme is not read as a relative directory of the working directory
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get("file:")),
+      "a relative file: directory was written")
     // an unresolvable scheme fails into the Either, never throws (DLQ path)
-    assert(Sinks.writeFileHadoop("""{"k":1}""", "nosuchscheme://x/{object}", m).isLeft)
+    assert(Sinks.writeFile("""{"k":1}""", "nosuchscheme://x/{object}", m).isLeft)
   }
 }

@@ -1,7 +1,7 @@
 package graft.runtime
 
 import graft.SparkSpec
-import graft.model.{EnvironmentConfig, TrackingObject}
+import graft.model.{EnvironmentConfig, SinkEndpoint, TrackingObject}
 import graft.state.ParquetStateStore
 import graft.streaming.ChangeRelay
 import org.apache.spark.sql.functions._
@@ -85,6 +85,17 @@ class LifecycleSpec extends SparkSpec {
     val changes = EnvLoader.diff(loaded, EnvLoader.loadDir(dir.toString))
     assert(changes.toSet == Set(
       EnvLoader.Added("c-env"), EnvLoader.Removed("a-env"), EnvLoader.Updated("b-env")))
+  }
+
+  test("S6: an environment file with only the required keys takes every EnvironmentConfig default") {
+    val json =
+      """{"Provider":"postgres",
+        | "ChangeTracking":{
+        |   "TrackingObjects":[{"Name":"orders","Database":"db0","TableName":"t","StoredProcedureName":"sp"}],
+        |   "ApiEndpoints":[{"Key":"ep1","Url":"http://h/{object}"}]}}""".stripMargin
+    assert(EnvLoader.parse("prod", json).config == EnvironmentConfig("prod", "postgres",
+      Seq(TrackingObject("orders", "db0", "t", "sp")),
+      Seq(SinkEndpoint("ep1", "http", "http://h/{object}"))))
   }
 
   test("S6 secrets: PWENC round-trip — encrypt is idempotent, loader decrypts, validation passes") {

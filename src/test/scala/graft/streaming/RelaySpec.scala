@@ -232,10 +232,10 @@ class RelaySpec extends SparkSpec {
         store.resume("obj:prod/j1")
         store.appendDeadLetters(letter)
         store.purgeExpiredDeadLetters(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
-        // A failed replay widens the backoff (from a 2024 clock, so both
-        // letters stay due), then a successful one deletes the batch.
-        assert(relay.replayCycle(_ => false, java.sql.Timestamp.valueOf("2024-01-15 00:00:00")) == ((0L, 2L)))
-        assert(relay.replayCycle(_ => true, java.sql.Timestamp.valueOf("2024-01-15 00:00:00")) == ((2L, 0L)))
+        // A failed replay widens the backoff by 60 s, then a successful one
+        // past that backoff deletes the batch.
+        assert(relay.replayCycle((_, _) => false, java.sql.Timestamp.valueOf("2024-01-15 00:00:00")) == ((0L, 2L)))
+        assert(relay.replayCycle((_, _) => true, java.sql.Timestamp.valueOf("2024-01-15 00:01:00")) == ((2L, 0L)))
       }
       assert(controlJobs == 0, s"control-state I/O submitted $controlJobs Spark jobs")
       assert(store.deadLetters.collect().isEmpty)
@@ -331,7 +331,7 @@ class RelaySpec extends SparkSpec {
     assert(store.deadLetters.count() == 1)
 
     // T5/replay: endpoint recovers → row deleted from DLQ.
-    val (ok, bad) = relay.replayCycle(_ => true, java.sql.Timestamp.valueOf("2024-01-15 01:00:00"))
+    val (ok, bad) = relay.replayCycle((_, _) => true, java.sql.Timestamp.valueOf("2024-01-15 01:00:00"))
     assert(ok == 1 && bad == 0)
     assert(store.deadLetters.count() == 0)
   }
@@ -383,12 +383,31 @@ class RelaySpec extends SparkSpec {
       .withColumn("timestamp", current_timestamp())
     store.appendDeadLetters(rows)
     val relay = new ChangeRelay(spark, store, cfg(), None)
-    val (ok, bad) = relay.replayCycle(_ => false, java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
+    val (ok, bad) = relay.replayCycle((_, _) => false, java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
     assert(ok == 0 && bad == 1)
     val row = store.deadLetters.head()
     assert(row.getAs[Int]("attempts") == 1)
     assert(row.getAs[java.sql.Timestamp]("next_attempt")
       .equals(java.sql.Timestamp.valueOf("2024-01-15 00:01:00"))) // 60*2^0: first failure waits one base delay
+  }
+
+  test("replay runs on its one clock: a letter failed at t is not due at t and due at t + 60 s") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    store.appendDeadLetters(Seq(("k1", "orders", "prod", "db0", "h1", "{}", "boom",
+      java.sql.Timestamp.valueOf("2024-01-14 00:00:00")))
+      .toDF("source_key", "tracking_object_name", "environment_name",
+        "database_name", "data_hash", "data", "error_message", "timestamp"))
+    val relay = new ChangeRelay(spark, store, cfg(), None)
+    val t = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
+    assert(relay.replayCycle((_, _) => false, t) == ((0L, 1L)))
+    val attempted = scala.collection.mutable.ArrayBuffer[String]()
+    def replay(at: String) = relay.replayCycle((k, _) => { attempted += k; true },
+      java.sql.Timestamp.valueOf(at))
+    assert(replay("2024-01-15 00:00:00") == ((0L, 0L)) && attempted.isEmpty,
+      "the letter is held back for its 60 s backoff")
+    assert(replay("2024-01-15 00:01:00") == ((1L, 0L)) && attempted == Seq("k1"))
+    assert(store.deadLetters.count() == 0)
   }
 
   test("replay purges letters past retention before attempting anything") {
@@ -407,11 +426,33 @@ class RelaySpec extends SparkSpec {
     val attempted = scala.collection.mutable.ArrayBuffer[String]()
     val relay = new ChangeRelay(spark, store, cfg(), None)
     val (ok, bad) = relay.replayCycle(
-      k => { attempted += k; true }, java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
+      (k, _) => { attempted += k; true }, java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
     // The expired letter was purged, never attempted; the fresh one replayed.
     assert(!attempted.contains("k-old"), "expired letter must not be re-attempted")
     assert(ok == 1 && bad == 0)
     assert(store.deadLetters.count() == 0)
+  }
+
+  test("a file endpoint writes one pretty-JSON file per envelope, as the fileSinkTemplate shorthand does") {
+    def run(dir: Path, endpoints: Seq[SinkEndpoint], fileSinkTemplate: Option[String]): Map[String, String] = {
+      val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+      val relay = new ChangeRelay(spark, store, cfg(endpoints).copy(maxRecordsPerBatch = 10),
+        fileSinkTemplate, horizonOf = _ => 1000L)
+      store.setWatermark("prod", "orders", 0L)
+      assert(relay.runCycle(obj, outboxDf((1L to 25L).map(i =>
+        (i, i, "I", i.toDouble, s"""{"k":$i}"""))), "20240115000000") == ((25L, 25L)))
+      assert(store.deadLetters.count() == 0, "a file endpoint must not dead-letter")
+      val files = dir.resolve("exports").toFile.list().toSeq
+      files.map(f => f -> Files.readString(dir.resolve("exports").resolve(f))).toMap
+    }
+    val viaEndpoint = { val d = tmp()
+      run(d, Seq(SinkEndpoint("files", "file", d.resolve("exports").toString + "/c-{batch}.json")), None) }
+    assert(viaEndpoint.keySet == Set("c-0.json", "c-1.json", "c-2.json"))
+    assert(viaEndpoint.values.forall(_.startsWith("{\n  \"Metadata\": {\n")), "pretty-printed envelopes")
+    assert(viaEndpoint("c-2.json").contains("\"Version\": 25"))
+    val viaShorthand = { val d = tmp()
+      run(d, Nil, Some(d.resolve("exports").toString + "/c-{batch}.json")) }
+    assert(viaShorthand == viaEndpoint, "the shorthand writes the same files")
   }
 
   test("pause holds the object; resume releases it; reset re-seeds") {

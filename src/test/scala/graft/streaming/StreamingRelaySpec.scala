@@ -87,7 +87,7 @@ class StreamingRelaySpec extends SparkSpec {
     // base makes a multi-attempt streaming test pointlessly slow.)
     val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
     val query = ChangeRelay.streamReplay(spark, relay,
-      attempt = { _ => attempts.incrementAndGet(); true },
+      attempt = { (_, _) => attempts.incrementAndGet(); true },
       intervalSeconds = 1, queryName = "graft-replay-prod")
     try {
       val deadline = System.currentTimeMillis() + 60000
