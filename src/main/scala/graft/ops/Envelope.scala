@@ -48,7 +48,12 @@ object Envelope {
     * parallelizes per tracked object. The batch cap (reference
     * MaxRecordsPerBatch) must be applied upstream of this fold.
     */
-  def encode(rows: DataFrame, groupCol: String): DataFrame = {
+  def encode(rows: DataFrame, groupCol: String): DataFrame =
+    encodeCounted(rows, groupCol).select(col(groupCol), col("envelope_json"))
+
+  /** [[encode]] with each envelope's row count (`rows`) and max `$version`
+    * (`envelope_version`), read off the same aggregate. */
+  private[graft] def encodeCounted(rows: DataFrame, groupCol: String): DataFrame = {
     // One change row → one flat JSON object: $-meta keys + user keys from
     // the payload map (wire rows are flat, stored-procedure.md:62-70).
     // The $-meta keys keep their CONTRACT types — $version is a JSON number
@@ -77,6 +82,8 @@ object Envelope {
       .agg(max(col("version")).as("envelope_version"), dataArr.as("data"))
       .select(
         col(groupCol),
+        size(col("data")).cast(LongType).as("rows"),
+        col("envelope_version"),
         concat(
           lit("""{"Metadata":{"Sync":{"Version":"""),
           col("envelope_version"),

@@ -187,6 +187,6 @@ object Amqp {
       } finally sock.close()
     } catch {
       case e: Exception =>
-        Left(ExportFailure("rabbitmq", s"${e.getClass.getSimpleName}: ${e.getMessage}"))
+        Left(ExportFailure(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
     }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Scalars
 import graft.model.Defaults
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.conf.Configuration
 import java.nio.charset.StandardCharsets
 
 /** Sink layer: file export, HTTP/broker guards, Kafka shaping, circuit
@@ -26,7 +27,9 @@ final case class ExportMeta(
     batch: Int = 0,
     totalBatches: Int = 1)
 
-final case class ExportFailure(endpointKey: String, error: String)
+/** A sink's failure. The relay prefixes `error` with the failing
+  * endpoint's configured key when it dead-letters the envelope. */
+final case class ExportFailure(error: String)
 
 object Sinks {
 
@@ -60,28 +63,38 @@ object Sinks {
     * than `java.nio` (ROADMAP direction 6). A scheme no FileSystem
     * resolves fails into the `Left`, which dead-letters. An existing file
     * is overwritten (the template's {guid}/{timestamp} placeholders make
-    * collisions a configuration choice, as in the reference). */
-  def writeFile(envelopeJson: String, pathTemplate: String, m: ExportMeta): Either[ExportFailure, String] =
+    * collisions a configuration choice, as in the reference).
+    *
+    * `hadoopConf` resolves a non-local scheme's FileSystem; the relay
+    * passes its session's Hadoop settings. Without it, a fresh default
+    * `Configuration` of this JVM is used, which knows no `spark.hadoop.*`
+    * setting. */
+  def writeFile(envelopeJson: String, pathTemplate: String, m: ExportMeta,
+      hadoopConf: Option[Configuration] = None): Either[ExportFailure, String] =
     try {
       val path = renderTemplate(pathTemplate, m, java.util.UUID.randomUUID().toString, urlEscape = false)
       val bytes = prettyJson(envelopeJson).getBytes(StandardCharsets.UTF_8)
       val hPath = new org.apache.hadoop.fs.Path(path)
-      val uri = hPath.toUri
-      if (uri.getScheme == null || uri.getScheme == "file") {
-        val p = Paths.get(uri.getPath)
+      if (isLocal(path)) {
+        val p = Paths.get(hPath.toUri.getPath)
         if (p.getParent != null) Files.createDirectories(p.getParent)
         Files.write(p, bytes)
       } else {
-        val out = hPath.getFileSystem(hadoopConf).create(hPath, true)
+        val out = hPath.getFileSystem(hadoopConf.getOrElse(defaultHadoopConf)).create(hPath, true)
         try out.write(bytes) finally out.close()
       }
       Right(path)
     } catch {
-      case e: Exception => Left(ExportFailure("file", e.getMessage))
+      case e: Exception => Left(ExportFailure(e.getMessage))
     }
 
-  /** The executor JVM's one Hadoop configuration for [[writeFile]]. */
-  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+  /** Whether a file path or template has no scheme or `file:`, so
+    * [[writeFile]] writes it to the local disk. */
+  def isLocal(path: String): Boolean =
+    Option(new org.apache.hadoop.fs.Path(path).toUri.getScheme).forall(_ == "file")
+
+  /** This JVM's default Hadoop configuration, for a [[writeFile]] given none. */
+  private lazy val defaultHadoopConf = new Configuration()
 
   /** Minimal stable pretty-printer for the envelope JSON (reference writes
     * indented JSON; ExportService.cs:173). Deterministic, no library; one
@@ -138,7 +151,7 @@ object Sinks {
     val url = renderTemplate(urlTemplate, m, java.util.UUID.randomUUID().toString, urlEscape = true)
     val body = if (compress) payload.gzipped else payload.bytes
     if (body.length > maxPayloadBytes)
-      Left(ExportFailure("http", s"payload ${body.length} B exceeds cap $maxPayloadBytes B after compression"))
+      Left(ExportFailure(s"payload ${body.length} B exceeds cap $maxPayloadBytes B after compression"))
     else Right(HttpRequest(url,
       headers ++ Map(
         "Content-Type" -> "application/json",
@@ -173,11 +186,11 @@ object Sinks {
         val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
         if (is != null) try { is.readAllBytes(); () } finally is.close()
         if (code >= 200 && code < 300) Right(code)
-        else Left(ExportFailure("http", s"HTTP $code from ${req.url}"))
+        else Left(ExportFailure(s"HTTP $code from ${req.url}"))
       } finally conn.disconnect()
     } catch {
       case e: Exception =>
-        Left(ExportFailure("http", s"${e.getClass.getSimpleName}: ${e.getMessage}"))
+        Left(ExportFailure(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
     }
 
   /** Broker caps (bytes) — reference MessageQueueService.cs:31-36. */
@@ -196,9 +209,9 @@ object Sinks {
       requiredFields: Map[String, String]): Either[ExportFailure, Array[Byte]] = {
     val missing = requiredFields.collect { case (k, v) if v == null || v.isEmpty => k }
     if (missing.nonEmpty)
-      Left(ExportFailure(broker, s"missing required fields: ${missing.mkString(",")}"))
+      Left(ExportFailure(s"missing required fields: ${missing.mkString(",")}"))
     else BrokerCaps.get(broker.toLowerCase) match {
-      case None => Left(ExportFailure(broker, s"unknown broker type '$broker'"))
+      case None => Left(ExportFailure(s"unknown broker type '$broker'"))
       case Some(cap) =>
         val raw = payload.bytes
         // Compression is PER-BROKER (MessageQueueService.cs:67-94,142-151):
@@ -212,7 +225,7 @@ object Sinks {
           case _ => raw
         }
         if (body.length > cap)
-          Left(ExportFailure(broker, s"message ${body.length} B exceeds $broker cap $cap B"))
+          Left(ExportFailure(s"message ${body.length} B exceeds $broker cap $cap B"))
         else Right(body)
     }
   }

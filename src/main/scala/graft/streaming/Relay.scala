@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
 import scala.util.{Failure, Success, Try}
 import graft.model.{EnvironmentConfig, SinkEndpoint, TrackingObject}
 import graft.ops.{Dlq, Envelope, Incremental, Windows}
@@ -25,30 +25,38 @@ import graft.state.ParquetStateStore
   * attempt even when a sink fails — failed payloads are re-driven from the
   * DLQ, never by re-polling (stored-procedure.md:92).
   *
-  * Spark work per object and cycle is data work only, two actions for any
-  * delta size: one pass over the gated delta's ids and one export. The id
-  * pass reads each partition's ids in arrival order, with no sort and no
-  * shuffle, and returns its row count, its max id and its ids as runs of
-  * consecutive values; the driver derives the row count, the new watermark
-  * and the first id of every `maxRecordsPerBatch`-row envelope, so the
-  * export numbers each row by binary search over those bounds, a narrow
-  * map. The runs number a delta exactly when its versions are unique per
-  * object and each partition reads them as ascending stretches (a change
-  * table's files are written in version order). Driver memory is
-  * O(envelopes + partitions): a partition whose ids need more than
-  * rows / cap + 1 runs (sparse versions, rows far out of order) sends
-  * none, and a version on several rows (one transaction) shows as
-  * overlapping runs; either way that cycle numbers through
-  * [[graft.ops.Windows.numberBatchesRange]] instead, which adds its own
-  * jobs, and its id pass costs what a count-and-max aggregate does. A
-  * delta that fits one envelope is batch 0 either way. The export
-  * runs the sink fan-out on the executors and returns just the failed
-  * envelopes as (error, data) rows, which the driver hashes and
-  * dead-letters; successful envelopes never reach the driver. Every
-  * envelope goes to every endpoint of the environment through one match
-  * on its kind: `file` ([[graft.sinks.Sinks.writeFile]], whose template's
-  * scheme selects the storage), `http` and the brokers. Control
-  * state (watermarks, pauses, dead letters) lives on the driver
+  * Spark work per object and cycle is data work only. A delta predicted to
+  * fit one envelope is ONE job with one task: at most
+  * `maxRecordsPerBatch + 1` rows are read into one partition, encoded as
+  * batch 0, fanned out and counted, with no id pass and no shuffle
+  * ([[ChangeRelay.oneEnvelope]]). The prediction is the object's previous
+  * delta as this instance saw it. Otherwise (an object new to the
+  * instance, a larger previous delta, or a misprediction, whose capped
+  * task sends nothing) the cycle takes two actions: one pass over the
+  * gated delta's ids, then one export. The id pass reads each
+  * partition's ids in arrival order, with no sort and no shuffle, and
+  * returns its row count, its max id and its ids as runs of consecutive
+  * values; the driver derives the row count, the new watermark and the
+  * first id of every `maxRecordsPerBatch`-row envelope, so the export
+  * numbers each row by binary search over those bounds, a narrow map. The
+  * runs number a delta exactly when its versions are unique per object
+  * and each partition reads them as ascending stretches (a change table's
+  * files are written in version order). Driver memory is O(envelopes +
+  * partitions): a partition whose ids need more than rows / cap + 1 runs
+  * (sparse versions, rows far out of order) sends none, and a version on
+  * several rows (one transaction) shows as overlapping runs; either way
+  * that cycle numbers through [[graft.ops.Windows.numberBatchesRange]]
+  * instead, which adds its own jobs, and its id pass costs what a
+  * count-and-max aggregate does. A delta the id pass finds within one
+  * envelope is exported by the one-task frame. Every export runs the sink
+  * fan-out on the executors and returns just the failed envelopes as
+  * (error, data) rows, each error prefixed with the failing endpoint's
+  * key, which the driver hashes and dead-letters; successful envelopes
+  * never reach the driver. Every envelope goes to every endpoint of the
+  * environment through one match on its kind: `file`
+  * ([[graft.sinks.Sinks.writeFile]], whose template's scheme selects the
+  * storage), `http` and the brokers. Control state (watermarks, pauses,
+  * dead letters) lives on the driver
   * ([[ParquetStateStore]]), so reading and committing it submits no Spark
   * job.
   *
@@ -94,6 +102,11 @@ final class ChangeRelay(
     * the envelope count. */
   @volatile var lastCycleExecutorEnvelopes: Long = 0L
 
+  /** Per object name: whether its last delta seen by this instance fit one
+    * envelope, which picks its next cycle's path. The cycle's pool threads
+    * and the poller share it. */
+  private val fitLast = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
+
   /** One micro-batch cycle for one object: [[runCycles]] over that object
     * alone. Returns (rows exported, new watermark). */
   def runCycle(obj: TrackingObject, changes: DataFrame, nowUtc: String): (Long, Long) =
@@ -103,15 +116,16 @@ final class ChangeRelay(
     * reference's per-cycle object loop (ChangeTrackingBackgroundService.cs
     * ExecuteAsync iterates `environment.TrackingObjects` each interval).
     *
-    * Objects run CONCURRENTLY: each object's chain of small Spark jobs
-    * (the id pass, then the export) is submitted from its own thread of a
-    * pool created for this call, so one object's driver-side gaps overlap
-    * another object's jobs. The pool holds min(objects, 2 ×
-    * defaultParallelism) threads and is shut down before the call returns.
-    * Each object runs under `SQLExecution.withThreadLocalCaptured`, so the
-    * caller's local properties (job group, streaming batch properties) and
-    * active session reach every object's jobs. Object names must be
-    * distinct: objects share no mutable state, and each yields at most one
+    * Objects run CONCURRENTLY: each object's one job, or its chain of
+    * small Spark jobs (the id pass, then the export), is submitted from
+    * its own thread of a pool created for this call, so one object's
+    * driver-side gaps overlap another object's jobs. The pool holds
+    * min(objects, 2 × defaultParallelism) threads and is shut down before
+    * the call returns. Each object runs under
+    * `SQLExecution.withThreadLocalCaptured`, so the caller's local
+    * properties (job group, streaming batch properties) and active session
+    * reach every object's jobs. Object names must be distinct: objects
+    * share only the per-object path record, and each yields at most one
     * watermark advance.
     *
     * Per-cycle CONTROL-STATE I/O is O(1) in the object count and runs on
@@ -137,6 +151,12 @@ final class ChangeRelay(
     val pausedScopes = store.pausedScopes
     val envelopes = spark.sparkContext.longAccumulator("graft.relay.envelopesExportedOnExecutors")
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // A file template with a non-local scheme resolves its FileSystem on
+    // the executors from the session's Hadoop settings, shipped with the
+    // tasks; local templates ship nothing.
+    val hadoopConf =
+      if (endpoints.forall(ep => ep.kind != "file" || Sinks.isLocal(ep.target))) None
+      else Some(new SerializableConfiguration(session.sessionState.newHadoopConf()))
     val threads = new java.util.concurrent.atomic.AtomicInteger()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(objects.size, 2 * spark.sparkContext.defaultParallelism)),
@@ -148,7 +168,8 @@ final class ChangeRelay(
     val outcomes = try {
       objects.map { case (obj, changes) =>
         SQLExecution.withThreadLocalCaptured(session, pool) {
-          cycleCore(obj, changes, nowUtc, committed.get(obj.name), pausedScopes, envelopes)
+          cycleCore(obj, changes, nowUtc, committed.get(obj.name), pausedScopes, envelopes,
+            hadoopConf)
         }
       }.map(f => Try(f.join()).recoverWith {
         case e: java.util.concurrent.CompletionException if e.getCause != null =>
@@ -170,11 +191,13 @@ final class ChangeRelay(
   /** The cycle body for one object. `stored` and `pausedScopes` are the
     * control state read at the start of the cycle; the object's advance is
     * returned for the caller's single commit. `exportedOnExecutors` counts
-    * the call's executor-side envelope exports. */
+    * the call's executor-side envelope exports; `hadoopConf` is shipped to
+    * the file sink for non-local schemes. */
   private def cycleCore(obj: TrackingObject, changes: DataFrame, nowUtc: String,
       stored: Option[Long],
       pausedScopes: Set[String],
-      exportedOnExecutors: LongAccumulator): ChangeRelay.ObjectCycle = {
+      exportedOnExecutors: LongAccumulator,
+      hadoopConf: Option[SerializableConfiguration]): ChangeRelay.ObjectCycle = {
     // P7 — pause scopes short-circuit before any work.
     val envScope = s"env:${config.name.toLowerCase}"
     val objScope = s"obj:${config.name.toLowerCase}/${obj.name.toLowerCase}"
@@ -195,21 +218,7 @@ final class ChangeRelay(
 
     val horizon = horizonOf(changes)
     val batch = Incremental.incrementalRead(changes, fromVersion, horizon)
-    // A2 — watermark through the same gate as the rows. Never regress: a
-    // late-replayed micro-batch (e.g. an old file re-surfacing in the file
-    // stream) can carry only ids below the stored watermark.
-    //
-    // ONE pass over the gated ids carries the row count, the new watermark
-    // and the envelope bounds: a gated id ≤ fromVersion can never lift
-    // max(fromVersion, ·), so max(fromVersion, max(id) over batch) ≡
-    // max(fromVersion, gatedWatermark(changes)).
     val cap = config.maxRecordsPerBatch
-    val parts = batch.select(col("id").cast("long")).as[Long]
-      .mapPartitions(ids => ChangeRelay.idRuns(ids, cap))
-      .collect().toSeq
-    val batchRows = parts.map(_.rows).sum
-    val newVersion = (fromVersion +: parts.map(_.maxId)).max
-
     val rows = batch.select(
       col("operation"),
       col("id").as("version"),
@@ -217,53 +226,89 @@ final class ChangeRelay(
       Envelope.stripNulls(map(
         lit("value"), col("value").cast("string"),
         lit("props"), col("props"))).as("payload"))
+    // EXECUTOR-side fan-out: envelopes never collect to the driver. Each
+    // export task invokes the sink guards per envelope and returns only
+    // (error, payload) failures — a full initial sync (S7) of a large table
+    // streams through executors instead of materializing every JSON string
+    // in driver memory. The closure captures an ExportPlan of plain values,
+    // never `this` (the relay holds the session/store).
+    def plan(totalBatches: Int) = ChangeRelay.ExportPlan(config.name, obj.name, obj.database,
+      nowUtc, totalBatches, endpoints, config.maxPayloadSizeBytes, performHttp, performAmqp,
+      hadoopConf)
 
-    val exported =
-      if (batchRows == 0) 0L
-      else {
-        // W2 numbering with no job of its own. One envelope when the delta
-        // fits the cap: the batch number is the literal 0. Otherwise a
-        // version's batch is its place among the envelope bounds, a narrow
-        // map; only ids the runs cannot number exactly (a repeated id, a
-        // sparse or out-of-order partition) go through numberBatchesRange.
-        val (numbered, totalBatches) =
-          if (batchRows <= cap) (rows.withColumn("batch", lit(0)), 1)
-          else ChangeRelay.batchBounds(parts, cap) match {
+    // The delta as one envelope in one task: read, encode, fan-out and
+    // count, with no shuffle. None, with nothing sent, over the cap. A
+    // function value rather than a method, so its job's call site stays
+    // `cycleCore` (relaybench attributes the export layer by it).
+    val exportWhole = () => {
+      val p = plan(1)
+      ChangeRelay.oneEnvelope(rows, cap)
+        .select(col("batch"), col("envelope_json"), col("rows"),
+          col("envelope_version").cast("long"))
+        .as[(Int, String, Long, Long)]
+        .mapPartitions(it => ChangeRelay.exportEnvelope(p, cap, it, exportedOnExecutors))
+        .collect().headOption
+        .orElse(Some(ChangeRelay.Exported(0L, fromVersion, Nil))).filter(_.rows <= cap)
+    }
+
+    // The path follows the object's previous delta: one job when it fit
+    // one envelope; else, for an object new to this instance, or when the
+    // one job found the delta over the cap (and sent nothing), two actions.
+    val predicted = if (fitLast.getOrDefault(obj.name, false)) exportWhole() else None
+    val done = predicted.getOrElse {
+      // ONE pass over the gated ids carries the row count, the new
+      // watermark and the envelope bounds; then the export. A2 — the
+      // watermark goes through the same gate as the rows: a gated id ≤
+      // fromVersion can never lift max(fromVersion, ·), so max(fromVersion,
+      // max(id) over batch) ≡ max(fromVersion, gatedWatermark(changes)).
+      val parts = batch.select(col("id").cast("long")).as[Long]
+        .mapPartitions(ids => ChangeRelay.idRuns(ids, cap))
+        .collect().toSeq
+      val batchRows = parts.map(_.rows).sum
+      val failures =
+        if (batchRows == 0) Nil
+        else if (batchRows <= cap)
+          exportWhole().getOrElse(throw new IllegalStateException(
+            s"the delta of ${config.name}/${obj.name} grew past $cap rows between the id pass " +
+              "and the export; its watermark holds")).failures
+        else {
+          // W2 numbering with no job of its own: a version's batch is its
+          // place among the envelope bounds, a narrow map; only ids the
+          // runs cannot number exactly (a repeated id, a sparse or
+          // out-of-order partition) go through numberBatchesRange.
+          val (numbered, totalBatches) = ChangeRelay.batchBounds(parts, cap) match {
             case Some(bounds) =>
               (rows.withColumn("batch", ChangeRelay.batchOf(bounds)(col("version"))), bounds.length)
             case None =>
               (Windows.numberBatchesRange(rows, "version", cap, batchRows),
                 ((batchRows + cap - 1) / cap).toInt)
           }
-        val envelopes = Envelope.encode(numbered, "batch")
-        // EXECUTOR-side fan-out: envelopes never collect to the driver. Each
-        // partition invokes the sink guards per envelope row and returns only
-        // (error, payload) failures — a full initial sync (S7) of a large
-        // table streams through executors instead of materializing every
-        // JSON string in driver memory. The closure captures an ExportPlan
-        // of plain values, never `this` (the relay holds the session/store).
-        val plan = ChangeRelay.ExportPlan(config.name, obj.name, obj.database,
-          nowUtc, totalBatches, endpoints, config.maxPayloadSizeBytes, performHttp, performAmqp)
-        // The export action itself returns the failures: one job runs the
-        // fan-out, and only failed envelopes reach the driver.
-        val failures = envelopes.select("batch", "envelope_json").as[(Int, String)]
-          .mapPartitions(it => ChangeRelay.exportPartition(plan, it, exportedOnExecutors))
-          .collect()
-        // K9 — every failure dead-letters with D1 dedup. Each dead letter
-        // carries ITS OWN envelope so replay re-sends exactly what failed
-        // (DeadLetterService.cs stores the Data JSON per failure).
-        if (failures.nonEmpty) {
-          val sourceKey = s"${config.name}_${obj.name}_${obj.database}"
-          val now = new java.sql.Timestamp(System.currentTimeMillis())
-          store.appendDeadLetters(failures.toSeq.map { case (error, data) =>
-            Row(sourceKey, obj.name, config.name, obj.database, Dlq.dataHash(data), data, error, now)
-          })
+          val p = plan(totalBatches)
+          Envelope.encode(numbered, "batch").as[(Int, String)]
+            .mapPartitions(it => ChangeRelay.exportPartition(p, it, exportedOnExecutors))
+            .collect().toSeq
         }
-        batchRows
-      }
+      ChangeRelay.Exported(batchRows, (fromVersion +: parts.map(_.maxId)).max, failures)
+    }
+    fitLast.put(obj.name, done.rows <= cap)
+
+    // K9 — every failure dead-letters with D1 dedup. Each dead letter
+    // carries ITS OWN envelope so replay re-sends exactly what failed
+    // (DeadLetterService.cs stores the Data JSON per failure).
+    if (done.failures.nonEmpty) {
+      val sourceKey = s"${config.name}_${obj.name}_${obj.database}"
+      val now = new java.sql.Timestamp(System.currentTimeMillis())
+      store.appendDeadLetters(done.failures.map { case (error, data) =>
+        Row(sourceKey, obj.name, config.name, obj.database, Dlq.dataHash(data), data, error, now)
+      })
+    }
 
     // T2 — advance AFTER the export attempt, regardless of sink failures.
-    ChangeRelay.ObjectCycle(exported, newVersion,
+    // Never regress: a late-replayed micro-batch (e.g. an old file
+    // re-surfacing in the file stream) can carry only ids below the stored
+    // watermark.
+    val newVersion = math.max(fromVersion, done.maxVersion)
+    ChangeRelay.ObjectCycle(done.rows, newVersion,
       if (newVersion > fromVersion) Some(newVersion) else None)
   }
 
@@ -308,8 +353,14 @@ object ChangeRelay {
       totalBatches: Int,
       endpoints: Seq[SinkEndpoint],
       maxPayloadSizeBytes: Long,
-      performHttp: Boolean = false,
-      performAmqp: Boolean = false)
+      performHttp: Boolean,
+      performAmqp: Boolean,
+      hadoopConf: Option[SerializableConfiguration])
+
+  /** What one object's export did: the delta's rows, its max version and
+    * the failed envelopes as (error, data). */
+  private[streaming] final case class Exported(rows: Long, maxVersion: Long,
+      failures: Seq[(String, String)])
 
   /** One object's part of a cycle: rows exported, its watermark, and the
     * advance to commit (None when the watermark did not move). */
@@ -403,11 +454,38 @@ object ChangeRelay {
     if (i >= 0) i else -i - 2
   }
 
+  /** A delta of `rows` as one envelope in ONE task, with no shuffle: the
+    * rows coalesce into one partition, at most `cap + 1` of them are kept,
+    * and [[Envelope.encodeCounted]] folds them into batch 0, sorted by
+    * `$version`, with their count and max version. The single partition
+    * satisfies the aggregate's clustering, so the plan holds no exchange.
+    * A delta over the cap shows as `rows = cap + 1`. */
+  private[graft] def oneEnvelope(rows: DataFrame, cap: Int): DataFrame = {
+    val kept = math.min(cap.toLong + 1, Int.MaxValue).toInt
+    Envelope.encodeCounted(rows.withColumn("batch", lit(0)).coalesce(1).limit(kept), "batch")
+  }
+
+  /** Fan out the [[oneEnvelope]] rows of one task — at most one — and
+    * report each as [[Exported]]. An envelope over `cap` rows is sent to
+    * no endpoint. */
+  private[streaming] def exportEnvelope(
+      plan: ExportPlan,
+      cap: Int,
+      it: Iterator[(Int, String, Long, Long)],
+      executorEnvelopes: LongAccumulator): Iterator[Exported] =
+    it.map { case (batchNo, json, rows, maxVersion) =>
+      Exported(rows, maxVersion,
+        if (rows > cap) Nil
+        else exportPartition(plan, Iterator.single((batchNo, json)), executorEnvelopes).toSeq)
+    }
+
   /** Fan one partition of `(batch, envelope_json)` rows out to every
-    * endpoint, executor-side. Emits only the failures as (error, payload)
-    * — the at-least-once contract (T2) means a retried task may re-invoke
-    * sinks, exactly like the reference's retry loop; dedup happens at the
-    * DLQ (D1) and at idempotent consumers, never by suppressing the send. */
+    * endpoint, executor-side. Emits only the failures as (error, payload),
+    * each error prefixed with the failing endpoint's configured key
+    * (`<key>: <error>`) — the at-least-once contract (T2) means a retried
+    * task may re-invoke sinks, exactly like the reference's retry loop;
+    * dedup happens at the DLQ (D1) and at idempotent consumers, never by
+    * suppressing the send. */
   private[streaming] def exportPartition(
       plan: ExportPlan,
       it: Iterator[(Int, String)],
@@ -422,7 +500,8 @@ object ChangeRelay {
       // only dead-lettered failures are re-driven).
       plan.endpoints.flatMap { ep =>
         val result = ep.kind match {
-          case "file" => Sinks.writeFile(json, ep.target, meta).map(_ => ())
+          case "file" =>
+            Sinks.writeFile(json, ep.target, meta, plan.hadoopConf.map(_.value)).map(_ => ())
           case "http" =>
             Sinks.prepareHttp(payload, ep.target, meta, ep.headers,
               ep.enableCompression, plan.maxPayloadSizeBytes)
@@ -438,7 +517,7 @@ object ChangeRelay {
               // a bad target is a CONFIG error: it dead-letters like any
               // sink failure instead of failing the whole task
               Amqp.parseTarget(ep.target)
-                .toRight(ExportFailure(ep.key, s"bad amqp target '${ep.target}'"))
+                .toRight(ExportFailure(s"bad amqp target '${ep.target}'"))
                 .flatMap { case (host, port, exchange) =>
                   Amqp.publish(host, port, exchange,
                     routingKey = s"${plan.database}.${plan.objectName}",
@@ -449,7 +528,7 @@ object ChangeRelay {
           case broker =>
             Sinks.prepareBrokerMessage(broker, payload, ep.headers).map(_ => ())
         }
-        result.left.toSeq.map(f => (f.error, json))
+        result.left.toSeq.map(f => (s"${ep.key}: ${f.error}", json))
       }
     }
 

@@ -339,6 +339,35 @@ class RegisteredQueriesSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("plan pin: the relay's one-envelope export reads, encodes and fans out with no exchange") {
+    // The one-task frame's single partition satisfies the encode
+    // aggregate's clustering, so no shuffle is planned; a repartition or a
+    // grouping change that brings one back fails here. Static plan with
+    // AQE off (see the map-only pin); under AQE the executed plan's only
+    // query stage is its result stage, so AQE re-plans nothing.
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ResultQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.functions._
+    def frame() = graft.streaming.ChangeRelay.oneEnvelope(
+      spark.range(0, 50, 1, 4).select(lit("I").as("operation"), col("id").as("version"),
+        lit(null).cast("array<string>").as("changed"),
+        map(lit("k"), col("id").cast("string")).as("payload")), 1000)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val static =
+      try frame().queryExecution.executedPlan
+      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert(static.collectWithSubqueries { case e: Exchange => e }.isEmpty,
+      s"the one-envelope export plans an exchange:\n$static")
+    val adaptive = frame()
+    assert(adaptive.collect().map(_.getAs[Long]("rows")).toSeq == Seq(50L))
+    val stages = adaptive.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.collectWithSubqueries { case q: QueryStageExec => q }
+      case p => fail(s"expected an adaptive plan under AQE: $p")
+    }
+    assert(stages.nonEmpty && stages.forall(_.isInstanceOf[ResultQueryStageExec]),
+      s"AQE planned a stage besides the result: $stages")
+  }
+
   test("plan pin: a10_overview_totals keeps partial (map-side) aggregation below the exchange") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec

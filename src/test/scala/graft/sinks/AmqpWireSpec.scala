@@ -73,6 +73,6 @@ class AmqpWireSpec extends AnyFunSuite {
     val res = Amqp.publish("127.0.0.1", deadPort, "x", "y",
       "z".getBytes(StandardCharsets.UTF_8), "c")
     assert(res.isLeft)
-    assert(res.swap.toOption.get.endpointKey == "rabbitmq")
+    assert(res.swap.toOption.get.error.startsWith("ConnectException"))
   }
 }

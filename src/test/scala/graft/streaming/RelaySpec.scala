@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.model.{EnvironmentConfig, SinkEndpoint, TrackingObject}
+import graft.sinks.Sinks
 import graft.state.ParquetStateStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -27,6 +28,38 @@ class RelaySpec extends SparkSpec {
   private def cfg(sinks: Seq[SinkEndpoint] = Nil) = EnvironmentConfig(
     name = "prod", provider = "postgres",
     trackingObjects = Seq(obj), endpoints = sinks)
+
+  /** `body`'s result, with the SQL executions and the Spark jobs it ran. */
+  private def counted[T](body: => T): (T, Int, Int) = {
+    val sqlExecutions = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          sqlExecutions.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (out, sqlExecutions.get(), jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every `$version` in the pretty-printed envelope files under `dir`. */
+  private def exportedVersions(dir: Path): Seq[Long] = {
+    val files = Files.walk(dir)
+    try files.filter(Files.isRegularFile(_)).toArray.toSeq.flatMap(f =>
+      """"\$version": (\d+)""".r.findAllMatchIn(Files.readString(f.asInstanceOf[Path]))
+        .map(_.group(1).toLong)).sorted
+    finally files.close()
+  }
 
   test("end-to-end slice: export, watermark advance, second run incremental, delete round-trips") {
     val dir = tmp()
@@ -190,59 +223,36 @@ class RelaySpec extends SparkSpec {
     val feeds = objs.map(o => o -> outboxDf(Seq((1L, 1L, "I", 1.0,
       if (o.name == "j2") s"""{"k":"${"x" * 1000}"}""" else "{}"))))
 
-    val sqlExecutions = new java.util.concurrent.atomic.AtomicInteger()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          sqlExecutions.incrementAndGet()
-        case _ =>
-      }
-    }
-    val sc = spark.sparkContext
-    def counted[T](body: => T): (T, Int, Int) = {
-      org.apache.spark.TestListenerBus.drain(sc)
-      sqlExecutions.set(0)
-      jobs.set(0)
-      val out = body
-      org.apache.spark.TestListenerBus.drain(sc)
-      (out, sqlExecutions.get(), jobs.get())
-    }
-    sc.addSparkListener(listener)
-    try {
-      val (res, executions, _) = counted(relay.runCycles(feeds, "20240115000000"))
-      assert(res == objs.map(_.name -> (1L, 1L)).toMap)
-      assert(executions == 2 * objs.size,
-        s"expected one stats and one export execution per object, saw $executions")
-      assert(store.deadLetters.collect().map(_.getAs[String]("tracking_object_name")).toSeq == Seq("j2"))
+    val (res, executions, _) = counted(relay.runCycles(feeds, "20240115000000"))
+    assert(res == objs.map(_.name -> (1L, 1L)).toMap)
+    assert(executions == 2 * objs.size,
+      s"expected one stats and one export execution per object, saw $executions")
+    assert(store.deadLetters.collect().map(_.getAs[String]("tracking_object_name")).toSeq == Seq("j2"))
 
-      val letter = Seq(("k1", "j0", "prod", "db0", "h1", "{}", "boom"))
-        .toDF("source_key", "tracking_object_name", "environment_name",
-          "database_name", "data_hash", "data", "error_message")
-        .withColumn("timestamp", current_timestamp())
-      val (_, _, controlJobs) = counted {
-        store.watermarks.collect()
-        store.pauses.collect()
-        store.deadLetters.collect()
-        store.getWatermark("prod", "j0")
-        store.setWatermarks(Seq(("prod", "j0", 2L), ("prod", "j9", 1L)))
-        store.pause("obj:prod/j1", "maintenance", "ops")
-        store.resume("obj:prod/j1")
-        store.appendDeadLetters(letter)
-        store.purgeExpiredDeadLetters(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
-        // A failed replay widens the backoff by 60 s, then a successful one
-        // past that backoff deletes the batch.
-        assert(relay.replayCycle((_, _) => false, java.sql.Timestamp.valueOf("2024-01-15 00:00:00")) == ((0L, 2L)))
-        assert(relay.replayCycle((_, _) => true, java.sql.Timestamp.valueOf("2024-01-15 00:01:00")) == ((2L, 0L)))
-      }
-      assert(controlJobs == 0, s"control-state I/O submitted $controlJobs Spark jobs")
-      assert(store.deadLetters.collect().isEmpty)
-    } finally sc.removeSparkListener(listener)
+    val letter = Seq(("k1", "j0", "prod", "db0", "h1", "{}", "boom"))
+      .toDF("source_key", "tracking_object_name", "environment_name",
+        "database_name", "data_hash", "data", "error_message")
+      .withColumn("timestamp", current_timestamp())
+    val (_, _, controlJobs) = counted {
+      store.watermarks.collect()
+      store.pauses.collect()
+      store.deadLetters.collect()
+      store.getWatermark("prod", "j0")
+      store.setWatermarks(Seq(("prod", "j0", 2L), ("prod", "j9", 1L)))
+      store.pause("obj:prod/j1", "maintenance", "ops")
+      store.resume("obj:prod/j1")
+      store.appendDeadLetters(letter)
+      store.purgeExpiredDeadLetters(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
+      // A failed replay widens the backoff by 60 s, then a successful one
+      // past that backoff deletes the batch.
+      assert(relay.replayCycle((_, _) => false, java.sql.Timestamp.valueOf("2024-01-15 00:00:00")) == ((0L, 2L)))
+      assert(relay.replayCycle((_, _) => true, java.sql.Timestamp.valueOf("2024-01-15 00:01:00")) == ((2L, 0L)))
+    }
+    assert(controlJobs == 0, s"control-state I/O submitted $controlJobs Spark jobs")
+    assert(store.deadLetters.collect().isEmpty)
   }
 
-  test("job contract: a three-envelope object runs the same SQL executions and jobs as a one-envelope object") {
+  test("job contract: a three-envelope object runs the same SQL executions as a one-envelope object, and one job more") {
     val dir = tmp()
     val store = new ParquetStateStore(spark, dir.resolve("state").toString)
     val objs = Seq("one", "three").map(n => TrackingObject(n, "db0", "t", "sp"))
@@ -252,37 +262,118 @@ class RelaySpec extends SparkSpec {
       Some(dir.resolve("exports").toString + "/{object}/c-{batch}.json"), horizonOf = _ => 1000L)
     store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
     def feed(n: Long) = outboxDf((1L to n).map(i => (i, i, "I", i.toDouble, s"""{"k":$i}""")))
-
-    val sqlExecutions = new java.util.concurrent.atomic.AtomicInteger()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          sqlExecutions.incrementAndGet()
-        case _ =>
-      }
+    def run(obj: TrackingObject, rows: Long): (Int, Int) = {
+      val (res, executions, jobs) = counted(relay.runCycles(Seq(obj -> feed(rows)), "20240115000000"))
+      assert(res == Map(obj.name -> (rows, rows)))
+      (executions, jobs)
     }
-    val sc = spark.sparkContext
-    def counted(obj: TrackingObject, rows: Long): (Int, Int) = {
-      org.apache.spark.TestListenerBus.drain(sc)
-      sqlExecutions.set(0)
-      jobs.set(0)
-      assert(relay.runCycles(Seq(obj -> feed(rows)), "20240115000000") == Map(obj.name -> (rows, rows)))
-      org.apache.spark.TestListenerBus.drain(sc)
-      (sqlExecutions.get(), jobs.get())
-    }
-    sc.addSparkListener(listener)
-    val (one, three) =
-      try (counted(objs(0), 1L), counted(objs(1), 25L))
-      finally sc.removeSparkListener(listener)
+    val (one, three) = (run(objs(0), 1L), run(objs(1), 25L))
     assert(one._1 == 2, s"expected one id pass and one export execution, saw ${one._1}")
-    assert(three == one, s"three envelopes ran (executions, jobs) $three, one envelope $one")
+    // The one-envelope export runs in one task with no shuffle; the
+    // three-envelope export adds the shuffle map stage of its encode.
+    assert(three == ((one._1, one._2 + 1)),
+      s"three envelopes ran (executions, jobs) $three, one envelope $one")
     val batches = Files.list(dir.resolve("exports").resolve("three")).iterator()
     var names = Set.empty[String]
     while (batches.hasNext) names += batches.next().getFileName.toString
     assert(names == Set("c-0.json", "c-1.json", "c-2.json"))
+  }
+
+  test("one-job path: a second one-envelope cycle runs one SQL execution and one job per object, exporting the same bytes") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val objs = Seq("s0", "s1", "s2").map(n => TrackingObject(n, "db0", "t", "sp"))
+    val out = dir.resolve("exports")
+    val relay = new ChangeRelay(spark, store, EnvironmentConfig("prod", "postgres", objs,
+      Seq(SinkEndpoint("files", "file", out.toString + "/{timestamp}/{object}-{batch}-of-{totalbatches}.json"))),
+      None, horizonOf = _ => 1000L)
+    val feeds = objs.map(o => o -> outboxDf((1L to 5L).map(i =>
+      (i, i, if (i == 5L) "D" else "I", i.toDouble, s"""{"k":$i,"o":"${o.name}"}"""))))
+    def cycle(at: String) = {
+      store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
+      counted(relay.runCycles(feeds, at))
+    }
+    val (first, firstExecutions, _) = cycle("20240115000000")
+    val (second, executions, jobs) = cycle("20240115000100")
+    assert(first == objs.map(_.name -> (5L, 5L)).toMap && second == first)
+    assert(firstExecutions == 2 * objs.size, "an object new to the relay takes the two actions")
+    assert(executions == objs.size && jobs == objs.size,
+      s"expected one execution and one job per object, saw $executions executions and $jobs jobs")
+    assert(relay.lastCycleExecutorEnvelopes == objs.size)
+    def files(at: String) =
+      objs.map(o => Files.readAllBytes(out.resolve(at).resolve(s"${o.name}-0-of-1.json")).toSeq)
+    assert(files("20240115000100") == files("20240115000000"), "both paths write the same envelope bytes")
+  }
+
+  test("one-job path: a misprediction sends nothing from the capped task, then exports the exact delta") {
+    // A small delta, then one over the cap: a dense one (numbered by the
+    // id runs) and one with a repeated version (numberBatchesRange).
+    for ((name, next) <- Seq(
+        "dense" -> (4L to 28L),
+        "repeated version" -> ((4L to 27L) :+ 10L))) {
+      val dir = tmp()
+      val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+      val out = dir.resolve("exports")
+      // Every envelope fails the 5-byte http cap and dead-letters; the file
+      // endpoint writes every envelope sent.
+      val relay = new ChangeRelay(spark, store,
+        cfg(Seq(SinkEndpoint("ep1", "http", "http://x/{object}", enableCompression = false)))
+          .copy(maxRecordsPerBatch = 10, maxPayloadSizeBytes = 5L),
+        Some(out.toString + "/{timestamp}/c-{batch}.json"), horizonOf = _ => 1000L)
+      def rows(ids: Seq[Long]) = outboxDf(ids.zipWithIndex.map { case (i, k) =>
+        (i, i, "I", i.toDouble, s"""{"k":$i,"n":$k}""") })
+      store.setWatermark("prod", "orders", 0L)
+      assert(relay.runCycle(obj, rows(1L to 3L), "20240115000000") == ((3L, 3L)), name)
+      val letters = store.deadLetters.count()
+      val (res, executions, _) = counted(relay.runCycle(obj, rows((1L to 3L) ++ next), "20240115000100"))
+      assert(res == ((next.size.toLong, next.max)), s"$name: $res")
+      assert(store.getWatermark("prod", "orders").contains(next.max), name)
+      val envelopes = (next.size + 9) / 10
+      if (name == "dense") assert(executions == 3, "the capped task, then the two actions")
+      assert(Files.list(out.resolve("20240115000100")).count() == envelopes,
+        s"$name: the capped task wrote no file")
+      assert(store.deadLetters.count() - letters == envelopes,
+        s"$name: the capped task appended no dead letter")
+      assert(relay.lastCycleExecutorEnvelopes == envelopes, name)
+      assert(exportedVersions(out.resolve("20240115000100")) == next.sorted,
+        s"$name: exactly the delta's versions")
+    }
+  }
+
+  test("one-job path: after a delta over the cap, a small delta takes the two actions, then one job") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val relay = new ChangeRelay(spark, store, cfg().copy(maxRecordsPerBatch = 10),
+      Some(dir.resolve("exports").toString + "/{timestamp}/c-{batch}.json"), horizonOf = _ => 1000L)
+    def rows(ids: Seq[Long]) = outboxDf(ids.map(i => (i, i, "I", i.toDouble, s"""{"k":$i}""")))
+    store.setWatermark("prod", "orders", 0L)
+    val (big, _, bigJobs) = counted(relay.runCycle(obj, rows(1L to 25L), "20240115000000"))
+    val (small, smallExecutions, smallJobs) = counted(relay.runCycle(obj, rows(1L to 28L), "20240115000100"))
+    val (next, nextExecutions, nextJobs) = counted(relay.runCycle(obj, rows(1L to 30L), "20240115000200"))
+    assert(big == ((25L, 25L)) && small == ((3L, 28L)) && next == ((2L, 30L)))
+    assert(bigJobs == 3, "the id pass, then the encode's shuffle and the export")
+    assert((smallExecutions, smallJobs) == ((2, 2)), "the id pass, then the one-task export")
+    assert((nextExecutions, nextJobs) == ((1, 1)), "the previous delta fit: one job")
+    assert(exportedVersions(dir.resolve("exports")) == (1L to 30L))
+  }
+
+  test("one-job path: a dead-lettering one-envelope object appends exactly one letter, and a replay drains it") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val relay = new ChangeRelay(spark, store,
+      cfg(Seq(SinkEndpoint("ep1", "http", "http://x/{object}"))).copy(maxPayloadSizeBytes = 5L),
+      None, horizonOf = _ => 1000L)
+    def rows(ids: Seq[Long]) = outboxDf(ids.map(i => (i, i, "I", i.toDouble, s"""{"k":$i}""")))
+    store.setWatermark("prod", "orders", 0L)
+    relay.runCycle(obj, rows(1L to 2L), "20240115000000")
+    assert(store.deadLetters.count() == 1)
+    val (res, executions, jobs) = counted(relay.runCycle(obj, rows(1L to 4L), "20240115000100"))
+    assert(res == ((2L, 4L)) && (executions, jobs) == ((1, 1)))
+    val letters = store.deadLetters.select("error_message", "data").as[(String, String)].collect()
+    assert(letters.length == 2, s"one letter per cycle: ${letters.toSeq}")
+    assert(letters.exists(l => l._2.contains("\"Version\":4") && l._1.startsWith("ep1: payload")))
+    assert(relay.replayCycle((_, _) => true, java.sql.Timestamp.valueOf("2024-01-15 01:00:00")) == ((2L, 0L)))
+    assert(store.deadLetters.count() == 0)
   }
 
   test("two dead-lettering objects in one cycle keep every dead letter, with distinct ids") {
@@ -370,7 +461,7 @@ class RelaySpec extends SparkSpec {
       assert(n == 1 && v == 1L && store.getWatermark("prod", "orders").contains(1L), target)
       assert(Files.list(dir.resolve("exports")).count() == 1, s"$target: the file sink delivered")
       val errors = store.deadLetters.select("error_message").as[String].collect().toSeq
-      assert(errors == Seq(s"bad amqp target '$target'"), s"$target: only the amqp endpoint failed")
+      assert(errors == Seq(s"mq1: bad amqp target '$target'"), s"$target: only the amqp endpoint failed")
     }
   }
 
@@ -517,6 +608,47 @@ class RelaySpec extends SparkSpec {
     assert(store.deadLetters.count() == 1) // both endpoint failures collapse (D1)
   }
 
+  test("a dead letter names the configured key of the endpoint that failed") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    // A 300-byte cap between the envelope's gzip and its plain size: the
+    // plain endpoint fails, the gzip one passes.
+    val plain = SinkEndpoint("orders-hook", "http", "http://a/{object}", enableCompression = false)
+    val gzip = SinkEndpoint("audit-hook", "http", "http://b/{object}", enableCompression = true)
+    val relay = new ChangeRelay(spark, store, cfg(Seq(gzip, plain)).copy(maxPayloadSizeBytes = 300L),
+      None, horizonOf = _ => 1000L)
+    store.setWatermark("prod", "orders", 0L)
+    relay.runCycle(obj, outboxDf(Seq((1L, 1L, "I", 1.0, s"""{"k":"${"x" * 400}"}"""))), "20240115000000")
+    val one = store.deadLetters.select("error_message").as[String].collect().toSeq
+    assert(one.size == 1 && one.head.startsWith("orders-hook: payload "), one)
+
+    // Both fail: one letter (D1), the least error, which names its key.
+    val both = new ChangeRelay(spark, store, cfg(Seq(gzip, plain)).copy(maxPayloadSizeBytes = 5L),
+      None, horizonOf = _ => 1000L)
+    both.runCycle(obj, outboxDf(Seq((2L, 2L, "I", 2.0, """{"k":2}"""))), "20240115000100")
+    val errors = store.deadLetters.select("error_message").as[String].collect().toSeq
+    assert(errors.size == 2 && errors.exists(_.startsWith("audit-hook: payload ")), errors)
+  }
+
+  test("a file endpoint with a non-local scheme writes through the session's Hadoop settings") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val template = s"graftfs://${dir.resolve("lake")}/{object}-{batch}.json"
+    assert(Sinks.isLocal(dir.toString + "/{object}.json") && Sinks.isLocal("file:///x/{object}.json"))
+    assert(!Sinks.isLocal(template) && !Sinks.isLocal("hdfs://nn/x/{object}.json"))
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    hadoopConf.set("fs.graftfs.impl", classOf[SchemeLocalFileSystem].getName)
+    try {
+      val relay = new ChangeRelay(spark, store, cfg(Seq(SinkEndpoint("lake", "file", template))),
+        None, horizonOf = _ => 1000L)
+      store.setWatermark("prod", "orders", 0L)
+      assert(relay.runCycle(obj, outboxDf(Seq((1L, 1L, "I", 1.0, "{}"))), "20240115000000") == ((1L, 1L)))
+      assert(store.deadLetters.select("error_message").as[String].collect().isEmpty,
+        "the scheme resolves on the executors")
+      assert(Files.readString(dir.resolve("lake").resolve("orders-0.json")).contains("\"Version\": 1"))
+    } finally hadoopConf.unset("fs.graftfs.impl")
+  }
+
   test("a 10k-envelope cycle fans out on executors, never materializing payloads on the driver") {
     val dir = tmp()
     val store = new ParquetStateStore(spark, dir.resolve("state").toString)
@@ -547,3 +679,10 @@ class RelaySpec extends SparkSpec {
     assert(versions <= 2) // current + one predecessor
   }
 }
+
+/** The local file system under the made-up scheme `graftfs`, which only a
+  * Hadoop configuration naming it in `fs.graftfs.impl` resolves. */
+class SchemeLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem(
+    new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
+    })
