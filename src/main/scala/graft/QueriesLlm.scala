@@ -4023,9 +4023,8 @@ object QueriesLlm {
 
     Q("llm_manifest_diff",
       // Dataset-release audit: an append is simulated (batch A published,
-      // batch B appended with shard ids offset past A's max — exactly
-      // DatasetWriter.append's arithmetic) and the two versions' manifests
-      // are diffed. For an append-only store the invariant is visible in
+      // batch B appended with shard ids offset past A's max) and the two
+      // versions' manifests are diffed. For an append-only store the invariant is visible in
       // the output: A's shards 'unchanged', B's 'added', nothing
       // 'removed'/'changed'.
       (s, d) => {

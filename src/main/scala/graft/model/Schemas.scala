@@ -121,8 +121,6 @@ final case class EnvironmentConfig(
     // Defaults reference the single source of truth below — a re-stated
     // literal here could drift from Defaults.* silently.
     pollingIntervalSeconds: Int = Defaults.PollingIntervalSeconds, // Environment.cs:53-54
-    retryCount: Int = 3,                                           // Environment.cs:68-72
-    retryDelaySeconds: Int = 5,
     maxRecordsPerBatch: Int = Defaults.MaxRecordsPerBatch,         // Environment.cs:113-114
     maxPayloadSizeBytes: Long = Defaults.MaxPayloadSizeBytes,      // Environment.cs:110-111
     deadLetterMaxReplayAttempts: Int = Defaults.DlqMaxReplayAttempts, // Environment.cs:94-100

@@ -1,6 +1,6 @@
 package graft.runtime
 
-import graft.model.{EnvironmentConfig, SinkEndpoint, TrackingObject}
+import graft.model.EnvironmentConfig
 
 /** Config validation + dialect registry — the reference's
   * ConfigurationValidator (Source/Helpers/ConfigurationValidator.cs:26-396)
@@ -102,13 +102,9 @@ object Config {
     // WARNINGS, matching the reference's split: it runs with odd values but
     // says so. The reference validates these once on GlobalSettings; this
     // model folds the settings into each environment, so the bands apply
-    // per environment.
-    if (env.retryCount < 0)
-      warnings += s"RetryCount=${env.retryCount} is invalid; the default 3 will be used"
-    else if (env.retryCount > 10)
-      warnings += s"RetryCount=${env.retryCount} may be excessive (recommended 3-5)"
-    if (env.retryDelaySeconds < 1)
-      warnings += s"RetryDelaySeconds=${env.retryDelaySeconds}s is too low (minimum 1 s)"
+    // per environment. RetryCount/RetryDelaySeconds have no band because
+    // there is no retry setting: a failed object keeps its watermark and
+    // re-polls next cycle, and a failed envelope replays from the DLQ.
     if (env.maxRecordsPerBatch < 100)
       warnings += s"MaxRecordsPerBatch=${env.maxRecordsPerBatch} may create too many API calls (recommended 100-1000)"
     else if (env.maxRecordsPerBatch > 10000)
@@ -162,27 +158,6 @@ object Config {
     }
 
     Validation(errors.result(), warnings.result())
-  }
-
-  /** The whole-deployment startup validation surface
-    * (ConfigurationValidator.cs:26-75): per-environment rules plus the two
-    * deployment-level ERRORS — an empty environment list (:36-39) and a
-    * Health:Port outside 1-65535 (:47-50; pass None when the health
-    * endpoint is disabled, exactly the reference's nullable port). The
-    * reference throws on any error and only logs warnings;
-    * [[RelayManager]] enforces the same split via this result. */
-  def validateAll(envs: Seq[EnvironmentConfig],
-                  connectionStrings: Map[String, String] = Map.empty,
-                  healthPort: Option[Int] = None): Validation = {
-    val perEnv = envs.map(validate(_, connectionStrings))
-    val errors = Seq.newBuilder[String]
-    if (envs.isEmpty) errors += "no environments configured"
-    healthPort.foreach { p =>
-      if (p < 1 || p > 65535)
-        errors += s"Health:Port=$p is invalid (valid range 1-65535)"
-    }
-    Validation(errors.result() ++ perEnv.flatMap(_.errors),
-      perEnv.flatMap(_.warnings))
   }
 
   /** Per-broker required connection fields, mirroring the reference's

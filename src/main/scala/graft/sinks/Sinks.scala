@@ -1,17 +1,15 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import graft.functions.Scalars
 import graft.model.Defaults
 import java.nio.file.{Files, Paths}
 import org.apache.hadoop.conf.Configuration
 import java.nio.charset.StandardCharsets
 
-/** Sink layer: file export, HTTP/broker guards, Kafka shaping, circuit
-  * breaker, export failures. A file endpoint's template is a path whose
-  * scheme selects the storage: plain or `file:` paths are local, any
-  * other scheme goes through the Hadoop FileSystem ([[Sinks.writeFile]]).
+/** Sink layer: file export, HTTP/broker guards, circuit breaker, export
+  * failures. A file endpoint's template is a path whose scheme selects
+  * the storage: plain or `file:` paths are local, any other scheme goes
+  * through the Hadoop FileSystem ([[Sinks.writeFile]]).
   *
   * Zero-egress environment: network sinks implement the reference's full
   * guard/validation/batching surface (the part its own tests cover —
@@ -229,14 +227,6 @@ object Sinks {
         else Right(body)
     }
   }
-
-  /** K7 — Kafka sink shaping: the exact frame `format("kafka")` writes;
-    * native at scale (df.write.format("kafka") with these columns). */
-  def kafkaFrame(batch: DataFrame, topic: String, keyCol: String, valueJson: org.apache.spark.sql.Column): DataFrame =
-    batch.select(
-      col(keyCol).cast("string").as("key"),
-      valueJson.cast("string").as("value"),
-      lit(topic).as("topic"))
 
   /** K8 — circuit breaker per endpoint: opens after `threshold` consecutive
     * failures for `openMillis`. Driver-side state, like the reference's

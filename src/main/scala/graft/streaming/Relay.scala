@@ -615,16 +615,21 @@ object ChangeRelay {
     * widen backoff on failure. `attempt` is injectable exactly as in the
     * batch flavor, so endpoint recovery is testable. The replay cadence is
     * independent of the change-relay cadence, matching the reference's
-    * separate hosted service. */
+    * separate hosted service.
+    *
+    * Named `graft-replay-<environment>`, as the poller is
+    * `graft-relay-<environment>`, so the session refuses a second replay
+    * loop for a live environment: two loops would race due → attempt →
+    * update, and one could write back a letter the other had delivered
+    * and deleted. */
   def streamReplay(
       spark: SparkSession,
       relay: ChangeRelay,
       attempt: (String, String) => Boolean,
-      intervalSeconds: Int,
-      queryName: String): StreamingQuery =
+      intervalSeconds: Int): StreamingQuery =
     spark.readStream.format("rate").option("rowsPerSecond", 1).load()
       .writeStream
-      .queryName(queryName)
+      .queryName(s"graft-replay-${relay.config.name}")
       .trigger(Trigger.ProcessingTime(s"$intervalSeconds seconds"))
       .foreachBatch { (_: DataFrame, _: Long) =>
         relay.replayCycle(attempt,

@@ -95,6 +95,78 @@ class RegisteredQueriesSpec extends SparkSpec {
     assert(extra.isEmpty, s"unsanctioned mains in src/main: ${extra.toSeq.sorted.mkString(", ")}")
   }
 
+  /** `text` without its `//` and `/* */` comments. String and char literals
+    * are kept whole, so a `//` inside one (a URL) starts no comment. */
+  private def stripComments(text: String): String = {
+    val out = new java.lang.StringBuilder
+    val n = text.length
+    var i = 0
+    def keep(j: Int): Unit = { out.append(text, i, j); i = j }
+    while (i < n) {
+      if (text.startsWith("\"\"\"", i)) {
+        val close = text.indexOf("\"\"\"", i + 3)
+        var j = if (close < 0) n else close + 3
+        while (j < n && text.charAt(j) == '"') j += 1
+        keep(j)
+      } else if (text.charAt(i) == '"') {
+        var j = i + 1
+        while (j < n && text.charAt(j) != '"' && text.charAt(j) != '\n')
+          j += (if (text.charAt(j) == '\\') 2 else 1)
+        keep(math.min(j + 1, n))
+      } else if (text.startsWith("'\\", i) && text.indexOf('\'', i + 3) > 0) {
+        keep(text.indexOf('\'', i + 3) + 1)
+      } else if (text.charAt(i) == '\'' && i + 2 < n && text.charAt(i + 2) == '\'') {
+        keep(i + 3)
+      } else if (text.startsWith("//", i)) {
+        val eol = text.indexOf('\n', i)
+        i = if (eol < 0) n else eol
+      } else if (text.startsWith("/*", i)) {
+        var depth = 0
+        do {
+          if (text.startsWith("/*", i)) { depth += 1; i += 2 }
+          else if (text.startsWith("*/", i)) { depth -= 1; i += 2 }
+          else i += 1
+        } while (depth > 0 && i < n)
+        out.append(' ')
+      } else keep(i + 1)
+    }
+    out.toString
+  }
+
+  test("no spec-only code: every src/main file is reached from an entry point") {
+    // a piece only its own specs call is code nobody runs; the roots are the
+    // mains, the session extensions, the DataSourceRegister services and the
+    // library's public entry points, and a file is reached when a reached
+    // file names one of its top-level types outside a comment
+    val code = mainSources.map { case (f, text) => f -> stripComments(text) }.toMap
+    val decl = """(?m)^(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*(?:class|object|trait)\s+(\w+)""".r
+    val names = code.map { case (f, c) => f -> decl.findAllMatchIn(c).map(_.group(1)).toSet }
+    val services = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      "src/main/resources/META-INF/services/org.apache.spark.sql.sources.DataSourceRegister")), "UTF-8")
+      .split("\\s+").filter(_.nonEmpty).map(_.split('.').last).toSet
+    val entryPoints = sanctionedMains ++ Set("GraftExtensions", "Relay", "Observe", "FunnelStream")
+    val absent = entryPoints -- code.keySet.map(_.stripSuffix(".scala"))
+    assert(absent.isEmpty, s"entry points missing from src/main: ${absent.toSeq.sorted.mkString(", ")}")
+    val roots = code.keySet.filter { f =>
+      val stem = f.stripSuffix(".scala")
+      entryPoints(stem) || stem.startsWith("Streaming") || (names(f) & services).nonEmpty
+    }
+    val referencedBy = names.collect { case (f, ns) if ns.nonEmpty =>
+      f -> ns.mkString("\\b(?:", "|", ")\\b").r
+    }
+    val reached = scala.collection.mutable.Set[String]() ++= roots
+    val frontier = scala.collection.mutable.Stack[String]() ++= roots
+    while (frontier.nonEmpty) {
+      val from = code(frontier.pop())
+      referencedBy.foreach { case (f, ref) =>
+        if (!reached(f) && ref.findFirstIn(from).isDefined) { reached += f; frontier.push(f) }
+      }
+    }
+    val unreached = code.keySet -- reached
+    assert(unreached.isEmpty,
+      s"src/main files no main, query or entry point reaches: ${unreached.toSeq.sorted.mkString(", ")}")
+  }
+
   test("the engine library reads no environment variables") {
     // a tuning knob read from the environment is a second value beside the
     // constant in use; only the mains and the session harness read it

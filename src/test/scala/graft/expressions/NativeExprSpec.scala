@@ -1,7 +1,6 @@
 package graft.expressions
 
 import graft.SparkSpec
-import graft.ops.Skew
 import org.apache.spark.sql.functions._
 
 class NativeExprSpec extends SparkSpec {
@@ -63,13 +62,13 @@ class NativeExprSpec extends SparkSpec {
     intercept[java.io.IOException](GzipCodec.decompress(bad))
   }
 
-  test("native gzip via call_function in the Column API matches the UDF") {
+  test("call_function gzip_compress matches Scalars.gzip byte for byte") {
     val df = Seq("payload payload payload").toDF("t")
     val native = df.select(
       call_function("gzip_compress", $"t".cast("binary")).as("z")).as[Array[Byte]].head()
-    val viaUdf = df.select(
+    val direct = df.select(
       graft.functions.Scalars.gzip($"t".cast("binary")).as("z")).as[Array[Byte]].head()
-    assert(native.sameElements(viaUdf))
+    assert(native.sameElements(direct))
     // and stays inside a codegen'd projection (no BatchEvalPython/ScalaUDF node)
     val plan = df.select(call_function("gzip_compress", $"t".cast("binary")))
       .queryExecution.executedPlan.toString
@@ -168,16 +167,6 @@ class NativeExprSpec extends SparkSpec {
       .isInstanceOf[graft.expressions.QDot])
     assert(exprOf(Similarity.qdist2(col("a"), col("b")))
       .isInstanceOf[graft.expressions.QDist2])
-  }
-
-  test("salted aggregation matches plain groupBy under a hot key") {
-    val df = (1 to 1000).map(i => (if (i % 10 == 0) "cold" + i else "HOT", i.toLong))
-      .toDF("k", "v")
-    val salted = Skew.saltedCount(df, Seq("k"), $"v", buckets = 8)
-      .as[(String, Long)].collect().toMap
-    val plain = df.groupBy("k").count().as[(String, Long)].collect().toMap
-    assert(salted == plain)
-    assert(salted("HOT") == 900L)
   }
 
   test("span_counts and seg_groups: window semantics match the expression forms (r20)") {

@@ -723,4 +723,24 @@ class DedupSimilaritySpec extends SparkSpec {
     val hp = DedupOps.lshPlan(0.95, 16)
     assert(hp.rowsPerBand > DedupOps.lshPlan(0.3, 16).rowsPerBand)
   }
+
+  test("scorePairsExact matches in-row quantized dot products") {
+    val vecs = Seq(
+      (0L, Array(0.5f, -1.0f, 2.0f)),
+      (1L, Array(1.0f, 0.25f, -0.5f)),
+      (2L, Array(-2.0f, 0.0f, 1.5f))
+    ).toDF("vec_id", "embedding")
+    val pairs = Seq((0L, 1L), (0L, 2L), (1L, 2L)).toDF("id_a", "id_b")
+    val exact = Similarity.scorePairsExact(pairs, vecs)
+      .orderBy("id_a", "id_b").as[(Long, Long, Long)].collect()
+    // in-row scoring for comparison
+    val q = vecs.select($"vec_id", Similarity.quantize($"embedding").as("qv"))
+    val inRow = pairs
+      .join(q.select($"vec_id".as("id_a"), $"qv".as("qa")), Seq("id_a"))
+      .join(q.select($"vec_id".as("id_b"), $"qv".as("qb")), Seq("id_b"))
+      .select($"id_a", $"id_b", Similarity.qdot($"qa", $"qb").as("score"))
+      .orderBy("id_a", "id_b").as[(Long, Long, Long)].collect()
+    assert(exact.toSeq == inRow.toSeq)
+    assert(exact.head == ((0L, 1L, (500L * 1000 + -1000L * 250 + 2000L * -500))))
+  }
 }

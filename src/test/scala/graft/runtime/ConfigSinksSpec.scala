@@ -16,17 +16,6 @@ class ConfigSinksSpec extends SparkSpec {
       poll: Int = 30) =
     EnvironmentConfig("prod", provider, objs, eps, pollingIntervalSeconds = poll)
 
-  test("K7: kafkaFrame emits the native kafka sink frame (key/value/topic)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val batch = Seq((1L, "p1"), (2L, "p2")).toDF("id", "payload")
-    val frame = Sinks.kafkaFrame(batch, "graft-changes", "id",
-      to_json(struct(col("id"), col("payload"))))
-    assert(frame.columns.toSeq == Seq("key", "value", "topic"))
-    val rows = frame.as[(String, String, String)].collect().sortBy(_._1)
-    assert(rows.head == ("1", """{"id":1,"payload":"p1"}""", "graft-changes"))
-  }
-
   test("provider aliases normalize case-insensitively; unknown rejected") {
     assert(Config.normalizeProvider(" SqlServer ").contains("mssql"))
     assert(Config.normalizeProvider("PostgreSQL").contains("postgres"))
@@ -57,12 +46,6 @@ class ConfigSinksSpec extends SparkSpec {
     // every band.
     val base = env()
     val cases: Seq[(String, EnvironmentConfig, Option[String])] = Seq(
-      ("RetryCount -1 invalid",      base.copy(retryCount = -1),        Some("RetryCount=-1")),
-      ("RetryCount 0 ok",            base.copy(retryCount = 0),         None),
-      ("RetryCount 10 ok",           base.copy(retryCount = 10),        None),
-      ("RetryCount 11 excessive",    base.copy(retryCount = 11),        Some("RetryCount=11")),
-      ("RetryDelay 0 too low",       base.copy(retryDelaySeconds = 0),  Some("RetryDelaySeconds=0")),
-      ("RetryDelay 1 ok",            base.copy(retryDelaySeconds = 1),  None),
       ("MaxRecords 99 too chatty",   base.copy(maxRecordsPerBatch = 99),    Some("MaxRecordsPerBatch=99")),
       ("MaxRecords 100 ok",          base.copy(maxRecordsPerBatch = 100),   None),
       ("MaxRecords 10000 ok",        base.copy(maxRecordsPerBatch = 10000), None),
@@ -75,25 +58,10 @@ class ConfigSinksSpec extends SparkSpec {
       expect match {
         case Some(frag) => assert(v.warnings.exists(_.contains(frag)),
           s"$desc: expected a warning containing '$frag' in ${v.warnings}")
-        case None => assert(!v.warnings.exists(w => w.contains("RetryCount") ||
-          w.contains("RetryDelaySeconds") || w.contains("MaxRecords") ||
+        case None => assert(!v.warnings.exists(w => w.contains("MaxRecords") ||
           w.contains("MaxPayload")), s"$desc: unexpected band warning in ${v.warnings}")
       }
     }
-  }
-
-  test("validateAll: deployment-level errors — empty env list, Health:Port range") {
-    assert(Config.validateAll(Nil).errors.exists(_.contains("no environments")))
-    assert(Config.validateAll(Seq(env()), healthPort = Some(0))
-      .errors.exists(_.contains("Health:Port=0")))
-    assert(Config.validateAll(Seq(env()), healthPort = Some(65536))
-      .errors.exists(_.contains("Health:Port=65536")))
-    assert(Config.validateAll(Seq(env()), healthPort = Some(65535)).ok)
-    assert(Config.validateAll(Seq(env()), healthPort = None).ok) // health disabled
-    // Per-env errors and warnings aggregate through.
-    val agg = Config.validateAll(Seq(env(provider = "oracle"), env(poll = 2)))
-    assert(agg.errors.exists(_.contains("unknown provider")))
-    assert(agg.warnings.exists(_.contains("PollingIntervalSeconds")))
   }
 
   test("endpoint validation: unknown kind, missing target, malformed url") {

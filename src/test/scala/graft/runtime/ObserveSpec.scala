@@ -5,54 +5,8 @@ import graft.state.ParquetStateStore
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-class ResilienceObserveSpec extends SparkSpec {
+class ObserveSpec extends SparkSpec {
   import spark.implicits._
-
-  test("retry policy: fixed delay, N attempts, last failure propagates") {
-    var calls = 0
-    val sleeps = scala.collection.mutable.ArrayBuffer[Long]()
-    val policy = Resilience.RetryPolicy(attempts = 3, delayMillis = 5000)
-    val got = policy(sleep = sleeps += _) { calls += 1; if (calls < 3) throw new java.io.IOException("t"); 42 }
-    assert(got == 42 && calls == 3 && sleeps.toSeq == Seq(5000L, 5000L))
-
-    calls = 0
-    val ex = intercept[java.io.IOException] {
-      policy(sleep = _ => ()) { calls += 1; throw new java.io.IOException(s"fail $calls") }
-    }
-    assert(calls == 3 && ex.getMessage == "fail 3")
-  }
-
-  test("retry policy: non-retryable errors fail fast") {
-    var calls = 0
-    intercept[IllegalStateException] {
-      Resilience.RetryPolicy(3, 0)(Resilience.transientError, _ => ()) {
-        calls += 1; throw new IllegalStateException("fatal")
-      }
-    }
-    assert(calls == 1)
-  }
-
-  test("OAuth2 token cache: 60s slack, server lifetime, default lifetime, invalidate") {
-    var now = 0L
-    var fetches = 0
-    val cache = new Resilience.TokenCache(
-      fetch = _ => { fetches += 1; (s"tok$fetches", 100L) }, clock = () => now)
-    assert(cache.token("ep") == "tok1")
-    now = 100 * 1000 - 60001 // just inside validity (lifetime - slack)
-    assert(cache.token("ep") == "tok1" && fetches == 1)
-    now = 100 * 1000 - 59999 // past the slack boundary
-    assert(cache.token("ep") == "tok2" && fetches == 2)
-    cache.invalidate("ep")
-    assert(cache.token("ep") == "tok3")
-  }
-
-  test("auth header modes") {
-    assert(Resilience.authHeader("Bearer", "t")("Authorization") == "Bearer t")
-    assert(Resilience.authHeader("basic", "u:p")("Authorization") ==
-      "Basic " + java.util.Base64.getEncoder.encodeToString("u:p".getBytes("UTF-8")))
-    assert(Resilience.authHeader("apikey", "k") == Map("X-Api-Key" -> "k"))
-    assert(Resilience.authHeader("none", "x").isEmpty)
-  }
 
   test("observe: state rollup, dlq summary, overview over a live store") {
     val store = new ParquetStateStore(spark,

@@ -527,4 +527,40 @@ class ChangeV2SourceSpec extends SparkSpec {
     }
     assert(e3.getMessage.contains("foreachBatch relay"), e3.getMessage)
   }
+
+  test("U1/S1: OutboxSource honors the sync/seed contract") {
+    import graft.model.{EnvironmentConfig, TrackingObject}
+    import graft.state.ParquetStateStore
+    import graft.streaming.ChangeRelay
+    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
+    import java.nio.file.Files
+    // The outbox reaches the relay as a plain DataFrame; the relay applies
+    // the contract: Seed records the gated frontier and emits nothing, Sync
+    // emits rows after the watermark and under the horizon.
+    val outbox = Seq((1L, 1L, "I"), (2L, 2L, "U"), (3L, 99L, "U"))
+      .toDF("id", "xact_id", "operation")
+      .select($"id", $"xact_id", $"operation", lit(1.0).as("value"),
+        lit("{}").as("props"), lit(null).cast("array<string>").as("changed"))
+    val obj = TrackingObject("orders", "db0", "t", "sp")
+    val cfg = EnvironmentConfig("prod", "postgres", Seq(obj), Nil)
+    val store = new ParquetStateStore(spark,
+      Files.createTempDirectory("graft-lifecycle").resolve("state").toString)
+    val relay = new ChangeRelay(spark, store, cfg, None, horizonOf = _ => 50L)
+
+    store.setWatermark("prod", "orders", 1L)
+    assert(relay.runCycle(obj, outbox, "20240115000000") == (1L, 2L)) // > fromVersion, under horizon
+
+    // Seed is horizon-gated like Sync: id=3 sits in in-flight xact 99, so
+    // seeding must stop at 2 — an un-gated 3 would skip that row forever.
+    val seeded = new ParquetStateStore(spark,
+      Files.createTempDirectory("graft-lifecycle").resolve("state").toString)
+    val seeder = new ChangeRelay(spark, seeded, cfg, None, horizonOf = _ => 50L)
+    assert(seeder.runCycle(obj, outbox, "20240115000000") == (0L, 2L))
+    assert(seeded.getWatermark("prod", "orders").contains(2L)) // gated frontier agrees
+
+    // xact 99 commits: the next Sync picks up exactly the deferred row.
+    val synced = new ChangeRelay(spark, seeded, cfg, None, horizonOf = _ => 100L)
+    assert(synced.runCycle(obj, outbox, "20240115000100") == (1L, 3L))
+  }
 }

@@ -29,4 +29,17 @@ class JdbcChangeSpec extends AnyFunSuite {
     val one = ChangeV2.slices(500L, 501L, 502L, 8).map(_.asInstanceOf[ChangeSlice])
     assert(one.toSeq == Seq(ChangeSlice(500L, 501L, 502L)))
   }
+
+  test("S1 JDBC flavor: dialect call templates and the single JSON parameter") {
+    // the reference's two call shapes (SqlDialect.cs:52,70), resolved by alias
+    assert(Config.dialect("SqlServer").map(_.callSql("dbo.sp_x"))
+      .contains("EXEC dbo.sp_x @Parameter = ?"))
+    assert(Config.dialect("pgsql").map(_.callSql("get_changes"))
+      .contains("SELECT * FROM get_changes(?::jsonb)"))
+    assert(Config.dialect("oracle").isEmpty)
+    // each call binds exactly one placeholder: the shared JSON parameter
+    Seq("SqlServer", "pgsql").foreach { p =>
+      assert(Config.dialect(p).get.callSql("proc").count(_ == '?') == 1)
+    }
+  }
 }

@@ -88,8 +88,9 @@ class StreamingRelaySpec extends SparkSpec {
     val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
     val query = ChangeRelay.streamReplay(spark, relay,
       attempt = { (_, _) => attempts.incrementAndGet(); true },
-      intervalSeconds = 1, queryName = "graft-replay-prod")
+      intervalSeconds = 1)
     try {
+      assert(query.name == "graft-replay-prod")
       val deadline = System.currentTimeMillis() + 60000
       while (store.deadLetters.count() > 0 && System.currentTimeMillis() < deadline)
         Thread.sleep(500)
@@ -97,6 +98,27 @@ class StreamingRelaySpec extends SparkSpec {
         s"DLQ not drained by the streaming replay loop (${attempts.get()} attempts)")
       assert(attempts.get() >= 1)
     } finally query.stop()
+  }
+
+  test("a second streaming replay for a live environment is refused by its name") {
+    // Two replay loops on one environment would race due → attempt →
+    // update: a letter one loop delivered and deleted could be written
+    // back by the other.
+    val root = Files.createTempDirectory("graft-replay-once")
+    val store = new ParquetStateStore(spark, root.resolve("state").toString)
+    def relayOf(env: String) = new ChangeRelay(spark, store,
+      EnvironmentConfig(env, "postgres", Seq(TrackingObject("orders", "db0", "t", "sp")), Nil), None)
+    val live = ChangeRelay.streamReplay(spark, relayOf("once"), (_, _) => true, intervalSeconds = 1)
+    try {
+      val ex = intercept[IllegalArgumentException] {
+        ChangeRelay.streamReplay(spark, relayOf("once"), (_, _) => true, intervalSeconds = 1)
+      }
+      assert(ex.getMessage.contains("graft-replay-once"))
+      assert(spark.streams.active.filter(_.name == "graft-replay-once").map(_.id).toSeq == Seq(live.id))
+      // another environment's replay loop runs beside it
+      val other = ChangeRelay.streamReplay(spark, relayOf("twice"), (_, _) => true, intervalSeconds = 1)
+      try assert(other.isActive && live.isActive) finally other.stop()
+    } finally live.stop()
   }
 
   test("a failed duplicate start does not evict the live query's checkpoint claim") {
