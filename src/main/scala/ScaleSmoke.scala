@@ -1,6 +1,6 @@
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.ops.{DedupOps, Similarity}
+import graft.ops.{DedupOps, Lineage, Similarity}
 
 /** Scale smoke: replicate documents and embeddings by env-set factors and
   * check the dedup/ANN pipelines scale ~linearly in corpus size.
@@ -209,7 +209,7 @@ object ScaleSmoke {
       val batch = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
       val seen = DedupOps.lshBuckets(
           DedupOps.minhashSignature(committed, "doc_id", "text", 8), "doc_id", 8, 4)
-        .select(col("bucket"), col("band")).distinct().localCheckpoint()
+        .select(col("bucket"), col("band")).distinct().transform(Lineage.cut)
       val stateRows = seen.count() // materialize the state before the clock starts
       t(s"incr near-dedup ($stateRows-bucket state)")(
         DedupOps.incrementalNearDedup(batch, seen, "doc_id", "text")._1.count())
@@ -246,7 +246,7 @@ object ScaleSmoke {
       // SCALE_ROLLUP_ORDER=plain_first swaps the order so an A/B pair of
       // runs covers both orders (cache/load order bias).
       def plain(): Unit = t("source rollup (plain 1-join)") {
-        val occ = DedupOps.shingleHashRows(srcDocs, "doc_id", "text").localCheckpoint()
+        val occ = DedupOps.shingleHashRows(srcDocs, "doc_id", "text").transform(Lineage.cut)
         val perShingle = occ.groupBy(col("_h")).agg(countDistinct(col("doc_id")).as("_nd"))
         occ.join(srcDocs.select(col("doc_id"), col("src")), Seq("doc_id"))
           .join(perShingle, Seq("_h"))
@@ -381,7 +381,7 @@ object ScaleSmoke {
     // Multimodal growth (r10): REAL javax.imageio / javax.sound decodes
     // over binary rows — previously the only extension family without a
     // measured growth law. Synthesis is materialized UNTIMED
-    // (localCheckpoint after an explicit repartition — the round-4
+    // (a lineage cut after an explicit repartition — the round-4
     // single-row-group rule: heavy per-row work needs pre-split input);
     // the timed stages are the per-row header/frame decodes + the framing
     // rollup, embarrassingly parallel map-side work that must grow
@@ -392,9 +392,9 @@ object ScaleSmoke {
       import spark.implicits._
       val mmN = math.max(n / 10, 1000L)
       val ids = spark.range(mmN).select(col("id").as("doc_id")).repartition(64)
-      val pngs = Multimodal.syntheticImages(ids).localCheckpoint()
-      val wavs = Multimodal.syntheticWavs(ids).localCheckpoint()
-      val gifs = Multimodal.syntheticGifs(ids).localCheckpoint()
+      val pngs = Multimodal.syntheticImages(ids).transform(Lineage.cut)
+      val wavs = Multimodal.syntheticWavs(ids).transform(Lineage.cut)
+      val gifs = Multimodal.syntheticGifs(ids).transform(Lineage.cut)
       t(s"mm image decode ($mmN media)")(
         Multimodal.realDecodeMeta(pngs).count())
       t(s"mm audio decode ($mmN media)")(
@@ -508,7 +508,7 @@ object ScaleSmoke {
       t(s"backbone components ($txN baskets)")(
         graft.ops.DedupOps.connectedComponentsDistributed(
           GraphOps.coOccurrenceEdges(rows, "txn", "item", minSupport = 2)
-            .localCheckpoint(), "pa", "pb").count())
+            .transform(Lineage.cut), "pa", "pb").count())
     }
 
     // Distributed PageRank growth (r15): edgeCap = 0 pins the DISTRIBUTED
@@ -560,7 +560,7 @@ object ScaleSmoke {
       // measured 12-18 s fused vs ~2 s split per 100k rows (round-7 rule
       // b). Real crawl inputs ARE a stored column, so the split shape is
       // the honest one; the checkpoint is ~70 B/row.
-      val urlsMat = urls.select(col("doc_id"), col("url")).localCheckpoint()
+      val urlsMat = urls.select(col("doc_id"), col("url")).transform(Lineage.cut)
       t("url normalize")(UrlOps.normalizeUrls(urlsMat, "url")
         .filter(length(col("url_norm")) + length(col("registrable_domain")) >= 0)
         .count())

@@ -712,7 +712,7 @@ object QueriesLlm {
         val counts = based
           .groupBy(col("lang").as("labeled"), col("predicted"))
           .agg(count(lit(1)).as("n_docs"))
-          .localCheckpoint(true)
+          .transform(Lineage.cut)
         val totals = counts.groupBy(col("labeled")).agg(sum(col("n_docs")).as("_t"))
         counts.join(totals, Seq("labeled"))
           .withColumn("share_ppm", expr("n_docs * 1000000 div _t"))
@@ -1455,7 +1455,7 @@ object QueriesLlm {
       // quadratic closure; components must still agree exactly).
       (s, d) => {
         val pairs = lshStarPairs(s, d)
-          .localCheckpoint() // consumed twice inside the loop seed
+          .transform(Lineage.cut) // consumed twice inside the loop seed
         DedupOps.connectedComponents(pairs, "id_a", "id_b")
           .select(col("node").as("doc_id"), col("label").as("cluster_id"))
       },
@@ -1475,7 +1475,7 @@ object QueriesLlm {
       // collision edge can straddle — the query proves it by carrying the
       // straddle count (necessarily zero) next to the per-split rollup.
       (s, d) => {
-        val pairs = lshStarPairs(s, d).localCheckpoint() // CC seed + straddle join
+        val pairs = lshStarPairs(s, d).transform(Lineage.cut) // CC seed + straddle join
         val cc = DedupOps.connectedComponents(pairs, "id_a", "id_b")
           .select(col("node").as("doc_id"), col("label"))
         // doc-scale narrow (2 longs/row); consumed by the rollup AND both
@@ -1485,7 +1485,7 @@ object QueriesLlm {
           .join(cc, Seq("doc_id"), "left_outer")
           .select(col("doc_id"),
             coalesce(col("label"), col("doc_id")).as("cluster_id"))
-          .localCheckpoint()
+          .transform(Lineage.cut)
         val split = Sampling.trainTestSplit(labeled, "cluster_id", 100)
           .select(col("doc_id"), col("cluster_id"), col("split"))
         val straddle = pairs
@@ -1646,7 +1646,7 @@ object QueriesLlm {
         // Materialize the candidate set before verification: jaccard()
         // consumes `pairs` twice (the pairs themselves + the left-semi doc
         // restriction), and without materialization the whole MinHash
-        // pipeline would be evaluated twice. localCheckpoint (not
+        // pipeline would be evaluated twice. A lineage cut (not
         // persist()) cuts the lineage eagerly AND lets the context cleaner
         // reclaim the blocks once the DataFrame is unreachable — an
         // unpersisted cache would leak into every later query of the
@@ -1654,7 +1654,7 @@ object QueriesLlm {
         // places between the two phases.
         val pairs = DedupOps.candidatePairs(
           DedupOps.lshBuckets(DedupOps.minhashSignature(docs, "doc_id", "text", 8), "doc_id"),
-          "doc_id").localCheckpoint()
+          "doc_id").transform(Lineage.cut)
         DedupOps.jaccard(pairs, docs, "doc_id", "text")
       },
       Some(withCtes(normDocsCte, shinglesCte, sigCte, bucketCte, pairsCte)(
@@ -1678,7 +1678,7 @@ object QueriesLlm {
         val docs = Tables.documents(s, d)
         val pairs = DedupOps.candidatePairs(
           DedupOps.lshBuckets(DedupOps.minhashSignature(docs, "doc_id", "text", 8), "doc_id"),
-          "doc_id").localCheckpoint()
+          "doc_id").transform(Lineage.cut)
         DedupOps.containment(pairs, docs, "doc_id", "text")
       },
       Some(withCtes(normDocsCte, shinglesCte, sigCte, bucketCte, pairsCte)(
@@ -2247,7 +2247,7 @@ object QueriesLlm {
           .agg(max_by(struct(col("cid"), qd2.as("d2")),
             struct(col("_cscore"), -col("cid"))).as("_a"))
           .select(col("vec_id"), col("_a.cid").as("cluster"), col("_a.d2").as("d2"))
-          .localCheckpoint(eager = false) // feeds means AND ratios (plan lint)
+          .transform(Lineage.cutLazy) // feeds means AND ratios (plan lint)
         val means = assign.groupBy(col("cluster"))
           .agg(floor(avg(col("d2"))).cast("long").as("mean_d2"))
         assign.join(broadcast(means), Seq("cluster"))
@@ -3373,7 +3373,7 @@ object QueriesLlm {
         // identical: yesterday's buckets are exactly those of split<500.
         val allBuckets = DedupOps.lshBuckets(
           DedupOps.minhashSignature(docs, "doc_id", "text", 8), "doc_id")
-          .localCheckpoint()
+          .transform(Lineage.cut)
         val seen = allBuckets.filter(split < 500)
           .select(col("band"), col("bucket")).distinct()
         val (survivors, _) = DedupOps.incrementalNearDedupFromBuckets(
@@ -3629,7 +3629,7 @@ object QueriesLlm {
           .filter(length(col("tok")) > 0)
           .groupBy(col("tok")).agg(count(lit(1)).as("exact_cnt"))
           .withColumn("_h", DedupOps.hash60(col("tok")))
-          .localCheckpoint() // vocab-scale; feeds BOTH the sketch and top-20
+          .transform(Lineage.cut) // vocab-scale; feeds BOTH the sketch and top-20
         val cms = Sketches.cmsSketch(tokCounts, Nil, col("_h"),
           weightCol = Some(col("exact_cnt")))
         val top = tokCounts
@@ -4047,7 +4047,7 @@ object QueriesLlm {
             partitionCols = Seq("_isB")),
           "shard_id", "doc_id", "n_tokens", col("_csum"),
           extraKeys = Seq("_isB"))
-          .localCheckpoint(eager = false) // shard-scale; feeds both sides ×3
+          .transform(Lineage.cutLazy) // shard-scale; feeds both sides ×3
         val statCols = Seq("n_docs", "shard_tokens", "content_sum",
           "min_id", "max_id").map(col)
         // A's max shard id rides a single-partition window over the
@@ -4624,7 +4624,7 @@ object QueriesLlm {
           val pairs = DedupOps.candidatePairs(
             DedupOps.lshBuckets(
               DedupOps.minhashSignature(docs, "doc_id", "text", 8), "doc_id"),
-            "doc_id").localCheckpoint()
+            "doc_id").transform(Lineage.cut)
           DedupOps.editVerify(pairs, docs, "doc_id", "text", prefixLen = 200)
         },
         Some(withCtes(

@@ -28,8 +28,8 @@ object Tables {
     * session's plans forever. A weak-keyed map cannot fix this: the cached
     * DataFrame strongly references its session, so the value pins the key.
     * The sweep is O(entries) over sessions × tables — trivially small. */
-  private[graft] def sweepStopped[K](
-      m: java.util.concurrent.ConcurrentHashMap[K, DataFrame],
+  private[graft] def sweepStopped[K, V](
+      m: java.util.concurrent.ConcurrentHashMap[K, V],
       sessionOf: K => SparkSession): Unit = {
     val it = m.keySet.iterator()
     while (it.hasNext) if (sessionOf(it.next()).sparkContext.isStopped) it.remove()

@@ -40,18 +40,13 @@ object GzipCodec {
   private val bufTL = ThreadLocal.withInitial[Array[Byte]](
     () => new Array[Byte](8192))
 
-  // OS byte derived from a one-time GZIPOutputStream probe at class init
-  // (r20 advice): Java 16+ writes 0xff ("unknown", JDK-8244706), older
-  // JREs wrote 0 — deriving it from the RUNNING JVM's encoder enforces
-  // the byte-identity contract at class load, not only when the pinning
-  // spec happens to run on the deploy JVM.
-  private val osByte: Byte = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val g = new java.util.zip.GZIPOutputStream(bos); g.close()
-    bos.toByteArray()(9)
-  }
+  // OS byte 0xff ("unknown"): what GZIPOutputStream writes from JDK 16 on
+  // (JDK-8244706; older JREs wrote 0). Spark 4 runs only on JDK 17+, so
+  // the constant IS the JDK stream's header on every JVM that can run
+  // this code — and, unlike a per-JVM probe, no two executors can emit
+  // different headers for the same input.
   private val header =
-    Array[Byte](0x1f, 0x8b.toByte, 8, 0, 0, 0, 0, 0, 0, osByte)
+    Array[Byte](0x1f, 0x8b.toByte, 8, 0, 0, 0, 0, 0, 0, 0xff.toByte)
 
   private def writeIntLE(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
     out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)

@@ -45,7 +45,7 @@ object Assemble {
     * added as `cum` (internals `_key`, `_b`, `_v` retained for callers that
     * need the order key; drop them at the edge).
     *
-    * The input is localCheckpointed once: it feeds BOTH the bucket-subtotal
+    * The input is lineage-cut once: it feeds BOTH the bucket-subtotal
     * aggregate and the per-bucket window, and at corpus scale re-deriving
     * the value column (typically a tokenization) twice costs more than
     * materializing the narrow (id, value) projection — callers should
@@ -70,13 +70,9 @@ object Assemble {
       .withColumn("_key", shuffleKey(col(idCol), salt))
       .withColumn("_b", shiftright(col("_key"), shift))
       .withColumn("_v", value.cast("long"))
-      // eager=false still materializes every query stage below the final
-      // one at CONSTRUCTION time under AQE (AdaptiveSparkPlanExec.execute
-      // runs getFinalPhysicalPlan), so lazy-vs-eager only moves the final
-      // stage + block write out of the build phase — a one-job-round
-      // lever, A/B'd via this conf (three-leg FloorProfile, r21).
-      .localCheckpoint(eager =
-        df.sparkSession.conf.get("spark.graft.cumsumEagerCkpt", "false").toBoolean)
+      // lazy: an eager cut measured a wash at one more job per query
+      // (three-leg FloorProfile, both orders; BENCHNOTES)
+      .transform(Lineage.cutLazy)
     // ≤ groups × `buckets` rows: the subtotal window is bounded by
     // construction, never by data volume.
     val offsets = keyed.groupBy(pcols :+ col("_b"): _*)
@@ -256,7 +252,7 @@ object Assemble {
       .agg(count(lit(1)).as("avail"))
       .join(wdf, Seq("_src"))
       .withColumn("_nfeas", expr(s"avail * ${wTotal}L div _w"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     val n = avail.agg(min(col("_nfeas")).as("_n"))
     val plan = avail.crossJoin(n)
       .withColumn("target_n", expr(s"_w * _n div ${wTotal}L"))
@@ -434,7 +430,7 @@ object Assemble {
       .select(col(idCol), col(scoreCol).cast("long").as("score"),
         col(tokensCol).cast("long").as("n_tokens"))
       .filter(col("score").isNotNull && col("n_tokens").isNotNull)
-      .localCheckpoint() // feeds the rollup AND both admission passes
+      .transform(Lineage.cut) // feeds the rollup AND both admission passes
     // ≤ |score domain| rows (caller contract: bounded integer score) —
     // score-domain-scale collect, never corpus-scale.
     val rollup = narrow.groupBy(col("score"))

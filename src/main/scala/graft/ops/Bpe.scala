@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Scale shape (the k-means precedent): the ONLY corpus-scale pass is the
   * word-frequency count, whose keys are the word VOCABULARY (Zipf/Heaps
   * bounded, never the corpus) so map-side partial aggregation does the
-  * heavy lifting. The vocabulary is localCheckpoint'd once (compact:
+  * heavy lifting. The vocabulary is lineage-cut once (compact:
   * one row per distinct word) and every merge round is a narrow
   * `replace` over it plus one bounded pair-count aggregation and a
   * 1-row argmax collect — driver state is the merge table (k rows),
@@ -75,7 +75,7 @@ object Bpe {
   def initialVocab(docs: DataFrame, textCol: String): DataFrame =
     wordFreqs(docs, textCol)
       .select(wrapWord(col("word")).as("w"), col("freq"))
-      .localCheckpoint(eager = false)
+      .transform(Lineage.cutLazy)
 
   /** Apply one merge to a wrapped segmentation. */
   def applyMerge(wrappedCol: Column, m: Merge): Column =

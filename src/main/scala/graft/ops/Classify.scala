@@ -98,7 +98,7 @@ object Classify {
     val counts = occurrences(train, idCol, textCol, Seq(classCol))
       .groupBy(col("_token"), col(classCol).as("_cls"))
       .agg(count(lit(1)).as("_cnt"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     // Class totals and vocabulary size: class-scale / single-row collects.
     val stats = counts.groupBy(col("_cls")).agg(sum(col("_cnt")).as("_tot"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -154,7 +154,7 @@ object Classify {
     // LogicalRDD scan keeps the join skew-split eligible; the table is
     // vocabulary-bounded so the materialization is not corpus-scale.
     val wideJ = if (wide0.limit(probe + 1).count() <= probe) broadcast(wide0)
-                else wide0.localCheckpoint()
+                else wide0.transform(Lineage.cut)
     val joined = occ.join(wideJ, Seq("_token"), "left")
     val sums = m.classes.indices.map(i =>
       sum(coalesce(col(s"_p$i"), lit(m.floors(i)))).as(s"_s$i"))

@@ -18,25 +18,22 @@ import org.apache.spark.sql.functions._
   * `p = 2^31-1` in plain int64 arithmetic — so signatures, buckets and
   * candidate pairs are oracle-checkable in DuckDB, not just "plausible".
   *
-  * == localCheckpoint at cluster scale (the one-place statement) ==
-  * Operators here (and in Similarity/TextOps/GraphOps) cut lineage
-  * wherever a derived table feeds 2+ consumers or must be severed from its
-  * lineage before a skew-sensitive join (CLAUDE.md r4d, r10e).
-  * localCheckpoint (the default) stores deserialized partitions in
-  * EXECUTOR-LOCAL block storage: on this single-JVM sandbox that is free
-  * and correct, but on a real multi-executor cluster those blocks are LOST
+  * == Lineage cuts at cluster scale (the one-place statement) ==
+  * Operators here (and across `graft.ops`, the registry and the streaming
+  * operators) cut lineage wherever a derived table feeds 2+ consumers or
+  * must be severed from its lineage before a skew-sensitive join
+  * (CLAUDE.md r4d, r10e). Every cut goes through [[Lineage]], and the
+  * deployment picks where it lives: with no SparkContext checkpoint
+  * directory it is `localCheckpoint` — deserialized partitions in
+  * EXECUTOR-LOCAL block storage, free and correct single-JVM, but LOST
   * when an executor dies, failing the job (no lineage to recompute — that
-  * is the point of the cut). Cluster deployments pick the alternative via
-  * `spark.graft.checkpointMode` ([[Lineage]] — every DedupOps site routes
-  * through it, r19): `reliable` = `setCheckpointDir` + `checkpoint()`
-  * (HDFS/S3-backed, survives executor loss, costs a write + read);
-  * `persist` = MEMORY_AND_DISK + count() barrier (keeps lineage for fault
-  * recovery, re-runs the subtree on loss — sound only for the PLAN-shaping
-  * uses: duplicate-subtree prevention, AQE skew-split enablement).
-  * Explicit materialization to a parquet/Delta temp table remains the
-  * right call when a derived table is reused across queries. The
-  * drop-in-ness of `reliable` is spec-pinned (CheckpointSwapSpec), not
-  * just documented. Each call site's comment states WHY the cut is there;
+  * is the point of the cut). Setting a checkpoint directory
+  * (`spark.checkpoint.dir` or `setCheckpointDir`, HDFS/S3 on a cluster)
+  * turns every cut into a reliable `checkpoint()`, which survives executor
+  * loss at the cost of a write + read. Explicit materialization to a
+  * parquet/Delta temp table remains the right call when a derived table
+  * is reused across queries. That the reliable cut is a drop-in swap is
+  * spec-pinned (CheckpointSwapSpec), not just documented. Each call site's comment states WHY the cut is there;
   * this block states the trade-off once so per-site notes can stay short.
   */
 object DedupOps {
@@ -372,7 +369,7 @@ object DedupOps {
     * plus the absolute error — the measurement that tunes (numPerms,
     * bands) on real data before committing a 100 TB dedup run to them.
     *
-    * Cost shape: the signature table is built once and localCheckpointed
+    * Cost shape: the signature table is built once and lineage-cut
     * (it feeds both the banding pipeline and the per-pair estimate join —
     * round-4 rule (d)), the true Jaccard runs candidate-restricted via
     * [[jaccard]], and everything downstream of candidate generation is
@@ -470,7 +467,7 @@ object DedupOps {
     * takes the min label among itself and its neighbours; fixpoint after
     * `diameter` rounds (near-dup clusters are shallow — a handful of
     * rounds). Each round is one join + one groupBy(min) — all map-side
-    * combinable — with the lineage cut per round (`localCheckpoint`), so
+    * combinable — with the lineage cut per round ([[Lineage]]), so
     * the plan never grows with iterations. The driver-side loop only reads
     * a 1-row convergence probe per round, never the labels.
     *
@@ -682,7 +679,7 @@ object DedupOps {
     * `maxDocs` docs — an aggregate cannot return them without unbounded
     * collect state on the hot boilerplate groups it exists to drop):
     * countDistinct groupBy, hash join back, per-doc fold, with the
-    * shared segment rows localCheckpointed (round-4 rule d). */
+    * shared segment rows lineage-cut (round-4 rule d). */
   def dropBoilerplateSegments(docs: DataFrame, idCol: String, textCol: String,
                               segTokens: Int = 8, maxDocs: Int = 1): DataFrame = {
     val totals = docs.select(col(idCol),
@@ -980,7 +977,7 @@ object DedupOps {
     * both the HOF chain and the shuffle shape). Every input doc returns a
     * row (fully-masked or empty docs with cleaned_text "").
     *
-    * The dup-span election table is localCheckpointed (it is an AGGREGATE
+    * The dup-span election table is lineage-cut (it is an AGGREGATE
     * feeding a join whose probe keys are Zipf-hot boilerplate spans —
     * round-10 rule e: without the cut AQE cannot skew-split the fallback
     * join) and the mask join auto-selects broadcast-vs-shuffle from a

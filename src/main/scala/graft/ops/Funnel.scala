@@ -60,49 +60,22 @@ object Funnel {
     * size estimate exceeds this never probes — at 100 TB the chained-path
     * decision is free (no job), and under it the probe's LIMIT-bounded
     * count reads at most cap+1 rows, never the corpus. */
-  private val foldBytesCap = BigInt(512L << 20)
-
-  // Keyed on the canonicalized plan's semanticHash, NOT the plan object
-  // (r20 advice): retaining LogicalPlan trees would grow driver memory
-  // with every distinct slice a long-lived session probes. A hash
-  // collision can only return a stale STRATEGY verdict (both paths are
-  // exact — same blast radius as the documented snapshot staleness).
-  // Size-bounded: past `fitsFoldCacheMax` entries the cache clears —
-  // the re-probe costs one LIMIT-bounded count, never correctness.
-  private val fitsFoldCacheMax = 1024
-  private val fitsFoldCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, Long), java.lang.Boolean]()
+  private[ops] val foldBytesCap = BigInt(512L << 20)
 
   /** True when `relevant` verifiably holds ≤ `cap` rows (the
-    * `Similarity.fitsSmallCorpus` / `decontaminate` dispatch pattern).
-    *
-    * Memoized per (session, canonicalized-plan DIGEST, cap) — the
-    * ModelMemo keying discipline, holding no plan trees. The funnel family (steps, A/B, latency,
-    * …) probes the SAME relevant slice once per query; at the decade each
-    * probe is a ~0.7-1.2 s full pass of the slice (FloorProfile: it was
-    * most of ev_funnel/ev_ab_funnel's "build" time), and canonicalized
-    * keying dedups them to one probe per session. Same staleness boundary
-    * as ModelMemo/Tables: session-scoped snapshot-at-first-read, so an
-    * in-place rewrite of the events path within one session would reuse
-    * the old verdict (the dispatch is a pure strategy choice — both paths
-    * are exact, so a stale verdict can cost time, never correctness). */
+    * `Similarity.fitsSmallCorpus` / `decontaminate` dispatch pattern,
+    * through the same [[ModelMemo.fitsRows]] probe memo). The funnel
+    * family (steps, A/B, latency, …) probes the SAME relevant slice once
+    * per query; at the decade each probe is a ~0.7-1.2 s full pass of the
+    * slice (FloorProfile: it was most of ev_funnel/ev_ab_funnel's "build"
+    * time), and the memo dedups them to one probe per session. Same
+    * staleness boundary as ModelMemo/Tables: session-scoped
+    * snapshot-at-first-read, so an in-place rewrite of the events path
+    * within one session would reuse the old verdict (the dispatch is a
+    * pure strategy choice — both paths are exact, so a stale verdict can
+    * cost time, never correctness). */
   def fitsFold(relevant: DataFrame, cap: Long = foldEventsCap): Boolean =
-    cap > 0 && (cap == Long.MaxValue || {
-      val it = fitsFoldCache.keySet.iterator()
-      while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-      val key = (relevant.sparkSession,
-        relevant.queryExecution.analyzed.canonicalized.semanticHash(), cap)
-      val cached = fitsFoldCache.get(key)
-      if (cached != null) cached.booleanValue()
-      else {
-        val fits =
-          relevant.queryExecution.optimizedPlan.stats.sizeInBytes <= foldBytesCap &&
-            relevant.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).count() <= cap
-        if (fitsFoldCache.size >= fitsFoldCacheMax) fitsFoldCache.clear()
-        fitsFoldCache.put(key, java.lang.Boolean.valueOf(fits))
-        fits
-      }
-    })
+    cap > 0 && (cap == Long.MaxValue || ModelMemo.fitsRows(relevant, cap, foldBytesCap))
 
   /** Greedy sequential funnel: for each user, t1 = earliest `steps(0)`
     * event; t_{j+1} = earliest `steps(j)` event strictly after t_j and
@@ -247,7 +220,7 @@ object Funnel {
     * (user, variant); t_j = min step-j time strictly after t_{j-1} and
     * within the window of t1, via one step-filtered join per level. Each
     * intermediate is user-cardinality (not event-cardinality) and
-    * localCheckpointed because it feeds BOTH the next level's join and
+    * lineage-cut because it feeds BOTH the next level's join and
     * its own step count (round-4 rule d). `prepared` must carry
     * (_u, _v, _y, _t); output is one row per (_v, step) with the count of
     * users whose funnel reached it (variants absent from the data emit
@@ -265,16 +238,16 @@ object Funnel {
 
   /** The chained levels themselves: element i is the user-cardinality
     * frame (_u, _v, t1, tp) of users whose funnel reached step i+1, with
-    * tp = that step's time. Each level is localCheckpointed — it feeds
+    * tp = that step's time. Each level is lineage-cut — it feeds
     * both the next level's join and whatever readout the caller derives
     * (counts, latency histograms). */
   private def chainedLevels(prepared: DataFrame, steps: Seq[String],
                             windowSeconds: Long): Seq[DataFrame] = {
-    val e = prepared.localCheckpoint() // feeds k step-filtered joins
+    val e = prepared.transform(Lineage.cut) // feeds k step-filtered joins
     var cur = e.filter(col("_y") === steps.head)
       .groupBy(col("_u"), col("_v")).agg(min(col("_t")).as("t1"))
       .withColumn("tp", col("t1"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     val levels = scala.collection.mutable.ArrayBuffer(cur)
     steps.indices.tail.foreach { i =>
       cur = e.filter(col("_y") === steps(i)).select(col("_u"), col("_t"))
@@ -283,7 +256,7 @@ object Funnel {
           col("_t") <= col("t1") + windowSeconds)
         .groupBy(col("_u"), col("_v"), col("t1"))
         .agg(min(col("_t")).as("tp"))
-        .localCheckpoint()
+        .transform(Lineage.cut)
       levels += cur
     }
     levels.toSeq
@@ -397,12 +370,12 @@ object Funnel {
       .groupBy(col(typeCol).as("event_type"),
         expr(s"CAST($tsCol AS LONG) div 86400").as("day_idx"))
       .agg(sum(floor(col(valueCol) * 100).cast("long")).as("rev_cents"))
-      .localCheckpoint() // feeds the median layer AND the flag join
+      .transform(Lineage.cut) // feeds the median layer AND the flag join
     val med = daily.groupBy(col("event_type"))
       .agg((median(col("rev_cents")) * 2).cast("long").as("med2"))
     val dev = daily.join(broadcast(med), Seq("event_type"))
       .withColumn("dev2", abs(col("rev_cents") * 2 - col("med2")))
-      .localCheckpoint() // feeds the MAD aggregate AND the output
+      .transform(Lineage.cut) // feeds the MAD aggregate AND the output
     val mad = dev.groupBy(col("event_type"))
       .agg((median(col("dev2")) * 2).cast("long").as("mad4"))
     dev.join(broadcast(mad), Seq("event_type"))
@@ -500,7 +473,7 @@ object Funnel {
     val tr = transitionCounts(events, tsCol, userCol, typeCol, tieBreakCol)
       .select(col("from_type").as("f"), col("to_type").as("t"),
         col("transitions").as("cnt"))
-      .localCheckpoint() // probed, then read by whichever path wins
+      .transform(Lineage.cut) // probed, then read by whichever path wins
     val nodes = events.select(col(typeCol).as("node")).distinct()
     GraphOps.pageRankDispatch(tr, Some(nodes), iters, dampPpm, edgeCap)
   }
@@ -670,7 +643,7 @@ object Funnel {
       .agg(max(epochS(tsCol)).as("last_s"),
         count(lit(1)).as("freq"),
         sum(floor(col(valueCol) * 100).cast("long")).as("monetary_cents"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     def pri(salt: String) =
       -graft.ops.DedupOps.hash60(
         concat(lit(salt + ":"), col("user_id").cast("string")))
@@ -780,7 +753,7 @@ object Funnel {
       col(typeCol).as("event_type"),
       floor(col(valueCol) * 100).cast("long").as("v_cents"))
     val first = ev.groupBy(col("user_id")).agg(min(col("wk")).as("cohort_week"))
-      .localCheckpoint() // user-scale; feeds cohort sizes AND the revenue join
+      .transform(Lineage.cut) // user-scale; feeds cohort sizes AND the revenue join
     // `first` is one row per user by construction — plain count, no
     // distinct state (the oracle's count(DISTINCT user_id) is identical
     // on a deduped key).
@@ -819,7 +792,7 @@ object Funnel {
         floor(col(valueCol) * 100).cast("long").as("v_cents"))
       .withColumn("_pri", -DedupOps.hash60(
         concat(lit(salt + ":"), col("_id").cast("string"))))
-      .localCheckpoint() // feeds the sketch agg AND the clamp pass
+      .transform(Lineage.cut) // feeds the sketch agg AND the clamp pass
     def cutAt(q: Int) = element_at(col("_sv"),
       greatest(lit(1), ceil(lit(q) * size(col("_sv")) / 100.0)).cast("int"))
       .getField("v")

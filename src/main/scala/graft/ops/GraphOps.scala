@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *    join at a hub enumerates C(out-deg, 2), not C(deg, 2) — the
   *    difference between a star node costing |deg|² and costing |E|.
   *  - The backbone edge set and the oriented edge set each feed 2+
-  *    subtrees → `localCheckpoint` (round-4 rule d); both are
+  *    subtrees → a [[Lineage]] cut (round-4 rule d); both are
   *    support-pruned backbone-scale, not corpus-scale.
   */
 object GraphOps {
@@ -102,7 +102,7 @@ object GraphOps {
   def associationRulesOnBaskets(baskets: DataFrame, edges: DataFrame): DataFrame = {
     val itemN = baskets.select(explode(col("_items")).as("item"))
       .groupBy(col("item")).agg(count(lit(1)).as("n_item"))
-      .localCheckpoint() // joined on both rule sides
+      .transform(Lineage.cut) // joined on both rule sides
     edges.select(col("pa").as("ante"), col("pb").as("cons"), col("w"))
       .unionAll(edges.select(col("pb").as("ante"), col("pa").as("cons"), col("w")))
       .join(itemN.select(col("item").as("ante"), col("n_item").as("n_ante")), Seq("ante"))
@@ -125,7 +125,7 @@ object GraphOps {
     * (row-local, domain-capped baskets — see [[coOccurrenceEdges]]), one
     * item-keyed count, then joins that run on the support-pruned backbone
     * and the item table, never the fact table. The bounded backbone and
-    * item tables each feed two subtrees → `localCheckpoint` (round-4
+    * item tables each feed two subtrees → a [[Lineage]] cut (round-4
     * rule d). The FACT projection is deliberately NOT deduped-and-
     * checkpointed (r12 A/B, both orders: a wash at sf0.1 warm — 1.8-2.4 s
     * either way): `collect_set` already dedups within-basket, so the
@@ -147,9 +147,9 @@ object GraphOps {
     // warm): baskets 1.53-2.00 s vs rescan 2.27-2.59 s vs occurrence-ckpt
     // 2.34-3.35 s; identical 7146-row output.
     val baskets = basketTable(fact, txnCol, itemCol)
-      .localCheckpoint() // feeds pairs, item counts, and n_tx
+      .transform(Lineage.cut) // feeds pairs, item counts, and n_tx
     val edges = pairsFromBaskets(baskets, minSupport, maxBasket)
-      .localCheckpoint() // both directions of the union read it
+      .transform(Lineage.cut) // both directions of the union read it
     associationRulesOnBaskets(baskets, edges)
   }
 
@@ -222,7 +222,7 @@ object GraphOps {
                edgeCap: Int = prSmallEdgeCap): DataFrame = {
     val tr = edges.select(col(srcCol).as("f"), col(dstCol).as("t"))
       .groupBy(col("f"), col("t")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // probed, then read by whichever path wins
+      .transform(Lineage.cut) // probed, then read by whichever path wins
     pageRankDispatch(tr, None, iters, dampPpm, edgeCap)
   }
 
@@ -231,7 +231,7 @@ object GraphOps {
     * types INCLUDING isolated ones, which endpoint union cannot see: a
     * type occurring only as some user's sole event has no transition but
     * still receives base mass, and n changes every rank). `tr` must be the
-    * pre-aggregated (f, t, cnt) edge table, localCheckpointed by the
+    * pre-aggregated (f, t, cnt) edge table, lineage-cut by the
     * caller (it is probed AND read by whichever path wins). When a node
     * table is supplied it is cap-probed too — both the edge aggregate and
     * the node table must fit for the driver fast path; either over cap →
@@ -270,7 +270,7 @@ object GraphOps {
     * [[pageRankIterate]] — `r·p_ppm div 1e6` per edge, summed, then
     * `(base + damp·(contrib + dang div n)) div 1e6` — so the two paths
     * are bit-identical (GraphOpsSpec pins equality and the dispatch
-    * flip). Each round's rank table is localCheckpointed: it feeds the
+    * flip). Each round's rank table is lineage-cut: it feeds the
     * contrib join AND the dangling anti-join, and the lineage would
     * otherwise deepen by two joins per round. */
   def pageRankOnCounts(tr: DataFrame, iters: Int,
@@ -279,17 +279,17 @@ object GraphOps {
     val nodes = nodesDf.map(_.select(col("node")))
       .getOrElse(tr.select(col("f").as("node"))
         .union(tr.select(col("t").as("node"))))
-      .distinct().localCheckpoint() // re-read every round
+      .distinct().transform(Lineage.cut) // re-read every round
     val n = nodes.count()
     require(n > 0, "pageRankOnCounts: no nodes")
     val out = tr.groupBy(col("f")).agg(sum(col("cnt")).as("outc"))
-      .localCheckpoint() // p_ppm build + per-round dangling anti-join
+      .transform(Lineage.cut) // p_ppm build + per-round dangling anti-join
     val p = tr.join(out, "f")
       .select(col("f"), col("t"), expr("cnt * 1000000 div outc").as("p_ppm"))
-      .localCheckpoint() // joined every round
+      .transform(Lineage.cut) // joined every round
     val base = (1000000L - dampPpm) * 1000000L / n
     var r = nodes.select(col("node"), lit(1000000L / n).as("r"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     (1 to iters).foreach { _ =>
       val dang = r.join(out.select(col("f").as("node")), Seq("node"), "left_anti")
         .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
@@ -302,17 +302,17 @@ object GraphOps {
         .select(col("node"),
           expr(s"($base + $dampPpm * (coalesce(contrib, 0) + dang div $n)) " +
             "div 1000000").as("r"))
-        .localCheckpoint()
+        .transform(Lineage.cut)
     }
     r.select(col("node"), col("r").as("rank_ppm"))
   }
 
   def triangleSummary(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("pa"), col("pb")).localCheckpoint()
+    val e = edges.select(col("pa"), col("pb")).transform(Lineage.cut)
     val deg = e.select(col("pa").as("p"))
       .unionAll(e.select(col("pb").as("p")))
       .groupBy(col("p")).agg(count(lit(1)).as("d"))
-      .localCheckpoint() // joined twice into ranked + counted for n_nodes
+      .transform(Lineage.cut) // joined twice into ranked + counted for n_nodes
     val ranked = e
       .join(deg.select(col("p").as("pa"), col("d").as("_da")), Seq("pa"))
       .join(deg.select(col("p").as("pb"), col("d").as("_db")), Seq("pb"))
@@ -322,7 +322,7 @@ object GraphOps {
       .select(when(aFirst, col("pa")).otherwise(col("pb")).as("ku"),
         when(aFirst, col("pb")).otherwise(col("pa")).as("kv"),
         when(aFirst, col("_db")).otherwise(col("_da")).as("dv"))
-      .localCheckpoint() // wedge self-join (both sides) + closing join
+      .transform(Lineage.cut) // wedge self-join (both sides) + closing join
     val spokeOrder = col("e1.dv") < col("e2.dv") ||
       (col("e1.dv") === col("e2.dv") && col("e1.kv") < col("e2.kv"))
     val wedges = oriented.as("e1")

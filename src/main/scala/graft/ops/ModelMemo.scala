@@ -12,9 +12,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * deterministic (seeded, truncating/floor-half-up arithmetic, lowest-id
   * ties), so memoizing on the corpus' CANONICALIZED analyzed plan plus
   * every trainer parameter is bit-invisible to results — the same
-  * per-plan keying discipline as `Similarity.fitsSmallCorpus`'s probe
-  * memo. Values are driver-held bounded state (k×dim centroids, m×ksub
-  * codebooks, k-row merge lists, vocabulary-bounded classifier handles),
+  * per-plan keying discipline as the [[fitsRows]] probe memo. Values are
+  * driver-held bounded state (k×dim centroids, m×ksub codebooks, k-row
+  * merge lists, vocabulary-bounded classifier handles),
   * never corpus rows; keys of stopped sessions are swept like the Tables
   * caches.
   *
@@ -32,8 +32,7 @@ private[ops] object ModelMemo {
     (SparkSession, LogicalPlan, String), AnyRef]()
 
   def memo[T <: AnyRef](corpus: DataFrame, tag: String)(train: => T): T = {
-    val it = cache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
+    graft.Tables.sweepStopped(cache, (_: (SparkSession, LogicalPlan, String))._1)
     val key = (corpus.sparkSession,
       corpus.queryExecution.analyzed.canonicalized, tag)
     // NOT computeIfAbsent: training runs Spark jobs and may one day call
@@ -46,6 +45,35 @@ private[ops] object ModelMemo {
       val v = train
       val prev = cache.putIfAbsent(key, v)
       (if (prev != null) prev else v).asInstanceOf[T]
+    }
+  }
+
+  private val probesMax = 1024
+  private val probes = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, LogicalPlan, Long, BigInt), java.lang.Boolean]()
+
+  /** True when `df` verifiably holds ≤ `cap` rows: its optimizer size
+    * estimate is ≤ `bytesCap` (at 100 TB the answer is free, no job) AND a
+    * LIMIT-bounded count reads at most cap+1 rows, never the whole input.
+    * The dispatch probe behind `Similarity.fitsSmallCorpus` and
+    * `Funnel.fitsFold`: a family of queries probing the same slice pays
+    * one probe per session. Memoized like [[memo]], on the canonicalized
+    * plan and both caps — equal keys are equal plans, so no collision can
+    * send a corpus-scale slice to a driver-side path. Past `probesMax`
+    * entries the memo clears; a re-probe costs one bounded count. */
+  def fitsRows(df: DataFrame, cap: Long, bytesCap: BigInt): Boolean = {
+    graft.Tables.sweepStopped(probes, (_: (SparkSession, LogicalPlan, Long, BigInt))._1)
+    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized, cap, bytesCap)
+    val cached = probes.get(key)
+    if (cached != null) cached.booleanValue()
+    else {
+      val fits = df.queryExecution.optimizedPlan.stats.sizeInBytes <= bytesCap &&
+        // clamp: a cap near Long.MaxValue must degrade to "probe at Int
+        // range", not overflow limit() into an AnalysisException
+        df.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).count() <= cap
+      if (probes.size >= probesMax) probes.clear()
+      probes.put(key, java.lang.Boolean.valueOf(fits))
+      fits
     }
   }
 }

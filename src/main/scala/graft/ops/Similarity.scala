@@ -81,34 +81,13 @@ object Similarity {
     * estimate exceeds this never probes (at 100 TB the decision is free). */
   private val smallCorpusBytes = BigInt(8L << 20)
 
-  private val fitsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      java.lang.Boolean]())
-
   /** True when `corpus` verifiably has ≤ `cap` rows: optimizer size
     * estimate under [[smallCorpusBytes]] AND a LIMIT-bounded count probe
-    * (reads at most cap+1 rows, never the corpus — the
-    * `DedupOps.decontaminate` pattern). Memoized per analyzed plan, so the
-    * registry's shared corpus DataFrame pays one probe per session. */
+    * (the `DedupOps.decontaminate` pattern), memoized per session, plan
+    * and cap ([[ModelMemo.fitsRows]]), so the registry's shared corpus
+    * DataFrame pays one probe per session. */
   def fitsSmallCorpus(corpus: DataFrame, cap: Long = smallCorpusCap): Boolean =
-    cap > 0 && {
-      def probe(): Boolean =
-        corpus.queryExecution.optimizedPlan.stats.sizeInBytes <= smallCorpusBytes &&
-          // clamp: a cap override near Long.MaxValue must degrade to "probe
-          // at Int range", not overflow limit() into an AnalysisException
-          corpus.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).count() <= cap
-      if (cap != smallCorpusCap) probe() // memo is per-plan; only the default cap caches
-      else {
-        val key = corpus.queryExecution.analyzed
-        val cached = fitsCache.get(key)
-        if (cached != null) cached.booleanValue()
-        else {
-          val fits = probe()
-          fitsCache.put(key, java.lang.Boolean.valueOf(fits))
-          fits
-        }
-      }
-    }
+    cap > 0 && ModelMemo.fitsRows(corpus, cap, smallCorpusBytes)
 
   // The fused expressions operate on a QUANTIZED array column produced by
   // one [[quantize]] projection per row in a SEPARATE select below them
@@ -532,11 +511,11 @@ object Similarity {
           qnorm2Q(col("qv"), dim).as("n2"),
           array((0 until bands).map(b =>
             lshKeyQ(col("qv"), planesPerBand, dim, b * planesPerBand)): _*).as("_bks"))
-        .localCheckpoint(eager = false)
+        .transform(Lineage.cutLazy)
       // bb feeds both sides of the candidate self-join; checkpoint the
       // ≤ bands·smallCap-row explode so the Generate runs once (plan lint).
       val bb = keyed.select(col("vec_id"), posexplode(col("_bks")).as(Seq("band", "bucket")))
-        .localCheckpoint(eager = false)
+        .transform(Lineage.cutLazy)
       // Candidates stay OCCURRENCE-scale until after the minCos filter:
       // deduplicating 9M+ candidate rows BEFORE scoring (the former
       // `pairs.distinct()`) was the stage's dominant shuffle at the sf1.0
@@ -566,7 +545,7 @@ object Similarity {
       // Materialize the band/bucket keys once: the self-join below would
       // otherwise re-run the posexplode + bands×planes aggregate per side
       // (self-joins re-evaluate the shared subtree — see DedupOps scaladoc).
-      val bb = lshBandBuckets(corpus, bands, planesPerBand).localCheckpoint(eager = false)
+      val bb = lshBandBuckets(corpus, bands, planesPerBand).transform(Lineage.cutLazy)
       // Occurrence-scale candidates, post-filter dedup — same rationale as
       // the fused path above: the pre-score distinct of corpus²/2^planes
       // candidate rows is the dominant shuffle, the duplicate dots are
@@ -657,7 +636,7 @@ object Similarity {
     * and the k × dim means collect back to the driver. Compared to the
     * previous DataFrame-centroid form this removes per-iteration the
     * broadcast cross join, the argmax aggregate exchange, the centroid
-    * left-join and the localCheckpoint — and the corpus is scanned once
+    * left-join and the lineage cut — and the corpus is scanned once
     * per iteration at any scale. Deterministic: floor(m + 0.5) means
     * (half-up — identical in any engine, mirrored by the oracle), ties to
     * the lowest cid, empty clusters keep their previous centroid. */
@@ -926,7 +905,7 @@ object Similarity {
     * is skipped entirely, so a missing metric means "provably no skew
     * possible", not broken plumbing (r15 review note). Assignment is the one corpus-scale
     * aggregate (broadcast centroids + `max_by`, map-side partial); the
-    * assigned table is localCheckpoint'd because it feeds four plan
+    * assigned table is lineage-cut because it feeds four plan
     * branches (the cell-size rollup, both self-join sides and the final
     * kept projection — the round-4 duplicated-subtree rule; the
     * branches' salt join is a MAP-ONLY broadcast join over the
@@ -974,7 +953,7 @@ object Similarity {
         floor(col("cdot") * 1000 / sqrt((col("n2") * col("cn2")).cast("double")))
           .cast("long"))
       .select(col("vec_id"), col("cid"), col("v"), col("n2"), col("c_milli"))
-      .localCheckpoint(eager = false)
+      .transform(Lineage.cutLazy)
     // Cell-skew guard, cap-probe DISPATCHED (r15): a corpus that provably
     // fits `maxCellSize` rows cannot contain an over-cap cell
     // (|cell| ≤ N ≤ cap ⇒ nsplit ≡ 1 ⇒ salt ≡ 0), so the sizes rollup,
@@ -989,7 +968,7 @@ object Similarity {
     val (a, b) = if (guardNeeded) {
       // The tiny rollup is lazily checkpointed so both join sides read
       // one leaf instead of re-aggregating.
-      val sizes = sizesOf(assign, maxCellSize).localCheckpoint(eager = false)
+      val sizes = sizesOf(assign, maxCellSize).transform(Lineage.cutLazy)
       def salted(df: DataFrame): DataFrame =
         df.join(broadcast(sizes), Seq("cid"))
           .withColumn("_salt", pmod(xxhash64(col("vec_id")), col("_nsplit")))
@@ -1324,7 +1303,7 @@ object Similarity {
     // quadrupled the query (2.3-5.4 → 8.4-13.6 s warm at sf0.1, same-run
     // repeats): the round-7 rule-b flattened-literal hazard, not the
     // round-10 rule-f cheap-rescan case. Do not "optimize" this away.
-    val keyed = assigned.localCheckpoint(eager = false)
+    val keyed = assigned.transform(Lineage.cutLazy)
     val l = keyed.select(col("cid"), col("vec_id").as("query_id"),
       col("label").as("q_label"), col("v").as("qv"))
     val r = keyed.select(col("cid"), col("vec_id"),

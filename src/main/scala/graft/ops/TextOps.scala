@@ -701,7 +701,7 @@ object TextOps {
     val counts = occ.groupBy(col("tok"))
       .agg(sum(when(col("_in_a"), 1L).otherwise(0L)).as("cnt_a"),
         count(lit(1)).as("cnt_b"))
-      .localCheckpoint(eager = false) // feeds totals AND scoring (plan lint)
+      .transform(Lineage.cutLazy) // feeds totals AND scoring (plan lint)
     val totals = counts.agg(sum(col("cnt_a")).as("tot_a"),
       sum(col("cnt_b")).as("tot_b"))
     counts.crossJoin(broadcast(totals))
@@ -744,7 +744,7 @@ object TextOps {
     }
     val feats = based
       .select(col(idCol) +: dl.as("dl") +: tfCols: _*)
-      .localCheckpoint(eager = false) // feeds stats AND scoring (plan lint)
+      .transform(Lineage.cutLazy) // feeds stats AND scoring (plan lint)
     val statAggs = count(lit(1)).as("n_docs") +: sum(col("dl")).as("sum_dl") +:
       terms.indices.map(i =>
         sum(when(col(s"tf_$i") > 0, 1L).otherwise(0L)).as(s"df_$i"))
@@ -854,7 +854,7 @@ object TextOps {
     // Tokens never contain spaces, so w1 = substring_index(bigram, ' ', 1)
     // recovers the unigram key exactly, at vocab scale.
     val c2 = bigramCounts(refDocs).groupBy(col("_bg"))
-      .agg(sum(col("_c")).as("c2")).localCheckpoint()
+      .agg(sum(col("_c")).as("c2")).transform(Lineage.cut)
     val w1 = substring_index(col("_bg"), " ", 1)
     val c1 = c2.groupBy(w1.as("_w1")).agg(sum(col("c2")).as("c1"))
     val vocab = c2.agg(countDistinct(w1).as("v"))
@@ -868,7 +868,7 @@ object TextOps {
     // LogicalRDD scan keeps the join eligible. Bigram-vocab-bounded, never
     // corpus-scale.
     val weights = if (weights0.limit(probe + 1).count() <= probe) broadcast(weights0)
-                  else weights0.localCheckpoint()
+                  else weights0.transform(Lineage.cut)
     bigramCounts(docs.select(col(idCol), col(textCol)))
       .join(weights, Seq("_bg"), "left")
       .groupBy(col(idCol))
@@ -973,7 +973,7 @@ object TextOps {
           ColumnGlue.expression(col("_toks")),
           ColumnGlue.expression(lit(buckets.toLong))))).as("_g"))
       .select(col(idCol), col("_tgt"), col("_g.h").as("_b"), col("_g.c").as("c"))
-      .localCheckpoint(eager = false) // feeds weights AND scoring (plan lint)
+      .transform(Lineage.cutLazy) // feeds weights AND scoring (plan lint)
     // The rt/tt totals ride a single-partition window over the bucket
     // rollup (≤1024 rows, bounded by construction), so the rollup has ONE
     // consumer: the r20 lineage cut and its broadcast-totals round both
@@ -1131,7 +1131,7 @@ object TextOps {
     val grams = docs
       .select(explode(gramCounts(tokens(col(textCol)), 3)).as("_g"))
       .groupBy(col("_g.s").as("_s")).agg(sum(col("_g.c")).as("_c"))
-      .localCheckpoint() // vocab-scale; feeds uni (×2 joins), total, bi
+      .transform(Lineage.cut) // vocab-scale; feeds uni (×2 joins), total, bi
     val uni0 = grams.filter(!col("_s").contains(" "))
     // broadcast-vs-shuffle probe (the refFreqQuality/decontaminate
     // pattern): reads at most cap+1 rows off the checkpointed table
@@ -1171,7 +1171,7 @@ object TextOps {
     val scored = qualityFeatures(docs, textCol)
       .select(col(idCol) +: col("n_words").cast("long").as("n_words") +:
         extraCols.map(col): _*)
-      .localCheckpoint()
+      .transform(Lineage.cut)
     val cuts = Sketches.quantileSample(scored, col("n_words"), col(idCol),
         (1 to 9).map(_ * 10), k, salt)
       .agg(sort_array(collect_list(col("value"))).as("vl"))

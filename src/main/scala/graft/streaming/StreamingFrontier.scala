@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import graft.ops.Lineage
 import graft.state.ParquetStateStore
 
 /** Streaming crawl frontier — the continuous flavor of
@@ -55,20 +56,20 @@ object StreamingFrontier {
       // (round-4 rule d; micro-batch-sized rows).
       val b = batch.select(col("domain").cast("string").as("domain"),
           col("doc_id").cast("long").as("doc_id"))
-        .localCheckpoint()
+        .transform(Lineage.cut)
       val drawn = b.groupBy(col("domain"))
         .agg(expr(s"topk_pairs(-doc_id, doc_id, $maxPerDomain)").as("_top"))
       val st = domainState(store)
       val staged = drawn.join(st, Seq("domain"), "left")
         .withColumn("n0", coalesce(col("n_sched"), lit(0L)))
-        .localCheckpoint() // feeds the schedule AND the new state; one eval
+        .transform(Lineage.cut) // feeds the schedule AND the new state; one eval
       val sched = staged
         .select(col("domain"), col("n0"), posexplode(col("_top")))
         .filter(col("pos") + col("n0") < maxPerDomain)
         .select(col("domain"), col("col.id").as("doc_id"),
           (col("pos") + col("n0")).as("slot"))
         .withColumn("sched_s", col("slot") * lit(delaySec.toLong))
-        .localCheckpoint() // written AND feeds the new state; one evaluation
+        .transform(Lineage.cut) // written AND feeds the new state; one evaluation
       sched.write.mode(SaveMode.Overwrite).parquet(out)
       val taken = sched.groupBy(col("domain")).agg(count(lit(1)).as("_t"))
       staged.select(col("domain"), col("n0"))

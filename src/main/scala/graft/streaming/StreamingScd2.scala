@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
-import graft.ops.Incremental
+import graft.ops.{Incremental, Lineage}
 import graft.state.ParquetStateStore
 
 /** Streaming SCD2 maintenance — the incremental flavor of
@@ -56,7 +56,7 @@ object StreamingScd2 {
       // materialize once (round-4 rule d; micro-batch-sized rows).
       val b = batch.select(col("k").cast("string").as("k"),
         col("id").cast("long").as("id"), col("op").cast("string").as("op"))
-        .localCheckpoint()
+        .transform(Lineage.cut)
       val iv = Incremental.scd2Intervals(b, "k", "id", "op")
         .select(col("k"), col("valid_from"), col("valid_to"), col("op"),
           col("is_current"))

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `local-cluster[2,2,1024]` — real Master/Worker, SEPARATE executor
   * JVMs, a genuine serialization boundary for task binaries, driver-held
   * Literals, and the native TypedImperativeAggregates' serialize/merge
-  * paths — with `spark.graft.checkpointMode = reliable`, and must produce
+  * paths — with a checkpoint directory set (every lineage cut is then a
+  * reliable `checkpoint()`), and must produce
   * output identical to a plain `local[4]` run of the same queries.
   *
   * Opt-in (the ScaleSmoke precedent): requires BOTH env vars —
@@ -81,9 +82,8 @@ class ClusterSmokeSpec extends AnyFunSuite {
     s
   }
 
-  private def runAll(s: SparkSession, mode: String): Map[String, Seq[String]] = {
-    s.conf.set("spark.graft.checkpointMode", mode)
-    if (mode == "reliable") s.sparkContext.setCheckpointDir(
+  private def runAll(s: SparkSession, reliable: Boolean): Map[String, Seq[String]] = {
+    if (reliable) s.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("graft-cluster-ckpt").toString)
     queryNames.map { q =>
       q -> SparkEntry.queries(q)(s, sfDir).collect().map(_.toString).sorted.toSeq
@@ -99,12 +99,12 @@ class ClusterSmokeSpec extends AnyFunSuite {
       val s = session("local-cluster[2,2,1024]")
       try {
         assert(s.sparkContext.master.startsWith("local-cluster"))
-        runAll(s, mode = "reliable")
+        runAll(s, reliable = true)
       } finally s.stop()
     }
     val local = {
       val s = session("local[4]")
-      try runAll(s, mode = "local") finally s.stop()
+      try runAll(s, reliable = false) finally s.stop()
     }
     for (q <- queryNames) {
       assert(cluster(q).nonEmpty, s"$q returned zero rows under local-cluster")

@@ -197,6 +197,30 @@ class RegisteredQueriesSpec extends SparkSpec {
     assert(progress.isEmpty, s"batch progress kept outside the store: ${progress.sorted.mkString(", ")}")
   }
 
+  test("one lineage cut") {
+    // a raw localCheckpoint or checkpoint picks the cut's storage at the
+    // call site; through Lineage the deployment's checkpoint directory does
+    assert(mainSources.nonEmpty, "no sources found: wrong working directory?")
+    val raw = mainSources.collect {
+      case (f, text) if f != "Lineage.scala" =>
+        val code = stripComments(text)
+        f -> (code.split("localCheckpoint\\(", -1).length +
+          code.split("\\.checkpoint\\(", -1).length - 2)
+    }.filter(_._2 > 0)
+    assert(raw.isEmpty, "lineage cuts outside Lineage.scala: " +
+      raw.sortBy(_._1).map { case (f, n) => s"$f ($n)" }.mkString(", "))
+  }
+
+  test("no graft session switch") {
+    // the library reads no spark.graft.* key: a session switch is a second
+    // code path beside the one in use
+    assert(mainSources.nonEmpty, "no sources found: wrong working directory?")
+    val switches = mainSources.collect {
+      case (f, text) if stripComments(text).contains("\"spark.graft.") => f
+    }
+    assert(switches.isEmpty, s"spark.graft.* keys read in: ${switches.sorted.mkString(", ")}")
+  }
+
   test("every registered query runs at sf0.001 with a non-empty schema") {
     val failures = SparkEntry.allQueries.flatMap { q =>
       try {

@@ -281,6 +281,10 @@ class FunnelSpec extends SparkSpec {
       // data must re-probe, not reuse the old verdict
       val relChanged = events.filter($"event_type".isin("signup", "view"))
         .unionByName(events.limit(1))
+      // precondition: the slice is under the probe's stats pre-filter, so
+      // the miss reaches the LIMIT count instead of short-circuiting
+      assert(relChanged.queryExecution.optimizedPlan.stats.sizeInBytes <= Funnel.foldBytesCap,
+        "the changed slice's size estimate exceeds the fold probe's 512 MB pre-filter")
       Funnel.fitsFold(relChanged, cap)
       assert(settle() > afterCap,
         "a changed source plan must re-probe (data-change MISS)")
