@@ -47,7 +47,7 @@ class CheckpointSwapSpec extends SparkSpec {
     assert(files > 0, "no reliable checkpoint data written")
   }
 
-  test("decontaminate + sourceDupRollup: reliable checkpoint() is output-identical") {
+  test("decontaminate + sourceDupRollup: reliable cuts are output-identical") {
     // neither operator cuts lineage today, so this pins that a checkpoint
     // directory leaves their output as it is
     def contam() = DedupOps.decontaminate(docs, "doc_id", "text",
