@@ -20,6 +20,8 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.FloorProfile q1,q2 <repeat> [k=v;k=v ...]"
   * Each trailing arg is a session-conf variant applied via spark.conf.set
   * before re-running the same queries — same-run A/B per CLAUDE.md rules.
+  * Settings carry over between variants; a closing `baseline` leg restores
+  * them, so each variant sits between two baseline readings.
   */
 object FloorProfile {
   def main(args: Array[String]): Unit = {
@@ -28,6 +30,8 @@ object FloorProfile {
       .getOrElse(Seq("a1_max_version_default"))
     val repeat = args.drop(1).headOption.map(_.toInt).getOrElse(3)
     val variants = ("baseline" +: args.drop(2).toSeq).distinct
+    val legs = if (variants.size > 1) variants :+ "baseline" else variants
+    val original = scala.collection.mutable.Map[String, Option[String]]()
 
     val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     var jobs = 0; var stages = 0; var tasks = 0
@@ -41,10 +45,14 @@ object FloorProfile {
 
     def ms(t0: Long): Double = (System.nanoTime() - t0) / 1e6
     println(f"${"variant"}%-28s ${"query"}%-26s rep ${"build"}%7s ${"analyze"}%7s ${"optim"}%7s ${"plan"}%7s ${"exec"}%7s ${"total"}%7s  jb st tk  cgN ${"cgMs"}%6s ${"cgLoad"}%6s")
-    for (variant <- variants) {
-      if (variant != "baseline")
+    for (variant <- legs) {
+      if (variant == "baseline")
+        original.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      else
         variant.split(";").map(_.trim).filter(_.contains("=")).foreach { kv =>
-          val i = kv.indexOf('='); spark.conf.set(kv.take(i), kv.drop(i + 1))
+          val (k, v) = kv.splitAt(kv.indexOf('='))
+          original.getOrElseUpdate(k, spark.conf.getOption(k))
+          spark.conf.set(k, v.drop(1))
         }
       for (name <- names; fn = SparkEntry.queries(name); r <- 1 to repeat) {
         val cgN0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount

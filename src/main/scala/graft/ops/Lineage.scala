@@ -14,6 +14,13 @@ import org.apache.spark.sql.DataFrame
   * executor that holds them dies. Both are true checkpoints, so both fence
   * off the non-determinism of the cut subtree.
   *
+  * Spark deletes a reliable cut's files once its RDD is unreachable only
+  * under `spark.cleaner.referenceTracking.cleanCheckpoints=true`, which
+  * defaults to `false`; without it every cut stays in the directory for the
+  * session's lifetime. A deployment that sets a checkpoint directory should
+  * set it too, when it creates the SparkContext: a running context's conf
+  * is fixed, so the library cannot.
+  *
   * CheckpointSwapSpec pins that the two are output-identical, operator by
   * operator and registry query by query. */
 object Lineage {

@@ -6,10 +6,11 @@ import java.nio.file.{Files, Paths}
 import org.apache.hadoop.conf.Configuration
 import java.nio.charset.StandardCharsets
 
-/** Sink layer: file export, HTTP/broker guards, circuit breaker, export
-  * failures. A file endpoint's template is a path whose scheme selects
-  * the storage: plain or `file:` paths are local, any other scheme goes
-  * through the Hadoop FileSystem ([[Sinks.writeFile]]).
+/** Sink layer: file export, HTTP/broker guards, export failures. A file
+  * endpoint's template is a path whose scheme selects the storage: plain
+  * or `file:` paths are local, any other scheme goes through the Hadoop
+  * FileSystem ([[Sinks.writeFile]]). No circuit breaker: a failing
+  * endpoint's envelopes dead-letter and replay on the DLQ's backoff.
   *
   * Zero-egress environment: network sinks implement the reference's full
   * guard/validation/batching surface (the part its own tests cover —
@@ -226,31 +227,5 @@ object Sinks {
           Left(ExportFailure(s"message ${body.length} B exceeds $broker cap $cap B"))
         else Right(body)
     }
-  }
-
-  /** K8 — circuit breaker per endpoint: opens after `threshold` consecutive
-    * failures for `openMillis`. Driver-side state, like the reference's
-    * (MessageQueueService.cs:54-130). */
-  final class CircuitBreaker(threshold: Int = 3, openMillis: Long = 60000,
-                             clock: () => Long = () => System.currentTimeMillis()) {
-    private val failures = scala.collection.mutable.Map[String, Int]()
-    private val openedAt = scala.collection.mutable.Map[String, Long]()
-
-    def allowed(key: String): Boolean = synchronized {
-      openedAt.get(key) match {
-        case Some(t) if clock() - t < openMillis => false
-        case Some(_) => openedAt.remove(key); failures(key) = 0; true
-        case None => true
-      }
-    }
-    def recordSuccess(key: String): Unit = synchronized {
-      failures(key) = 0; openedAt.remove(key)
-    }
-    def recordFailure(key: String): Unit = synchronized {
-      val n = failures.getOrElse(key, 0) + 1
-      failures(key) = n
-      if (n >= threshold) openedAt(key) = clock()
-    }
-    def isOpen(key: String): Boolean = !allowed(key)
   }
 }

@@ -53,8 +53,9 @@ import scala.jdk.CollectionConverters._
   *
   * Writers: every mutation (read the snapshot, derive the next one,
   * commit) holds a JVM-wide lock keyed by the table root's absolute path,
-  * so concurrent writers in one process — a cycle's objects, streaming
-  * `foreachBatch` threads, per-environment relay tasks, store instances on
+  * so concurrent writers in one process — streaming `foreachBatch`
+  * threads, per-environment relay and replay loops (each commits a table
+  * at most once per cycle, from its calling thread), store instances on
   * the same root — never lose each other's rows. Reads take no lock. The
   * store allows ONE writer process per root: the lock does not reach
   * across JVMs.
@@ -303,7 +304,7 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     * `error_message`. Ids are dense from maxId + 1 in (source_key,
     * data_hash) order; a fresh letter has 0 attempts and no next attempt.
     * Commits only when a letter is new. */
-  def appendDeadLetters(letters: Seq[Row]): Unit = locked("dead_letters") {
+  def appendDeadLetters(letters: Seq[Row]): Unit = if (letters.nonEmpty) locked("dead_letters") {
     val existing = rows("dead_letters")
     val seen = existing.map(r => (r.getString(1), r.getString(5))).toSet
     val maxId = existing.map(_.getLong(0)).maxOption.getOrElse(0L)
@@ -314,41 +315,44 @@ final class ParquetStateStore(spark: SparkSession, rootDir: String) {
     if (fresh.nonEmpty) commitRows("dead_letters", existing ++ fresh)
   }
 
-  def deleteDeadLetters(ids: Seq[Long]): Unit = locked("dead_letters") {
-    val drop = ids.toSet
-    commitRows("dead_letters", rows("dead_letters").filterNot(r => drop(r.getLong(0))))
-  }
-
-  /** T5 — merge back updated retry state for the given rows. */
-  def updateDeadLetters(updated: DataFrame): Unit = locked("dead_letters") {
-    val fresh = updated.select(Schemas.deadLetterSchema.fieldNames.toSeq.map(col): _*).collect()
-    val ids = fresh.map(_.getLong(0)).toSet
-    commitRows("dead_letters", rows("dead_letters").filterNot(r => ids(r.getLong(0))) ++ fresh)
-  }
-
-  /** P8 + O1 — the replay batch: letters due at `now` ([[Dlq.dueFilter]]),
-    * oldest first by (timestamp, id), at most `batchSize` — the order and
-    * cap of [[Dlq.replayBatch]], taken on the driver. */
+  /** P8 + O1 — the replay batch: letters due at `now` ([[Dlq.dueFilter]])
+    * and within retention, so a letter past it is never attempted; oldest
+    * first by (timestamp, id), at most `batchSize` — the order and cap of
+    * [[Dlq.replayBatch]], taken on the driver. */
   def dueDeadLetters(maxAttempts: Int, now: java.sql.Timestamp,
       batchSize: Int = Defaults.DlqReplayBatchSize): Seq[Row] =
-    Dlq.dueFilter(deadLetters, maxAttempts, lit(now)).collect().toSeq
+    Dlq.dueFilter(Dlq.purgeExpired(deadLetters, lit(now)), maxAttempts, lit(now)).collect().toSeq
       .sortBy(r => (DateTimeUtils.fromJavaTimestamp(r.getTimestamp(8)), r.getLong(0)))
       .take(batchSize)
 
-  /** Purge dead letters older than the retention window (reference
-    * DeadLetterService.cs:148-159). Returns the purged count; the snapshot
-    * is only rewritten when something was actually purged. */
-  def purgeExpiredDeadLetters(now: java.sql.Timestamp,
-      retentionDays: Int = Defaults.DlqRetentionDays): Long =
+  /** T5 — one replay cycle's outcome in ONE commit: the `delivered` ids
+    * leave, each `failed` letter (as [[dueDeadLetters]] returned it) takes
+    * its next retry state ([[Dlq.retryState]] at `now`), and letters past
+    * retention at `now` leave ([[Dlq.purgeExpired]]). A failed letter no
+    * longer in the snapshot is not written back. Commits only when the
+    * snapshot changed; returns how many letters were past retention. */
+  def settleDeadLetters(delivered: Seq[Long], failed: Seq[Row], now: java.sql.Timestamp,
+      backoffSeconds: Int = Defaults.DlqBackoffBaseSeconds): Long = {
+    val retried = Dlq.retryState(spark.createDataFrame(failed.asJava, Schemas.deadLetterSchema),
+        lit(now), backoffSeconds)
+      .select(Schemas.deadLetterSchema.fieldNames.toSeq.map(col): _*).collect()
+      .map(r => r.getLong(0) -> r).toMap
+    val drop = delivered.toSet
     locked("dead_letters") {
       val before = rows("dead_letters")
-      val kept = Dlq.purgeExpired(
-        spark.createDataFrame(before.asJava, Schemas.deadLetterSchema), lit(now), retentionDays)
-        .collect().toSeq
-      val purged = (before.size - kept.size).toLong
-      if (purged > 0) commitRows("dead_letters", kept)
-      purged
+      val kept = Dlq.purgeExpired(spark.createDataFrame(before.asJava, Schemas.deadLetterSchema),
+        lit(now)).collect().toSeq
+      val after = kept.collect { case r if !drop(r.getLong(0)) => retried.getOrElse(r.getLong(0), r) }
+      if (after != before) commitRows("dead_letters", after)
+      (before.size - kept.size).toLong
     }
+  }
+
+  /** Purge dead letters past the retention window (reference
+    * DeadLetterService.cs:148-159) on the monitor's cadence. Returns the
+    * purged count; the snapshot is only rewritten when something was
+    * actually purged. */
+  def purgeExpiredDeadLetters(now: java.sql.Timestamp): Long = settleDeadLetters(Nil, Nil, now)
 
   // ---- driver-side snapshot files ----------------------------------------
 

@@ -15,9 +15,10 @@ import graft.state.ParquetStateStore
   * watermark read → incremental read (P1+P2) → envelope encode → batch →
   * fan-out to sinks → failures dead-lettered → watermark advance. A cycle
   * over several objects ([[runCycles]]) runs them concurrently on a pool
-  * sized min(objects, 2 × defaultParallelism) and commits every advance in
-  * one snapshot; object names must be distinct, and a failing object keeps
-  * its watermark while the others advance.
+  * sized min(objects, 2 × defaultParallelism), then commits its dead
+  * letters in one snapshot and its advances in another; object names must
+  * be distinct, and a failing object keeps its watermark while the others
+  * advance.
   *
   * Mirrors ChangeTrackingBackgroundService.ProcessChangesForObjectAsync
   * (reference :427-606) with the relational core as DataFrame transforms.
@@ -129,25 +130,27 @@ final class ChangeRelay(
     * watermark advance.
     *
     * Per-cycle CONTROL-STATE I/O is O(1) in the object count and runs on
-    * the driver: the watermark and pause tables are each read ONCE up
-    * front, and every object's watermark advance lands in a single batched
-    * [[ParquetStateStore.setWatermarks]] snapshot commit at the end
-    * (committing per object would rewrite the O(objects) table once per
-    * object). At-least-once (T2): the batched commit happens only AFTER
-    * every object's export attempt; a crash mid-cycle loses only
-    * un-committed advances, which re-poll — re-export, never loss.
+    * the calling thread, never the pool's: the watermark and pause tables
+    * are each read ONCE up front; once every object has finished, the
+    * cycle's dead letters land in ONE [[ParquetStateStore.appendDeadLetters]]
+    * commit (ids in (source_key, data_hash) order), then its advances in ONE
+    * [[ParquetStateStore.setWatermarks]] commit. At-least-once (T2): both
+    * follow every export attempt and the letters precede the advances; a
+    * crash, or a failed letters' commit, leaves advances un-committed, and
+    * those objects re-poll — re-export, never loss.
     *
     * Partial failure: the call waits for every object even after one
-    * fails, commits the advances of the objects that finished, then
-    * rethrows the first failure with any others attached as suppressed.
-    * Re-export stays confined to the failing objects, whose watermarks do
-    * not move. Returns per-object (rows exported, watermark). */
+    * fails, commits the letters and advances of those that finished, then
+    * rethrows the first failure (a failed commit before any object's) with
+    * the others attached as suppressed. Re-export stays confined to the failing
+    * objects, whose watermarks do not move. Returns per-object (rows
+    * exported, watermark). */
   def runCycles(objects: Seq[(TrackingObject, DataFrame)],
       nowUtc: String): Map[String, (Long, Long)] = {
     val names = objects.map(_._1.name)
     require(names.distinct.size == names.size,
       s"runCycles needs distinct object names, got ${names.mkString(", ")}")
-    val committed = store.watermarksOf(config.name)
+    val stored = store.watermarksOf(config.name)
     val pausedScopes = store.pausedScopes
     val envelopes = spark.sparkContext.longAccumulator("graft.relay.envelopesExportedOnExecutors")
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -168,7 +171,7 @@ final class ChangeRelay(
     val outcomes = try {
       objects.map { case (obj, changes) =>
         SQLExecution.withThreadLocalCaptured(session, pool) {
-          cycleCore(obj, changes, nowUtc, committed.get(obj.name), pausedScopes, envelopes,
+          cycleCore(obj, changes, nowUtc, stored.get(obj.name), pausedScopes, envelopes,
             hadoopConf)
         }
       }.map(f => Try(f.join()).recoverWith {
@@ -178,21 +181,28 @@ final class ChangeRelay(
     } finally pool.shutdown()
     lastCycleExecutorEnvelopes = envelopes.value
 
-    store.setWatermarks(names.zip(outcomes).collect {
-      case (name, Success(ChangeRelay.ObjectCycle(_, _, Some(v)))) => (config.name, name, v)
-    })
-    outcomes.collect { case Failure(e) => e } match {
+    // T2 — the finished objects' dead letters land in one commit before
+    // their advances do; a failed letters' commit moves no watermark.
+    val finished = names.zip(outcomes).collect { case (name, Success(c)) => name -> c }
+    val committed = Try {
+      store.appendDeadLetters(finished.flatMap(_._2.letters))
+      store.setWatermarks(finished.collect {
+        case (name, ChangeRelay.ObjectCycle(_, _, Some(v), _)) => (config.name, name, v)
+      })
+    }
+    (committed.failed.toOption ++: outcomes.collect { case Failure(e) => e }) match {
       case first +: rest => rest.foreach(first.addSuppressed); throw first
       case _ => names.zip(outcomes.map(_.get)).map { case (name, c) =>
         name -> (c.rows, c.watermark) }.toMap
     }
   }
 
-  /** The cycle body for one object. `stored` and `pausedScopes` are the
-    * control state read at the start of the cycle; the object's advance is
-    * returned for the caller's single commit. `exportedOnExecutors` counts
-    * the call's executor-side envelope exports; `hadoopConf` is shipped to
-    * the file sink for non-local schemes. */
+  /** The cycle body for one object, with no store I/O: `stored` and
+    * `pausedScopes` are the control state read at the start of the cycle,
+    * and the object's advance and dead letters go back for the caller's
+    * commits. `exportedOnExecutors` counts the call's executor-side
+    * envelope exports; `hadoopConf` is shipped to the file sink for
+    * non-local schemes. */
   private def cycleCore(obj: TrackingObject, changes: DataFrame, nowUtc: String,
       stored: Option[Long],
       pausedScopes: Set[String],
@@ -292,15 +302,13 @@ final class ChangeRelay(
     }
     fitLast.put(obj.name, done.rows <= cap)
 
-    // K9 — every failure dead-letters with D1 dedup. Each dead letter
-    // carries ITS OWN envelope so replay re-sends exactly what failed
-    // (DeadLetterService.cs stores the Data JSON per failure).
-    if (done.failures.nonEmpty) {
-      val sourceKey = s"${config.name}_${obj.name}_${obj.database}"
-      val now = new java.sql.Timestamp(System.currentTimeMillis())
-      store.appendDeadLetters(done.failures.map { case (error, data) =>
-        Row(sourceKey, obj.name, config.name, obj.database, Dlq.dataHash(data), data, error, now)
-      })
+    // K9 — each failure becomes a dead letter for the caller's one commit
+    // (D1 dedup there), carrying ITS OWN envelope so replay re-sends exactly
+    // what failed (DeadLetterService.cs stores the Data JSON per failure).
+    val sourceKey = s"${config.name}_${obj.name}_${obj.database}"
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    val letters = done.failures.map { case (error, data) =>
+      Row(sourceKey, obj.name, config.name, obj.database, Dlq.dataHash(data), data, error, now)
     }
 
     // T2 — advance AFTER the export attempt, regardless of sink failures.
@@ -309,34 +317,26 @@ final class ChangeRelay(
     // watermark.
     val newVersion = math.max(fromVersion, done.maxVersion)
     ChangeRelay.ObjectCycle(done.rows, newVersion,
-      if (newVersion > fromVersion) Some(newVersion) else None)
+      if (newVersion > fromVersion) Some(newVersion) else None, letters)
   }
 
-  /** §3.2 — dead-letter replay cycle: retention purge, then due batch,
-    * attempt, delete on success / widen backoff on failure (T5). `attempt`
-    * is injectable so tests can simulate endpoint recovery; it receives
-    * `(sourceKey, data)`, the letter's stored envelope JSON, so a real
-    * replay re-sends EXACTLY what failed — the reference's
+  /** §3.2 — dead-letter replay cycle: due batch (never a letter past
+    * retention), attempt, then at most ONE commit that deletes on success,
+    * widens backoff on failure (T5) and purges letters past retention, as
+    * the reference does in one service loop (DeadLetterService.cs:148-159).
+    * `attempt` is injectable so tests can simulate endpoint recovery; it
+    * receives `(sourceKey, data)`, the letter's stored envelope JSON, so a
+    * real replay re-sends EXACTLY what failed — the reference's
     * DeadLetterReplayer.cs:49-72 contract (it posts the stored Data).
-    * Purge runs FIRST so a letter past retention is never re-attempted —
-    * the reference purges in the same service loop
-    * (DeadLetterService.cs:148-159). `nowUtc` is the one clock of the
-    * cycle: it drives the purge, the due filter and the new backoff. */
+    * `nowUtc` is the one clock of the cycle: it drives the due filter, the
+    * new backoff and the purge. */
   def replayCycle(attempt: (String, String) => Boolean,
                   nowUtc: java.sql.Timestamp): (Long, Long) = {
-    store.purgeExpiredDeadLetters(nowUtc)
     val due = store.dueDeadLetters(config.deadLetterMaxReplayAttempts, nowUtc)
     val (ok, bad) = due.partition(r =>
       attempt(r.getAs[String]("source_key"), r.getAs[String]("data")))
-    if (ok.nonEmpty) store.deleteDeadLetters(ok.map(_.getAs[Long]("id")).toSeq)
-    if (bad.nonEmpty) {
-      val badIds = bad.map(_.getAs[Long]("id")).toSeq
-      val updated = Dlq.retryState(
-        store.deadLetters.filter(col("id").isin(badIds: _*)),
-        lit(nowUtc), config.deadLetterReplayBackoffSeconds)
-        .drop("backoff_seconds")
-      store.updateDeadLetters(updated)
-    }
+    store.settleDeadLetters(ok.map(_.getAs[Long]("id")), bad, nowUtc,
+      config.deadLetterReplayBackoffSeconds)
     (ok.length.toLong, bad.length.toLong)
   }
 }
@@ -362,9 +362,11 @@ object ChangeRelay {
   private[streaming] final case class Exported(rows: Long, maxVersion: Long,
       failures: Seq[(String, String)])
 
-  /** One object's part of a cycle: rows exported, its watermark, and the
-    * advance to commit (None when the watermark did not move). */
-  private final case class ObjectCycle(rows: Long, watermark: Long, advance: Option[Long])
+  /** One object's part of a cycle: rows exported, its watermark, the
+    * advance to commit (None when the watermark did not move) and its dead
+    * letters, as rows in [[ParquetStateStore.LetterColumns]] order. */
+  private final case class ObjectCycle(rows: Long, watermark: Long, advance: Option[Long],
+      letters: Seq[Row] = Nil)
 
   /** One partition of a delta's ids, as the driver sees it: the row count,
     * the max id and, when `exact`, every id as a run of consecutive values
@@ -611,17 +613,17 @@ object ChangeRelay {
     * Streaming query: a rate source is the timer (the Spark-idiomatic
     * analog of the reference's delay-loop background service,
     * `DeadLetterReplayService.cs:42-60`), and each trigger runs one
-    * [[ChangeRelay.replayCycle]] — due batch, attempt, delete on success /
-    * widen backoff on failure. `attempt` is injectable exactly as in the
-    * batch flavor, so endpoint recovery is testable. The replay cadence is
+    * [[ChangeRelay.replayCycle]] — due batch, attempt, then one commit that
+    * deletes on success / widens backoff on failure. `attempt` is
+    * injectable exactly as in the batch flavor, so endpoint recovery is
+    * testable. The replay cadence is
     * independent of the change-relay cadence, matching the reference's
     * separate hosted service.
     *
     * Named `graft-replay-<environment>`, as the poller is
     * `graft-relay-<environment>`, so the session refuses a second replay
     * loop for a live environment: two loops would race due → attempt →
-    * update, and one could write back a letter the other had delivered
-    * and deleted. */
+    * settle, and both would attempt, and count, the same letters. */
   def streamReplay(
       spark: SparkSession,
       relay: ChangeRelay,

@@ -165,6 +165,15 @@ class RegisteredQueriesSpec extends SparkSpec {
     val unreached = code.keySet -- reached
     assert(unreached.isEmpty,
       s"src/main files no main, query or entry point reaches: ${unreached.toSeq.sorted.mkString(", ")}")
+    // one level down: a type nested in a file outside the roots is named in
+    // src/main somewhere besides its own declaration
+    val nested = """(?m)^[ \t]+(?:(?:final|sealed|abstract|case|implicit|(?:private|protected)(?:\[\w+\])?)\s+)*(?:class|object|trait)\s+(\w+)""".r
+    val all = code.values.mkString("\n")
+    def matches(re: String) = re.r.findAllMatchIn(all).size
+    val unnamed = (code -- roots).values.flatMap(c => nested.findAllMatchIn(c).map(_.group(1))).toSet
+      .filter(n => matches(s"\\b$n\\b") <= matches(s"\\b(?:class|object|trait)\\s+$n\\b"))
+    assert(unnamed.isEmpty,
+      s"nested src/main types nothing outside their declaration names: ${unnamed.toSeq.sorted.mkString(", ")}")
   }
 
   test("the engine library reads no environment variables") {

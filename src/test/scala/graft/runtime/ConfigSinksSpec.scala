@@ -132,19 +132,6 @@ class ConfigSinksSpec extends SparkSpec {
     assert(new String(roundTrip, "UTF-8") == compressible)
   }
 
-  test("K8: circuit breaker opens after 3 failures and closes after the window") {
-    var now = 0L
-    val cb = new Sinks.CircuitBreaker(threshold = 3, openMillis = 1000, clock = () => now)
-    (1 to 2).foreach(_ => cb.recordFailure("ep"))
-    assert(cb.allowed("ep"))
-    cb.recordFailure("ep")
-    assert(!cb.allowed("ep"))
-    now = 1500
-    assert(cb.allowed("ep")) // window elapsed → half-open/closed again
-    cb.recordSuccess("ep")
-    assert(cb.allowed("ep"))
-  }
-
   test("template rendering covers all 8 placeholders and URL-escapes") {
     val m = ExportMeta("prod env", "ord", "db", "20240101000000", 1, 3)
     val s = Sinks.renderTemplate(

@@ -70,8 +70,8 @@ class ControlSnapshotSpec extends SparkSpec {
       .withColumn("data_hash", Dlq.dataHash(col("data")))
     store.appendDeadLetters(letters)
     // One letter with a next attempt; the others keep a null one.
-    store.updateDeadLetters(Dlq.retryState(store.deadLetters.filter($"source_key" === "k2"),
-      lit(micros), 60).drop("backoff_seconds"))
+    store.settleDeadLetters(Nil, store.deadLetters.filter($"source_key" === "k2").collect().toSeq,
+      micros, 60)
 
     def same(table: String, schema: StructType, viaStore: org.apache.spark.sql.DataFrame): Unit = {
       val viaSpark = spark.read.schema(schema)

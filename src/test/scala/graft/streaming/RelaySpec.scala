@@ -397,6 +397,76 @@ class RelaySpec extends SparkSpec {
     assert(letters.map(_._1).distinct.length == letters.length, s"duplicate ids: ${letters.toSeq}")
   }
 
+  test("a cycle whose three objects dead-letter makes one dead_letters commit and one watermarks commit, ids dense in key order") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val objs = Seq("c2", "c0", "c1").map(n => TrackingObject(n, "db0", "t", "sp"))
+    // 5-byte payload cap → every envelope fails; 25 rows at 10 per batch.
+    val relay = new ChangeRelay(spark, store,
+      EnvironmentConfig("prod", "postgres", objs,
+        Seq(SinkEndpoint("ep1", "http", "http://x/{object}", enableCompression = false)),
+        maxRecordsPerBatch = 10, maxPayloadSizeBytes = 5L),
+      None, horizonOf = _ => 1000L)
+    store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
+    val base = store.commitCount
+    val res = relay.runCycles(objs.map(o => o -> outboxDf((1L to 25L).map(i =>
+      (i, i, "I", i.toDouble, s"""{"k":$i}""")))), "20240115000000")
+    assert(res == objs.map(_.name -> (25L, 25L)).toMap)
+    assert(store.commitCount - base == 2,
+      s"expected one dead_letters and one watermarks commit, got ${store.commitCount - base}")
+    val letters = store.deadLetters.select("id", "source_key", "data_hash")
+      .as[(Long, String, String)].collect().sortBy(_._1).toSeq
+    assert(letters.map(_._1) == (1L to 9L), s"ids are not dense: ${letters.map(_._1)}")
+    val keys = letters.map(l => (l._2, l._3))
+    assert(keys == keys.sorted, s"ids do not ascend in (source_key, data_hash) order: $keys")
+    assert(keys.map(_._1).distinct == Seq("prod_c0_db0", "prod_c1_db0", "prod_c2_db0"))
+  }
+
+  test("a failed dead_letters commit propagates before any watermark moves") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val objs = Seq("f0", "f1").map(n => TrackingObject(n, "db0", "t", "sp"))
+    // A 400-byte payload cap: f0's large envelope dead-letters, f1's passes.
+    val relay = new ChangeRelay(spark, store,
+      EnvironmentConfig("prod", "postgres", objs, Seq(SinkEndpoint("ep1", "http", "http://x/{object}")),
+        maxPayloadSizeBytes = 400L),
+      None, horizonOf = _ => 1000L)
+    store.setWatermarks(objs.map(o => ("prod", o.name, 0L)))
+    // A regular file where the dead_letters table's directory goes.
+    Files.writeString(dir.resolve("state").resolve("dead_letters"), "not a table")
+    val feeds = objs.map(o => o -> outboxDf(Seq((1L, 1L, "I", 1.0,
+      if (o.name == "f0") s"""{"k":"${"x" * 1000}"}""" else "{}"))))
+    intercept[java.nio.file.FileAlreadyExistsException](relay.runCycles(feeds, "20240115000000"))
+    assert(store.watermarksOf("prod") == Map("f0" -> 0L, "f1" -> 0L),
+      "no object advances when the cycle's letters did not land")
+  }
+
+  test("a replay cycle settles a delivered, a failed and an expired letter in one commit") {
+    val dir = tmp()
+    val store = new ParquetStateStore(spark, dir.resolve("state").toString)
+    val day = java.sql.Timestamp.valueOf("2024-01-14 00:00:00")
+    store.appendDeadLetters(Seq(
+      ("k-ok", "orders", "prod", "db0", "h-ok", "{}", "boom", day),
+      ("k-bad", "orders", "prod", "db0", "h-bad", "{}", "boom", day),
+      ("k-old", "orders", "prod", "db0", "h-old", "{}", "boom",
+        java.sql.Timestamp.valueOf("2023-10-01 00:00:00"))) // > 60 days before now
+      .toDF("source_key", "tracking_object_name", "environment_name",
+        "database_name", "data_hash", "data", "error_message", "timestamp"))
+    val relay = new ChangeRelay(spark, store, cfg(), None)
+    val now = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
+    val attempted = scala.collection.mutable.ArrayBuffer[String]()
+    val base = store.commitCount
+    assert(relay.replayCycle((k, _) => { attempted += k; k == "k-ok" }, now) == ((1L, 1L)))
+    assert(store.commitCount - base == 1, s"expected one commit, got ${store.commitCount - base}")
+    assert(attempted.sorted == Seq("k-bad", "k-ok"), "the expired letter is never attempted")
+    val left = store.deadLetters.select("source_key", "attempts", "next_attempt")
+      .as[(String, Int, java.sql.Timestamp)].collect().toSeq
+    assert(left == Seq(("k-bad", 1, java.sql.Timestamp.valueOf("2024-01-15 00:01:00"))))
+    // Nothing due, nothing expired: the next cycle commits nothing.
+    assert(relay.replayCycle((_, _) => true, now) == ((0L, 0L)))
+    assert(store.commitCount - base == 1)
+  }
+
   test("at-least-once: failed sink dead-letters but the watermark still advances") {
     val dir = tmp()
     val store = new ParquetStateStore(spark, dir.resolve("state").toString)
